@@ -2,7 +2,6 @@ package graft.ckpt
 
 import graft.tableio.TableIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Per-stage checkpoint/commit log with per-partition lineage + counter
   * metrics (north rule: "resumable from checkpoint with per-partition
@@ -14,9 +13,11 @@ import org.apache.spark.sql.functions._
   * snapshot under `<runDir>/<stage>`. `runStage` skips recomputation when the
   * stage already has a committed snapshot — so a killed job rerun resumes
   * after the last committed stage, idempotently (TableIO commits are atomic).
-  * Each committed stage also writes `<runDir>/<stage>__lineage` rows
-  * (stage, part_id, rows) — the per-partition audit trail — and appends a
-  * metrics row (stage, rows, committed_version) to the run's metrics table.
+  * The audit trail lives in each stage's snapshot manifest: its row count
+  * and rows per write task, taken from the committed files' Parquet footers.
+  * `lineage` and `metrics` build their tables from those manifests on the
+  * driver, so a stage commit costs one Spark job (the write) and the audit
+  * costs none.
   */
 class StageLog(spark: SparkSession, runDir: String) {
 
@@ -25,6 +26,9 @@ class StageLog(spark: SparkSession, runDir: String) {
   def isCommitted(stage: String): Boolean =
     TableIO.currentVersion(stagePath(stage)).isDefined
 
+  /** The stage's committed snapshot manifest. */
+  def snapshot(stage: String): TableIO.Snapshot = TableIO.current(stagePath(stage))
+
   /** Run (or resume) a stage. Returns the stage output read back from its
     * committed snapshot, so downstream stages always consume the durable
     * artifact — lineage is truncated at every stage boundary, the iterative-
@@ -32,29 +36,23 @@ class StageLog(spark: SparkSession, runDir: String) {
     */
   def runStage(stage: String, partitionBy: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
     val path = stagePath(stage)
-    if (!isCommitted(stage)) {
-      val out = compute
-      val snap = TableIO.commit(out, path, partitionBy)
-      val lineage = TableIO.read(spark, path)
-        .groupBy(spark_partition_id().as("part_id"))
-        .agg(count(lit(1)).as("rows"))
-        .withColumn("stage", lit(stage))
-        .select("stage", "part_id", "rows")
-      TableIO.commit(lineage, s"${path}__lineage")
-      val metric = spark.createDataFrame(Seq((stage, snap.rows, snap.version)))
-        .toDF("stage", "rows", "version")
-      TableIO.commit(metric, s"$runDir/__metrics/$stage")
-    }
+    if (!isCommitted(stage)) TableIO.commit(compute, path, partitionBy)
     TableIO.read(spark, path)
   }
 
-  /** All per-partition lineage rows of the run. */
+  /** Per-partition lineage of the run: (stage, part_id, rows), one row per
+    * write task that committed data. Fails, naming the stage, on a manifest
+    * that predates per-task row counts.
+    */
   def lineage(stages: Seq[String]): DataFrame =
-    stages.map(s => TableIO.read(spark, s"${stagePath(s)}__lineage"))
-      .reduce(_ unionByName _)
+    spark.createDataFrame(stages.flatMap { s =>
+      val tasks = snapshot(s).taskRows.getOrElse(
+        sys.error(s"stage $s: manifest has no per-task row counts; rerun the stage to rebuild its lineage"))
+      tasks.toSeq.sorted.map { case (part, rows) => (s, part, rows) }
+    }).toDF("stage", "part_id", "rows")
 
-  /** Stage-level metrics (rows per committed stage). */
+  /** Stage-level metrics: (stage, rows, version) per committed stage. */
   def metrics(stages: Seq[String]): DataFrame =
-    stages.map(s => TableIO.read(spark, s"$runDir/__metrics/$s"))
-      .reduce(_ unionByName _)
+    spark.createDataFrame(stages.map { s => val snap = snapshot(s); (s, snap.rows, snap.version) })
+      .toDF("stage", "rows", "version")
 }

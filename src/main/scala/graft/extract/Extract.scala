@@ -47,8 +47,7 @@ object Extract {
 
   /** SDP candidates: pair generation + 3-case assembly + length bounds +
     * punct-step removal. `maxPairsPerSentence` caps the quadratic chunk-pair
-    * blowup (J4) so one pathological sentence can't skew a partition; drops
-    * are observable via the lineage counters.
+    * blowup (J4) so one pathological sentence can't skew a partition.
     */
   def candidates(
       sentences: Dataset[Sentence],

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   *        → canonicalization (CC over alias-variant edges)
   *        → canonical triple + entity tables (partitioned by predicate)
   *
-  * Every stage materializes via TableIO (atomic snapshot + per-partition
-  * lineage), so a killed run resumes after its last committed stage with
-  * byte-identical results (ResumeSpec).
+  * Every stage materializes via TableIO (atomic snapshot whose manifest
+  * carries the per-partition lineage), so a killed run resumes after its
+  * last committed stage with byte-identical results (ResumeSpec).
   */
 object KgPipeline {
 
@@ -105,10 +105,11 @@ object KgPipeline {
         triples.select(col("subj")).union(triples.select(col("obj")))).toDF()
     }
 
-    // one dictionary-sized count decides BOTH entity joins below: broadcast
-    // while the dictionary is driver-safe, salted shuffle join beyond
-    // (canon is row-for-row the dictionary, so the one count covers it too)
-    val dictIsSmall = aliasDict.count() <= broadcastMaxDictRows
+    // the dictionary's committed row count (from its snapshot manifest, no
+    // job) decides BOTH entity joins below: broadcast while the dictionary
+    // is driver-safe, salted shuffle join beyond (canon is row-for-row the
+    // dictionary, so the one count covers it too)
+    val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
 
     val linked = log.runStage("linked_triples") {
       val dict = aliasDict.select(col("alias"), col("entity_id"))

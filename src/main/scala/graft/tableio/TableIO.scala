@@ -1,8 +1,12 @@
 package graft.tableio
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.io.LocalInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Iceberg-style table layer: partitioned Parquet data files + a JSON
   * snapshot commit log with atomic-rename commits (SURVEY.md §7.0 — no
@@ -12,7 +16,8 @@ import scala.jdk.CollectionConverters._
   * Layout:
   *   table/
   *     data/snap-<v>/...          partitioned parquet for snapshot v
-  *     snapshots/v<v>.json        manifest: data dir, row count, schema
+  *     snapshots/v<v>.json        manifest: data dir, row count, rows per
+  *                                write task, read schema
   *     snapshots/CURRENT          file containing the committed version
   *
   * Commit protocol: data is written fully, the manifest is written to a temp
@@ -20,10 +25,25 @@ import scala.jdk.CollectionConverters._
   * or the new snapshot, never a partial one. Re-running a failed job never
   * corrupts a committed snapshot (idempotent writes, north-star
   * resumability).
+  *
+  * A commit costs one Spark job, the write. Its row figures come from the
+  * committed files' Parquet footers, read on the driver — the analog of an
+  * Iceberg manifest's per-data-file `record_count` — and a read takes its
+  * schema from the manifest, so neither reads nor the audit built on the
+  * manifest (ckpt.StageLog) start a job.
   */
 object TableIO {
 
-  case class Snapshot(version: Long, dataDir: String, rows: Long, schemaJson: String)
+  /** @param taskRows rows written per write task (task id = the
+    *   `part-NNNNN` number, summed over partition directories); None for a
+    *   manifest written before the field existed.
+    * @param schemaJson the schema the snapshot reads back as: data columns,
+    *   then partition columns.
+    */
+  case class Snapshot(version: Long, dataDir: String, rows: Long, schemaJson: String,
+                      taskRows: Option[Map[Int, Long]]) {
+    def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  }
 
   private def snapDir(table: String): Path = Paths.get(table, "snapshots")
 
@@ -32,9 +52,13 @@ object TableIO {
     if (Files.exists(cur)) Some(Files.readString(cur).trim.toLong) else None
   }
 
+  def current(table: String): Snapshot =
+    readSnapshot(table, currentVersion(table).getOrElse(sys.error(s"no committed snapshot in $table")))
+
   def readSnapshot(table: String, version: Long): Snapshot = {
     val txt = Files.readString(snapDir(table).resolve(s"v$version.json"))
-    // minimal JSON codec (fields are under our control, no nesting)
+    // minimal JSON codec (fields are under our control; the one nested value
+    // is the flat taskRows object of integer keys and values)
     def field(name: String): String = {
       val m = ("\"" + name + "\"\\s*:\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|\\d+)").r
         .findFirstMatchIn(txt).getOrElse(sys.error(s"manifest field $name missing"))
@@ -42,8 +66,30 @@ object TableIO {
       if (v.startsWith("\"")) v.substring(1, v.length - 1).replace("\\\"", "\"").replace("\\\\", "\\")
       else v
     }
-    Snapshot(field("version").toLong, field("dataDir"), field("rows").toLong, field("schema"))
+    val taskRows = "\"taskRows\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(txt).map { m =>
+      "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(m.group(1))
+        .map(e => e.group(1).toInt -> e.group(2).toLong).toMap
+    }
+    Snapshot(field("version").toLong, field("dataDir"), field("rows").toLong, field("schema"), taskRows)
   }
+
+  private val PartFile = """part-(\d+)-.*\.parquet""".r
+
+  /** Rows per write task of the Parquet files under `dataDir`, from their
+    * footers. The committer moves only committed task attempts' files into
+    * `dataDir`, so the figure is exact under speculation as well.
+    */
+  private def footerTaskRows(dataDir: String): Map[Int, Long] =
+    Using.resource(Files.walk(Paths.get(dataDir))) { paths =>
+      paths.iterator().asScala.flatMap { p =>
+        p.getFileName.toString match {
+          case PartFile(task) =>
+            val n = Using.resource(ParquetFileReader.open(new LocalInputFile(p)))(_.getRecordCount)
+            Some(task.toInt -> n)
+          case _ => None
+        }
+      }.toSeq
+    }.groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Commit `df` as the next snapshot of `table`. Returns the snapshot.
     *
@@ -58,25 +104,19 @@ object TableIO {
     val version =
       (currentVersion(table).toSeq ++ versions(table)).reduceOption(_ max _).map(_ + 1).getOrElse(0L)
     val dataDir = s"$table/data/snap-$version"
-    // row count observed during the write itself (one pass over the data) —
-    // re-reading the freshly written parquet just to count would double the
-    // I/O of every stage commit. Observation metrics can over-count under
-    // speculative execution (both task attempts feed the accumulator), so
-    // the cheap path is only valid with speculation off — with it on, fall
-    // back to counting the committed files (ADVICE round 2).
-    val speculative = df.sparkSession.sparkContext.getConf
-      .getBoolean("spark.speculation", defaultValue = false)
-    val obs = org.apache.spark.sql.Observation(s"tableio-rows-$version")
-    val writer = df.observe(obs, org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("rows")).write.mode("overwrite")
+    val writer = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(dataDir)
-    val rows =
-      if (speculative) df.sparkSession.read.parquet(dataDir).count()
-      else obs.get("rows").asInstanceOf[Long]
-    Files.createDirectories(snapDir(table))
+    val taskRows = footerTaskRows(dataDir)
+    // the schema a file scan returns: nullable columns, partition columns
+    // last in directory-nesting order
+    val fields = df.schema.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(df.schema(_))
+    val snap = Snapshot(version, dataDir, taskRows.values.sum,
+      StructType(fields.map(_.copy(nullable = true))).json, Some(taskRows))
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val manifest =
-      s"""{"version": $version, "dataDir": "${esc(dataDir)}", "rows": $rows, "schema": "${esc(df.schema.json)}"}"""
+    val tasks = taskRows.toSeq.sorted.map { case (t, n) => s""""$t": $n""" }.mkString(", ")
+    val manifest = s"""{"version": $version, "dataDir": "${esc(dataDir)}", "rows": ${snap.rows}, """ +
+      s""""taskRows": {$tasks}, "schema": "${esc(snap.schemaJson)}"}"""
+    Files.createDirectories(snapDir(table))
     val tmp = Files.createTempFile(snapDir(table), "manifest", ".tmp")
     Files.writeString(tmp, manifest)
     Files.move(tmp, snapDir(table).resolve(s"v$version.json"),
@@ -85,7 +125,7 @@ object TableIO {
     Files.writeString(curTmp, version.toString)
     Files.move(curTmp, snapDir(table).resolve("CURRENT"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    Snapshot(version, dataDir, rows, df.schema.json)
+    snap
   }
 
   /** S9: prediction TSV sink — the reference emits its prediction files as
@@ -100,11 +140,9 @@ object TableIO {
 
   /** Read the current committed snapshot (partition pruning + pushdown apply
     * as with any parquet scan; partition columns come back from dir layout).
+    * The manifest's schema spares the scan Spark's schema-inference job.
     */
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val v = currentVersion(table).getOrElse(sys.error(s"no committed snapshot in $table"))
-    spark.read.parquet(readSnapshot(table, v).dataDir)
-  }
+  def read(spark: SparkSession, table: String): DataFrame = scan(spark, current(table))
 
   /** List all snapshot versions (time travel). */
   def versions(table: String): Seq[Long] =
@@ -116,5 +154,8 @@ object TableIO {
       .toSeq.sorted
 
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame =
-    spark.read.parquet(readSnapshot(table, version).dataDir)
+    scan(spark, readSnapshot(table, version))
+
+  private def scan(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.read.schema(snap.schema).parquet(snap.dataDir)
 }
