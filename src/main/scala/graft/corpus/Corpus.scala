@@ -62,7 +62,8 @@ object Corpus {
     }
   }
 
-  /** Interleaved-doc table from the driver's documents.parquet (doc_id, text).
+  /** The corpus' documents.parquet as raw (doc_id, text) rows, spread over
+    * the cluster.
     *
     * The test corpus arrives as ONE parquet file (= one input split); without
     * spreading the base rows first, every downstream per-doc stage —
@@ -70,12 +71,17 @@ object Corpus {
     * matter the cluster size. A real corpus arrives in thousands of files,
     * so the cheap base-row shuffle here reproduces that layout.
     */
-  def fromDocuments(spark: SparkSession, sfDir: String): Dataset[Doc] = {
+  def rawDocuments(spark: SparkSession, sfDir: String): Dataset[(Long, String)] = {
     import spark.implicits._
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
       .as[(Long, String)]
       .repartition(spark.sparkContext.defaultParallelism)
-      .map { case (id, text) => buildDoc(id, text) }
+  }
+
+  /** Interleaved-doc table from the corpus' documents.parquet. */
+  def fromDocuments(spark: SparkSession, sfDir: String): Dataset[Doc] = {
+    import spark.implicits._
+    rawDocuments(spark, sfDir).map { case (id, text) => buildDoc(id, text) }
   }
 }

@@ -3,13 +3,15 @@ package graft.extract
 import graft.annotate.Annotator
 import graft.model._
 import graft.score.SignatureScorer
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Dataset-level extraction stages: docs → sentences → mentions → SDP
   * candidates → triples. Every stage is a narrow transformation (flatMap /
   * mapPartitions) — no shuffle until linking/canonicalization — so the whole
   * extraction pipelines inside one Spark stage regardless of input size.
+  * The one exception is the `whitelisted` gate, which needs corpus-wide
+  * signature counts (one aggregation plus a semi-join).
   *
   * Reference dataflow restated (SURVEY.md §3.1): text line → spaCy Doc →
   * chunk pairs → root paths → SDP dict → encoded JSONL.
@@ -70,56 +72,27 @@ object Extract {
     }
   }
 
-  /** Build the dep-structure whitelist as a dictionary stage: signatures seen
-    * at least `minCount` times (the reference ships this as a precomputed
-    * literal, sdp_dep_structures.py:1; we derive it from the corpus the same
-    * way its authors did from SemEval).
+  /** The dep-structure whitelist gate (is_ok_sdp v2 structure check,
+    * wiki_and_semeval2sdp.py:289-292): keeps the triples whose path signature
+    * `sig` occurs at least `minCount` times in `triples`. The reference ships
+    * the whitelist as a precomputed literal (sdp_dep_structures.py:1); we
+    * derive it from the corpus the same way its authors did from SemEval.
+    * Collect-free: the signature counts stay a DataFrame and the gate is a
+    * left-semi join on `sig`, which AQE broadcasts while the signature
+    * dictionary is small and shuffles (never a driver OOM) when it is not.
+    * Duplicate rows survive as duplicates; the output has the input's
+    * columns in the input's order.
     */
-  def signatureWhitelist(cands: Dataset[SdpCandidate], minCount: Long): DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    cands
-      .map(c => SignatureScorer.signatureKey(c.path))
-      .toDF("sig")
-      .groupBy("sig").count()
+  def whitelisted(triples: DataFrame, minCount: Long): DataFrame = {
+    val frequent = triples.groupBy("sig").count()
       .filter(col("count") >= minCount)
+      .select(col("sig").as("__wl_sig"))
+    triples.join(frequent, col("sig") === col("__wl_sig"), "left_semi")
   }
 
-  /** Whitelist gate (is_ok_sdp v2 structure check,
-    * wiki_and_semeval2sdp.py:289-292) as a broadcast-set filter — the
-    * signature set is tiny relative to data, so this is a broadcast semi-join
-    * that never shuffles the candidate stream.
-    */
-  def filterByWhitelist(
-      cands: Dataset[SdpCandidate],
-      whitelist: Set[String]): Dataset[SdpCandidate] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(whitelist)
-    cands.filter(c => bc.value.contains(SignatureScorer.signatureKey(c.path)))
-  }
-
-  /** Collect-free whitelist gate: the same is_ok_sdp v2 semantics as
-    * `filterByWhitelist`, but the whitelist stays a DataFrame and the gate is
-    * a left-semi join on the path signature. At corpus scale the signature
-    * dictionary grows past what a driver-side Set should hold; as a join,
-    * AQE picks a broadcast hash join while it is small and degrades to a
-    * shuffle join (never a driver OOM) when it is not.
-    */
-  def filterByWhitelistDF(
-      cands: Dataset[SdpCandidate],
-      whitelist: DataFrame): Dataset[SdpCandidate] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    cands.map(c => (c, SignatureScorer.signatureKey(c.path)))
-      .toDF("c", "sig")
-      .join(whitelist.select("sig"), Seq("sig"), "left_semi")
-      .select("c.*")
-      .as[SdpCandidate]
-  }
-
-  /** Score whitelisted candidates into triples (deterministic signature
-    * scorer; the broadcast-model mapPartitions variant lives in score/).
+  /** Score candidates into triples (deterministic signature scorer; the
+    * broadcast-model mapPartitions variant lives in score/). One triple per
+    * candidate, carrying the signature the whitelist gate counts.
     */
   def triples(cands: Dataset[SdpCandidate]): Dataset[Triple] = {
     import cands.sparkSession.implicits._
@@ -133,25 +106,20 @@ object Extract {
     * serialize Doc → Sentence → SdpCandidate → Triple at every typed
     * boundary; at full parallelism that allocation rate becomes the scaling
     * bottleneck (GC is a shared resource across executor threads). Results
-    * are row-equal to the composed pipeline — ExtractPipelineSpec runs the
-    * differential with and without whitelist.
-    *
-    * `whitelist` empty ⇒ no signature gate (candidates mode).
+    * are row-equal to `triples(candidates(docsToSentences(...)))` as a
+    * multiset — ExtractPipelineSpec runs the differential with and without
+    * the `whitelisted` gate, which callers apply downstream.
     */
   def triplesFused(
       docs: Dataset[(Long, String)],
-      whitelist: Set[String] = Set.empty,
       minLen: Int = 1,
       maxLen: Int = 7,
       maxPairsPerSentence: Int = 64): Dataset[Triple] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(whitelist)
+    import docs.sparkSession.implicits._
     docs.mapPartitions { it =>
-      val wl = bc.value
       val scratch = new FusedKernel.Scratch
       it.flatMap { case (id, text) =>
-        FusedKernel.docTriples(id, text, wl, minLen, maxLen, maxPairsPerSentence, scratch)
+        FusedKernel.docTriples(id, text, minLen, maxLen, maxPairsPerSentence, scratch)
       }
     }
   }

@@ -11,15 +11,17 @@ import graft.score.Labels
   * at full parallelism that garbage is what saturates the (shared) collector
   * and caps scaling. This kernel runs the IDENTICAL row logic — same
   * annotator rules via the same lexicons, same 3-case SDP assembly, same
-  * length/punct/whitelist gates, same label/score hashes — over reusable
-  * per-partition scratch arrays: POS and dep tags live as byte ids (the dep
-  * STRING table exists once), root paths walk into preallocated int arrays,
-  * and the only per-candidate allocations are the emitted Triple and its
-  * signature string. Row equality with the composed pipeline is enforced by
-  * ExtractPipelineSpec's differential test (with and without whitelist).
+  * length/punct gates, same label/score hashes — over reusable per-partition
+  * scratch arrays: POS and dep tags live as byte ids (the dep STRING table
+  * exists once), root paths walk into preallocated int arrays, and the only
+  * per-candidate allocations are the emitted Triple and its signature string.
+  * The kernel emits every candidate with its signature in `Triple.sig`; the
+  * signature whitelist is not applied here but by the DataFrame gate
+  * `Extract.whitelisted`, which needs corpus-wide signature counts. Row
+  * equality with the composed pipeline is enforced by ExtractPipelineSpec's
+  * differential test (with and without that gate).
   *
-  * Reference row semantics: semeval2sdp.py:24-186 (SDP assembly),
-  * wiki_and_semeval2sdp.py:267-293 (whitelist gate).
+  * Reference row semantics: semeval2sdp.py:24-186 (SDP assembly).
   */
 object FusedKernel {
 
@@ -269,7 +271,7 @@ object FusedKernel {
   private def sentenceTriples(
       docId: String, spanIdx: Int,
       words: Array[String], from: Int, until: Int,
-      wl: Set[String], minLen: Int, maxLen: Int, maxPairs: Int,
+      minLen: Int, maxLen: Int, maxPairs: Int,
       s: Scratch): Unit = {
     s.out.clear()
     val n = until - from
@@ -355,16 +357,14 @@ object FusedKernel {
             }
             if (len > 1) s.sb.append('\u0001').append(depStr(s.dep(s.seq(len - 1))))
             val sig = s.sb.toString
-            if (wl.isEmpty || wl.contains(sig)) {
-              val xs = s.lower(x)
-              val ys = s.lower(y)
-              val labelId = math.floorMod(sig.hashCode, nLabels)
-              s.sb.setLength(0)
-              val score = 0.5 + math.floorMod(
-                s.sb.append(xs).append(ys).append(sig).toString.hashCode, 1000) / 2000.0
-              val (subj, obj) = if (labelSwaps(labelId)) (ys, xs) else (xs, ys)
-              s.out += Triple(subj, labelPred(labelId), obj, docId, spanIdx, score)
-            }
+            val xs = s.lower(x)
+            val ys = s.lower(y)
+            val labelId = math.floorMod(sig.hashCode, nLabels)
+            s.sb.setLength(0)
+            val score = 0.5 + math.floorMod(
+              s.sb.append(xs).append(ys).append(sig).toString.hashCode, 1000) / 2000.0
+            val (subj, obj) = if (labelSwaps(labelId)) (ys, xs) else (xs, ys)
+            s.out += Triple(subj, labelPred(labelId), obj, docId, spanIdx, score, sig)
           }
         }
         j += 1
@@ -378,7 +378,7 @@ object FusedKernel {
     */
   def docTriples(
       id: Long, text: String,
-      wl: Set[String], minLen: Int, maxLen: Int, maxPairs: Int,
+      minLen: Int, maxLen: Int, maxPairs: Int,
       s: Scratch): Iterator[Triple] = {
     val words = {
       val raw = text.split(" ")
@@ -398,7 +398,7 @@ object FusedKernel {
       val myIdx = spanIdx
       spanIdx += 1
       if (math.floorMod(id * 31 + g, 3) == 0) spanIdx += 1 // media span follows
-      sentenceTriples(docId, myIdx, words, from, until, wl, minLen, maxLen, maxPairs, s)
+      sentenceTriples(docId, myIdx, words, from, until, minLen, maxLen, maxPairs, s)
       s.out.toArray[Triple].iterator
     }
   }

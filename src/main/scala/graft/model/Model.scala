@@ -11,7 +11,9 @@ package graft.model
   *    (semeval2sdp.py:186 `{'path': [(word, dep, pos), ...]}`).
   *  - `SdpCandidate`: the central IR, reference JSONL record
   *    {'path', 'target', 'sent', 'source'} (wiki_and_semeval2sdp.py:187,403,423).
-  *  - `Triple`: the emitted (subj, pred, obj) with provenance + score.
+  *  - `Triple`: the emitted (subj, pred, obj) with provenance, score and the
+  *    dep-path signature `sig` its label was derived from (the whitelist gate
+  *    `Extract.whitelisted` counts rows per `sig`).
   */
 case class Span(kind: String, text: String, media_ref: String, offset: Int)
 
@@ -62,7 +64,8 @@ case class Triple(
     obj: String,
     doc_id: String,
     span_idx: Int,
-    score: Double)
+    score: Double,
+    sig: String)
 
 /** Dictionary row for entity linking (reference vocab sidecar analog:
   * (token, unigram_prob) JSONL, semeval2sdp.py:345-356).

@@ -5,20 +5,27 @@ import graft.ckpt.StageLog
 import graft.corpus.Corpus
 import graft.extract.Extract
 import graft.link.Linking
-import graft.model.AliasEntry
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The full KG-construction run, wired through the stage commit log:
+/** The docs→canonical-triples job, in two entry points that share one
+  * extraction kernel (`Extract.triplesFused`), one whitelist gate
+  * (`Extract.whitelisted`) and one entity-join helper (`lookup`):
   *
-  *   docs → sentences/candidates (narrow) → triples (whitelist+score)
-  *        → alias dictionary → entity linking (broadcast join, OOV default)
+  *   docs → fused extraction (candidates with their path signature `sig`)
+  *        → triples (whitelist + vocabulary gates)
+  *        → alias dictionary → entity linking (OOV default)
   *        → canonicalization (CC over alias-variant edges)
   *        → canonical triple + entity tables (partitioned by predicate)
   *
-  * Every stage materializes via TableIO (atomic snapshot whose manifest
-  * carries the per-partition lineage), so a killed run resumes after its
-  * last committed stage with byte-identical results (ResumeSpec).
+  * `run` is the shipped job: every stage materializes via TableIO (atomic
+  * snapshot whose manifest carries the per-partition lineage), so a killed
+  * run resumes after its last committed stage with byte-identical results.
+  * `canonicalTriplesInMemory` is the scaling-benchmark job: the same
+  * dataflow without durable commits and without the whitelist gate. The two
+  * keep different pass economies on purpose, so they do not share a stage
+  * graph; ResumeSpec pins `run(whitelistMinCount = 1)` row-equal (as a
+  * multiset) to `canonicalTriplesInMemory`.
   */
 object KgPipeline {
 
@@ -26,8 +33,9 @@ object KgPipeline {
     "candidates", "triples", "alias_dict", "linked_triples", "entity_canon", "canonical_triples")
 
   /** Hash-bucket count for the entity table's partition layout (the Iceberg
-    * `bucket(N, entity_id)` transform analog). 16 at test scale; a config
-    * knob — at 10¹²-doc scale this is sized to target file counts.
+    * `bucket(N, entity_id)` transform analog) and the salt width of the
+    * salted entity joins. 16 at test scale; a config knob — at 10¹²-doc
+    * scale this is sized to target file counts.
     */
   val entityBuckets = 16
 
@@ -58,46 +66,64 @@ object KgPipeline {
       .select(col("src_id").as("src"), col("dst_id").as("dst"))
   }
 
-  /** @param broadcastMaxDictRows dictionary-side row bound for the two
-    *   entity joins: at or below it the dictionary broadcasts (one hash
-    *   build per executor, no stream shuffle); above it the join degrades
-    *   to `Linking.saltedLeftJoin` — a hard `broadcast()` hint on a
-    *   Heaps-large table would force the full dictionary through the
-    *   driver regardless of `autoBroadcastJoinThreshold` (review finding).
-    *   ~5M rows ≈ low hundreds of MB broadcast; a config knob at scale.
+  /** Every entity join of both jobs: left-joins `stream` to the two-column
+    * (key, value) `table` on `stream(key)`, adding the value as column `as`
+    * (null on a miss). The join strategy is one decision, made here:
+    * `small` broadcasts the table (one hash build per executor, no stream
+    * shuffle); otherwise the join degrades to `Linking.saltedLeftJoin`, which
+    * spreads each key over `entityBuckets` reducers so the stream's hot
+    * surfaces (Zipf head) cannot swamp one. A hard `broadcast()` hint on a
+    * Heaps-large table would force it through the driver regardless of
+    * `autoBroadcastJoinThreshold`, so the caller sizes `small`.
+    */
+  private def lookup(stream: DataFrame, key: String, table: DataFrame, as: String,
+                     small: Boolean): DataFrame = {
+    val t = table.toDF(s"__$as", as)
+    val joined =
+      if (small) stream.join(broadcast(t), col(key) === col(s"__$as"), "left")
+      else Linking.saltedLeftJoin(stream, t, key, s"__$as", Seq("doc_id", "span_idx"), entityBuckets)
+    joined.drop(s"__$as")
+  }
+
+  /** @param broadcastMaxDictRows dictionary-side row bound for the entity
+    *   joins: at or below it the dictionary broadcasts, above it the joins
+    *   are salted (`lookup`). ~5M rows ≈ low hundreds of MB broadcast; a
+    *   config knob at scale.
     */
   def run(spark: SparkSession, sfDir: String, runDir: String,
           whitelistMinCount: Long = 3,
           broadcastMaxDictRows: Long = 5000000L): DataFrame = {
-    import spark.implicits._
     val log = new StageLog(spark, runDir)
 
+    // every candidate triple of the corpus, with its path signature
     val candidates = log.runStage("candidates") {
-      Extract.candidates(Extract.docsToSentences(Corpus.fromDocuments(spark, sfDir))).toDF()
+      Extract.triplesFused(Corpus.rawDocuments(spark, sfDir)).toDF()
     }
+    // a candidates table committed before the kernel emitted `sig` would
+    // resume into an analysis error deep inside `triples`; the manifest
+    // alone (no Spark job) tells
+    if (!log.snapshot("candidates").schema.fieldNames.contains("sig"))
+      sys.error(s"stage candidates in run directory $runDir has no sig column: it was " +
+        "committed by an older extraction; delete the run directory and rerun")
 
     val triples = log.runStage("triples") {
-      import graft.model.SdpCandidate
-      val cands = candidates.as[SdpCandidate]
       // whitelist + vocab gates stay DataFrames end-to-end: no corpus-derived
       // dictionary is ever collected to the driver (its size grows with the
       // corpus — the classic driver-heap bottleneck at 100×). AQE turns these
       // semi-joins into broadcast joins while the dictionaries are small.
-      val wl = Extract.signatureWhitelist(cands, whitelistMinCount).select("sig")
       // is_ok_sdp rule 1 (semeval2sdp.py:245-262): drop candidates whose
       // target surfaces are out-of-vocabulary (< 2 occurrences corpus-wide)
-      val vocab = candidates.select(col("x").as("surface"))
-        .union(candidates.select(col("y").as("surface")))
+      val vocab = candidates.select(col("subj").as("surface"))
+        .union(candidates.select(col("obj").as("surface")))
         .groupBy("surface").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 2)
         .select("surface")
-      val gated = Extract.filterByWhitelistDF(cands, wl)
+      Extract.whitelisted(candidates, whitelistMinCount)
         .join(vocab.withColumnRenamed("surface", "__xs"),
-          col("x") === col("__xs"), "left_semi")
+          col("subj") === col("__xs"), "left_semi")
         .join(vocab.withColumnRenamed("surface", "__ys"),
-          col("y") === col("__ys"), "left_semi")
-        .as[SdpCandidate]
-      Extract.triples(gated).toDF()
+          col("obj") === col("__ys"), "left_semi")
+        .drop("sig")
     }
 
     val aliasDict = log.runStage("alias_dict") {
@@ -106,35 +132,13 @@ object KgPipeline {
     }
 
     // the dictionary's committed row count (from its snapshot manifest, no
-    // job) decides BOTH entity joins below: broadcast while the dictionary
-    // is driver-safe, salted shuffle join beyond (canon is row-for-row the
+    // job) decides all four entity joins below (canon is row-for-row the
     // dictionary, so the one count covers it too)
     val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
 
     val linked = log.runStage("linked_triples") {
       val dict = aliasDict.select(col("alias"), col("entity_id"))
-      val joined =
-        if (dictIsSmall) {
-          val b = broadcast(dict)
-          triples
-            .join(b.withColumnRenamed("alias", "s_alias")
-              .withColumnRenamed("entity_id", "subj_id"), col("subj") === col("s_alias"), "left")
-            .join(b.withColumnRenamed("alias", "o_alias")
-              .withColumnRenamed("entity_id", "obj_id"), col("obj") === col("o_alias"), "left")
-        } else {
-          // skew-aware degradation: the triple stream's hot surfaces (Zipf
-          // head) would swamp single reducers in a plain shuffle join; the
-          // salt spreads each key over `entityBuckets` reducers
-          val s = Linking.saltedLeftJoin(triples,
-            dict.withColumnRenamed("alias", "s_alias")
-              .withColumnRenamed("entity_id", "subj_id"),
-            "subj", "s_alias", Seq("doc_id", "span_idx"), entityBuckets)
-          Linking.saltedLeftJoin(s,
-            dict.withColumnRenamed("alias", "o_alias")
-              .withColumnRenamed("entity_id", "obj_id"),
-            "obj", "o_alias", Seq("doc_id", "span_idx"), entityBuckets)
-        }
-      joined
+      lookup(lookup(triples, "subj", dict, "subj_id", dictIsSmall), "obj", dict, "obj_id", dictIsSmall)
         .select(col("doc_id"), col("span_idx"), col("pred"), col("score"),
           col("subj"), coalesce(col("subj_id"), lit(Linking.OovEntityId)).as("subj_id"),
           col("obj"), coalesce(col("obj_id"), lit(Linking.OovEntityId)).as("obj_id"))
@@ -161,32 +165,11 @@ object KgPipeline {
     }
 
     log.runStage("canonical_triples", partitionBy = Seq("pred")) {
-      // project away entity_bucket BEFORE the join: it is a partition-layout
-      // column, replicating it in a broadcast (twice) is dead payload, and
-      // two identically-named copies in the joined frame would make any
-      // later entity_bucket reference ambiguous (review finding)
-      val cProj = canon.select(col("entity_id"), col("canonical_id"))
-      val joined =
-        if (dictIsSmall) {
-          val c = broadcast(cProj)
-          linked
-            .join(c.withColumnRenamed("entity_id", "s_ent")
-              .withColumnRenamed("canonical_id", "subj_canon"),
-              col("subj_id") === col("s_ent"), "left")
-            .join(c.withColumnRenamed("entity_id", "o_ent")
-              .withColumnRenamed("canonical_id", "obj_canon"),
-              col("obj_id") === col("o_ent"), "left")
-        } else {
-          val s = Linking.saltedLeftJoin(linked,
-            cProj.withColumnRenamed("entity_id", "s_ent")
-              .withColumnRenamed("canonical_id", "subj_canon"),
-            "subj_id", "s_ent", Seq("doc_id", "span_idx"), entityBuckets)
-          Linking.saltedLeftJoin(s,
-            cProj.withColumnRenamed("entity_id", "o_ent")
-              .withColumnRenamed("canonical_id", "obj_canon"),
-            "obj_id", "o_ent", Seq("doc_id", "span_idx"), entityBuckets)
-        }
-      joined
+      // entity_bucket is a partition-layout column: projected away before
+      // the joins, it is neither dead broadcast payload nor an ambiguous
+      // duplicate in the joined frame
+      val c = canon.select(col("entity_id"), col("canonical_id"))
+      lookup(lookup(linked, "subj_id", c, "subj_canon", dictIsSmall), "obj_id", c, "obj_canon", dictIsSmall)
         .select(
           coalesce(col("subj_canon"), col("subj_id")).as("subj_id"),
           col("pred"),
@@ -195,22 +178,18 @@ object KgPipeline {
     }
   }
 
-  /** The full docs→canonical-triples dataflow WITHOUT durable stage commits —
-    * the scaling-benchmark job (BENCH.md "pipeline pair"). Same stage graph
-    * as `run`: narrow fused extraction → corpus-derived dictionary gate
-    * (shuffle agg + semi-joins) → alias dictionary (shuffle agg +
-    * range-partitioned rank) → entity-link join → connected-components
-    * canonicalization (iterative shuffle) → canonical join. TableIO is
+  /** The docs→canonical-triples dataflow WITHOUT durable stage commits —
+    * the scaling-benchmark job (BENCH.md "pipeline pair"). Same kernel and
+    * the same entity joins as `run`: fused extraction → corpus-derived
+    * vocabulary gate (shuffle agg + semi-joins) → alias dictionary (shuffle
+    * agg + range-partitioned rank) → connected-components canonicalization
+    * (iterative shuffle) → entity-link + canonical join. TableIO is
     * deliberately absent so the measurement scales the ENGINE's shuffle-
-    * bearing stages, not the local filesystem.
+    * bearing stages, not the local filesystem. It applies no signature
+    * whitelist, so it equals `run(whitelistMinCount = 1)` row for row
+    * (ResumeSpec).
     *
-    * One declared delta vs `run`: the signature-whitelist gate is subsumed by
-    * the fused kernel's scoring pass (the kernel computes each signature
-    * once, inline), so the dictionary-gate shuffle shape is exercised by the
-    * vocabulary gate instead — same pattern (corpus-wide agg + left-semi
-    * join), strictly larger dictionary.
-    */
-  /** @param broadcastDict true (default, the benchmarked configuration)
+    * @param broadcastDict true (default, the benchmarked configuration)
     *   broadcasts the canonicalized dictionary into the output pass; false
     *   selects the salted-shuffle degradation path for corpora whose
     *   dictionary outgrows a driver-safe broadcast (the row-equality of the
@@ -308,44 +287,24 @@ object KgPipeline {
     // membership in the gated dictionary — an alias is in that dictionary
     // iff it survives the gate in some triple, and a triple survives iff
     // BOTH its endpoints are in-vocab.
-    val dictCanonPlain =
+    val dictCanon =
       d.join(canon, d("entity_id") === canon("entity_id"), "left")
         .select(d("alias"),
           coalesce(col("canonical_id"), d("entity_id")).as("canon_id"))
 
     // (D) output pass: re-extract, then gate + link + canonicalize in one
-    // narrow stage. Default: two broadcast hash joins. The rename-per-side
-    // form pays two broadcast builds of the dictionary-sized table; a
-    // shared-subtree form that reuses one build was MEASURED SLOWER overall
-    // (pass-2 task CPU +30% — the extra mid-join projection and relation
-    // dedup outweigh one small build), so two builds it is. When the
-    // dictionary outgrows a driver-safe broadcast (`broadcastDict = false`),
-    // the gate+link joins degrade to Linking.saltedLeftJoin: the inner-join
-    // vocab gate is restored by the not-null filters (a surface is in the
-    // gated dictionary iff the left join found it).
-    val stream = Extract.triplesFused(docs).toDF()
-    if (broadcastDict) {
-      val dictCanon = broadcast(dictCanonPlain)
-      stream
-        .join(dictCanon.withColumnRenamed("alias", "s_alias")
-          .withColumnRenamed("canon_id", "subj_id"), col("subj") === col("s_alias"))
-        .join(dictCanon.withColumnRenamed("alias", "o_alias")
-          .withColumnRenamed("canon_id", "obj_id"), col("obj") === col("o_alias"))
-        .select(col("subj_id"), col("pred"), col("obj_id"),
-          col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
-    } else {
-      val s = Linking.saltedLeftJoin(stream,
-        dictCanonPlain.withColumnRenamed("alias", "s_alias")
-          .withColumnRenamed("canon_id", "subj_id"),
-        "subj", "s_alias", Seq("doc_id", "span_idx"), entityBuckets)
-      Linking.saltedLeftJoin(s,
-        dictCanonPlain.withColumnRenamed("alias", "o_alias")
-          .withColumnRenamed("canon_id", "obj_id"),
-        "obj", "o_alias", Seq("doc_id", "span_idx"), entityBuckets)
-        .filter(col("subj_id").isNotNull && col("obj_id").isNotNull)
-        .select(col("subj_id"), col("pred"), col("obj_id"),
-          col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
-    }
+    // narrow stage. Default: two broadcast hash joins. The per-side form pays
+    // two broadcast builds of the dictionary-sized table; a shared-subtree
+    // form that reuses one build was MEASURED SLOWER overall (pass-2 task CPU
+    // +30% — the extra mid-join projection and relation dedup outweigh one
+    // small build), so two builds it is. The vocab gate is the not-null
+    // filter (a surface is in the gated dictionary iff the lookup found it);
+    // Catalyst turns each left join back into an inner one.
+    lookup(lookup(Extract.triplesFused(docs).toDF(), "subj", dictCanon, "subj_id", broadcastDict),
+      "obj", dictCanon, "obj_id", broadcastDict)
+      .filter(col("subj_id").isNotNull && col("obj_id").isNotNull)
+      .select(col("subj_id"), col("pred"), col("obj_id"),
+        col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
   }
 
   /** Entity table for the emitted graph: canonical id per alias. */

@@ -37,13 +37,13 @@ object KgQueries {
 
     // emitted (subj, pred, obj) triples after whitelist gate + scoring
     "kg_triples" -> ((s, dir) => {
-      // persist: the whitelist is an aggregation of the same candidate stream
+      // persist: the whitelist counts signatures over the same triple stream
       // the gate filters, so without reuse the extraction would run twice.
-      // The whitelist itself stays a DataFrame (collect-free semi-join).
-      val cands = Extract.candidates(sentences(s, dir))
+      // The gate itself stays a DataFrame (collect-free semi-join); `sig`
+      // is dropped so the query keeps its (subj … score) schema.
+      val triples = Extract.triples(Extract.candidates(sentences(s, dir))).toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val wl = Extract.signatureWhitelist(cands, minCount = 3).select("sig")
-      Extract.triples(Extract.filterByWhitelistDF(cands, wl)).toDF()
+      Extract.whitelisted(triples, minCount = 3).drop("sig")
     }),
 
     // the FULL checkpointed run: extract → link → canonicalize → emit

@@ -288,7 +288,8 @@ object NeuralScorer {
         val label = Labels.all(labelId)
         val (s, o) =
           if (label.endsWith("(e2,e1)")) (c.y, c.x) else (c.x, c.y)
-        Triple(s, Labels.collapse(label), o, c.doc_id, c.span_idx, prob)
+        Triple(s, Labels.collapse(label), o, c.doc_id, c.span_idx, prob,
+          SignatureScorer.signatureKey(c.path))
       }
     }
   }
@@ -330,7 +331,8 @@ object NeuralScorer {
           val label = Labels.all(labelId)
           val (s, o) =
             if (label.endsWith("(e2,e1)")) (cand.y, cand.x) else (cand.x, cand.y)
-          Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, prob)
+          Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, prob,
+            SignatureScorer.signatureKey(cand.path))
         }
       }
     }

@@ -30,18 +30,13 @@ object SignatureScorer {
     0.5 + h / 2000.0
   }
 
-  def toTriple(cand: SdpCandidate): Triple =
-    toTripleWithSig(cand, signatureKey(cand.path))
-
-  /** toTriple with the signature precomputed — the hot path computes the
-    * signature once for whitelist check + label + score.
-    */
-  def toTripleWithSig(cand: SdpCandidate, sig: String): Triple = {
+  def toTriple(cand: SdpCandidate): Triple = {
+    val sig = signatureKey(cand.path)
     val label = Labels.all(math.floorMod(sig.hashCode, Labels.all.length - 1))
     val score = 0.5 + math.floorMod((cand.x + "" + cand.y + "" + sig).hashCode, 1000) / 2000.0
     // direction: (e2,e1) labels swap subject/object, mirroring how the
     // reference encodes direction in the label (semeval_data_helper.py:208-229)
     val (s, o) = if (label.endsWith("(e2,e1)")) (cand.y, cand.x) else (cand.x, cand.y)
-    Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, score)
+    Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, score, sig)
   }
 }

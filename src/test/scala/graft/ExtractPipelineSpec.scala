@@ -3,6 +3,7 @@ package graft
 import graft.annotate.Annotator
 import graft.corpus.Corpus
 import graft.extract.{Extract, Sdp}
+import graft.pipeline.KgPipeline
 import graft.score.SignatureScorer
 
 /** End-to-end extraction over the sf0.001 corpus:
@@ -75,20 +76,10 @@ class ExtractPipelineSpec extends SparkSuite {
   }
 
   test("fused single-stage path == composed pipeline (with and without whitelist)") {
-    import org.apache.spark.sql.functions.col
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-    val composed = Extract.triples(Extract.candidates(Extract.docsToSentences(docs)))
-      .collect().toSet
-    val fused = Extract.triplesFused(raw).collect().toSet
-    assert(fused == composed)
-
-    val cands = Extract.candidates(Extract.docsToSentences(docs))
-    val wl = Extract.signatureWhitelist(cands, 3)
-      .select("sig").as[String].collect().toSet
-    val composedWl = Extract.triples(Extract.filterByWhitelist(cands, wl)).collect().toSet
-    val fusedWl = Extract.triplesFused(raw, wl).collect().toSet
-    assert(fusedWl == composedWl)
+    val composed = Extract.triples(Extract.candidates(Extract.docsToSentences(docs))).toDF()
+    val fused = Extract.triplesFused(rawDocs).toDF()
+    assert(sortedRows(fused) == sortedRows(composed))
+    assert(sortedRows(Extract.whitelisted(fused, 3)) == sortedRows(Extract.whitelisted(composed, 3)))
   }
 
   test("in-memory pipeline: salted degradation path is row-equal to broadcast") {
@@ -96,36 +87,50 @@ class ExtractPipelineSpec extends SparkSuite {
     // broadcast, the gate+link+canonicalize joins degrade to
     // Linking.saltedLeftJoin — the two configurations must emit identical
     // canonical triples (the broadcast form is the benchmarked default)
-    import org.apache.spark.sql.functions.col
-    import graft.pipeline.KgPipeline
-    val raw = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text")).as[(Long, String)]
-    val viaBroadcast =
-      KgPipeline.canonicalTriplesInMemory(raw).collect().toSet
-    val viaSalted =
-      KgPipeline.canonicalTriplesInMemory(raw, broadcastDict = false).collect().toSet
+    val viaBroadcast = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs))
+    val viaSalted = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs, broadcastDict = false))
     assert(viaSalted == viaBroadcast)
     assert(viaBroadcast.nonEmpty)
   }
 
   test("whitelist gate + scorer emit deterministic triples") {
     val cands = Extract.candidates(Extract.docsToSentences(docs)).cache()
-    val wl = Extract.signatureWhitelist(cands, minCount = 3)
-      .as[(String, Long)].collect().map(_._1).toSet
-    assert(wl.nonEmpty)
-    val kept = Extract.filterByWhitelist(cands, wl)
-    val t1 = Extract.triples(kept).collect().toSet
-    val t2 = Extract.triples(kept.repartition(5)).collect().toSet
+    val kept = Extract.whitelisted(Extract.triples(cands).toDF(), minCount = 3)
+    val t1 = sortedRows(kept)
+    val t2 = sortedRows(Extract.whitelisted(Extract.triples(cands.repartition(5)).toDF(), minCount = 3))
     assert(t1 == t2, "triples must be partitioning-invariant")
     assert(t1.nonEmpty)
-    assert(t1.forall(t => t.pred.nonEmpty && t.score >= 0.5 && t.score <= 1.0))
-    // whitelisted structures only — signature of every emitted triple's source
-    // candidate was frequent enough
+    assert(t1.forall { r =>
+      val score = r.getAs[Double]("score")
+      r.getAs[String]("pred").nonEmpty && score >= 0.5 && score <= 1.0
+    })
+    // whitelisted structures only — every emitted triple carries the
+    // signature of a candidate path seen at least 3 times
     val sigCounts = cands
       .map(c => SignatureScorer.signatureKey(c.path)).groupByKey(identity)
       .count().collect().toMap
-    kept.collect().foreach(c =>
-      assert(sigCounts(SignatureScorer.signatureKey(c.path)) >= 3))
+    t1.foreach(r => assert(sigCounts(r.getAs[String]("sig")) >= 3))
     cands.unpersist()
+  }
+
+  test("whitelisted keeps exactly the rows whose signature occurs minCount times, duplicates included") {
+    // signatures occur once (a), twice (b) and three times (c, one row twice);
+    // sig sits mid-row so the gate must also keep the column order
+    val in = Seq(
+      ("s1", "a", 0.5), ("s2", "b", 0.6), ("s3", "b", 0.7),
+      ("s4", "c", 0.8), ("s4", "c", 0.8), ("s5", "c", 0.9)).toDF("subj", "sig", "score")
+    val rows = sortedRows(in)
+    val counts = rows.groupBy(_.getString(1)).map { case (sig, rs) => sig -> rs.size }
+    for (minCount <- 1L to 4L) {
+      val kept = Extract.whitelisted(in, minCount)
+      assert(kept.columns.toSeq == in.columns.toSeq)
+      val (expectKept, expectDropped) = rows.partition(r => counts(r.getString(1)) >= minCount)
+      val dropped = sortedRows(in.exceptAll(kept))
+      assert(sortedRows(kept) == expectKept, s"kept at minCount=$minCount")
+      assert(dropped == expectDropped, s"dropped at minCount=$minCount")
+      assert(kept.count() + dropped.size == rows.size, s"kept + dropped = in at minCount=$minCount")
+    }
+    val keptAt3 = sortedRows(Extract.whitelisted(in, 3)).map(_.getString(0))
+    assert(keptAt3 == Seq("s4", "s4", "s5"), "a duplicate row survives as a duplicate")
   }
 }

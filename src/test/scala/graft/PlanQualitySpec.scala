@@ -1,5 +1,14 @@
 package graft
 
+import graft.model.Triple
+import graft.pipeline.KgPipeline
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.types.ObjectType
+
 /** Physical-plan quality gates: pushdown, pruning, join strategy, and the
   * absence of single-partition windows — asserted, not eyeballed. These are
   * the properties that decide whether a plan survives a 100× scale-up, so
@@ -91,5 +100,54 @@ class PlanQualitySpec extends SparkSuite {
     val p = plan("q21_cosine_topk")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       s"expected broadcast query side in q21:\n$p")
+  }
+
+  /** Children as executed, looking through AQE's wrapper and query stages. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case other => other.children
+  }
+
+  /** The fused extraction kernel: the operator that emits `Triple` objects. */
+  private def isKernel(p: SparkPlan): Boolean = p match {
+    case m: MapPartitionsExec => m.outputObjAttr.dataType == ObjectType(classOf[Triple])
+    case _ => false
+  }
+
+  private def runsKernel(p: SparkPlan): Boolean = isKernel(p) || kids(p).exists(runsKernel)
+
+  /** The nodes from the root down to the kernel: the path its triple stream
+    * travels, without the dictionary-side subtrees.
+    */
+  private def streamPath(p: SparkPlan): Seq[SparkPlan] =
+    if (isKernel(p)) Seq(p) else p +: kids(p).find(runsKernel).map(streamPath).getOrElse(Nil)
+
+  /** The executed in-memory job's entity joins: the joins on the stream path. */
+  private def streamJoins(broadcastDict: Boolean): (Seq[SparkPlan], Seq[BaseJoinExec]) = {
+    val df = KgPipeline.canonicalTriplesInMemory(rawDocs, broadcastDict = broadcastDict)
+    df.collect()
+    val path = streamPath(df.queryExecution.executedPlan)
+    assert(path.exists(isKernel), s"no extraction kernel in the plan:\n${df.queryExecution.executedPlan}")
+    (path, path.collect { case j: BaseJoinExec => j })
+  }
+
+  test("in-memory output pass: two broadcast joins on the unshuffled stream; salted joins key on __salt") {
+    val (path, joins) = streamJoins(broadcastDict = true)
+    assert(joins.size == 2, s"expected two entity joins on the stream:\n${path.mkString("\n")}")
+    joins.foreach {
+      case b: BroadcastHashJoinExec => assert(b.buildSide == BuildRight, s"stream side broadcast:\n$b")
+      case j => fail(s"entity join is not a broadcast hash join:\n$j")
+    }
+    val shuffles = path.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.isEmpty, s"the stream side is shuffled:\n${shuffles.mkString("\n")}")
+
+    val (saltedPath, salted) = streamJoins(broadcastDict = false)
+    assert(salted.size == 2, s"expected two entity joins on the stream:\n${saltedPath.mkString("\n")}")
+    salted.foreach { j =>
+      assert(j.leftKeys.exists(_.references.exists(_.name == "__salt")) &&
+        j.rightKeys.exists(_.references.exists(_.name == "__salt")),
+        s"salted entity join without __salt in its keys:\n$j")
+    }
   }
 }

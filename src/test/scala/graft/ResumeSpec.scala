@@ -6,7 +6,6 @@ import graft.tableio.TableIO
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
@@ -17,12 +16,6 @@ class ResumeSpec extends SparkSuite {
 
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toString
-
-  /** Rows as a sorted sequence: equality is multiset equality, so a lost or
-    * duplicated row fails where a `Set` compare would not.
-    */
-  private def sortedRows(df: DataFrame) =
-    df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
 
   /** Evaluates `body` and counts the Spark jobs it started. Listener events
     * arrive asynchronously, so a tagged marker job runs after `body`: once
@@ -221,6 +214,31 @@ class ResumeSpec extends SparkSuite {
       assert(data.schema == spark.read.parquet(log.snapshot(stage).dataDir).schema,
         s"manifest schema differs from the inferred one for $stage")
     }
+  }
+
+  test("pipeline: run(whitelistMinCount = 1) equals canonicalTriplesInMemory (as a multiset)") {
+    // the benchmarked in-memory job applies no signature whitelist; with the
+    // gate opened, the shipped durable job must emit exactly its rows
+    val cols = Seq("subj_id", "pred", "obj_id", "subj", "obj", "doc_id", "span_idx", "score").map(col)
+    val durable = sortedRows(
+      KgPipeline.run(spark, sfDir, tmpDir("graft-wl1"), whitelistMinCount = 1).select(cols: _*))
+    val inMemory = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs).select(cols: _*))
+    assert(durable.nonEmpty)
+    assert(durable == inMemory)
+  }
+
+  test("pipeline: a candidates table committed without sig fails the resume, naming stage and run dir") {
+    import graft.model.{PathStep, SdpCandidate}
+    val runDir = tmpDir("graft-stale")
+    // the candidates shape committed before the kernel emitted `sig`
+    new StageLog(spark, runDir).runStage("candidates")(Seq(
+      SdpCandidate("d000000001", 0, "cat", "mat", Array(PathStep("<X>", "nsubj", "NOUN")), "WIKI"))
+      .toDS().toDF())
+    val (err, jobs) = jobsDuring(intercept[RuntimeException](KgPipeline.run(spark, sfDir, runDir)))
+    assert(err.getMessage.contains("stage candidates") && err.getMessage.contains(runDir),
+      err.getMessage)
+    assert(jobs == 0, "the schema check reads the manifest and starts no job")
+    assert(!new StageLog(spark, runDir).isCommitted("triples"))
   }
 
   test("pipeline emits canonicalized entities (plural variants merged)") {

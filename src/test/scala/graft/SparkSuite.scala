@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -18,4 +19,16 @@ object TestSpark {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The corpus as the `(doc_id, text)` rows the fused extraction reads. */
+  def rawDocs: Dataset[(Long, String)] = {
+    import spark.implicits._
+    spark.read.parquet(s"$sfDir/documents.parquet").select(col("doc_id"), col("text")).as[(Long, String)]
+  }
+
+  /** Rows as a sorted sequence: equality is multiset equality, so a lost or
+    * duplicated row fails where a `Set` compare would not.
+    */
+  def sortedRows(df: DataFrame): Seq[Row] =
+    df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
 }
