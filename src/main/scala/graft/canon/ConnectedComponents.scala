@@ -64,13 +64,12 @@ object ConnectedComponents {
     // symmetrize once; truncate lineage so no round re-plans the upstream
     // pipeline (on failure with ckptDir set, the caller's rerun rebuilds sym
     // from its own committed stage and resumes labels from the table below).
-    // Co-partition by `src` BEFORE the checkpoint: the leaf preserves the
-    // hash partitioning, so every round's sym⋈labels join reads the edge
-    // table in place instead of re-shuffling it — distinct() alone leaves
-    // HashPartitioning(src, dst), which does not satisfy the join's
-    // clustering on [src], and the EDGE table is the largest thing CC
-    // touches (per-round edge reshuffle is the classic iterative-join
-    // scale-killer; labels-side shuffles are label-sized and stay).
+    // Co-partition by `src` BEFORE the checkpoint, meant to let every round's
+    // sym⋈labels join read the edge table in place (the EDGE table is the
+    // largest thing CC touches; per-round edge reshuffle is the classic
+    // iterative-join scale-killer). Measured on Spark 4.1 with AQE, it does
+    // not: the checkpoint leaf reports UnknownPartitioning, so each round
+    // re-exchanges the edges (PlanQualitySpec's pending CC guard).
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()

@@ -258,15 +258,6 @@ object FusedKernel {
     nHeads
   }
 
-  /** Diagnostic: render the kernel's annotation of one sentence. */
-  def debugAnnotate(words: Array[String]): String = {
-    val s = new Scratch
-    val nHeads = annotate(words, 0, words.length, s)
-    words.indices.map(i =>
-      s"${words(i)}/${posName(s.pos(i))}/${depStr(s.dep(i))}/${s.head(i)}").mkString(" ") +
-      " HEADS=" + (0 until nHeads).map(s.chunkHeads(_)).mkString(",")
-  }
-
   /** Emit this sentence's triples into s.out (cleared first). */
   private def sentenceTriples(
       docId: String, spanIdx: Int,

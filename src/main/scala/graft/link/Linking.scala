@@ -1,8 +1,7 @@
 package graft.link
 
-import graft.model.{AliasEntry, Mention}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.model.AliasEntry
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Entity linking: alias dictionary build + dictionary join with OOV default.
@@ -16,34 +15,33 @@ import org.apache.spark.sql.functions._
   * than the mention stream, so the join is a broadcast hash join — zero
   * shuffle of the big side. Zipfian alias frequencies make the *output* of a
   * shuffle join skewed; broadcasting sidesteps reduce-side skew entirely. For
-  * dictionaries too big to broadcast, `saltedJoin` spreads hot keys over
-  * `buckets` replicas: big side gets a deterministic salt from hash(doc_id),
-  * dictionary rows are exploded ×buckets, and the join key becomes
-  * (alias, salt) — an explicit skew-aware repartition join.
+  * dictionaries too big to broadcast, `lookup` degrades to `saltedLeftJoin`,
+  * which spreads hot keys over `buckets` replicas: big side gets a
+  * deterministic salt from hash(doc_id), dictionary rows are exploded
+  * ×buckets, and the join key becomes (alias, salt) — an explicit skew-aware
+  * repartition join.
   */
 object Linking {
 
   val OovEntityId: Long = -1L
 
-  /** Frequency-ranked alias dictionary with deterministic tie-break
-    * (freq desc, alias asc — the reference's Counter.most_common order made
-    * partition-invariant, SURVEY.md W2 note). `surfaces` is any single-column
-    * DataFrame of alias strings.
+  /** Hash-bucket count for the entity table's partition layout (the Iceberg
+    * `bucket(N, entity_id)` transform analog) and the salt width of the
+    * salted entity joins. 16 at test scale; a config knob — at 10¹²-doc
+    * scale this is sized to target file counts.
     */
-  def buildAliasDictFromSurfaces(surfaces: DataFrame, minCount: Long = 1): Dataset[AliasEntry] = {
-    val counts = surfaces.toDF("alias")
-      .groupBy("alias").agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= minCount)
-    buildAliasDictFromCounts(counts)
-  }
+  val entityBuckets = 16
 
-  /** Dictionary build from a pre-aggregated `(alias, freq)` frame. The rank
-    * assignment references `counts` several times (range-partition sampling,
-    * the broadcast total) — callers on a non-trivial lineage should persist
-    * `counts` first so those references hit a dictionary-sized cache instead
-    * of re-running the upstream corpus scan.
+  /** Frequency-ranked alias dictionary from a pre-aggregated `(alias, freq)`
+    * frame, with deterministic tie-break (freq desc, alias asc — the
+    * reference's Counter.most_common order made partition-invariant,
+    * SURVEY.md W2 note). The rank assignment references `counts` several
+    * times (range-partition sampling, the broadcast total) — callers on a
+    * non-trivial lineage should persist `counts` first so those references
+    * hit a dictionary-sized cache instead of re-running the upstream corpus
+    * scan.
     */
-  def buildAliasDictFromCounts(counts: DataFrame): Dataset[AliasEntry] = {
+  def buildAliasDict(counts: DataFrame): Dataset[AliasEntry] = {
     val spark = counts.sparkSession
     import spark.implicits._
     // alias count grows with the corpus (Heaps' law), so the id assignment is
@@ -59,26 +57,32 @@ object Linking {
       .as[AliasEntry]
   }
 
-  def buildAliasDict(mentions: Dataset[Mention], minCount: Long = 1): Dataset[AliasEntry] =
-    buildAliasDictFromSurfaces(mentions.select("surface").toDF(), minCount)
-
-  /** Broadcast dictionary join: mention surface → entity_id, misses → OOV
-    * (vocab2idx semantics). No shuffle of the mention stream.
+  /** Every entity join: left-joins `stream` to the two-column (key, value)
+    * `table` on `stream(key)`, adding the value as column `as` (null on a
+    * miss; the caller picks the OOV default). The join strategy is one
+    * decision, made here: `small` broadcasts the table (one hash build per
+    * executor, no stream shuffle); otherwise the join degrades to
+    * `saltedLeftJoin` on the stream's `doc_id`, `span_idx`, which spreads
+    * each key over `entityBuckets` reducers so the stream's hot surfaces
+    * (Zipf head) cannot swamp one. A hard `broadcast()` hint on a
+    * Heaps-large table would force it through the driver regardless of
+    * `autoBroadcastJoinThreshold`, so the caller sizes `small`.
     */
-  def linkMentions(mentions: Dataset[Mention], dict: Dataset[AliasEntry]): DataFrame =
-    mentions
-      .join(broadcast(dict.select(col("alias"), col("entity_id"))),
-        mentions("surface") === col("alias"), "left")
-      .select(mentions("doc_id"), mentions("span_idx"), mentions("head_idx"),
-        mentions("surface"),
-        coalesce(col("entity_id"), lit(OovEntityId)).as("entity_id"))
+  def lookup(stream: DataFrame, key: String, table: DataFrame, as: String,
+             small: Boolean): DataFrame = {
+    val t = table.toDF(s"__$as", as)
+    val joined =
+      if (small) stream.join(broadcast(t), col(key) === col(s"__$as"), "left")
+      else saltedLeftJoin(stream, t, key, s"__$as", Seq("doc_id", "span_idx"), entityBuckets)
+    joined.drop(s"__$as")
+  }
 
   /** Skew-aware salted repartition join for dictionaries beyond broadcast
     * size: each big-side row picks a deterministic salt in [0, buckets) from a
     * hash of `saltCols`; the dictionary side is exploded ×buckets so every
     * (key, salt) bucket joins locally and a single hot key spreads over
     * `buckets` reducers. Result is row-identical to the plain left join —
-    * verified by LinkingSpec and the q11 oracle.
+    * verified by LinkCanonEvalSpec and the q11 oracle.
     */
   def saltedLeftJoin(
       big: DataFrame,
@@ -97,12 +101,4 @@ object Linking {
         "left")
       .drop(salted("__salt")).drop(explodedDict("__salt"))
   }
-
-  /** Mention-typed wrapper over saltedLeftJoin with OOV default. */
-  def saltedJoin(mentions: Dataset[Mention], dict: Dataset[AliasEntry], buckets: Int): DataFrame =
-    saltedLeftJoin(
-      mentions.toDF(), dict.select(col("alias"), col("entity_id")).toDF(),
-      "surface", "alias", Seq("doc_id", "span_idx", "head_idx"), buckets)
-      .select(col("doc_id"), col("span_idx"), col("head_idx"), col("surface"),
-        coalesce(col("entity_id"), lit(OovEntityId)).as("entity_id"))
 }

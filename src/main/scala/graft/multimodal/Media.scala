@@ -57,9 +57,6 @@ object Media {
     * WELL-FORMED WAV for audio/video refs and P6 PPM for image refs, so the
     * real decoders execute end-to-end; opaque bytes otherwise.
     */
-  private[multimodal] def fakeFetch(mediaRef: String): Array[Byte] =
-    fetchFor("", mediaRef)
-
   private[multimodal] def fetchFor(kind: String, mediaRef: String): Array[Byte] =
     kind match {
       case "audio"                => Decoders.synthWav(mediaRef)

@@ -5,12 +5,16 @@ import graft.ckpt.StageLog
 import graft.corpus.Corpus
 import graft.extract.Extract
 import graft.link.Linking
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.link.Linking.lookup
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The docs→canonical-triples job, in two entry points that share one
   * extraction kernel (`Extract.triplesFused`), one whitelist gate
-  * (`Extract.whitelisted`) and one entity-join helper (`lookup`):
+  * (`Extract.whitelisted`), one dictionary side (`endpointCounts` feeds the
+  * vocabulary gate and the alias dictionary, `canonicalize` gives every
+  * entity its canonical id) and one entity-join helper (`Linking.lookup`,
+  * broadcast or salted by one `broadcastMaxDictRows` bound):
   *
   *   docs → fused extraction (candidates with their path signature `sig`)
   *        → triples (whitelist + vocabulary gates)
@@ -32,19 +36,24 @@ object KgPipeline {
   val stages: Seq[String] = Seq(
     "candidates", "triples", "alias_dict", "linked_triples", "entity_canon", "canonical_triples")
 
-  /** Hash-bucket count for the entity table's partition layout (the Iceberg
-    * `bucket(N, entity_id)` transform analog) and the salt width of the
-    * salted entity joins. 16 at test scale; a config knob — at 10¹²-doc
-    * scale this is sized to target file counts.
+  /** is_ok_sdp rule 1 (semeval2sdp.py:245-262): a surface is in-vocabulary
+    * when it is a triple endpoint at least this often corpus-wide.
     */
-  val entityBuckets = 16
+  val vocabMinCount = 2L
+
+  /** Both jobs' default dictionary-side row bound for the entity joins: at or
+    * below it the dictionary broadcasts, above it the joins are salted
+    * (`Linking.lookup`). ~5M rows ≈ low hundreds of MB broadcast; a config
+    * knob at scale.
+    */
+  val defaultBroadcastMaxDictRows = 5000000L
 
   /** Plural/variant stem for canonicalization edges: aliases whose stem
     * matches collapse into one entity (e.g. "tables" ↔ "table"). A stand-in
     * for the reference's trained-similarity canonicalization, fully
     * deterministic.
     */
-  def stem(c: org.apache.spark.sql.Column) =
+  def stem(c: Column) =
     when(length(c) > 3 && c.endsWith("s"), c.substr(lit(1), length(c) - 1)).otherwise(c)
 
   /** Stem-variant edges of an alias dictionary (alias, entity_id):
@@ -52,10 +61,10 @@ object KgPipeline {
     * EXCLUDED — stem(a) == a for every non-plural alias, so without the
     * filter the edge set carries a self-edge per dictionary entry and CC's
     * vertex set becomes the whole Heaps-large dictionary instead of the
-    * much smaller variant subgraph (review finding; the callers restore
-    * singletons via an explicit self-edge union or a left-join coalesce).
-    * The stem self-join stays a shuffle join deliberately: at 100 TB the
-    * dictionary is Heaps-large on BOTH sides.
+    * much smaller variant subgraph (review finding; `canonicalize` restores
+    * singletons with a left-join coalesce). The stem self-join stays a
+    * shuffle join deliberately: at 100 TB the dictionary is Heaps-large on
+    * BOTH sides.
     */
   private def variantEdges(d: DataFrame): DataFrame = {
     val stemmed = d.select(col("entity_id").as("src_id"), stem(col("alias")).as("stem"))
@@ -66,33 +75,52 @@ object KgPipeline {
       .select(col("src_id").as("src"), col("dst_id").as("dst"))
   }
 
-  /** Every entity join of both jobs: left-joins `stream` to the two-column
-    * (key, value) `table` on `stream(key)`, adding the value as column `as`
-    * (null on a miss). The join strategy is one decision, made here:
-    * `small` broadcasts the table (one hash build per executor, no stream
-    * shuffle); otherwise the join degrades to `Linking.saltedLeftJoin`, which
-    * spreads each key over `entityBuckets` reducers so the stream's hot
-    * surfaces (Zipf head) cannot swamp one. A hard `broadcast()` hint on a
-    * Heaps-large table would force it through the driver regardless of
-    * `autoBroadcastJoinThreshold`, so the caller sizes `small`.
+  /** The canonical id of every entity of an alias dictionary, as
+    * (alias, entity_id, canonical_id): CC runs on the stem-variant edges
+    * only, and every entity outside them keeps its own id through one
+    * left-join coalesce. `ckptDir` makes CC's rounds durable
+    * (`ConnectedComponents.run`).
     */
-  private def lookup(stream: DataFrame, key: String, table: DataFrame, as: String,
-                     small: Boolean): DataFrame = {
-    val t = table.toDF(s"__$as", as)
-    val joined =
-      if (small) stream.join(broadcast(t), col(key) === col(s"__$as"), "left")
-      else Linking.saltedLeftJoin(stream, t, key, s"__$as", Seq("doc_id", "span_idx"), entityBuckets)
-    joined.drop(s"__$as")
+  private def canonicalize(dict: DataFrame, ckptDir: Option[String]): DataFrame = {
+    val d = dict.select(col("alias"), col("entity_id"))
+    val cc = ConnectedComponents.run(variantEdges(d), ckptDir = ckptDir)
+    d.join(cc, d("entity_id") === cc("id"), "left")
+      .select(d("alias"), d("entity_id"), coalesce(cc("component"), d("entity_id")).as("canonical_id"))
   }
 
+  /** Endpoint frequencies `(alias, freq)` of a (subj, obj) frame, each row
+    * weighted by `weight` (1 per triple, or a pair table's count `n`). Each
+    * row is EXPLODED into its two endpoints, so a triple with subj == obj
+    * counts that surface twice. The union of two projections would scan the
+    * leaf twice and plan two aggregation arms — and exchange reuse did not
+    * dedupe across checkpoint leaves (measured: every broadcast subtree built
+    * per-reference), so single-reference plans are the reliable form.
+    */
+  private def endpointCounts(pairs: DataFrame, weight: Column): DataFrame =
+    pairs.select(explode(array(col("subj"), col("obj"))).as("alias"), weight.as("w"))
+      .groupBy("alias").agg(sum("w").as("freq"))
+
+  /** The surfaces of `pairs` that pass is_ok_sdp rule 1, as column `__vs`. */
+  private def vocabulary(pairs: DataFrame, weight: Column): DataFrame =
+    endpointCounts(pairs, weight).filter(col("freq") >= vocabMinCount).select(col("alias").as("__vs"))
+
+  /** The rows of `df` whose subj and obj are both in `vocab`. By-name: each
+    * semi-join side gets a FRESH structurally-identical plan instance — fresh
+    * instances canonicalize equal and ReuseExchange collapses them to one
+    * build, while referencing the same val twice defeats the reuse
+    * (measured on the dictionary-broadcast pair of the in-memory job).
+    */
+  private def inVocab(df: DataFrame, vocab: => DataFrame): DataFrame =
+    df.join(vocab, col("subj") === col("__vs"), "left_semi")
+      .join(vocab, col("obj") === col("__vs"), "left_semi")
+
   /** @param broadcastMaxDictRows dictionary-side row bound for the entity
-    *   joins: at or below it the dictionary broadcasts, above it the joins
-    *   are salted (`lookup`). ~5M rows ≈ low hundreds of MB broadcast; a
-    *   config knob at scale.
+    *   joins, compared against the committed alias dictionary's row count
+    *   (see `defaultBroadcastMaxDictRows`).
     */
   def run(spark: SparkSession, sfDir: String, runDir: String,
           whitelistMinCount: Long = 3,
-          broadcastMaxDictRows: Long = 5000000L): DataFrame = {
+          broadcastMaxDictRows: Long = defaultBroadcastMaxDictRows): DataFrame = {
     val log = new StageLog(spark, runDir)
 
     // every candidate triple of the corpus, with its path signature
@@ -111,24 +139,12 @@ object KgPipeline {
       // dictionary is ever collected to the driver (its size grows with the
       // corpus — the classic driver-heap bottleneck at 100×). AQE turns these
       // semi-joins into broadcast joins while the dictionaries are small.
-      // is_ok_sdp rule 1 (semeval2sdp.py:245-262): drop candidates whose
-      // target surfaces are out-of-vocabulary (< 2 occurrences corpus-wide)
-      val vocab = candidates.select(col("subj").as("surface"))
-        .union(candidates.select(col("obj").as("surface")))
-        .groupBy("surface").agg(count(lit(1)).as("n"))
-        .filter(col("n") >= 2)
-        .select("surface")
-      Extract.whitelisted(candidates, whitelistMinCount)
-        .join(vocab.withColumnRenamed("surface", "__xs"),
-          col("subj") === col("__xs"), "left_semi")
-        .join(vocab.withColumnRenamed("surface", "__ys"),
-          col("obj") === col("__ys"), "left_semi")
+      inVocab(Extract.whitelisted(candidates, whitelistMinCount), vocabulary(candidates, lit(1)))
         .drop("sig")
     }
 
     val aliasDict = log.runStage("alias_dict") {
-      Linking.buildAliasDictFromSurfaces(
-        triples.select(col("subj")).union(triples.select(col("obj")))).toDF()
+      Linking.buildAliasDict(endpointCounts(triples, lit(1))).toDF()
     }
 
     // the dictionary's committed row count (from its snapshot manifest, no
@@ -150,18 +166,11 @@ object KgPipeline {
     // instead of scanning the table, and the hash spreads write volume
     // evenly where raw entity_id would make one directory per entity
     val canon = log.runStage("entity_canon", partitionBy = Seq("entity_bucket")) {
-      // edges: entity ↔ entity of its stemmed alias (when both exist), plus
-      // self-loops so every entity appears in the CC vertex set (the durable
-      // entity_canon table lists EVERY entity — unlike the in-memory
-      // benchmark path, which restores singletons via a left-join coalesce)
-      val d = aliasDict.select(col("alias"), col("entity_id"))
-      val selfEdges = d.select(col("entity_id").as("src"), col("entity_id").as("dst"))
       // CC rounds checkpoint durably inside the run dir: a mid-CC kill
       // resumes from the last committed labels instead of restarting
-      ConnectedComponents.run(variantEdges(d).union(selfEdges),
-        ckptDir = Some(s"$runDir/cc"))
-        .select(col("id").as("entity_id"), col("component").as("canonical_id"),
-          pmod(hash(col("id")), lit(entityBuckets)).as("entity_bucket"))
+      canonicalize(aliasDict, Some(s"$runDir/cc"))
+        .select(col("entity_id"), col("canonical_id"),
+          pmod(hash(col("entity_id")), lit(Linking.entityBuckets)).as("entity_bucket"))
     }
 
     log.runStage("canonical_triples", partitionBy = Seq("pred")) {
@@ -179,26 +188,26 @@ object KgPipeline {
   }
 
   /** The docs→canonical-triples dataflow WITHOUT durable stage commits —
-    * the scaling-benchmark job (BENCH.md "pipeline pair"). Same kernel and
-    * the same entity joins as `run`: fused extraction → corpus-derived
-    * vocabulary gate (shuffle agg + semi-joins) → alias dictionary (shuffle
-    * agg + range-partitioned rank) → connected-components canonicalization
-    * (iterative shuffle) → entity-link + canonical join. TableIO is
-    * deliberately absent so the measurement scales the ENGINE's shuffle-
-    * bearing stages, not the local filesystem. It applies no signature
-    * whitelist, so it equals `run(whitelistMinCount = 1)` row for row
-    * (ResumeSpec).
+    * the scaling-benchmark job (BENCH.md "pipeline pair"). Same kernel, the
+    * same dictionary side and the same entity joins as `run`: fused
+    * extraction → corpus-derived vocabulary gate (shuffle agg + semi-joins)
+    * → alias dictionary (shuffle agg + range-partitioned rank) →
+    * connected-components canonicalization (iterative shuffle) → entity-link
+    * + canonical join. TableIO is deliberately absent so the measurement
+    * scales the ENGINE's shuffle-bearing stages, not the local filesystem.
+    * It applies no signature whitelist, so it equals
+    * `run(whitelistMinCount = 1)` row for row (ResumeSpec).
     *
-    * @param broadcastDict true (default, the benchmarked configuration)
-    *   broadcasts the canonicalized dictionary into the output pass; false
-    *   selects the salted-shuffle degradation path for corpora whose
-    *   dictionary outgrows a driver-safe broadcast (the row-equality of the
-    *   two paths is spec-pinned). The benchmark keeps the broadcast form —
-    *   its dictionary is bounded by the synthetic vocabulary.
+    * @param broadcastMaxDictRows `run`'s bound, compared against the
+    *   vocabulary's row count (the gated dictionary is a subset of the
+    *   vocabulary, so this bounds it from above): at or below it the
+    *   vocabulary semi-joins and both entity joins broadcast; above it the
+    *   entity joins are salted and the semi-joins left to AQE. The benchmark
+    *   keeps the broadcast form — its dictionary is bounded by the synthetic
+    *   vocabulary.
     */
   def canonicalTriplesInMemory(docs: Dataset[(Long, String)],
-                               vocabMinCount: Long = 2,
-                               broadcastDict: Boolean = true): DataFrame = {
+                               broadcastMaxDictRows: Long = defaultBroadcastMaxDictRows): DataFrame = {
     // Pass economy at 10^12 rows — two corpus-scale passes, NOTHING
     // corpus-scale is materialized:
     //   pass 1: fused extraction → (subj, obj) PAIR aggregation. Map-side
@@ -226,57 +235,29 @@ object KgPipeline {
       .localCheckpoint(eager = true)
 
     // (B) is_ok_sdp rule 1 input: corpus-wide endpoint frequencies —
-    // dictionary-sized rollup of the pair table (a triple with subj==obj
-    // still counts that surface twice, as in the staged pipeline). The
-    // endpoint multiset is built by EXPLODING each pair row into its two
-    // endpoints instead of unioning two projections of the pair table: the
-    // union form scans the leaf twice and plans two aggregation arms — and
-    // exchange reuse cannot dedupe across these checkpoint leaves (a
-    // LogicalRDD that preserves its shuffle's HashPartitioning defeats
-    // canonical plan equality, measured: every broadcast subtree built
-    // per-reference), so single-reference plans are the reliable form.
-    val endpointCounts = pairCounts
-      .select(explode(array(col("subj"), col("obj"))).as("surface"), col("n"))
-    // vocab is referenced by two broadcast builds (one per semi-join side);
-    // materialized once so each build scans the tiny leaf instead of
-    // re-aggregating the pair table. Each semi-join side gets a FRESH
-    // structurally-identical Project instance over the leaf: fresh instances
-    // canonicalize equal and ReuseExchange collapses them to one broadcast
-    // build, while referencing the same val twice defeats the reuse
-    // (measured on the dictionary-broadcast pair below).
-    val vocabCkpt = endpointCounts
-      .groupBy("surface").agg(sum("n").as("cnt"))
-      .filter(col("cnt") >= vocabMinCount)
-      .select(col("surface").as("__vs"))
-      .localCheckpoint(eager = true)
-    def vocab = vocabCkpt.select(col("__vs"))
+    // dictionary-sized rollup of the pair table, weighted by n (a triple
+    // with subj==obj still counts that surface twice, as in `run`). The
+    // vocabulary is referenced by two broadcast builds (one per semi-join
+    // side); checkpointed once so each build scans the tiny leaf instead of
+    // re-aggregating the pair table. The checkpoint is LAZY and the job
+    // that materializes it also counts its rows: the bound's one row count,
+    // at no job of its own (`Dataset.count()` would plan an aggregate with a
+    // shuffle of its own over the leaf: one more job per call).
+    val vocab = vocabulary(pairCounts, col("n")).localCheckpoint(eager = false)
+    val small = vocab.queryExecution.toRdd.count() <= broadcastMaxDictRows
 
     // (C) alias frequency over the GATED stream (matches `run`: the
     // dictionary ranks what survives the vocab gate), computed from gated
     // PAIRS weighted by n — identical multiset to re-scanning the stream.
-    // Explicit broadcast: vocab sits behind the persist boundary, so the
+    // Explicit broadcast: vocab sits behind the checkpoint boundary, so the
     // planner has no stats; unhinted this degrades to shuffle joins — which
-    // is exactly the right plan when `broadcastDict = false` declares the
-    // dictionary tables beyond driver-safe size (both join sides are
+    // is exactly the right plan beyond the bound (both join sides are
     // dictionary-sized there, and AQE picks the strategy from runtime stats)
-    def hinted(df: DataFrame): DataFrame = if (broadcastDict) broadcast(df) else df
-    val gatedCounts = pairCounts
-      .join(hinted(vocab), col("subj") === col("__vs"), "left_semi")
-      .join(hinted(vocab), col("obj") === col("__vs"), "left_semi")
-      .select(explode(array(col("subj"), col("obj"))).as("alias"), col("n"))
-      .groupBy("alias").agg(sum("n").as("freq"))
+    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val gatedCounts = endpointCounts(inVocab(pairCounts, hinted(vocab.select(col("__vs")))), col("n"))
       .localCheckpoint(eager = true)
-    val aliasDict = Linking.buildAliasDictFromCounts(gatedCounts).toDF()
+    val aliasDict = Linking.buildAliasDict(gatedCounts).toDF()
       .localCheckpoint(eager = true)
-
-    // canonicalization: CC over stem-variant edges of the dictionary. No
-    // self-edges (`variantEdges` filters the stem(a)==a self-matches) —
-    // entities outside every variant edge keep their own id via the
-    // left-join coalesce below, so CC runs on the (much smaller) variant
-    // subgraph only.
-    val d = aliasDict.select(col("alias"), col("entity_id"))
-    val canon = ConnectedComponents.run(variantEdges(d))
-      .select(col("id").as("entity_id"), col("component").as("canonical_id"))
 
     // Compose canonicalization INTO the dictionary (dictionary-sized join)
     // instead of joining it onto the linked triple stream: the 10^12-row
@@ -287,10 +268,7 @@ object KgPipeline {
     // membership in the gated dictionary — an alias is in that dictionary
     // iff it survives the gate in some triple, and a triple survives iff
     // BOTH its endpoints are in-vocab.
-    val dictCanon =
-      d.join(canon, d("entity_id") === canon("entity_id"), "left")
-        .select(d("alias"),
-          coalesce(col("canonical_id"), d("entity_id")).as("canon_id"))
+    val dictCanon = canonicalize(aliasDict, None).select(col("alias"), col("canonical_id"))
 
     // (D) output pass: re-extract, then gate + link + canonicalize in one
     // narrow stage. Default: two broadcast hash joins. The per-side form pays
@@ -300,8 +278,8 @@ object KgPipeline {
     // small build), so two builds it is. The vocab gate is the not-null
     // filter (a surface is in the gated dictionary iff the lookup found it);
     // Catalyst turns each left join back into an inner one.
-    lookup(lookup(Extract.triplesFused(docs).toDF(), "subj", dictCanon, "subj_id", broadcastDict),
-      "obj", dictCanon, "obj_id", broadcastDict)
+    lookup(lookup(Extract.triplesFused(docs).toDF(), "subj", dictCanon, "subj_id", small),
+      "obj", dictCanon, "obj_id", small)
       .filter(col("subj_id").isNotNull && col("obj_id").isNotNull)
       .select(col("subj_id"), col("pred"), col("obj_id"),
         col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))

@@ -16,20 +16,12 @@ object SignatureScorer {
   def signatureKey(path: Array[PathStep]): String =
     path.iterator.map(_.dep).mkString("\u0001")  // separator avoids dep-boundary collisions
 
-  /** Stable label choice: non-'Other' label picked by a spec-fixed string hash
-    * of the dep signature. 18 directional labels; 'Other' is reserved for
-    * non-whitelisted structures (which the pipeline drops, mirroring the
-    * reference's GOOD/BAD audit split).
+  /** Label: a non-'Other' label picked by a spec-fixed string hash of the
+    * dep signature (18 directional labels; 'Other' is reserved for
+    * non-whitelisted structures, which the pipeline drops, mirroring the
+    * reference's GOOD/BAD audit split). Score: a pseudo-confidence in (0,1],
+    * deterministic per candidate.
     */
-  def labelFor(path: Array[PathStep]): String =
-    Labels.all(math.floorMod(signatureKey(path).hashCode, Labels.all.length - 1))
-
-  /** Pseudo-confidence in (0,1], deterministic per candidate. */
-  def scoreFor(cand: SdpCandidate): Double = {
-    val h = math.floorMod((cand.x + "" + cand.y + "" + signatureKey(cand.path)).hashCode, 1000)
-    0.5 + h / 2000.0
-  }
-
   def toTriple(cand: SdpCandidate): Triple = {
     val sig = signatureKey(cand.path)
     val label = Labels.all(math.floorMod(sig.hashCode, Labels.all.length - 1))

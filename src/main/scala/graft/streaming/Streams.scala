@@ -9,6 +9,10 @@ import java.sql.Timestamp
   * this is the engine's forward-looking stream path): watermarked tumbling-
   * window aggregation and custom sessionization state, both fed by the events
   * table schema (event_id, ts, user_id, event_type, value, props).
+  * Continuous KG construction needs no stream-specific code: the fused
+  * extraction kernel (`Extract.triplesFused`) is a stateless narrow
+  * transform, so it applies to a streaming (doc_id, text) frame unchanged
+  * and feeds `tableSink` (StreamingSpec pins stream == batch).
   */
 object Streams {
 
@@ -85,17 +89,6 @@ object Streams {
     val schema = spark.read.parquet(schemaFrom).schema
     spark.readStream.schema(schema).parquet(dir)
   }
-
-  /** CONTINUOUS KG construction (round 4): docs arriving as a stream run the
-    * SAME fused extraction kernel the batch path uses — `Extract
-    * .triplesFused` is a stateless narrow transform, so it applies to a
-    * streaming Dataset unchanged, and stream == batch triple equality is a
-    * spec gate, not an aspiration (StreamingSpec). Source: any streaming
-    * (doc_id, text) frame (file source over a landing directory in
-    * production, MemoryStream in tests).
-    */
-  def triplesStream(docs: Dataset[(Long, String)]): Dataset[graft.model.Triple] =
-    graft.extract.Extract.triplesFused(docs)
 
   /** Exactly-once TableIO sink for a micro-batched stream: each micro-batch
     * commits to a batchId-keyed snapshot table, and a REPLAYED batch (post-

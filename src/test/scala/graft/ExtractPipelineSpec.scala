@@ -86,11 +86,14 @@ class ExtractPipelineSpec extends SparkSuite {
     // the 100 TB story: when the dictionary outgrows a driver-safe
     // broadcast, the gate+link+canonicalize joins degrade to
     // Linking.saltedLeftJoin — the two configurations must emit identical
-    // canonical triples (the broadcast form is the benchmarked default)
-    val viaBroadcast = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs))
-    val viaSalted = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs, broadcastDict = false))
-    assert(viaSalted == viaBroadcast)
-    assert(viaBroadcast.nonEmpty)
+    // canonical triples (the broadcast form is the benchmarked default), on
+    // sf0.001 and on the plural-variant fixture, where CC has edges
+    for (dir <- Seq(sfDir, pluralSfDir)) {
+      val viaBroadcast = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir)))
+      val viaSalted = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir), broadcastMaxDictRows = 0L))
+      assert(viaSalted == viaBroadcast, dir)
+      assert(viaBroadcast.nonEmpty, dir)
+    }
   }
 
   test("whitelist gate + scorer emit deterministic triples") {

@@ -5,6 +5,7 @@ import graft.corpus.Corpus
 import graft.eval.Eval
 import graft.extract.Extract
 import graft.link.Linking
+import org.apache.spark.sql.functions._
 
 class LinkCanonEvalSpec extends SparkSuite {
   import spark.implicits._
@@ -12,8 +13,11 @@ class LinkCanonEvalSpec extends SparkSuite {
   private lazy val mentions =
     Extract.mentions(Extract.docsToSentences(Corpus.fromDocuments(spark, sfDir))).cache()
 
+  private def surfaceCounts =
+    mentions.groupBy(col("surface").as("alias")).agg(count(lit(1)).as("freq"))
+
   test("alias dictionary: ids dense, frequency-ordered, deterministic tie-break") {
-    val dict = Linking.buildAliasDict(mentions).collect().sortBy(_.entity_id)
+    val dict = Linking.buildAliasDict(surfaceCounts).collect().sortBy(_.entity_id)
     assert(dict.nonEmpty)
     assert(dict.map(_.entity_id).toSeq == dict.indices.map(_.toLong))
     // non-increasing freq; ties broken by alias asc
@@ -27,15 +31,15 @@ class LinkCanonEvalSpec extends SparkSuite {
 
   test("broadcast link join == salted join, with OOV default for misses") {
     // top-10 dictionary so rarer surfaces genuinely miss → OOV
-    val dict = Linking.buildAliasDict(mentions).filter(_.entity_id < 10).cache()
-    val plain = Linking.linkMentions(mentions, dict)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(4))).toSet
-    val salted = Linking.saltedJoin(mentions, dict, buckets = 7)
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(4))).toSet
-    assert(plain == salted, "salting must not change join semantics")
-    val linked = Linking.linkMentions(mentions, dict).cache()
-    assert(linked.count() == mentions.count(), "left join must preserve all mentions")
-    assert(linked.filter($"entity_id" === Linking.OovEntityId).count() > 0,
+    val dict = Linking.buildAliasDict(surfaceCounts).filter(_.entity_id < 10)
+      .select(col("alias"), col("entity_id")).cache()
+    def linked(small: Boolean) =
+      Linking.lookup(mentions.toDF(), "surface", dict, "entity_id", small)
+        .withColumn("entity_id", coalesce(col("entity_id"), lit(Linking.OovEntityId)))
+    val plain = sortedRows(linked(small = true))
+    assert(plain == sortedRows(linked(small = false)), "salting must not change join semantics")
+    assert(plain.size == mentions.count(), "left join must preserve all mentions")
+    assert(plain.exists(_.getAs[Long]("entity_id") == Linking.OovEntityId),
       "rare surfaces must fall back to OOV")
   }
 

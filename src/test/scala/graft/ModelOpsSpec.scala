@@ -73,9 +73,9 @@ class ModelOpsSpec extends SparkSuite {
     val ratio = rep(w.embedDim) / ey(0)
     assert(math.abs(rep(0) / (ex(0) * h(0)) - ratio) < 1e-3)
     // table + top-k runs end-to-end and is deterministic across partitionings
-    val t1 = NeuralScorer.simRepTable(cands.limit(40)).collect().toSet
-    val t2 = NeuralScorer.simRepTable(cands.limit(40).repartition(7)).collect().toSet
-    assert(t1.map(_.toString) == t2.map(_.toString) && t1.nonEmpty)
+    val t1 = sortedRows(NeuralScorer.simRepTable(cands.limit(40)))
+    val t2 = sortedRows(NeuralScorer.simRepTable(cands.limit(40).repartition(7)))
+    assert(t1 == t2 && t1.nonEmpty)
   }
 
   test("M16 TF-IDF + LR baseline beats random macro-F1 on held-out fold") {
@@ -122,9 +122,9 @@ class ModelOpsSpec extends SparkSuite {
     assert(NeuralScorer.clusterOf("alpha") ==
       (graft.functions.Portable.md5numScala("alpha") % 64).toInt)
     // Dataset pass runs over real candidates and is partition-invariant
-    val a = NeuralScorer.clusterPairScores(cands.limit(40)).collect().toSet
-    val b = NeuralScorer.clusterPairScores(cands.limit(40).repartition(7)).collect().toSet
-    assert(a.map(_.toString) == b.map(_.toString) && a.nonEmpty)
+    val a = sortedRows(NeuralScorer.clusterPairScores(cands.limit(40)))
+    val b = sortedRows(NeuralScorer.clusterPairScores(cands.limit(40).repartition(7)))
+    assert(a == b && a.nonEmpty)
   }
 
   test("S9 TSV sink writes readable tab-separated prediction shards") {

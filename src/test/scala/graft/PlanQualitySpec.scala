@@ -3,11 +3,13 @@ package graft
 import graft.model.Triple
 import graft.pipeline.KgPipeline
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.types.ObjectType
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan quality gates: pushdown, pruning, join strategy, and the
   * absence of single-partition windows — asserted, not eyeballed. These are
@@ -124,8 +126,8 @@ class PlanQualitySpec extends SparkSuite {
     if (isKernel(p)) Seq(p) else p +: kids(p).find(runsKernel).map(streamPath).getOrElse(Nil)
 
   /** The executed in-memory job's entity joins: the joins on the stream path. */
-  private def streamJoins(broadcastDict: Boolean): (Seq[SparkPlan], Seq[BaseJoinExec]) = {
-    val df = KgPipeline.canonicalTriplesInMemory(rawDocs, broadcastDict = broadcastDict)
+  private def streamJoins(broadcastMaxDictRows: Long): (Seq[SparkPlan], Seq[BaseJoinExec]) = {
+    val df = KgPipeline.canonicalTriplesInMemory(rawDocs, broadcastMaxDictRows)
     df.collect()
     val path = streamPath(df.queryExecution.executedPlan)
     assert(path.exists(isKernel), s"no extraction kernel in the plan:\n${df.queryExecution.executedPlan}")
@@ -133,7 +135,7 @@ class PlanQualitySpec extends SparkSuite {
   }
 
   test("in-memory output pass: two broadcast joins on the unshuffled stream; salted joins key on __salt") {
-    val (path, joins) = streamJoins(broadcastDict = true)
+    val (path, joins) = streamJoins(KgPipeline.defaultBroadcastMaxDictRows)
     assert(joins.size == 2, s"expected two entity joins on the stream:\n${path.mkString("\n")}")
     joins.foreach {
       case b: BroadcastHashJoinExec => assert(b.buildSide == BuildRight, s"stream side broadcast:\n$b")
@@ -142,12 +144,44 @@ class PlanQualitySpec extends SparkSuite {
     val shuffles = path.collect { case e: ShuffleExchangeLike => e }
     assert(shuffles.isEmpty, s"the stream side is shuffled:\n${shuffles.mkString("\n")}")
 
-    val (saltedPath, salted) = streamJoins(broadcastDict = false)
+    val (saltedPath, salted) = streamJoins(broadcastMaxDictRows = 0L)
     assert(salted.size == 2, s"expected two entity joins on the stream:\n${saltedPath.mkString("\n")}")
     salted.foreach { j =>
       assert(j.leftKeys.exists(_.references.exists(_.name == "__salt")) &&
         j.rightKeys.exists(_.references.exists(_.name == "__salt")),
         s"salted entity join without __salt in its keys:\n$j")
+    }
+  }
+
+  test("a CC round's sym ⋈ labels join reads the edge table without an Exchange") {
+    // ConnectedComponents co-partitions the symmetrized edges by `src` before
+    // checkpointing them, so each round's join on src should read that leaf
+    // in place. The plural-variant fixture gives CC a non-empty edge set.
+    // Pending: the engine fails this today — under AQE the checkpoint leaf
+    // reports UnknownPartitioning, so every round re-exchanges the edge table
+    // (hash shuffle, then a broadcast at this size). `pendingUntilFixed` turns
+    // into a failure once the rounds stop moving the edge table; drop it then.
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+    def edgeJoins: Seq[BaseJoinExec] = plans.asScala.toSeq.flatMap(all).collect {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "src")) &&
+        j.rightKeys.exists(_.references.exists(_.name == "id")) => j
+    }
+    spark.listenerManager.register(listener)
+    try {
+      KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir))
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (edgeJoins.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val joins = edgeJoins
+    assert(joins.nonEmpty, "no CC round ran a sym ⋈ labels join")
+    pendingUntilFixed {
+      val moved = joins.filter(j => all(j.left).exists(_.isInstanceOf[Exchange]))
+      assert(moved.isEmpty, s"${moved.size} of ${joins.size} CC rounds move the edge table:\n${moved.mkString("\n")}")
     }
   }
 }

@@ -41,6 +41,14 @@ class ResumeSpec extends SparkSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** A default run over the plural-variant fixture (`pluralSfDir`):
+    * its run directory and its sorted output.
+    */
+  private lazy val pluralRun: (String, Seq[org.apache.spark.sql.Row]) = {
+    val runDir = tmpDir("graft-canon")
+    (runDir, sortedRows(KgPipeline.run(spark, pluralSfDir, runDir)))
+  }
+
   test("TableIO: atomic snapshot commit, read-back, versioning, time travel") {
     val table = tmpDir("graft-table")
     val s0 = TableIO.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), table)
@@ -196,6 +204,9 @@ class ResumeSpec extends SparkSuite {
     val viaSalted = sortedRows(KgPipeline.run(spark, sfDir, sDir, broadcastMaxDictRows = 0L))
     assert(viaSalted == viaBroadcast)
     assert(viaBroadcast.nonEmpty)
+    // and with CC edges present (the canonicalize joins salted too)
+    assert(sortedRows(KgPipeline.run(spark, pluralSfDir, tmpDir("graft-salt-plural"),
+      broadcastMaxDictRows = 0L)) == pluralRun._2)
 
     // every stage's audit agrees with its data, and reading the audit or the
     // data starts no job
@@ -218,13 +229,16 @@ class ResumeSpec extends SparkSuite {
 
   test("pipeline: run(whitelistMinCount = 1) equals canonicalTriplesInMemory (as a multiset)") {
     // the benchmarked in-memory job applies no signature whitelist; with the
-    // gate opened, the shipped durable job must emit exactly its rows
+    // gate opened, the shipped durable job must emit exactly its rows — on
+    // sf0.001 and on the plural-variant fixture, where CC has edges
     val cols = Seq("subj_id", "pred", "obj_id", "subj", "obj", "doc_id", "span_idx", "score").map(col)
-    val durable = sortedRows(
-      KgPipeline.run(spark, sfDir, tmpDir("graft-wl1"), whitelistMinCount = 1).select(cols: _*))
-    val inMemory = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs).select(cols: _*))
-    assert(durable.nonEmpty)
-    assert(durable == inMemory)
+    for (dir <- Seq(sfDir, pluralSfDir)) {
+      val durable = sortedRows(
+        KgPipeline.run(spark, dir, tmpDir("graft-wl1"), whitelistMinCount = 1).select(cols: _*))
+      val inMemory = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir)).select(cols: _*))
+      assert(durable.nonEmpty, dir)
+      assert(durable == inMemory, dir)
+    }
   }
 
   test("pipeline: a candidates table committed without sig fails the resume, naming stage and run dir") {
@@ -242,8 +256,31 @@ class ResumeSpec extends SparkSuite {
   }
 
   test("pipeline emits canonicalized entities (plural variants merged)") {
-    val runDir = tmpDir("graft-canon")
-    KgPipeline.run(spark, sfDir, runDir)
+    val (runDir, out) = pluralRun
+    val pairs = TestSpark.pluralPairs
+    // the fixture's plurals are nouns, so the extraction keeps them as endpoints
+    pairs.foreach { case (_, p) => assert(graft.annotate.Annotator.posOf(p) == "NOUN", p) }
+    val log = new StageLog(spark, runDir)
+    val dict = TableIO.read(spark, log.stagePath("alias_dict"))
+      .select("alias", "entity_id").as[(String, Long)].collect().toMap
+    pairs.foreach { case (s, p) => assert(dict.contains(s) && dict.contains(p), s"$s/$p not in the dictionary") }
+    // entity_canon: exactly one row per dictionary entity; each pair shares
+    // its minimum entity_id, every other entity maps to itself
+    val canonRows = TableIO.read(spark, log.stagePath("entity_canon"))
+      .select("entity_id", "canonical_id").as[(Long, Long)].collect().toSeq
+    assert(canonRows.map(_._1).sorted == dict.values.toSeq.sorted)
+    val merged = pairs.flatMap { case (s, p) =>
+      val m = math.min(dict(s), dict(p)); Seq(dict(s) -> m, dict(p) -> m)
+    }.toMap
+    val expected = dict.values.map(id => id -> merged.getOrElse(id, id)).toMap
+    assert(canonRows.toMap == expected)
+    // every canonical triple carries the canonical id of both its surfaces
+    assert(out.exists(r => pairs.exists(_._2 == r.getAs[String]("subj"))))
+    out.foreach { r =>
+      assert(r.getAs[Long]("subj_id") == expected(dict(r.getAs[String]("subj"))), r)
+      assert(r.getAs[Long]("obj_id") == expected(dict(r.getAs[String]("obj"))), r)
+    }
+
     val entities = KgPipeline.entityTable(spark, runDir).cache()
     assert(entities.count() > 0)
     // stems with both singular+plural present must share a canonical id
@@ -251,6 +288,7 @@ class ResumeSpec extends SparkSuite {
       .withColumn("stem", KgPipeline.stem(col("alias")))
       .groupBy("stem")
       .agg(countDistinct("canonical_id").as("n_canon"), count(lit(1)).as("n"))
+    assert(byStem.filter($"n" > 1).count() == pairs.size)
     val broken = byStem.filter($"n" > 1 && $"n_canon" =!= 1).count()
     assert(broken == 0, "plural/singular alias pairs must canonicalize together")
 

@@ -14,13 +14,13 @@ class ScoringSamplingSpec extends SparkSuite {
     Extract.candidates(Extract.docsToSentences(Corpus.fromDocuments(spark, sfDir))).cache()
 
   test("neural scorer: deterministic across batch sizes and partitionings") {
-    val a = NeuralScorer.score(cands, batchSize = 7).collect().toSet
-    val b = NeuralScorer.score(cands.repartition(9), batchSize = 128).collect().toSet
+    val a = sortedRows(NeuralScorer.score(cands, batchSize = 7).toDF())
+    val b = sortedRows(NeuralScorer.score(cands.repartition(9), batchSize = 128).toDF())
     assert(a == b)
     assert(a.nonEmpty)
     // probabilities are valid softmax outputs; predicates from the label space
-    assert(a.forall(t => t.score > 0 && t.score <= 1.0))
-    val preds = a.map(_.pred)
+    assert(a.forall { t => val score = t.getAs[Double]("score"); score > 0 && score <= 1.0 })
+    val preds = a.map(_.getAs[String]("pred")).toSet
     assert(preds.subsetOf(Labels.all.map(Labels.collapse).toSet))
   }
 

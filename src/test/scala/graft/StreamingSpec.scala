@@ -69,7 +69,7 @@ class StreamingSpec extends SparkSuite {
       .select(col("doc_id"), col("text")).as[(Long, String)]
     val out = Files.createTempDirectory("graft-triples-stream").toString
 
-    val q1 = Streams.tableSink(Streams.triplesStream(stream).toDF(), s"$out/triples")
+    val q1 = Streams.tableSink(Extract.triplesFused(stream).toDF(), s"$out/triples")
       .option("checkpointLocation", s"$out/ckpt").start()
     try q1.processAllAvailable() finally q1.stop()
 
@@ -89,7 +89,7 @@ class StreamingSpec extends SparkSuite {
     val v0 = graft.tableio.TableIO.currentVersion(s"$out/triples/batch-0")
     Files.copy(Paths.get(s"$sfDir/documents.parquet"),
       docsDir.resolve("part-1.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    val q2 = Streams.tableSink(Streams.triplesStream(stream).toDF(), s"$out/triples")
+    val q2 = Streams.tableSink(Extract.triplesFused(stream).toDF(), s"$out/triples")
       .option("checkpointLocation", s"$out/ckpt").start()
     try q2.processAllAvailable() finally q2.stop()
     assert(graft.tableio.TableIO.currentVersion(s"$out/triples/batch-0") == v0,
