@@ -847,32 +847,6 @@ object Bench {
     val hook = new Thread(() => emit(partial = true))
     Runtime.getRuntime.addShutdownHook(hook)
 
-    // dev harness: measure ONLY the pipeline pairs, print their JSON, exit
-    if (sys.env.contains("SPARK_GRAFT_BENCH_PIPE_ONLY")) {
-      Runtime.getRuntime.removeShutdownHook(hook)
-      val c = ensurePipeCorpus()
-      // ungated floor-convergence draws: the dev harness has no deadline
-      // pressure and exists to validate the driver protocol's estimator
-      val p14 = runPair(1, 0, 4, 4, pipeRepl, pipeReps, job = "pipeline",
-        windows = 2, corpus = c,
-        convTol = 0.04, maxConvReps = 4,
-        convGateSmall = () => true, convGateBig = () => true)
-      val p14json =
-        f""""pair":"1->4","docs":${p14.small.docs},""" +
-          f""""tps_p1":${p14.small.tps}%.1f,"tps_p4":${p14.big.tps}%.1f,""" +
-          f""""efficiency":${p14.eff}%.3f,"efficiency_raw":${p14.raw}%.3f,""" +
-          pairFields(p14, "")
-      if (sys.env.contains("SPARK_GRAFT_BENCH_PIPE_SKIP28")) {
-        println(s"""{"scaling_pipeline":{$p14json"skip28":true}}""")
-        return
-      }
-      val p28 = runPair(2, 0, 8, 8, pipeRepl, pipeReps2, job = "pipeline", corpus = c)
-      println(s"""{"scaling_pipeline":{$p14json""" +
-        f""""tps_p2":${p28.small.tps}%.1f,"tps_p8":${p28.big.tps}%.1f,""" +
-        f""""efficiency_2_8":${p28.eff}%.3f,"efficiency_2_8_raw":${p28.raw}%.3f}}""")
-      return
-    }
-
     // flipped to false only when the phase sequence runs to its end; an
     // exception path leaves it true so the emitted JSON says partial
     var crashed = true

@@ -64,9 +64,9 @@ object ModelQueries {
     // M4+M7+§2.9 COMPOSED into the reference's unsupervised training loop:
     // negative-sampling sigmoid-xent minimized with clipped Adam, as a
     // distributed parameter-server step (broadcast params → per-partition
-    // gradient partials → fixed-order driver reduce → Adam). One row per
-    // epoch; TrainerSpec asserts the loss decreases and accuracy beats the
-    // untrained baseline
+    // gradient partials → `DetReduce.tree` → clipped Adam, the one loop
+    // `Trainer.fit`). One row per epoch; TrainerSpec asserts the loss falls
+    // and the ranking margin grows (accuracy is deliberately not gated)
     // 12 epochs: enough for the loss/margin signal in the epoch rows while
     // keeping the bench cost of an iterative query bounded (TrainerSpec
     // drives the full 20)
@@ -75,8 +75,8 @@ object ModelQueries {
 
     // FULL-model backprop (relembed.py:473-496 trains tf.trainable_variables
     // — all of them): exact BPTT through the GRU + embedding-table scatter +
-    // bilinear head under the same §2.9 negative-sampling xent, same
-    // parameter-server topology as q50. Gradient equations gated by a
+    // bilinear head under the same §2.9 negative-sampling xent, run by the
+    // same training loop as q50 (`Trainer.fit`). Gradient equations gated by a
     // finite-difference check over every parameter (GruTrainerSpec). One
     // row per epoch; 6 epochs bound the bench cost of an iterative query
     "q52_train_gru" -> ((s, dir) =>

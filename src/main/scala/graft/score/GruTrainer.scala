@@ -1,10 +1,7 @@
 package graft.score
 
 import graft.model.SdpCandidate
-import graft.sample.NegativeSampling
-import graft.tableio.TableIO
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions.col
 
 /** FULL-MODEL backprop trainer — the reference's `tf.trainable_variables()`
   * training step (relembed.py:473-496: the Adam minimizer receives gradients
@@ -45,15 +42,14 @@ import org.apache.spark.sql.functions.col
   * backprop), and the loop is gated by the same loss-falls / margin /
   * bit-identical-determinism tests as the head trainer.
   *
-  * Distribution shape — identical to `Trainer.trainNegSampling` (broadcast
-  * params → per-partition partial gradients over the deterministic example
-  * layout → `DetReduce.tree` depth-2 deterministic reduce → per-tensor
-  * clip_by_norm(3) + Adam → rebroadcast). The gradient vector is |embed| +
-  * 6·H² ≈ 137k doubles at the default dims — ~1 MB per partition partial,
-  * bounded by MODEL size × partition count (not data); the tree's level 1
-  * runs on executors and only ⌈√parts⌉ group sums reach the driver, with a
-  * pid-keyed fixed association that keeps every epoch metric bit-identical
-  * across runs, cluster sizes, and scheduling (round-4 verdict item 3).
+  * Distribution shape: `train` runs `Trainer.fit`, the one training loop
+  * both trainers share (broadcast params → per-partition partial gradients
+  * over the deterministic example layout → deterministic tree reduce →
+  * per-tensor clip_by_norm(3) + Adam → rebroadcast); only the example encoder,
+  * `forwardBackward` and `Dims.tensorBounds` are this model's own. The
+  * gradient vector is |embed| + 6·H² ≈ 137k doubles at the default dims —
+  * ~1 MB per partition partial, bounded by MODEL size × partition count
+  * (not data).
   */
 object GruTrainer {
 
@@ -250,134 +246,29 @@ object GruTrainer {
     (loss, logit)
   }
 
-  /** Train the FULL model for `epochs` over candidates + §2.9 negatives;
-    * same epoch-metrics schema, determinism contract, TableIO
-    * checkpoint/resume, and `stepsPerEpoch` micro-batch semantics as
-    * `Trainer.trainNegSampling` (B deterministic stride micro-batches per
-    * epoch, Adam timestep per STEP; B = 1 — the default — reproduces the
-    * one-step-per-epoch trajectory bit-for-bit).
+  /** Train the FULL model for `epochs` over candidates + §2.9 negatives
+    * through `Trainer.fit` — the same loop, epoch-metrics schema,
+    * determinism contract, checkpoint/resume, and `stepsPerEpoch`
+    * micro-batch semantics as `Trainer.trainNegSampling`, over the bucket-id
+    * examples and the full-model `forwardBackward`.
     */
   def train(cands: Dataset[SdpCandidate], epochs: Int = 8,
             negPer: Int = 2, seed: Long = 42L, lr: Double = 0.02,
             ckptTable: Option[String] = None, ckptEvery: Int = 4,
             parts: Int = 32, stepsPerEpoch: Int = 1): DataFrame = {
-    require(stepsPerEpoch >= 1, s"stepsPerEpoch must be >= 1, got $stepsPerEpoch")
-    val spark = cands.sparkSession
-    import spark.implicits._
-
+    import cands.sparkSession.implicits._
     val (dims, p0) = initFromSeeded(NeuralScorer.seededWeights(seed))
-    val bcDims = spark.sparkContext.broadcast(dims)
-
-    // §2.9 labeled stream → bucket-id examples, composed once, deterministic
-    // layout (fixed partition count, sorted within partitions — see
-    // Trainer's object doc for why float partials need this)
-    val pool = cands.select(cands("x")).distinct()
-    val labeled = NegativeSampling
-      .withNegativesDistributed(cands, pool, negPer = negPer, seed = seed)
     val v = dims.v
-    val examples = labeled
-      .select("doc_id", "span_idx", "x", "y", "path", "source", "label")
-      .as[LabeledRow]
-      .map { r =>
-        val steps = r.path.map { st =>
-          Array(math.floorMod(st.word.hashCode, v),
-            math.floorMod(("d:" + st.dep).hashCode, v),
-            math.floorMod(("p:" + st.pos).hashCode, v))
-        }
-        (r.layoutKey, math.floorMod(r.x.hashCode, v), math.floorMod(r.y.hashCode, v),
-          steps, r.label)
+    val examples = Trainer.layout(cands, negPer, seed, parts) { r =>
+      val steps = r.path.map { st =>
+        Array(math.floorMod(st.word.hashCode, v),
+          math.floorMod(("d:" + st.dep).hashCode, v),
+          math.floorMod(("p:" + st.pos).hashCode, v))
       }
-      .toDF("key", "xB", "yB", "steps", "label")
-      .repartition(parts, col("key"))
-      .sortWithinPartitions("key")
-      .select("xB", "yB", "steps", "label")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    var p = p0
-    var m = new Array[Double](dims.size)
-    var vAdam = new Array[Double](dims.size)
-    var startEp = 0
-    for (table <- ckptTable; _ <- TableIO.currentVersion(table)) {
-      val r = TableIO.read(spark, table).as[CkptRow].head()
-      // a stale/foreign table (a head-Trainer checkpoint, or one written
-      // under different dims) must fail loudly, not silently resume from
-      // garbage (ADVICE round 4)
-      require(r.param.length == dims.size && r.madam.length == dims.size &&
-        r.vadam.length == dims.size,
-        s"checkpoint at $table has param/moment lengths (${r.param.length}, " +
-          s"${r.madam.length}, ${r.vadam.length}) but this model needs " +
-          s"${dims.size} — stale or foreign checkpoint table")
-      p = r.param; m = r.madam; vAdam = r.vadam
-      startEp = r.epoch + 1
+      GruExample(math.floorMod(r.x.hashCode, v), math.floorMod(r.y.hashCode, v),
+        steps, r.label)
     }
-
-    val out = Vector.newBuilder[Trainer.Epoch]
-    for (ep <- startEp until epochs) {
-      var epLoss = 0.0; var epCorrect = 0L; var epN = 0L
-      var epPos = 0.0; var epNeg = 0.0; var epNPos = 0L
-      for (mb <- 0 until stepsPerEpoch) {
-        val bcP = spark.sparkContext.broadcast(p)
-        val partials = examples.as[(Int, Int, Array[Array[Int]], Int)]
-          .rdd.mapPartitionsWithIndex { (pid, it) =>
-            val d = bcDims.value
-            val pp = bcP.value
-            val g = new Array[Double](d.size)
-            var loss = 0.0; var correct = 0L; var n = 0L
-            var posSum = 0.0; var negSum = 0.0; var nPos = 0L
-            var idx = 0
-            it.foreach { case (xB, yB, steps, label) =>
-              if (idx % stepsPerEpoch == mb) {
-                val (l, logit) = forwardBackward(d, pp, GruExample(xB, yB, steps, label), g)
-                loss += l
-                if ((logit >= 0.0) == (label == 1)) correct += 1
-                if (label == 1) { posSum += logit; nPos += 1 } else negSum += logit
-                n += 1
-              }
-              idx += 1
-            }
-            Iterator.single((pid, GradPartial(g, loss, correct, n, posSum, negSum, nPos)))
-          }
-        // depth-2 deterministic tree reduce — see Trainer (round-4 verdict
-        // item 3): driver receives ⌈√parts⌉ ~1 MB group sums, not `parts`
-        val tot = DetReduce.tree(partials, parts, GradPartial.merge)
-        bcP.destroy()
-        val grad = tot.g
-        val n = tot.n
-        // empty micro-batch would mean grad/0 → NaN params; fail loudly
-        require(n > 0, s"micro-batch $mb of $stepsPerEpoch selected no " +
-          "examples in any partition — stepsPerEpoch exceeds the available " +
-          "rows; lower it")
-        epLoss += tot.loss; epCorrect += tot.correct; epN += n
-        epPos += tot.posSum; epNeg += tot.negSum; epNPos += tot.nPos
-
-        // mean gradient, clipped per TENSOR (tf.clip_by_norm is per variable:
-        // embed, Wz, Uz, Wr, Ur, Wh, Uh each by its own norm), shared Adam
-        // step with the timestep advancing per STEP
-        var i = 0
-        while (i < dims.size) { grad(i) /= n; i += 1 }
-        val clipped = new Array[Double](dims.size)
-        dims.tensorBounds.foreach { case (from, until) =>
-          val c = Losses.clipByNorm(grad.slice(from, until), 3.0)
-          System.arraycopy(c, 0, clipped, from, until - from)
-        }
-        val (pN, mN, vN) = Losses.adamStep(p, clipped, m, vAdam,
-          t = ep * stepsPerEpoch + mb + 1,
-          lr = lr, maxGradNorm = Double.PositiveInfinity)
-        p = pN; m = mN; vAdam = vN
-      }
-      require(epNPos > 0 && epNPos < epN,
-        s"degenerate epoch label split: nPos=$epNPos of n=$epN — " +
-          "negative sampling produced no " +
-          (if (epNPos == 0) "positives" else "negatives"))
-      val margin = epPos / epNPos - epNeg / (epN - epNPos)
-      out += Trainer.Epoch(ep, math.floor(epLoss / epN * 1e6).toLong,
-        epCorrect * 1000000L / epN, math.floor(margin * 1e6).toLong)
-
-      for (table <- ckptTable)
-        if ((ep + 1) % ckptEvery == 0 || ep == epochs - 1)
-          TableIO.commit(Seq(CkptRow(ep, p, m, vAdam)).toDF(), table)
-    }
-    examples.unpersist(blocking = false)
-    out.result().toDF()
+    Trainer.fit(examples, p0, dims.tensorBounds, epochs, lr, ckptTable, ckptEvery,
+      parts, stepsPerEpoch)(_.label)(forwardBackward(dims, _, _, _))
   }
 }

@@ -249,11 +249,6 @@ object NeuralScorer {
     (best, 1.0 / sumExp) // softmax probability of the argmax class
   }
 
-  /** Score candidates in padded micro-batches with broadcast weights. The
-    * per-batch hook is where a vectorized BLAS/onnx call would slot in; the
-    * grouping shape (drain iterator → batch → score → emit) is the
-    * production pattern either way.
-    */
   /** M3 + M10 as one pass: per candidate the bilinear relation logit and the
     * two single-endpoint logits, integer-scaled (×10⁶, floored) so outputs
     * are stable row values. One encode per candidate feeds all three heads.
@@ -318,6 +313,11 @@ object NeuralScorer {
     }.toDF("doc_id", "span_idx", "x", "y", "path_sig", "embedding")
   }
 
+  /** Score candidates in padded micro-batches with broadcast weights. The
+    * per-batch hook is where a vectorized BLAS/onnx call would slot in; the
+    * grouping shape (drain iterator → batch → score → emit) is the
+    * production pattern either way.
+    */
   def score(cands: Dataset[SdpCandidate], seed: Long = 42L,
             batchSize: Int = 128): Dataset[Triple] = {
     val spark = cands.sparkSession

@@ -3,8 +3,9 @@ package graft.score
 import graft.model.SdpCandidate
 import graft.sample.NegativeSampling
 import graft.tableio.TableIO
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's UNSUPERVISED TRAINING LOOP shape (relembed.py:449-471:
   * negative-sampling sigmoid-xent minimized with clipped Adam), composed
@@ -27,8 +28,11 @@ import org.apache.spark.sql.functions.col
   * ∂L/∂d = err·f, ∂L/∂wOut = err·ĥ, ∂L/∂b = err. Each tensor is clipped by
   * its OWN norm (tf.clip_by_norm semantics) before the shared Adam step.
   *
-  * Distribution shape (the part that must survive 100 TB):
-  *  - params are BROADCAST per epoch (dictionary-sized, like the dict joins);
+  * Distribution shape (the part that must survive 100 TB), written once in
+  * `layout` + `fit` and run by both this head trainer (q50) and the
+  * full-model `GruTrainer` (q52), which differ only in their example
+  * encoder, per-example `step` and per-tensor slices:
+  *  - params are BROADCAST per step (model-sized, like the dict joins);
   *  - the gradient is a per-partition partial sum (one narrow pass over the
   *    labeled stream — map-side combine, nothing row-scale leaves executors);
   *  - partials reduce through `DetReduce.tree` — a depth-2 tree with a
@@ -46,8 +50,8 @@ import org.apache.spark.sql.functions.col
   * FIXED `parts` count on a unique per-row key and sorted within partitions
   * by that key (ADVICE round 3 — without this the epoch metrics were only
   * reproducible for one incidental partitioning). With the fixed layout and
-  * the fixed-order driver reduce, every epoch metric is bit-identical across
-  * runs, cluster sizes, and input splits.
+  * the fixed association of `DetReduce.tree`, every epoch metric is
+  * bit-identical across runs, cluster sizes, and input splits.
   *
   * Checkpoint/resume (round-4): when `ckptTable` is set, the full optimizer
   * state (epoch, params, Adam moments) commits through TableIO every
@@ -88,58 +92,87 @@ object Trainer {
                        negPer: Int = 2, seed: Long = 42L,
                        ckptTable: Option[String] = None, ckptEvery: Int = 5,
                        parts: Int = 32, stepsPerEpoch: Int = 1): DataFrame = {
-    require(stepsPerEpoch >= 1, s"stepsPerEpoch must be >= 1, got $stepsPerEpoch")
-    val spark = cands.sparkSession
-    import spark.implicits._
-
+    import cands.sparkSession.implicits._
     val w = NeuralScorer.seededWeights(seed)
-    val dim = 3 * w.hidden // [f(2·hidden) ; ĥ(hidden)], params (d ++ wOut) ++ b
-    val fDim = 2 * w.hidden
-    val bcW = spark.sparkContext.broadcast(w)
+    val bcW = cands.sparkSession.sparkContext.broadcast(w)
+    val dim = 3 * w.hidden // params d ++ wOut ++ b over [f(2·hidden) ; ĥ(hidden)]
+    val examples = layout(cands, negPer, seed, parts) { r =>
+      (r.label, ExampleEncoder.feature(bcW.value,
+        SdpCandidate(r.doc_id, r.span_idx, r.x, r.y, r.path, r.source)))
+    }
+    // per-TENSOR clip_by_norm(3) on d, wOut and b separately
+    val tensors = Seq((0, 2 * w.hidden), (2 * w.hidden, dim), (dim, dim + 1))
+    fit(examples, new Array[Double](dim + 1), tensors, epochs,
+      lr = 0.05 /* scaled up: few epochs on a tiny feature head */,
+      ckptTable, ckptEvery, parts, stepsPerEpoch)(_._1) { (p, ex, g) =>
+      val (label, f) = ex
+      var logit = p(dim)
+      var i = 0
+      while (i < dim) { logit += p(i) * f(i); i += 1 }
+      val y = label.toDouble
+      val err = 1.0 / (1.0 + math.exp(-logit)) - y // σ(logit) − y
+      i = 0
+      while (i < dim) { g(i) += err * f(i); i += 1 }
+      g(dim) += err
+      (Losses.sigmoidXent(logit, y), logit)
+    }
+  }
 
-    // labeled stream: positives + keyed-RNG negatives (§2.9), features
-    // composed ONCE and cached — at scale this is the materialized
-    // training-example table every epoch re-scans. The unique row key fixes
-    // partition membership (hash) and in-partition order (sort), making the
-    // per-partition float partials reproducible (see object doc).
+  /** The §2.9 labeled stream (positives + keyed-RNG negatives), each row
+    * encoded ONCE into a training example and cached — at scale this is the
+    * materialized example table every epoch re-scans. The unique row key
+    * fixes partition membership (hash) and in-partition order (sort), making
+    * the per-partition float partials reproducible (see object doc).
+    */
+  private[score] def layout[E: Encoder](cands: Dataset[SdpCandidate], negPer: Int,
+                                        seed: Long, parts: Int)
+                                       (encode: LabeledRow => E): Dataset[E] = {
+    import cands.sparkSession.implicits._
     val pool = cands.select(cands("x")).distinct()
-    val labeled = NegativeSampling
-      .withNegativesDistributed(cands, pool, negPer = negPer, seed = seed)
-    val examples = labeled.select("doc_id", "span_idx", "x", "y", "path", "source", "label")
+    NegativeSampling.withNegativesDistributed(cands, pool, negPer = negPer, seed = seed)
+      .select("doc_id", "span_idx", "x", "y", "path", "source", "label")
       .as[LabeledRow]
-      .mapPartitions { it =>
-        val ww = bcW.value
-        it.map { r =>
-          val c = SdpCandidate(r.doc_id, r.span_idx, r.x, r.y, r.path, r.source)
-          (r.layoutKey, r.label, ExampleEncoder.feature(ww, c))
-        }
-      }
-      .toDF("key", "label", "f")
-      .repartition(parts, col("key"))
-      .sortWithinPartitions("key")
-      .select("label", "f")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .map(r => (r.layoutKey, encode(r)))(Encoders.tuple(Encoders.STRING, implicitly[Encoder[E]]))
+      .repartition(parts, col("_1"))
+      .sortWithinPartitions("_1")
+      .map(_._2)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
-    var d = new Array[Double](dim)    // (d ++ wOut) over [f ; ĥ]
-    var b = 0.0
-    var m = new Array[Double](dim + 1) // Adam first moment (d ++ wOut ++ b)
-    var v = new Array[Double](dim + 1)
+  /** The training loop both trainers run over a flat parameter vector
+    * starting at `p0`. `step(params, example, grad)` adds one example's
+    * ∂loss/∂params into `grad` and returns its (loss, logit); `tensors` are
+    * the per-variable slices of the vector that clip_by_norm(3) clips
+    * separately before the shared Adam step.
+    */
+  private[score] def fit[E](examples: Dataset[E], p0: Array[Double],
+                            tensors: Seq[(Int, Int)], epochs: Int, lr: Double,
+                            ckptTable: Option[String], ckptEvery: Int, parts: Int,
+                            stepsPerEpoch: Int)(labelOf: E => Int)
+                           (step: (Array[Double], E, Array[Double]) => (Double, Double))
+      : DataFrame = try {
+    require(stepsPerEpoch >= 1, s"stepsPerEpoch must be >= 1, got $stepsPerEpoch")
+    val spark = examples.sparkSession
+    import spark.implicits._
+    val size = p0.length
+    var p = p0
+    var m = new Array[Double](size) // Adam moments
+    var v = new Array[Double](size)
     var startEp = 0
 
     // resume: restore the last committed (epoch, params, moments) and
     // continue from the next epoch. The stored shapes are validated first —
-    // a stale or foreign table (a GruTrainer checkpoint, or one written
-    // before wOut widened the head) must fail loudly, not silently truncate
-    // into garbage params (ADVICE round 4).
+    // a stale or foreign table (the other trainer's checkpoint, or one
+    // written before wOut widened the head) must fail loudly, not silently
+    // resume from garbage params (ADVICE round 4).
     for (table <- ckptTable; _ <- TableIO.currentVersion(table)) {
       val r = TableIO.read(spark, table).as[CkptRow].head()
-      val p = r.param
-      require(p.length == dim + 1 && r.madam.length == dim + 1 &&
-        r.vadam.length == dim + 1,
-        s"checkpoint at $table has param/moment lengths " +
-          s"(${p.length}, ${r.madam.length}, ${r.vadam.length}) but this " +
-          s"model needs ${dim + 1} — stale or foreign checkpoint table")
-      d = p.take(dim); b = p(dim); m = r.madam; v = r.vadam
+      require(r.param.length == size && r.madam.length == size &&
+        r.vadam.length == size,
+        s"checkpoint at $table has param/moment lengths (${r.param.length}, " +
+          s"${r.madam.length}, ${r.vadam.length}) but this model needs " +
+          s"$size — stale or foreign checkpoint table")
+      p = r.param; m = r.madam; v = r.vadam
       startEp = r.epoch + 1
     }
 
@@ -151,40 +184,32 @@ object Trainer {
       var epLoss = 0.0; var epCorrect = 0L; var epN = 0L
       var epPos = 0.0; var epNeg = 0.0; var epNPos = 0L
       for (mb <- 0 until stepsPerEpoch) {
-        val bcP = spark.sparkContext.broadcast((d, b))
-        // one narrow pass: per-partition (grad[dim+1], lossSum, correct, n)
-        // over this micro-batch's stride (row i ∈ batch i mod B — the fixed
+        val bcP = spark.sparkContext.broadcast(p)
+        // one narrow pass: per-partition (grad, lossSum, correct, n) over
+        // this micro-batch's stride (row i ∈ batch i mod B — the fixed
         // layout makes the stride deterministic)
-        val partials = examples.select("label", "f").as[(Int, Array[Float])]
-          .rdd.mapPartitionsWithIndex { (pid, it) =>
-            val (dd, bb) = bcP.value
-            val g = new Array[Double](dim + 1)
-            var loss = 0.0; var correct = 0L; var n = 0L
-            var posSum = 0.0; var negSum = 0.0; var nPos = 0L
-            var idx = 0
-            it.foreach { case (label, f) =>
-              if (idx % stepsPerEpoch == mb) {
-                var logit = bb
-                var i = 0
-                while (i < dim) { logit += dd(i) * f(i); i += 1 }
-                val y = label.toDouble
-                loss += Losses.sigmoidXent(logit, y)
-                if ((logit >= 0.0) == (label == 1)) correct += 1
-                if (label == 1) { posSum += logit; nPos += 1 } else negSum += logit
-                n += 1
-                val err = 1.0 / (1.0 + math.exp(-logit)) - y // σ(logit) − y
-                i = 0
-                while (i < dim) { g(i) += err * f(i); i += 1 }
-                g(dim) += err
-              }
-              idx += 1
+        val partials = examples.rdd.mapPartitionsWithIndex { (pid, it) =>
+          val pp = bcP.value
+          val g = new Array[Double](size)
+          var loss = 0.0; var correct = 0L; var n = 0L
+          var posSum = 0.0; var negSum = 0.0; var nPos = 0L
+          var idx = 0
+          it.foreach { ex =>
+            if (idx % stepsPerEpoch == mb) {
+              val (l, logit) = step(pp, ex, g)
+              val label = labelOf(ex)
+              loss += l
+              if ((logit >= 0.0) == (label == 1)) correct += 1
+              if (label == 1) { posSum += logit; nPos += 1 } else negSum += logit
+              n += 1
             }
-            Iterator.single((pid, GradPartial(g, loss, correct, n, posSum, negSum, nPos)))
+            idx += 1
           }
-        // depth-2 deterministic tree reduce (DetReduce: pid-keyed fixed
-        // association — bit-identical across runs, cluster sizes, and
-        // scheduling; driver receives ⌈√parts⌉ group sums, not `parts`
-        // partials — round-4 verdict item 3)
+          Iterator.single((pid, GradPartial(g, loss, correct, n, posSum, negSum, nPos)))
+        }
+        // depth-2 deterministic tree reduce (pid-keyed fixed association —
+        // bit-identical across runs, cluster sizes, and scheduling; the
+        // driver receives ⌈√parts⌉ group sums, not `parts` partials)
         val tot = DetReduce.tree(partials, parts, GradPartial.merge)
         bcP.destroy()
         val grad = tot.g
@@ -198,21 +223,20 @@ object Trainer {
         epLoss += tot.loss; epCorrect += tot.correct; epN += n
         epPos += tot.posSum; epNeg += tot.negSum; epNPos += tot.nPos
 
-        // mean gradient → per-TENSOR clip_by_norm(3) on d, wOut, b separately
-        // (tf.clip_by_norm clips each variable's gradient by its own norm),
-        // then one shared Adam step over the concatenation; Adam's timestep
-        // advances once per STEP, not per epoch
+        // mean gradient → per-TENSOR clip_by_norm(3) (tf.clip_by_norm clips
+        // each variable's gradient by its own norm), then one shared Adam
+        // step; Adam's timestep advances once per STEP, not per epoch
         var i = 0
-        while (i <= dim) { grad(i) /= n; i += 1 }
-        val gD = Losses.clipByNorm(grad.slice(0, fDim), 3.0)
-        val gO = Losses.clipByNorm(grad.slice(fDim, dim), 3.0)
-        val gB = Losses.clipByNorm(Array(grad(dim)), 3.0)
-        val clipped = gD ++ gO ++ gB
-        val (pN, mN, vN) = Losses.adamStep(d :+ b, clipped, m, v,
-          t = ep * stepsPerEpoch + mb + 1,
-          lr = 0.05 /* lr scaled up: few epochs on a tiny feature head */,
+        while (i < size) { grad(i) /= n; i += 1 }
+        val clipped = new Array[Double](size)
+        tensors.foreach { case (from, until) =>
+          val c = Losses.clipByNorm(grad.slice(from, until), 3.0)
+          System.arraycopy(c, 0, clipped, from, until - from)
+        }
+        val (pN, mN, vN) = Losses.adamStep(p, clipped, m, v,
+          t = ep * stepsPerEpoch + mb + 1, lr = lr,
           maxGradNorm = Double.PositiveInfinity /* already clipped per tensor */)
-        d = pN.take(dim); b = pN(dim); m = mN; v = vN
+        p = pN; m = mN; v = vN
       }
       // a degenerate all-positive / all-negative epoch means sampling broke;
       // fail loudly instead of reporting a silent NaN→0 margin (ADVICE r4)
@@ -227,11 +251,10 @@ object Trainer {
       // durable state commit through the engine's snapshot log
       for (table <- ckptTable)
         if ((ep + 1) % ckptEvery == 0 || ep == epochs - 1)
-          TableIO.commit(Seq(CkptRow(ep, d :+ b, m, v)).toDF(), table)
+          TableIO.commit(Seq(CkptRow(ep, p, m, v)).toDF(), table)
     }
-    examples.unpersist(blocking = false)
     out.result().toDF()
-  }
+  } finally examples.unpersist(blocking = false)
 }
 
 /** Row shape + feature composer for the trainer (kept out of the loop so the
@@ -280,10 +303,9 @@ private[score] case class LabeledRow(
     doc_id: String, span_idx: Int, x: String, y: String,
     path: Array[graft.model.PathStep], source: String, label: Int) {
 
-  /** The unique per-row key BOTH trainers hash-repartition and sort on —
-    * it defines the deterministic partition layout their bit-identical
-    * reproducibility and checkpoint/resume contracts depend on, so it must
-    * never diverge between them (one shared definition, review finding).
+  /** The unique per-row key `Trainer.layout` hash-repartitions and sorts
+    * on — it defines the deterministic partition layout the trainers'
+    * bit-identical reproducibility and checkpoint/resume contracts depend on.
     */
   def layoutKey: String =
     s"$doc_id|$span_idx|$label|$x|$y|$source|" + path.mkString(";")

@@ -7,19 +7,15 @@ import org.apache.spark.sql.functions._
 
 /** One scaling-benchmark level in its own JVM (forked by graft.Bench).
   *
-  * Modes:
-  *  - `<cores> <repl> <reps> [job]` — one-shot: warmup, N timed reps, print
-  *    `LEVEL cores=.. docs=.. triples=.. best=..` (manual probing).
-  *  - `<cores> <repl> serve [job]` — protocol mode for Bench's paired scaling
-  *    measurement: after warmup prints `READY docs=<n>`, then for each
-  *    `run` line on stdin executes ONE timed rep and prints
-  *    `REP triples=<t> sec=<s>`; `quit` exits. Bench alternates `run`
-  *    commands between the N and 4N JVMs so both levels measure the same
-  *    machine conditions (host CPU steal here is bursty on the scale of
-  *    minutes — levels timed minutes apart are not comparable).
+  * Protocol: `<cores> <repl> serve <job> [corpus]` — after warmup prints
+  * `READY docs=<n>`, then for each `run` line on stdin executes ONE timed
+  * rep and prints `REP triples=<t> sec=<s>`; `quit` exits. Bench alternates
+  * `run` commands between the N and 4N JVMs so both levels measure the same
+  * machine conditions (host CPU steal here is bursty on the scale of
+  * minutes — levels timed minutes apart are not comparable).
   *
   * Jobs:
-  *  - `fused` (default) — the zero-shuffle extraction kernel
+  *  - `fused` — the zero-shuffle extraction kernel
   *    (`Extract.triplesFused`): docs → triples in one narrow stage.
   *  - `pipeline` — the FULL docs→canonical-triples dataflow
   *    (`KgPipeline.canonicalTriplesInMemory`): extraction + dictionary
@@ -87,15 +83,14 @@ object BenchLevel {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 4 && args(2) == "serve" &&
+      Set("fused", "pipeline").contains(args(3)) &&
+      (args(3) != "pipeline" || args.length > 4),
+      "usage: BenchLevel <cores> <repl> serve fused | " +
+        s"BenchLevel <cores> <repl> serve pipeline <corpus>; got ${args.mkString(" ")}")
     val cores = args(0).toInt
     val repl = args(1).toInt
-    val mode = if (args.length > 2) args(2) else "3"
-    val job = if (args.length > 3) args(3) else "fused"
-    // pre-built pipeline corpus snapshot from the parent (owned and cleaned
-    // up by the parent; this level only reads it), plus an optional
-    // quarter-scale snapshot used ONLY for the in-JVM JIT warmup
-    val sharedCorpus = if (args.length > 4) Some(args(4)) else None
-    val sharedQuarter = if (args.length > 5) Some(args(5)) else None
+    val job = args(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -126,28 +121,15 @@ object BenchLevel {
         .as[(Long, String)]
 
     // pipeline: the varied corpus (Heaps-style vocabulary growth — see
-    // buildPipelineCorpus) is materialized ONCE to local parquet, OUTSIDE
-    // every timed window — each timed rep then starts from a realistic
+    // buildPipelineCorpus) is materialized ONCE to local parquet by the
+    // parent Bench, OUTSIDE every timed window (it owns and removes it; this
+    // level only reads it) — each timed rep then starts from a realistic
     // columnar corpus scan (the shape a production run reads) instead of
     // re-running the synthetic corpus-variation regexes, whose string-
-    // rewrite cost is test-harness scaffolding, not engine work. The parent
-    // Bench normally pre-builds and passes it (arg 5); standalone levels
-    // build their own.
-    val corpusPath: Option[String] =
-      if (job == "pipeline") sharedCorpus.orElse {
-        val p = s"/tmp/graft-pipe-corpus-c$cores-r$repl"
-        buildPipelineCorpus(spark, sfDir, repl, p)
-        sys.addShutdownHook {
-          import scala.reflect.io.Directory
-          new Directory(new java.io.File(p)).deleteRecursively()
-        }
-        Some(p)
-      } else None
-
-    def docs(r: Int) = corpusPath match {
-      case Some(p) => spark.read.parquet(p).as[(Long, String)]
-      case None => rawDocs(r)
-    }
+    // rewrite cost is test-harness scaffolding, not engine work.
+    def docs(r: Int) =
+      if (job == "pipeline") spark.read.parquet(args(4)).as[(Long, String)]
+      else rawDocs(r)
 
     def execJob(r: Int): Long = job match {
       case "pipeline" => KgPipeline.canonicalTriplesInMemory(docs(r)).count()
@@ -174,20 +156,10 @@ object BenchLevel {
     // short levels otherwise spend their first timed reps still compiling
     // (and faulting file-cache pages), which skews the small-N vs large-N
     // comparison: small-N reps are long enough to warm up in-run, big-N
-    // reps are not. For the pipeline job `docs(r)` always reads the fixed
-    // full-scale corpus snapshot, so a quarter pass needs its OWN snapshot:
-    // when the parent passes one, the in-JVM warmup is that quarter pass
-    // (JIT/codegen warm at a quarter of the cost — a full-scale p1 pass is
-    // 110-180 s of serial pre-READY time, and Bench's paired warmup ROUND,
-    // which is dropped from scoring, already covers full-scale caches);
-    // without one, a single full pass (ADVICE round 3).
-    if (job != "pipeline") { execJob(math.max(repl / 4, 1)); fence() }
-    else sharedQuarter.foreach { q =>
-      KgPipeline.canonicalTriplesInMemory(
-        spark.read.parquet(q).as[(Long, String)]).count()
-      fence()
-    }
-    if (job != "pipeline" || sharedQuarter.isEmpty) { execJob(repl); fence() }
+    // reps are not. The pipeline job always reads the fixed full-scale
+    // corpus snapshot, so it warms with the full pass alone (ADVICE round 3).
+    if (job == "fused") { execJob(math.max(repl / 4, 1)); fence() }
+    execJob(repl); fence()
     val nDocs = docs(repl).count()
 
     def rep(): (Long, Double) = {
@@ -198,30 +170,15 @@ object BenchLevel {
       (triples, sec)
     }
 
-    if (mode == "serve") {
-      println(s"READY docs=$nDocs")
+    println(s"READY docs=$nDocs")
+    Console.out.flush()
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
+    var line = in.readLine()
+    while (line != null && line.trim == "run") {
+      val (t, sec) = rep()
+      println(f"REP triples=$t sec=$sec%.4f")
       Console.out.flush()
-      val in = new java.io.BufferedReader(new java.io.InputStreamReader(System.in))
-      var line = in.readLine()
-      while (line != null && line.trim == "run") {
-        val (t, sec) = rep()
-        println(f"REP triples=$t sec=$sec%.4f")
-        Console.out.flush()
-        line = in.readLine()
-      }
-    } else {
-      val reps = mode.toInt
-      var bestSec = Double.MaxValue
-      var triples = 0L
-      var i = 0
-      while (i < reps) {
-        val (t, sec) = rep()
-        triples = t
-        System.err.println(f"[level $cores $job] rep${i + 1}: $sec%.2fs ${t / sec}%.0f tps")
-        if (sec < bestSec) bestSec = sec
-        i += 1
-      }
-      println(f"LEVEL cores=$cores docs=$nDocs triples=$triples best=$bestSec%.4f")
+      line = in.readLine()
     }
     spark.stop()
   }

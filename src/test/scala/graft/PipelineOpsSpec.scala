@@ -72,8 +72,8 @@ class PipelineOpsSpec extends SparkSuite {
   test("cosineTopK is deterministic across partitionings") {
     val corpus = emb.select("vec_id", "embedding")
     val queries = emb.filter($"vec_id" < 3).select($"vec_id".as("q_id"), $"embedding")
-    val a = Similarity.cosineTopK(corpus.repartition(1), queries, 5).collect().toSet
-    val b = Similarity.cosineTopK(corpus.repartition(13), queries, 5).collect().toSet
+    val a = sortedRows(Similarity.cosineTopK(corpus.repartition(1), queries, 5))
+    val b = sortedRows(Similarity.cosineTopK(corpus.repartition(13), queries, 5))
     assert(a == b)
   }
 
@@ -97,8 +97,8 @@ class PipelineOpsSpec extends SparkSuite {
     val d = Seq((1L, "a b c"), (2L, "c b a")).toDF("doc_id", "text")
     val fp = TextAnalysis.fingerprint(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp(1L) != fp(2L), "token order must change the fingerprint")
-    val f1 = TextAnalysis.fingerprint(docs.repartition(1)).collect().toSet
-    val f9 = TextAnalysis.fingerprint(docs.repartition(9)).collect().toSet
+    val f1 = sortedRows(TextAnalysis.fingerprint(docs.repartition(1)))
+    val f9 = sortedRows(TextAnalysis.fingerprint(docs.repartition(9)))
     assert(f1 == f9)
   }
 
@@ -120,9 +120,9 @@ class PipelineOpsSpec extends SparkSuite {
     assert(f.filter(_.kind == "audio").forall(_.width == 0))
     assert(f.filter(_.kind == "video").forall(x => x.width >= 160 && x.height >= 120))
     // determinism across batch sizes and partitionings
+    val cols = Seq("doc_id", "span_idx", "width", "height", "feature").map(col)
     val feats2 = Media.decodeFeatures(cells.repartition(5), batchSize = 64)
-      .collect().map(x => (x.doc_id, x.span_idx, x.width, x.height, x.feature.toSeq)).toSet
-    assert(feats2 == f.map(x => (x.doc_id, x.span_idx, x.width, x.height, x.feature.toSeq)).toSet)
+    assert(sortedRows(feats2.select(cols: _*)) == sortedRows(feats.select(cols: _*)))
     val frames = Media.frameSample(feats)
     assert(frames.count() > 0)
     assert(frames.groupBy("doc_id", "span_idx").count().filter($"count" < 1).count() == 0)

@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.Corpus
 import graft.extract.Extract
-import graft.score.Trainer
+import graft.score.{GruTrainer, Trainer}
 
 /** The composed training loop must actually LEARN on the real corpus: the
   * negative-sampling loss must fall and the positive-over-negative ranking
@@ -30,7 +30,7 @@ class TrainerSpec extends SparkSuite {
     // threshold 0 (the reference separates it by training the embeddings).
     assert(margins.last > margins.head, s"margin did not grow: ${margins.toSeq}")
     assert(margins.last > 0L, s"positives not ranked above negatives: ${margins.last}")
-    // determinism: fixed example layout + fixed-order driver reduce ⇒
+    // determinism: fixed example layout + DetReduce.tree fixed association ⇒
     // identical epochs on re-run
     val again = Trainer.trainNegSampling(cands, epochs = 20)
       .collect().sortBy(_.getInt(0)).map(r => (r.getLong(1), r.getLong(3)))
@@ -93,5 +93,25 @@ class TrainerSpec extends SparkSuite {
       .head().getAs[scala.collection.Seq[Double]](0)
     val hidden = (p.length - 1) / 3
     assert(p.slice(2 * hidden, 3 * hidden).exists(_ != 0.0), "wOut never updated")
+  }
+
+  test("a checkpoint table of the other trainer fails loudly as foreign") {
+    // the two trainers share one checkpoint schema and one resume path, so
+    // only the shape check tells a full-model checkpoint from a head one
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
+    val gruDir = tmp("gru-ckpt")
+    GruTrainer.train(cands, epochs = 1, ckptTable = Some(gruDir))
+    val e1 = intercept[IllegalArgumentException] {
+      Trainer.trainNegSampling(cands, epochs = 2, ckptTable = Some(gruDir))
+    }
+    assert(e1.getMessage.contains(gruDir) && e1.getMessage.contains("foreign checkpoint"),
+      e1.getMessage)
+    val headDir = tmp("trainer-ckpt")
+    Trainer.trainNegSampling(cands, epochs = 1, ckptTable = Some(headDir))
+    val e2 = intercept[IllegalArgumentException] {
+      GruTrainer.train(cands, epochs = 2, ckptTable = Some(headDir))
+    }
+    assert(e2.getMessage.contains(headDir) && e2.getMessage.contains("foreign checkpoint"),
+      e2.getMessage)
   }
 }
