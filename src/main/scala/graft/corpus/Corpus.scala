@@ -22,10 +22,11 @@ object Corpus {
 
   /** Pure, deterministic doc assembly from (id, text) — shared by the Spark
     * path and the single-node reference-semantics fixture path so both sides
-    * of the differential test see identical inputs.
+    * of the differential test see identical inputs. A null text (the column
+    * is nullable) is a doc without spans.
     */
   def buildDoc(id: Long, text: String): Doc = {
-    val words = text.split(" ").filter(_.nonEmpty)
+    val words = if (text == null) Array.empty[String] else text.split(" ").filter(_.nonEmpty)
     val sents = words.grouped(sentenceTokens).map(_.mkString(" ")).toArray
     val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
     var off = 0
@@ -42,24 +43,6 @@ object Corpus {
       i += 1
     }
     Doc(f"d$id%09d", spans.toArray)
-  }
-
-  /** Token windows of a doc's text spans WITH the span indices they get in
-    * buildDoc (media interleaving shifts text-span indices). The fused
-    * extraction path uses this to skip the join-then-resplit round trip of
-    * building span text strings; equality with buildDoc's span numbering is
-    * enforced by the fused==composed differential test.
-    */
-  def textSpanTokenWindows(id: Long, text: String): Iterator[(Int, Array[String])] = {
-    val words = text.split(" ").filter(_.nonEmpty)
-    val groups = words.grouped(sentenceTokens).toArray
-    var idx = 0
-    groups.iterator.zipWithIndex.map { case (w, i) =>
-      val out = (idx, w)
-      idx += 1
-      if (math.floorMod(id * 31 + i, 3) == 0) idx += 1 // media span follows
-      out
-    }
   }
 
   /** The corpus' documents.parquet as raw (doc_id, text) rows, spread over

@@ -365,12 +365,14 @@ object FusedKernel {
   }
 
   /** All triples of one raw (id, text) doc — the span windowing mirrors
-    * Corpus.buildDoc/textSpanTokenWindows (media spans shift the indices).
+    * Corpus.buildDoc (media spans shift the indices). A null text (the
+    * column is nullable) is a doc without text spans, as in buildDoc.
     */
   def docTriples(
       id: Long, text: String,
       minLen: Int, maxLen: Int, maxPairs: Int,
       s: Scratch): Iterator[Triple] = {
+    if (text == null) return Iterator.empty
     val words = {
       val raw = text.split(" ")
       var nz = 0

@@ -59,7 +59,7 @@ object Linking {
 
   /** Every entity join: left-joins `stream` to the two-column (key, value)
     * `table` on `stream(key)`, adding the value as column `as` (null on a
-    * miss; the caller picks the OOV default). The join strategy is one
+    * miss; the caller decides what a miss means). The join strategy is one
     * decision, made here: `small` broadcasts the table (one hash build per
     * executor, no stream shuffle); otherwise the join degrades to
     * `saltedLeftJoin` on the stream's `doc_id`, `span_idx`, which spreads

@@ -13,14 +13,17 @@ import org.apache.spark.sql.functions._
   * extraction kernel (`Extract.triplesFused`), one whitelist gate
   * (`Extract.whitelisted`), one dictionary side (`endpointCounts` feeds the
   * vocabulary gate and the alias dictionary, `canonicalize` gives every
-  * entity its canonical id) and one entity-join helper (`Linking.lookup`,
-  * broadcast or salted by one `broadcastMaxDictRows` bound):
+  * alias its entity id and canonical id) and one link pass (`link`: one
+  * `Linking.lookup` per endpoint, broadcast or salted by one
+  * `broadcastMaxDictRows` bound):
   *
   *   docs → fused extraction (candidates with their path signature `sig`)
   *        → triples (whitelist + vocabulary gates)
-  *        → alias dictionary → entity linking (OOV default)
-  *        → canonicalization (CC over alias-variant edges)
-  *        → canonical triple + entity tables (partitioned by predicate)
+  *        → alias dictionary
+  *        → entity table (alias, entity_id, canonical_id; CC over
+  *          alias-variant edges)
+  *        → link pass (each endpoint looked up once: entity + canonical id)
+  *        → canonical triples (a projection, partitioned by predicate)
   *
   * `run` is the shipped job: every stage materializes via TableIO (atomic
   * snapshot whose manifest carries the per-partition lineage), so a killed
@@ -34,7 +37,7 @@ import org.apache.spark.sql.functions._
 object KgPipeline {
 
   val stages: Seq[String] = Seq(
-    "candidates", "triples", "alias_dict", "linked_triples", "entity_canon", "canonical_triples")
+    "candidates", "triples", "alias_dict", "entity_canon", "linked_triples", "canonical_triples")
 
   /** is_ok_sdp rule 1 (semeval2sdp.py:245-262): a surface is in-vocabulary
     * when it is a triple endpoint at least this often corpus-wide.
@@ -114,6 +117,33 @@ object KgPipeline {
     df.join(vocab, col("subj") === col("__vs"), "left_semi")
       .join(vocab, col("obj") === col("__vs"), "left_semi")
 
+  /** The link pass of both jobs: looks `subj` and `obj` of `stream` up once
+    * each in the entity table `entities` (alias, entity_id, canonical_id),
+    * keyed on the alias with the struct (entity_id, canonical_id) as payload,
+    * and adds `subj_id`, `subj_canon`, `obj_id`, `obj_canon` — all four null
+    * for an endpoint the table misses.
+    */
+  private def link(stream: DataFrame, entities: DataFrame, small: Boolean): DataFrame = {
+    val e = entities.select(col("alias"), struct(col("entity_id"), col("canonical_id")))
+    lookup(lookup(stream, "subj", e, "__subj", small), "obj", e, "__obj", small)
+      .select(stream.columns.map(col).toSeq ++ Seq(
+        col("__subj.entity_id").as("subj_id"), col("__subj.canonical_id").as("subj_canon"),
+        col("__obj.entity_id").as("obj_id"), col("__obj.canonical_id").as("obj_canon")): _*)
+  }
+
+  /** The canonical triples of a linked frame: endpoints as canonical ids. */
+  private def canonicalTriples(linked: DataFrame): DataFrame =
+    linked.select(col("subj_canon").as("subj_id"), col("pred"), col("obj_canon").as("obj_id"),
+      col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
+
+  /** Columns each stage gained after an earlier format: a run directory
+    * committed before them fails before any job, from the manifests alone,
+    * instead of resuming into an analysis error deep inside a later stage.
+    */
+  private val formatColumns: Seq[(String, Seq[String])] = Seq(
+    "candidates" -> Seq("sig"), "entity_canon" -> Seq("alias"),
+    "linked_triples" -> Seq("subj_canon", "obj_canon"))
+
   /** @param broadcastMaxDictRows dictionary-side row bound for the entity
     *   joins, compared against the committed alias dictionary's row count
     *   (see `defaultBroadcastMaxDictRows`).
@@ -122,17 +152,17 @@ object KgPipeline {
           whitelistMinCount: Long = 3,
           broadcastMaxDictRows: Long = defaultBroadcastMaxDictRows): DataFrame = {
     val log = new StageLog(spark, runDir)
+    for ((stage, cols) <- formatColumns if log.isCommitted(stage)) {
+      val missing = cols.filterNot(log.snapshot(stage).schema.fieldNames.contains)
+      if (missing.nonEmpty)
+        sys.error(s"stage $stage in run directory $runDir has no ${missing.mkString(", ")} column: it was " +
+          "committed by an older version; delete the run directory and rerun")
+    }
 
     // every candidate triple of the corpus, with its path signature
     val candidates = log.runStage("candidates") {
       Extract.triplesFused(Corpus.rawDocuments(spark, sfDir)).toDF()
     }
-    // a candidates table committed before the kernel emitted `sig` would
-    // resume into an analysis error deep inside `triples`; the manifest
-    // alone (no Spark job) tells
-    if (!log.snapshot("candidates").schema.fieldNames.contains("sig"))
-      sys.error(s"stage candidates in run directory $runDir has no sig column: it was " +
-        "committed by an older extraction; delete the run directory and rerun")
 
     val triples = log.runStage("triples") {
       // whitelist + vocab gates stay DataFrames end-to-end: no corpus-derived
@@ -147,44 +177,33 @@ object KgPipeline {
       Linking.buildAliasDict(endpointCounts(triples, lit(1))).toDF()
     }
 
-    // the dictionary's committed row count (from its snapshot manifest, no
-    // job) decides all four entity joins below (canon is row-for-row the
-    // dictionary, so the one count covers it too)
-    val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
-
-    val linked = log.runStage("linked_triples") {
-      val dict = aliasDict.select(col("alias"), col("entity_id"))
-      lookup(lookup(triples, "subj", dict, "subj_id", dictIsSmall), "obj", dict, "obj_id", dictIsSmall)
-        .select(col("doc_id"), col("span_idx"), col("pred"), col("score"),
-          col("subj"), coalesce(col("subj_id"), lit(Linking.OovEntityId)).as("subj_id"),
-          col("obj"), coalesce(col("obj_id"), lit(Linking.OovEntityId)).as("obj_id"))
-    }
-
-    // the ENTITY table partitions by an entity-id hash bucket (the Iceberg
-    // `bucket(N, entity_id)` transform restated as a partition column) —
-    // point lookups and canonical-id joins prune to one bucket directory
-    // instead of scanning the table, and the hash spreads write volume
-    // evenly where raw entity_id would make one directory per entity
-    val canon = log.runStage("entity_canon", partitionBy = Seq("entity_bucket")) {
+    // the ENTITY table (alias, entity_id, canonical_id), partitioned by an
+    // entity-id hash bucket (the Iceberg `bucket(N, entity_id)` transform
+    // restated as a partition column) — point lookups prune to one bucket
+    // directory instead of scanning the table, and the hash spreads write
+    // volume evenly where raw entity_id would make one directory per entity
+    val entities = log.runStage("entity_canon", partitionBy = Seq("entity_bucket")) {
       // CC rounds checkpoint durably inside the run dir: a mid-CC kill
       // resumes from the last committed labels instead of restarting
       canonicalize(aliasDict, Some(s"$runDir/cc"))
-        .select(col("entity_id"), col("canonical_id"),
-          pmod(hash(col("entity_id")), lit(Linking.entityBuckets)).as("entity_bucket"))
+        .withColumn("entity_bucket", pmod(hash(col("entity_id")), lit(Linking.entityBuckets)))
     }
 
-    log.runStage("canonical_triples", partitionBy = Seq("pred")) {
-      // entity_bucket is a partition-layout column: projected away before
-      // the joins, it is neither dead broadcast payload nor an ambiguous
-      // duplicate in the joined frame
-      val c = canon.select(col("entity_id"), col("canonical_id"))
-      lookup(lookup(linked, "subj_id", c, "subj_canon", dictIsSmall), "obj_id", c, "obj_canon", dictIsSmall)
-        .select(
-          coalesce(col("subj_canon"), col("subj_id")).as("subj_id"),
-          col("pred"),
-          coalesce(col("obj_canon"), col("obj_id")).as("obj_id"),
-          col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
+    // the dictionary's committed row count (manifest, no job) decides both
+    // entity joins: the entity table is row-for-row the dictionary, and
+    // every endpoint of `triples` is in it, so no OOV default is needed. The
+    // lookup table is the committed scan: built as alias_dict ⋈ entity_canon
+    // in the stage, Spark stopped broadcasting the salted ×entityBuckets
+    // table and shuffled the stream (a prototype measured perfbench
+    // durable-zipf's shuffle going from 0.38 to 1.6 MB).
+    val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
+    val linked = log.runStage("linked_triples") {
+      link(triples, entities, dictIsSmall)
+        .select(Seq("doc_id", "span_idx", "pred", "score", "subj", "subj_id", "obj", "obj_id",
+          "subj_canon", "obj_canon").map(col): _*)
     }
+
+    log.runStage("canonical_triples", partitionBy = Seq("pred"))(canonicalTriples(linked))
   }
 
   /** The docs→canonical-triples dataflow WITHOUT durable stage commits —
@@ -262,13 +281,11 @@ object KgPipeline {
     // Compose canonicalization INTO the dictionary (dictionary-sized join)
     // instead of joining it onto the linked triple stream: the 10^12-row
     // stream is probed TWICE total (subj leg, obj leg) rather than four
-    // times. Row-equal to the staged gate→link→canon composition of `run`:
-    // subj_id = canon[dict[subj]] (dict hits never need the OOV fallback
-    // after the gate), and the vocab gate itself is equivalent to inner-join
-    // membership in the gated dictionary — an alias is in that dictionary
-    // iff it survives the gate in some triple, and a triple survives iff
-    // BOTH its endpoints are in-vocab.
-    val dictCanon = canonicalize(aliasDict, None).select(col("alias"), col("canonical_id"))
+    // times — the link pass `run` shares. The vocab gate itself is
+    // equivalent to inner-join membership in the gated dictionary — an alias
+    // is in that dictionary iff it survives the gate in some triple, and a
+    // triple survives iff BOTH its endpoints are in-vocab.
+    val entities = canonicalize(aliasDict, None)
 
     // (D) output pass: re-extract, then gate + link + canonicalize in one
     // narrow stage. Default: two broadcast hash joins. The per-side form pays
@@ -278,21 +295,7 @@ object KgPipeline {
     // small build), so two builds it is. The vocab gate is the not-null
     // filter (a surface is in the gated dictionary iff the lookup found it);
     // Catalyst turns each left join back into an inner one.
-    lookup(lookup(Extract.triplesFused(docs).toDF(), "subj", dictCanon, "subj_id", small),
-      "obj", dictCanon, "obj_id", small)
-      .filter(col("subj_id").isNotNull && col("obj_id").isNotNull)
-      .select(col("subj_id"), col("pred"), col("obj_id"),
-        col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
-  }
-
-  /** Entity table for the emitted graph: canonical id per alias. */
-  def entityTable(spark: SparkSession, runDir: String): DataFrame = {
-    val log = new StageLog(spark, runDir)
-    val dict = log.runStage("alias_dict")(sys.error("alias_dict must be committed"))
-    val canon = log.runStage("entity_canon")(sys.error("entity_canon must be committed"))
-    dict.join(canon, Seq("entity_id"), "left")
-      .select(col("alias"), col("entity_id"),
-        coalesce(col("canonical_id"), col("entity_id")).as("canonical_id"),
-        col("freq"))
+    canonicalTriples(link(Extract.triplesFused(docs).toDF(), entities, small)
+      .filter(col("subj_id").isNotNull && col("obj_id").isNotNull))
   }
 }

@@ -82,6 +82,34 @@ class ExtractPipelineSpec extends SparkSuite {
     assert(sortedRows(Extract.whitelisted(fused, 3)) == sortedRows(Extract.whitelisted(composed, 3)))
   }
 
+  test("a null text is a doc without text spans: fused == composed, and run completes") {
+    val dir = TestSpark.nullTextSfDir(sfDir)
+    assert(spark.read.parquet(s"$dir/documents.parquet").filter(TestSpark.nullTextIds).count() > 0)
+    val fused = sortedRows(Extract.triplesFused(rawDocs(dir)).toDF())
+    val composed = Extract.triples(Extract.candidates(Extract.docsToSentences(Corpus.fromDocuments(spark, dir))))
+    assert(fused == sortedRows(composed.toDF()))
+    // the nulled docs contribute nothing: the same triples as dropping them
+    assert(fused == sortedRows(Extract.triplesFused(rawDocs.filter(!TestSpark.nullTextIds)).toDF()))
+    assert(fused.nonEmpty)
+    val runDir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
+    assert(KgPipeline.run(spark, dir, runDir).count() > 0)
+  }
+
+  test("the pair cap: fused == composed at caps 1, 2, 4 and 8, and the row count rises with the cap") {
+    // the default cap (64) cannot bind on 12-token windows, so small caps
+    // exercise it, on the first 200 docs
+    val first = rawDocs.orderBy("doc_id").limit(200).cache()
+    val sentences = Extract.docsToSentences(first.map { case (id, text) => Corpus.buildDoc(id, text) })
+    val rows = Seq(1, 2, 4, 8).map { cap =>
+      val fused = sortedRows(Extract.triplesFused(first, maxPairsPerSentence = cap).toDF())
+      val composed = Extract.triples(Extract.candidates(sentences, maxPairsPerSentence = cap)).toDF()
+      assert(fused == sortedRows(composed), s"cap $cap")
+      fused.size
+    }
+    first.unpersist()
+    assert(rows == Seq(863, 1390, 2071, 2401))
+  }
+
   test("in-memory pipeline: salted degradation path is row-equal to broadcast") {
     // the 100 TB story: when the dictionary outgrows a driver-safe
     // broadcast, the gate+link+canonicalize joins degrade to

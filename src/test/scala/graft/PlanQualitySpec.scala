@@ -3,8 +3,10 @@ package graft
 import graft.model.Triple
 import graft.pipeline.KgPipeline
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.types.ObjectType
@@ -104,8 +106,11 @@ class PlanQualitySpec extends SparkSuite {
       s"expected broadcast query side in q21:\n$p")
   }
 
-  /** Children as executed, looking through AQE's wrapper and query stages. */
+  /** Children as executed, looking through AQE's wrapper and query stages
+    * and into an executed command.
+    */
   private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case c: CommandResultExec => Seq(c.commandPhysicalPlan)
     case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
     case q: QueryStageExec => Seq(q.plan)
     case other => other.children
@@ -153,6 +158,59 @@ class PlanQualitySpec extends SparkSuite {
     }
   }
 
+  /** Every node of an executed plan, looking through AQE. */
+  private def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
+
+  /** The executed plans of the queries `body` runs: listener events arrive
+    * asynchronously, so this waits (30 s at most) until `until` holds.
+    */
+  private def executedPlans(body: => Unit)(until: Seq[SparkPlan] => Boolean): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!until(plans.asScala.toSeq) && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  test("run's link pass: two entity joins write linked_triples, canonical_triples is joinless") {
+    // each endpoint is looked up once, in the entity table; canonical_triples
+    // only projects linked_triples — on the broadcast and the salted path
+    for (bound <- Seq(KgPipeline.defaultBroadcastMaxDictRows, 0L)) {
+      val runDir = java.nio.file.Files.createTempDirectory("graft-linkplan").toString
+      def writes(stage: String)(p: SparkPlan): Boolean =
+        all(p).collectFirst { case w: DataWritingCommandExec => w.cmd }.exists {
+          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.contains(s"$runDir/$stage/")
+          case _ => false
+        }
+      val stages = Seq("linked_triples", "canonical_triples")
+      val plans = executedPlans(KgPipeline.run(spark, sfDir, runDir, broadcastMaxDictRows = bound)) { ps =>
+        stages.forall(s => ps.exists(writes(s)))
+      }
+      val Seq(linked, canonical) = stages.map { s =>
+        val ws = plans.filter(writes(s))
+        assert(ws.size == 1, s"expected one write of $s at bound $bound, got ${ws.size}")
+        ws.head
+      }
+      val joins = all(linked).collect { case j: BaseJoinExec => j }
+      assert(joins.size == 2, s"expected two entity joins at bound $bound:\n$linked")
+      joins.foreach { j =>
+        if (bound > 0) assert(j.isInstanceOf[BroadcastHashJoinExec] &&
+          j.asInstanceOf[BroadcastHashJoinExec].buildSide == BuildRight, s"not a stream-side broadcast:\n$j")
+        else assert(j.leftKeys.exists(_.references.exists(_.name == "__salt")) &&
+          j.rightKeys.exists(_.references.exists(_.name == "__salt")), s"salted join without __salt:\n$j")
+      }
+      val canonicalJoins = all(canonical).collect { case j: BaseJoinExec => j }
+      assert(canonicalJoins.isEmpty, s"canonical_triples joins at bound $bound:\n$canonical")
+    }
+  }
+
   test("a CC round's sym ⋈ labels join reads the edge table without an Exchange") {
     // ConnectedComponents co-partitions the symmetrized edges by `src` before
     // checkpointing them, so each round's join on src should read that leaf
@@ -161,23 +219,12 @@ class PlanQualitySpec extends SparkSuite {
     // reports UnknownPartitioning, so every round re-exchanges the edge table
     // (hash shuffle, then a broadcast at this size). `pendingUntilFixed` turns
     // into a failure once the rounds stop moving the edge table; drop it then.
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    def all(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(all)
-    def edgeJoins: Seq[BaseJoinExec] = plans.asScala.toSeq.flatMap(all).collect {
+    def edgeJoins(plans: Seq[SparkPlan]): Seq[BaseJoinExec] = plans.flatMap(all).collect {
       case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "src")) &&
         j.rightKeys.exists(_.references.exists(_.name == "id")) => j
     }
-    spark.listenerManager.register(listener)
-    try {
-      KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir))
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (edgeJoins.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    val joins = edgeJoins
+    val joins = edgeJoins(executedPlans(KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir)))(
+      edgeJoins(_).nonEmpty))
     assert(joins.nonEmpty, "no CC round ran a sym ⋈ labels join")
     pendingUntilFixed {
       val moved = joins.filter(j => all(j.left).exists(_.isInstanceOf[Exchange]))

@@ -195,8 +195,8 @@ class ResumeSpec extends SparkSuite {
   }
 
   test("staged pipeline: salted-join degradation is row-equal to broadcast") {
-    // forcing broadcastMaxDictRows = 0 sends BOTH entity joins (link +
-    // canonicalize) down the Linking.saltedLeftJoin path — the committed
+    // forcing broadcastMaxDictRows = 0 sends BOTH entity joins (the subj and
+    // the obj lookup) down the Linking.saltedLeftJoin path — the committed
     // canonical triples must equal the broadcast configuration's exactly
     val bDir = tmpDir("graft-salt-b")
     val sDir = tmpDir("graft-salt-s")
@@ -204,7 +204,7 @@ class ResumeSpec extends SparkSuite {
     val viaSalted = sortedRows(KgPipeline.run(spark, sfDir, sDir, broadcastMaxDictRows = 0L))
     assert(viaSalted == viaBroadcast)
     assert(viaBroadcast.nonEmpty)
-    // and with CC edges present (the canonicalize joins salted too)
+    // and with CC edges present (canonical ids differ from entity ids)
     assert(sortedRows(KgPipeline.run(spark, pluralSfDir, tmpDir("graft-salt-plural"),
       broadcastMaxDictRows = 0L)) == pluralRun._2)
 
@@ -241,18 +241,43 @@ class ResumeSpec extends SparkSuite {
     }
   }
 
-  test("pipeline: a candidates table committed without sig fails the resume, naming stage and run dir") {
+  test("pipeline: a stage committed in an older format fails the resume before any job, naming stage and run dir") {
     import graft.model.{PathStep, SdpCandidate}
-    val runDir = tmpDir("graft-stale")
-    // the candidates shape committed before the kernel emitted `sig`
-    new StageLog(spark, runDir).runStage("candidates")(Seq(
-      SdpCandidate("d000000001", 0, "cat", "mat", Array(PathStep("<X>", "nsubj", "NOUN")), "WIKI"))
-      .toDS().toDF())
-    val (err, jobs) = jobsDuring(intercept[RuntimeException](KgPipeline.run(spark, sfDir, runDir)))
-    assert(err.getMessage.contains("stage candidates") && err.getMessage.contains(runDir),
-      err.getMessage)
-    assert(jobs == 0, "the schema check reads the manifest and starts no job")
-    assert(!new StageLog(spark, runDir).isCommitted("triples"))
+    // each stage as committed before it gained its newer columns: candidates
+    // without `sig`, entity_canon without `alias`, linked_triples without
+    // the canonical ids
+    val stale = Seq(
+      "candidates" -> Seq(
+        SdpCandidate("d000000001", 0, "cat", "mat", Array(PathStep("<X>", "nsubj", "NOUN")), "WIKI"))
+        .toDS().toDF(),
+      "entity_canon" -> Seq((0L, 0L, 3)).toDF("entity_id", "canonical_id", "entity_bucket"),
+      "linked_triples" -> Seq(("d000000001", 0, "rel", 0.5, "cat", 0L, "mat", 1L))
+        .toDF("doc_id", "span_idx", "pred", "score", "subj", "subj_id", "obj", "obj_id"))
+    for ((stage, old) <- stale) {
+      val runDir = tmpDir("graft-stale")
+      new StageLog(spark, runDir).runStage(stage)(old)
+      val (err, jobs) = jobsDuring(intercept[RuntimeException](KgPipeline.run(spark, sfDir, runDir)))
+      assert(err.getMessage.contains(s"stage $stage ") && err.getMessage.contains(runDir), err.getMessage)
+      assert(jobs == 0, s"the format check reads the $stage manifest and starts no job")
+      assert(KgPipeline.stages.filter(new StageLog(spark, runDir).isCommitted) == Seq(stage))
+    }
+  }
+
+  test("pipeline: an empty corpus and an all-gated run finish with no rows and a readable audit") {
+    for ((dir, minCount) <- Seq((TestSpark.emptySfDir(sfDir), 3L), (sfDir, Long.MaxValue))) {
+      val runDir = tmpDir("graft-empty")
+      assert(KgPipeline.run(spark, dir, runDir, whitelistMinCount = minCount).count() == 0L, dir)
+      val log = new StageLog(spark, runDir)
+      val metrics = log.metrics(KgPipeline.stages).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val lineage = log.lineage(KgPipeline.stages).groupBy("stage").agg(sum("rows")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      for (stage <- KgPipeline.stages) {
+        val rows = TableIO.read(spark, log.stagePath(stage)).count()
+        assert(metrics(stage) == rows && lineage.getOrElse(stage, 0L) == rows, s"$stage of $dir")
+        // the all-gated run extracts candidates; the whitelist drops them all
+        assert((rows > 0) == (stage == "candidates" && minCount == Long.MaxValue), s"$stage of $dir")
+      }
+    }
   }
 
   test("pipeline emits canonicalized entities (plural variants merged)") {
@@ -264,25 +289,34 @@ class ResumeSpec extends SparkSuite {
     val dict = TableIO.read(spark, log.stagePath("alias_dict"))
       .select("alias", "entity_id").as[(String, Long)].collect().toMap
     pairs.foreach { case (s, p) => assert(dict.contains(s) && dict.contains(p), s"$s/$p not in the dictionary") }
-    // entity_canon: exactly one row per dictionary entity; each pair shares
-    // its minimum entity_id, every other entity maps to itself
-    val canonRows = TableIO.read(spark, log.stagePath("entity_canon"))
-      .select("entity_id", "canonical_id").as[(Long, Long)].collect().toSeq
-    assert(canonRows.map(_._1).sorted == dict.values.toSeq.sorted)
+    // entity_canon is the entity table: exactly the dictionary's (alias,
+    // entity_id) rows, each with its canonical id; each pair shares its
+    // minimum entity_id, every other entity maps to itself
+    val entities = TableIO.read(spark, log.stagePath("entity_canon")).cache()
+    assert(entities.select("alias", "entity_id").as[(String, Long)].collect().sorted.toSeq ==
+      dict.toSeq.sorted)
+    val canonRows = entities.select("entity_id", "canonical_id").as[(Long, Long)].collect().toSeq
     val merged = pairs.flatMap { case (s, p) =>
       val m = math.min(dict(s), dict(p)); Seq(dict(s) -> m, dict(p) -> m)
     }.toMap
     val expected = dict.values.map(id => id -> merged.getOrElse(id, id)).toMap
     assert(canonRows.toMap == expected)
-    // every canonical triple carries the canonical id of both its surfaces
+    // every linked triple carries the entity id and the canonical id of both
+    // its surfaces, and every canonical triple the canonical ids
+    val linked = TableIO.read(spark, log.stagePath("linked_triples"))
+      .select("subj", "subj_id", "subj_canon", "obj", "obj_id", "obj_canon")
+      .as[(String, Long, Long, String, Long, Long)].collect()
+    assert(linked.length == out.size)
+    linked.foreach { case l @ (subj, subjId, subjCanon, obj, objId, objCanon) =>
+      assert(subjId == dict(subj) && subjCanon == expected(subjId), l)
+      assert(objId == dict(obj) && objCanon == expected(objId), l)
+    }
     assert(out.exists(r => pairs.exists(_._2 == r.getAs[String]("subj"))))
     out.foreach { r =>
       assert(r.getAs[Long]("subj_id") == expected(dict(r.getAs[String]("subj"))), r)
       assert(r.getAs[Long]("obj_id") == expected(dict(r.getAs[String]("obj"))), r)
     }
 
-    val entities = KgPipeline.entityTable(spark, runDir).cache()
-    assert(entities.count() > 0)
     // stems with both singular+plural present must share a canonical id
     val byStem = entities
       .withColumn("stem", KgPipeline.stem(col("alias")))
@@ -296,13 +330,12 @@ class ResumeSpec extends SparkSuite {
     // entity-id hash bucket (Iceberg bucket-transform analog) — the data
     // directory must carry entity_bucket= partition dirs, and a one-bucket
     // read must prune to that partition
-    val canonTable = graft.tableio.TableIO.read(spark, s"$runDir/entity_canon")
-    assert(canonTable.columns.contains("entity_bucket"))
+    assert(entities.columns.contains("entity_bucket"))
     val bucketDirs = new java.io.File(s"$runDir/entity_canon/data")
       .listFiles().filter(_.getName.startsWith("snap-"))
       .flatMap(_.listFiles()).map(_.getName)
       .filter(_.startsWith("entity_bucket="))
     assert(bucketDirs.nonEmpty, "entity table must lay out bucket partition dirs")
-    assert(canonTable.filter($"entity_bucket" === 0).count() < canonTable.count())
+    assert(entities.filter($"entity_bucket" === 0).count() < entities.count())
   }
 }
