@@ -16,28 +16,32 @@ import org.apache.spark.sql.functions._
   * per round, so convergence is O(log diameter) rounds — entity-synonym /
   * near-dup graphs are unions of small-diameter clusters (2-3 rounds), and
   * even an adversarial multi-thousand-node chain converges in ~a dozen
-  * rounds (CanonSpec) instead of silently exhausting `maxIter` at
+  * rounds (LinkCanonEvalSpec) instead of silently exhausting `maxIter` at
   * Θ(diameter), which plain hash-min would.
   *
-  * Round cost (round-5 final form): ONE action per round, and BOTH the
-  * materialization and the lineage truncation ride on it — the round's
+  * Round cost: two joins, two aggregates and ONE action per round. The
+  * symmetrized edge table carries a self-loop per vertex, so one
+  * `sym ⋈ labels` join grouped by `dst` yields both the vertex's own label
+  * (its self-loop row) and the minimum over it and its neighbours; the
+  * shortcut is one inner join on the previous round's labels. The round's
   * labels (plus a per-row `__chg` bit) are wrapped in a LAZY
   * `localCheckpoint(eager = false)` and materialized by the single
-  * `sum(__chg)` convergence aggregation. Two designs this supersedes, both
-  * measured here: `Dataset.observe` for the convergence signal (round 2 —
-  * `Observation.get` stalls ~2 s per round on the listener bus); and
-  * persist-per-round with truncation only every `checkpointEvery` rounds
-  * (rounds 3-4 — each round's plan references the PREVIOUS round's plan
-  * TWICE, hash-min push + pointer shortcut, so between truncations the
-  * un-truncated logical tree DOUBLED per round and driver analysis went
-  * exponential: probe-measured at 4 cores, inter-job gaps 0.1→3.8 s and job
-  * times 0.3→6 s across rounds 1-5 — a ~14 s fixed SERIAL term per pipeline
-  * rep, identical at every parallelism level, that the N→4N scaling pair
-  * mis-attributed to the engine; removing it cut a p4 pipeline rep
-  * 46.7→36.5 s). An EAGER per-round checkpoint fixes the analysis cost too
-  * but pays a second labels-sized job per round (the materializing job plus
-  * the convergence scan) — a pure serial add-on heaviest at 1 core; the
-  * lazy form folds truncation into the round's one job.
+  * `sum(__chg)` convergence aggregation, so materialization and lineage
+  * truncation ride on the one action. Two designs this supersedes, both
+  * measured: `Dataset.observe` for the convergence signal
+  * (`Observation.get` stalls ~2 s per round on the listener bus); and
+  * persist-per-round with truncation only every few rounds (each round's
+  * plan references the PREVIOUS round's plan twice, hash-min push +
+  * pointer shortcut, so between truncations the un-truncated logical
+  * tree DOUBLED per round and driver analysis went exponential:
+  * probe-measured at 4 cores, inter-job gaps 0.1→3.8 s and job times 0.3→6 s
+  * across rounds 1-5 — a ~14 s fixed SERIAL term per pipeline rep, identical
+  * at every parallelism level, that the N→4N scaling pair mis-attributed to
+  * the engine; removing it cut a p4 pipeline rep 46.7→36.5 s). An EAGER
+  * per-round checkpoint fixes the analysis cost too but pays a second
+  * labels-sized job per round (the materializing job plus the convergence
+  * scan) — a pure serial add-on heaviest at 1 core; the lazy form folds
+  * truncation into the round's one job.
   *
   * Lineage/storage: the edge table is truncated once at entry
   * (`localCheckpoint`), labels every round by the lazy checkpoint above, so
@@ -55,26 +59,25 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Rounds between durable label commits when `ckptDir` is given. */
+  private val checkpointEvery = 5
+
   /** @param edges DataFrame with two long columns `src`, `dst` (undirected).
     * @param ckptDir durable checkpoint/resume directory (TableIO table root).
     * @return DataFrame (id: long, component: long) — component = min reachable id.
     */
-  def run(edges: DataFrame, maxIter: Int = 50, checkpointEvery: Int = 5,
-          ckptDir: Option[String] = None): DataFrame = {
-    // symmetrize once; truncate lineage so no round re-plans the upstream
-    // pipeline (on failure with ckptDir set, the caller's rerun rebuilds sym
-    // from its own committed stage and resumes labels from the table below).
-    // Co-partition by `src` BEFORE the checkpoint, meant to let every round's
-    // sym⋈labels join read the edge table in place (the EDGE table is the
-    // largest thing CC touches; per-round edge reshuffle is the classic
-    // iterative-join scale-killer). Measured on Spark 4.1 with AQE, it does
-    // not: the checkpoint leaf reports UnknownPartitioning, so each round
-    // re-exchanges the edges (PlanQualitySpec's pending CC guard).
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+  def run(edges: DataFrame, maxIter: Int = 50, ckptDir: Option[String] = None): DataFrame = {
+    // symmetrize once, with a self-loop per vertex, in one projection over
+    // one scan of the edges; truncate lineage so no round re-plans the
+    // upstream pipeline (on failure with ckptDir set, the caller's rerun
+    // rebuilds sym from its own committed stage and resumes labels below)
+    def arc(from: String, to: String) = struct(col(from).as("src"), col(to).as("dst"))
+    val sym = edges
+      .select(explode(array(arc("src", "dst"), arc("dst", "src"), arc("src", "src"), arc("dst", "dst"))).as("arc"))
+      .select(col("arc.src"), col("arc.dst"))
       .distinct()
-      .repartition(col("src"))
       .localCheckpoint(eager = true)
+    val selfLoops = sym.filter(col("src") === col("dst"))
 
     val table = ckptDir.map(d => s"$d/cc_labels")
     var labels = table.filter(t => TableIO.currentVersion(t).isDefined) match {
@@ -82,12 +85,12 @@ object ConnectedComponents {
         // resume from the last committed round's labels — guarded: a stale
         // table from an earlier attempt over a DIFFERENT edge set would
         // silently dictate the vertex set (new vertices never enter the
-        // left-join rounds; removed ones persist with bogus components).
+        // rounds' joins; removed ones persist with bogus components).
         // The count comparison is the cheap fingerprint; callers changing
         // the upstream graph must clear ckptDir (review finding). Both
         // counts run only on the rare resume path.
         val resumed = TableIO.read(edges.sparkSession, t)
-        val vertices = sym.select(col("src")).distinct().count()
+        val vertices = selfLoops.count()
         val labelled = resumed.count()
         require(labelled == vertices,
           s"CC resume: committed labels at $t cover $labelled vertices but " +
@@ -95,44 +98,39 @@ object ConnectedComponents {
             "graph; delete the ckptDir (or its upstream stage) and rerun")
         resumed
       case None =>
-        // left LAZY on purpose: the init plan is one distinct over the sym
-        // leaf, re-derived only inside round 1's own job — an eager
-        // materialization here would be a whole extra driver round-trip per
-        // CC invocation (the per-job constant dominates dictionary-sized
-        // stages; see BENCH.md serial-floor table)
-        sym.select(col("src").as("id")).distinct()
-          .withColumn("component", col("id"))
+        // one self-loop row per vertex. Left LAZY on purpose: re-derived
+        // inside round 1's own job, where an eager materialization would be
+        // a whole extra driver round-trip (the per-job constant dominates
+        // dictionary-sized stages; see BENCH.md serial-floor table)
+        selfLoops.select(col("src").as("id"), col("src").as("component"))
     }
 
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      // push each vertex's current label to its neighbors, keep the min
-      val pushed = sym
-        .join(labels, sym("src") === labels("id"))
-        .groupBy(sym("dst").as("id"))
-        .agg(min("component").as("cand"))
-      val stepped = labels
-        .join(pushed, Seq("id"), "left")
-        .select(col("id"), col("component"),
-          least(col("component"), coalesce(col("cand"), col("component"))).as("m"))
-      // pointer-shortcut fused into the same round plan: follow the
-      // candidate label one more hop through the PREVIOUS round's labels
-      // (labels are always ids of reachable nodes, so composition stays
-      // reachable and monotone). Plain hash-min needs Θ(diameter) rounds —
-      // a 3 000-node chain would silently exhaust maxIter; with the
-      // shortcut the label pointer depth doubles per round, so rounds are
-      // O(log diameter) (CanonSpec pins a 3 000-chain inside 24 rounds).
-      // Cost: one extra labels-sized join per round, not edge-sized.
+      // push each label to the neighbours and, by the self-loop, to the
+      // vertex itself: its own label and m = min(label(v), min over
+      // neighbours u of label(u)) come from one join and one aggregate
+      val stepped = sym
+        .join(labels, col("src") === col("id"))
+        .groupBy(col("dst").as("id"))
+        .agg(min(when(col("src") === col("dst"), col("component"))).as("component"),
+          min(col("component")).as("m"))
+      // pointer shortcut in the same round plan: follow m one more hop
+      // through the PREVIOUS round's labels (one labels-sized join; the
+      // O(log diameter) round count rests on it, see object doc). The join
+      // is INNER and takes label(m) as-is by an invariant: every label is a
+      // vertex id and label(v) ≤ v after every round, resumed labels
+      // included (initially label(v) = v; a round sets
+      // label(v) = label(m) ≤ m ≤ label(v)). So m always has a label, and
+      // label(m) = min(m, label(m)) is the new one.
       val parent = labels.select(col("id").as("__pid"), col("component").as("__pcomp"))
       // LAZY checkpoint = plan truncation with NO job of its own — the
       // convergence aggregation below materializes it (see object doc)
       val next = stepped
-        .join(parent, col("m") === col("__pid"), "left")
-        .select(stepped("id"),
-          least(col("m"), coalesce(col("__pcomp"), col("m"))).as("component"),
-          (least(col("m"), coalesce(col("__pcomp"), col("m"))) < stepped("component"))
-            .cast("long").as("__chg"))
+        .join(parent, col("m") === col("__pid"))
+        .select(col("id"), col("__pcomp").as("component"),
+          (col("__pcomp") < col("component")).cast("long").as("__chg"))
         .localCheckpoint(eager = false)
       // the round's single action: materializes the checkpoint AND returns
       // the number of labels that changed

@@ -211,10 +211,10 @@ object KgPipeline {
     * same dictionary side and the same entity joins as `run`: fused
     * extraction → corpus-derived vocabulary gate (shuffle agg + semi-joins)
     * → alias dictionary (shuffle agg + range-partitioned rank) →
-    * connected-components canonicalization (iterative shuffle) → entity-link
-    * + canonical join. TableIO is deliberately absent so the measurement
-    * scales the ENGINE's shuffle-bearing stages, not the local filesystem.
-    * It applies no signature whitelist, so it equals
+    * connected-components canonicalization (iterative shuffle) → link pass
+    * (one entity lookup per endpoint). TableIO is deliberately absent so the
+    * measurement scales the ENGINE's shuffle-bearing stages, not the local
+    * filesystem. It applies no signature whitelist, so it equals
     * `run(whitelistMinCount = 1)` row for row (ResumeSpec).
     *
     * @param broadcastMaxDictRows `run`'s bound, compared against the

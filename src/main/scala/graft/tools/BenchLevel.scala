@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   *    (`Extract.triplesFused`): docs → triples in one narrow stage.
   *  - `pipeline` — the FULL docs→canonical-triples dataflow
   *    (`KgPipeline.canonicalTriplesInMemory`): extraction + dictionary
-  *    aggregations + link join + connected-components canonicalization +
-  *    canonical join. This is the job the north rule's scaling criterion
+  *    aggregations + connected-components canonicalization + the link
+  *    pass. This is the job the north rule's scaling criterion
   *    names; round 2 scaled only the fused kernel (judge finding #2).
   *    Between pipeline reps the SQL cache is cleared — the job persists its
   *    triple/dictionary intermediates, and Spark's CacheManager matches by

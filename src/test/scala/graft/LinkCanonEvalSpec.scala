@@ -47,7 +47,7 @@ class LinkCanonEvalSpec extends SparkSuite {
     // chain 1-2-3-4, clique 10-11-12, isolated self-loop 20
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (10L, 12L), (20L, 20L)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges, checkpointEvery = 2)
+    val got = ConnectedComponents.run(edges)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L))
@@ -61,7 +61,7 @@ class LinkCanonEvalSpec extends SparkSuite {
     // if a regression drops the shortcut, this test fails, not just slows.
     val n = 3000
     val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
-    val got = ConnectedComponents.run(edges, maxIter = 24, checkpointEvery = 6)
+    val got = ConnectedComponents.run(edges, maxIter = 24)
       .as[(Long, Long)].collect().toMap
     assert(got.size == n && got.values.forall(_ == 1L))
   }

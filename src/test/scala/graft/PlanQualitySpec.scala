@@ -3,7 +3,7 @@ package graft
 import graft.model.Triple
 import graft.pipeline.KgPipeline
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -211,20 +211,51 @@ class PlanQualitySpec extends SparkSuite {
     }
   }
 
+  /** A CC round's `sym ⋈ labels` join: edge `src` against label `id`. */
+  private def isEdgeJoin(p: SparkPlan): Boolean = p match {
+    case j: BaseJoinExec => j.leftKeys.exists(_.references.exists(_.name == "src")) &&
+      j.rightKeys.exists(_.references.exists(_.name == "id"))
+    case _ => false
+  }
+
+  /** The executed plans of the in-memory job's dictionary side on the
+    * plural-variant fixture, which gives CC a non-empty edge set. A marker
+    * query runs last: once its plan arrives, every CC round's has.
+    */
+  private lazy val pluralPlans: Seq[SparkPlan] = executedPlans {
+    KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir))
+    spark.range(1).toDF("__done").collect()
+  }(_.exists(_.output.map(_.name) == Seq("__done")))
+
+  test("a CC round plans two joins; the edge checkpoint reads its input once, without a Union") {
+    // a round's own label rides sym's self-loop rows, so one sym ⋈ labels
+    // join gives both labels and the pointer shortcut is the only other join
+    val rounds = pluralPlans.filter(all(_).exists(isEdgeJoin))
+    assert(rounds.nonEmpty, "no CC round ran a sym ⋈ labels join")
+    rounds.foreach { r =>
+      val joins = all(r).collect { case j: BaseJoinExec => j }
+      assert(joins.size == 2 && joins.count(isEdgeJoin) == 1 &&
+        joins.exists(_.leftKeys.exists(_.references.exists(_.name == "m"))),
+        s"expected sym ⋈ labels and the shortcut join on m, got ${joins.size} joins:\n$r")
+    }
+    // the symmetrized edge checkpoint: the only (src, dst) action. Its edge
+    // input, the stem-variant self-join, appears once
+    val sym = pluralPlans.filter(_.output.map(_.name) == Seq("src", "dst"))
+    assert(sym.size == 1, s"expected one edge checkpoint, got ${sym.size}")
+    val unions = all(sym.head).collect { case u: UnionExec => u }
+    val edgeInputs = all(sym.head).collect { case j: BaseJoinExec => j }
+    assert(unions.isEmpty && edgeInputs.size == 1,
+      s"${unions.size} unions and ${edgeInputs.size} reads of the edge input:\n${sym.head}")
+  }
+
   test("a CC round's sym ⋈ labels join reads the edge table without an Exchange") {
-    // ConnectedComponents co-partitions the symmetrized edges by `src` before
-    // checkpointing them, so each round's join on src should read that leaf
-    // in place. The plural-variant fixture gives CC a non-empty edge set.
+    // Each round joins the symmetrized edges on src, which should read the
+    // edge checkpoint in place.
     // Pending: the engine fails this today — under AQE the checkpoint leaf
     // reports UnknownPartitioning, so every round re-exchanges the edge table
     // (hash shuffle, then a broadcast at this size). `pendingUntilFixed` turns
     // into a failure once the rounds stop moving the edge table; drop it then.
-    def edgeJoins(plans: Seq[SparkPlan]): Seq[BaseJoinExec] = plans.flatMap(all).collect {
-      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "src")) &&
-        j.rightKeys.exists(_.references.exists(_.name == "id")) => j
-    }
-    val joins = edgeJoins(executedPlans(KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir)))(
-      edgeJoins(_).nonEmpty))
+    val joins = pluralPlans.flatMap(all).collect { case j: BaseJoinExec if isEdgeJoin(j) => j }
     assert(joins.nonEmpty, "no CC round ran a sym ⋈ labels join")
     pendingUntilFixed {
       val moved = joins.filter(j => all(j.left).exists(_.isInstanceOf[Exchange]))

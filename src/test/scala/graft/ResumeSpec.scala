@@ -5,8 +5,10 @@ import graft.pipeline.KgPipeline
 import graft.tableio.TableIO
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -17,17 +19,19 @@ class ResumeSpec extends SparkSuite {
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toString
 
-  /** Evaluates `body` and counts the Spark jobs it started. Listener events
-    * arrive asynchronously, so a tagged marker job runs after `body`: once
-    * its start is seen, every earlier job start has been seen too.
+  /** Evaluates `body` and returns the starts of the Spark jobs it ran, in
+    * start order. Listener events arrive asynchronously, so a tagged marker
+    * job runs after `body`: once its start is seen, every earlier job start
+    * has been seen too.
     */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  private def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val marker = s"marker-${System.nanoTime()}"
-    val starts = new ConcurrentLinkedQueue[String]()
+    def isMarker(e: SparkListenerJobStart) =
+      Option(e.properties).exists(p => p.getProperty("graft.test.marker") == marker)
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.marker"))).getOrElse(""))
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -35,9 +39,9 @@ class ResumeSpec extends SparkSuite {
       sc.setLocalProperty("graft.test.marker", marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
       val deadline = System.nanoTime() + 30e9.toLong
-      while (!starts.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(starts.contains(marker), "marker job start never reached the listener")
-      (out, starts.size - 1)
+      while (!starts.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.asScala.exists(isMarker), "marker job start never reached the listener")
+      (out, starts.asScala.toSeq.filterNot(isMarker))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -96,7 +100,7 @@ class ResumeSpec extends SparkSuite {
     val ((reads, lineage, metrics), jobs) = jobsDuring {
       (stages.map(s => TableIO.read(spark, log.stagePath(s))), log.lineage(stages), log.metrics(stages))
     }
-    assert(jobs == 0, "manifest-backed reads and audit tables must not start a job")
+    assert(jobs.isEmpty, "manifest-backed reads and audit tables must not start a job")
     assert(reads.map(_.count()) == Seq(100L, 1000L))
     assert(lineage.schema.map(f => f.name -> f.dataType.simpleString) ==
       Seq("stage" -> "string", "part_id" -> "int", "rows" -> "bigint"))
@@ -146,26 +150,24 @@ class ResumeSpec extends SparkSuite {
 
   test("connected components: mid-run kill resumes from durable labels exactly") {
     import graft.canon.ConnectedComponents
-    // a path graph (diameter > checkpoint interval) so convergence takes
-    // several rounds and a mid-run kill leaves genuinely partial labels
-    val n = 12L
+    // a 64-node path needs 7 rounds to converge, so a run cut at maxIter = 5
+    // commits its durable labels at round 5 (the commit cadence) before they
+    // have converged
+    val n = 64L
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
     val clean = ConnectedComponents.run(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(clean.forall(_._2 == 0L), "path graph collapses to component 0")
 
-    // "kill" after 3 rounds (one durable checkpoint at round 2 with
-    // checkpointEvery=2), then resume with the same ckptDir
+    // "kill" after 5 rounds, then resume with the same ckptDir
     val ckpt = tmpDir("graft-cc")
-    ConnectedComponents.run(edges, maxIter = 3, checkpointEvery = 2,
-      ckptDir = Some(ckpt))
+    ConnectedComponents.run(edges, maxIter = 5, ckptDir = Some(ckpt))
     assert(TableIO.currentVersion(s"$ckpt/cc_labels").isDefined,
       "durable label snapshot must exist after the partial run")
     val partial = TableIO.read(spark, s"$ckpt/cc_labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(partial.exists(_._2 != 0L), "partial run must not be converged yet")
-    val resumed = ConnectedComponents.run(edges, checkpointEvery = 2,
-      ckptDir = Some(ckpt)).collect()
+    val resumed = ConnectedComponents.run(edges, ckptDir = Some(ckpt)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(resumed == clean, "resumed CC must equal the clean run")
   }
@@ -215,7 +217,7 @@ class ResumeSpec extends SparkSuite {
     val ((reads, lineage, metrics), jobs) = jobsDuring {
       (stages.map(s => TableIO.read(spark, log.stagePath(s))), log.lineage(stages), log.metrics(stages))
     }
-    assert(jobs == 0, "manifest-backed reads and audit tables must not start a job")
+    assert(jobs.isEmpty, "manifest-backed reads and audit tables must not start a job")
     val lineageRows = lineage.groupBy("stage").agg(sum("rows")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val metricRows = metrics.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -258,7 +260,7 @@ class ResumeSpec extends SparkSuite {
       new StageLog(spark, runDir).runStage(stage)(old)
       val (err, jobs) = jobsDuring(intercept[RuntimeException](KgPipeline.run(spark, sfDir, runDir)))
       assert(err.getMessage.contains(s"stage $stage ") && err.getMessage.contains(runDir), err.getMessage)
-      assert(jobs == 0, s"the format check reads the $stage manifest and starts no job")
+      assert(jobs.isEmpty, s"the format check reads the $stage manifest and starts no job")
       assert(KgPipeline.stages.filter(new StageLog(spark, runDir).isCommitted) == Seq(stage))
     }
   }
@@ -278,6 +280,63 @@ class ResumeSpec extends SparkSuite {
         assert((rows > 0) == (stage == "candidates" && minCount == Long.MaxValue), s"$stage of $dir")
       }
     }
+  }
+
+  test("pipeline: a run killed at sampled job starts resumes to the fresh run's rows") {
+    // the kill sweep, sampled to fit the suite: a listener cancels the k-th
+    // job of `run` and every later one, so the run dies at or just after its
+    // k-th job; rerunning over the same directory must give the fresh rows
+    val (dir, freshDir) = (pluralSfDir, tmpDir("graft-sweep"))
+    val (_, starts) = jobsDuring(KgPipeline.run(spark, dir, freshDir))
+    val fresh = sortedRows(TableIO.read(spark, s"$freshDir/canonical_triples"))
+    val ccStarts = starts.indices.map(_ + 1)
+      .filter(k => starts(k - 1).stageInfos.exists(_.details.contains("ConnectedComponents.scala")))
+    assert(ccStarts.nonEmpty, "no job of the run started in ConnectedComponents")
+    // every ninth job start, CC's first and last, never the run's last job
+    // (it may finish before its cancel lands)
+    val sample = ((1 until starts.size by 9) ++ Seq(ccStarts.head, ccStarts.last))
+      .filter(_ < starts.size).distinct.sorted
+    val sc = spark.sparkContext
+    for (k <- sample) {
+      val runDir = tmpDir("graft-sweep")
+      val started = new AtomicInteger()
+      val killer = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (started.incrementAndGet() >= k) sc.cancelJob(e.jobId, s"kill sweep from job start $k")
+      }
+      sc.addSparkListener(killer)
+      val killed = try { KgPipeline.run(spark, dir, runDir); false }
+        catch { case _: Exception => true }
+        finally sc.removeSparkListener(killer)
+      assert(killed, s"the run outlived a kill from job start $k of ${starts.size}")
+      assert(sortedRows(KgPipeline.run(spark, dir, runDir)) == fresh,
+        s"the run killed from job start $k of ${starts.size} resumed to other rows")
+    }
+  }
+
+  test("pipeline: five docs over 50 shuffle partitions equal one partition, in both jobs") {
+    // most of the 50 partitions of every shuffle, CC's edges and labels
+    // included, are empty; AQE's coalescing is off so they stay empty
+    val dir = TestSpark.firstDocsSfDir(pluralSfDir, 5)
+    val cols = Seq("subj_id", "pred", "obj_id", "subj", "obj", "doc_id", "span_idx", "score").map(col)
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = conf.map(spark.conf.getOption)
+    def outputs(partitions: Int) = {
+      spark.conf.set(conf(0), partitions.toLong)
+      spark.conf.set(conf(1), false)
+      val runDir = tmpDir("graft-parts")
+      val durable = sortedRows(KgPipeline.run(spark, dir, runDir, whitelistMinCount = 1).select(cols: _*))
+      val entities = TableIO.read(spark, s"$runDir/entity_canon")
+      (durable, sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir)).select(cols: _*)),
+        entities.filter(col("canonical_id") =!= col("entity_id")).count())
+    }
+    val (many, one) =
+      try (outputs(50), outputs(1))
+      finally conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    assert(many._1.nonEmpty && many._3 > 0, "the five docs give output rows and CC edges")
+    assert(many._1 == many._2, "run == in-memory at 50 partitions")
+    assert(one._1 == one._2, "run == in-memory at 1 partition")
+    assert(many == one, "50 partitions == 1 partition")
   }
 
   test("pipeline emits canonicalized entities (plural variants merged)") {

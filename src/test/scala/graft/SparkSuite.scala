@@ -54,6 +54,9 @@ object TestSpark {
   /** The docs whose text `nullTextSfDir` nulls: every fifth. */
   val nullTextIds: Column = col("doc_id") % 5 === 0
 
+  /** `sfDir`'s first `n` documents by `doc_id`. */
+  def firstDocsSfDir(sfDir: String, n: Int): String = derivedSfDir(sfDir, s"first$n")(_.orderBy("doc_id").limit(n))
+
   /** `sfDir`'s documents table with no rows. */
   def emptySfDir(sfDir: String): String = derivedSfDir(sfDir, "empty")(_.limit(0))
 }
