@@ -19,15 +19,18 @@ import org.apache.spark.sql.functions._
   * rounds (LinkCanonEvalSpec) instead of silently exhausting `maxIter` at
   * Θ(diameter), which plain hash-min would.
   *
-  * Round cost: two joins, two aggregates and ONE action per round. The
-  * symmetrized edge table carries a self-loop per vertex, so one
+  * Round cost: two joins, two aggregates and ONE convergence job per round.
+  * The symmetrized edge table carries a self-loop per vertex, so one
   * `sym ⋈ labels` join grouped by `dst` yields both the vertex's own label
   * (its self-loop row) and the minimum over it and its neighbours; the
   * shortcut is one inner join on the previous round's labels. The round's
   * labels (plus a per-row `__chg` bit) are wrapped in a LAZY
-  * `localCheckpoint(eager = false)` and materialized by the single
-  * `sum(__chg)` convergence aggregation, so materialization and lineage
-  * truncation ride on the one action. Two designs this supersedes, both
+  * `localCheckpoint(eager = false)` and materialized by the convergence
+  * count: one RDD fold of `__chg` over the checkpoint's rows, so
+  * materialization, lineage truncation and the exact count of changed labels
+  * are one job (an action result, exactly-once under task retry; a
+  * `sum(__chg)` aggregate would plan an exchange of its own and cost a
+  * second job per round). Two designs this supersedes, both
   * measured: `Dataset.observe` for the convergence signal
   * (`Observation.get` stalls ~2 s per round on the listener bus); and
   * persist-per-round with truncation only every few rounds (each round's
@@ -43,9 +46,11 @@ import org.apache.spark.sql.functions._
   * scan) — a pure serial add-on heaviest at 1 core; the lazy form folds
   * truncation into the round's one job.
   *
-  * Lineage/storage: the edge table is truncated once at entry
-  * (`localCheckpoint`), labels every round by the lazy checkpoint above, so
-  * every round analyzes a constant-size three-leaf plan. A dead round's
+  * Lineage/storage: the edge table is truncated once at entry by a lazy
+  * `localCheckpoint` whose materializing job also counts its rows (an empty
+  * edge set returns empty labels with no round), labels every round by the
+  * lazy checkpoint above, so every round analyzes a constant-size
+  * three-leaf plan. A dead round's
   * checkpoint blocks are labels-sized and freed asynchronously by the
   * ContextCleaner once the loop drops the reference (RDD-level checkpoint
   * blocks live outside the SQL cache, so `Dataset.unpersist` could not free
@@ -76,8 +81,16 @@ object ConnectedComponents {
       .select(explode(array(arc("src", "dst"), arc("dst", "src"), arc("src", "src"), arc("dst", "dst"))).as("arc"))
       .select(col("arc.src"), col("arc.dst"))
       .distinct()
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = false)
     val selfLoops = sym.filter(col("src") === col("dst"))
+    // one self-loop row per vertex. Left LAZY on purpose: re-derived inside
+    // round 1's own job, where an eager materialization would be a whole
+    // extra driver round-trip (the per-job constant dominates
+    // dictionary-sized stages; see BENCH.md serial-floor table)
+    val initial = selfLoops.select(col("src").as("id"), col("src").as("component"))
+    // the job that materializes the edge checkpoint also counts its rows; no
+    // edges means no vertex, so there is nothing to label and no round to run
+    if (sym.queryExecution.toRdd.count() == 0L) return initial
 
     val table = ckptDir.map(d => s"$d/cc_labels")
     var labels = table.filter(t => TableIO.currentVersion(t).isDefined) match {
@@ -97,12 +110,7 @@ object ConnectedComponents {
             s"the edge set has $vertices — stale checkpoint from a different " +
             "graph; delete the ckptDir (or its upstream stage) and rerun")
         resumed
-      case None =>
-        // one self-loop row per vertex. Left LAZY on purpose: re-derived
-        // inside round 1's own job, where an eager materialization would be
-        // a whole extra driver round-trip (the per-job constant dominates
-        // dictionary-sized stages; see BENCH.md serial-floor table)
-        selfLoops.select(col("src").as("id"), col("src").as("component"))
+      case None => initial
     }
 
     var iter = 0
@@ -126,15 +134,15 @@ object ConnectedComponents {
       // label(m) = min(m, label(m)) is the new one.
       val parent = labels.select(col("id").as("__pid"), col("component").as("__pcomp"))
       // LAZY checkpoint = plan truncation with NO job of its own — the
-      // convergence aggregation below materializes it (see object doc)
+      // convergence count below materializes it (see object doc)
       val next = stepped
         .join(parent, col("m") === col("__pid"))
         .select(col("id"), col("__pcomp").as("component"),
           (col("__pcomp") < col("component")).cast("long").as("__chg"))
         .localCheckpoint(eager = false)
-      // the round's single action: materializes the checkpoint AND returns
+      // the round's single job: materializes the checkpoint AND returns
       // the number of labels that changed
-      val changed = next.agg(coalesce(sum("__chg"), lit(0L))).first().getLong(0)
+      val changed = next.queryExecution.toRdd.map(_.getLong(2)).fold(0L)(_ + _)
 
       val durable = table.isDefined && (iter + 1) % checkpointEvery == 0
       labels =

@@ -16,11 +16,16 @@ import org.apache.spark.sql.functions._
   *   3. add per-partition offsets derived from per-partition totals — a
   *      dataset bounded by the PARTITION COUNT (a config), not the data.
   *
-  * The two references to the ranged child are one physical subtree, so
-  * Spark's exchange reuse (spark.sql.exchange.reuse, on by default) runs the
-  * range shuffle once. Results are deterministic iff `order` is a total order
-  * (callers must include a unique tie-break column — the same requirement
-  * oracle hash parity already imposes).
+  * The ranged child is referenced three times (the final join and both
+  * sides of the triangular offset join), and Spark's exchange reuse
+  * (spark.sql.exchange.reuse, on by default) runs its range sample and
+  * shuffle once, whether the input is a DataFrame leaf or a checkpoint leaf:
+  * measured on Spark 4.1, local[4], one `globalRowNumber` over 1,000 rows in
+  * 4 partitions runs 8 jobs on either leaf, and its final plan holds one
+  * range exchange and two `ReusedExchange`s of it. Those 8 jobs are a fixed
+  * cost per call whatever the input size. Results are deterministic iff
+  * `order` is a total order (callers must include a unique tie-break
+  * column — the same requirement oracle hash parity already imposes).
   */
 object Ranks {
 
@@ -63,47 +68,4 @@ object Ranks {
     */
   def withTotal(df: DataFrame, agg: Column, out: String): DataFrame =
     df.crossJoin(broadcast(df.agg(agg.as(out))))
-
-  /** Global 1-based row number in `order` (column `rnOut`, long) PLUS the
-    * whole-frame sum of `value` on every row (column `totOut`) — the fused
-    * form of `withTotal(globalRowNumber(df, order, rn), sum(value), tot)`.
-    *
-    * The per-partition stats aggregation already sees every partition's row
-    * count, so ONE triangular pass over the ≤ n partition-count rows yields
-    * BOTH the exclusive row-number offsets and the global value total, and
-    * the plan carries ONE broadcast build instead of two. For
-    * dictionary-sized inputs the dominant cost of these stages is the
-    * per-job driver round-trip, not the data (BENCH.md serial-floor audit),
-    * so halving the broadcast builds is a direct cut to the scaling
-    * benchmark's fixed serial term.
-    */
-  def globalRowNumberWithTotal(df: DataFrame, order: Seq[Column], value: Column,
-                               rnOut: String, totOut: String,
-                               parts: Int = 0): DataFrame = {
-    val n =
-      if (parts > 0) parts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // the ranged table is referenced by the stats aggregation AND the final
-    // compose join; exchange reuse cannot dedupe range exchanges whose child
-    // is a checkpoint leaf (LogicalRDD partitioning metadata defeats
-    // canonical equality — measured: the range shuffle and its sampling job
-    // each ran twice), so materialize it once. Storage cost = the input
-    // frame, same class as the caller's own dictionary checkpoints.
-    val ranged = df.repartitionByRange(n, order: _*).withColumn("__pid", spark_partition_id())
-      .localCheckpoint(eager = true)
-    val cnts = ranged.groupBy("__pid")
-      .agg(count(lit(1L)).as("__n"), sum(value).as("__v"))
-    val offs = cnts.alias("a")
-      .join(cnts.alias("b"), lit(true), "left")
-      .groupBy(col("a.__pid").as("__pid"))
-      .agg(
-        coalesce(sum(when(col("b.__pid") < col("a.__pid"), col("b.__n"))), lit(0L))
-          .as("__off"),
-        sum(col("b.__v")).as(totOut))
-    ranged.join(broadcast(offs), Seq("__pid"))
-      .withColumn(rnOut,
-        row_number().over(Window.partitionBy("__pid").orderBy(order: _*))
-          .cast("long") + col("__off"))
-      .drop("__pid", "__off")
-  }
 }

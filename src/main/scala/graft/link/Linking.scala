@@ -4,12 +4,14 @@ import graft.model.AliasEntry
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Entity linking: alias dictionary build + dictionary join with OOV default.
+/** Entity linking: alias dictionary build + dictionary join.
   *
   * Reference semantics: vocab built by frequency with specials appended
   * (semeval2sdp.py:188-234), lookups via vocab2idx with `<OOV>` fallback
   * (semeval2sdp.py:264-271, data_handler.py:318-324) — relationally a left
-  * outer equi-join + coalesce (SURVEY.md J1/P10).
+  * outer equi-join (SURVEY.md J1/P10). `lookup` leaves a miss null; the
+  * caller decides what a miss means (an `OovEntityId` coalesce, a filter, or
+  * nothing where no endpoint can miss).
   *
   * Scale design (north rule): the dictionary is orders of magnitude smaller
   * than the mention stream, so the join is a broadcast hash join — zero
@@ -35,26 +37,33 @@ object Linking {
   /** Frequency-ranked alias dictionary from a pre-aggregated `(alias, freq)`
     * frame, with deterministic tie-break (freq desc, alias asc — the
     * reference's Counter.most_common order made partition-invariant,
-    * SURVEY.md W2 note). The rank assignment references `counts` several
-    * times (range-partition sampling, the broadcast total) — callers on a
-    * non-trivial lineage should persist `counts` first so those references
-    * hit a dictionary-sized cache instead of re-running the upstream corpus
-    * scan.
+    * SURVEY.md W2 note): `entity_id` is the 0-based rank and `prob` is
+    * `freq` over the sum of all `freq`.
+    *
+    * One sorted pass, not a single-partition window (alias count grows with
+    * the corpus, Heaps' law): the global sort range-partitions the rows, one
+    * job collects each partition's row count and `freq` sum (a list with one
+    * entry per partition, as in `RDD.zipWithIndex`), and each partition then
+    * numbers its rows from its offset. Both reads of the sorted RDD read the
+    * same materialized sort shuffle, and so do the returned Dataset's
+    * consumers: `counts` is read once, and nothing is checkpointed.
     */
   def buildAliasDict(counts: DataFrame): Dataset[AliasEntry] = {
     val spark = counts.sparkSession
     import spark.implicits._
-    // alias count grows with the corpus (Heaps' law), so the id assignment is
-    // a range-partitioned global row number, not a single-partition window,
-    // and the normalizer is a broadcast scalar, not a driver action. The
-    // fused rank+total form pays one broadcast build instead of two — each
-    // small job's driver round-trip dominates dictionary-sized stages
-    graft.functions.Ranks.globalRowNumberWithTotal(
-      counts, Seq(col("freq").desc, col("alias").asc), col("freq"),
-      "__rn", "__total")
-      .select(col("alias"), (col("__rn") - 1).as("entity_id"), col("freq"),
-        (col("freq") / col("__total")).as("prob"))
-      .as[AliasEntry]
+    val sorted = counts.select("alias", "freq").orderBy(col("freq").desc, col("alias").asc)
+      .as[(String, Long)].rdd
+    val parts = sorted.mapPartitions { it =>
+      var rows, freq = 0L
+      it.foreach { case (_, f) => rows += 1; freq += f }
+      Iterator((rows, freq))
+    }.collect()
+    val offsets = parts.scanLeft(0L)(_ + _._1)
+    val total = parts.map(_._2).sum.toDouble
+    spark.createDataset(sorted.mapPartitionsWithIndex { (p, it) =>
+      var id = offsets(p) - 1
+      it.map { case (alias, freq) => id += 1; AliasEntry(alias, id, freq, freq.toDouble / total) }
+    })
   }
 
   /** Every entity join: left-joins `stream` to the two-column (key, value)

@@ -210,7 +210,7 @@ object KgPipeline {
     * the scaling-benchmark job (BENCH.md "pipeline pair"). Same kernel, the
     * same dictionary side and the same entity joins as `run`: fused
     * extraction → corpus-derived vocabulary gate (shuffle agg + semi-joins)
-    * → alias dictionary (shuffle agg + range-partitioned rank) →
+    * → alias dictionary (shuffle agg + one sorted pass) →
     * connected-components canonicalization (iterative shuffle) → link pass
     * (one entity lookup per endpoint). TableIO is deliberately absent so the
     * measurement scales the ENGINE's shuffle-bearing stages, not the local
@@ -244,7 +244,7 @@ object KgPipeline {
     // production `run` gets pass economy from durable TableIO parquet
     // commits instead.
     // localCheckpoint (not persist): the pair table is the lineage boundary
-    // between the corpus-scale pass and a dozen dictionary-sized actions —
+    // between the corpus-scale pass and the dictionary side's actions —
     // as a LogicalRDD leaf each of those actions analyzes/optimizes a
     // few-node plan, while behind a persist every action re-plans the whole
     // corpus subtree (~1-1.5 s of driver time per rep, measured; a pure
@@ -271,12 +271,14 @@ object KgPipeline {
     // Explicit broadcast: vocab sits behind the checkpoint boundary, so the
     // planner has no stats; unhinted this degrades to shuffle joins — which
     // is exactly the right plan beyond the bound (both join sides are
-    // dictionary-sized there, and AQE picks the strategy from runtime stats)
+    // dictionary-sized there, and AQE picks the strategy from runtime stats).
+    // No checkpoint on either: the dictionary's sorted pass reads the gated
+    // counts once, and its RDD lineage starts at that pass's materialized
+    // sort shuffle, so `canonicalize`'s three references to the dictionary
+    // re-read shuffle blocks and recompute nothing upstream of them
     def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val gatedCounts = endpointCounts(inVocab(pairCounts, hinted(vocab.select(col("__vs")))), col("n"))
-      .localCheckpoint(eager = true)
     val aliasDict = Linking.buildAliasDict(gatedCounts).toDF()
-      .localCheckpoint(eager = true)
 
     // Compose canonicalization INTO the dictionary (dictionary-sized join)
     // instead of joining it onto the linked triple stream: the 10^12-row

@@ -5,6 +5,9 @@ import graft.corpus.Corpus
 import graft.eval.Eval
 import graft.extract.Extract
 import graft.link.Linking
+import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class LinkCanonEvalSpec extends SparkSuite {
@@ -29,6 +32,34 @@ class LinkCanonEvalSpec extends SparkSuite {
     assert(math.abs(dict.map(_.prob).sum - 1.0) < 1e-9)
   }
 
+  test("alias dictionary: the sorted pass equals a single-partition window, on 1 and 50 partitions") {
+    // the reference ranks in one task: row_number and the total over a
+    // window with no partition spec
+    def reference(counts: DataFrame) = counts
+      .withColumn("entity_id", row_number().over(Window.orderBy(col("freq").desc, col("alias").asc)) - 1L)
+      .withColumn("prob", col("freq") / sum("freq").over(Window.partitionBy()))
+      .select("alias", "entity_id", "freq", "prob")
+    def rows(df: DataFrame) = df.orderBy("entity_id").collect().toSeq
+    val inputs = Seq(
+      "empty" -> surfaceCounts.limit(0),
+      "all tied" -> (1 to 40).map(i => (s"alias$i", 3L)).toDF("alias", "freq"),
+      "five rows" -> Seq(("b", 2L), ("a", 2L), ("c", 5L), ("d", 1L), ("e", 2L)).toDF("alias", "freq"),
+      "sf0.001 surfaces" -> surfaceCounts)
+    // at 50 partitions with AQE's coalescing off most range partitions of
+    // the small inputs are empty, and stay empty
+    val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = conf.map(spark.conf.getOption)
+    try {
+      for (partitions <- Seq(1, 50); (name, counts) <- inputs) {
+        spark.conf.set(conf(0), partitions.toLong)
+        spark.conf.set(conf(1), false)
+        val got = rows(Linking.buildAliasDict(counts).toDF())
+        assert(got == rows(reference(counts)), s"$name at $partitions partitions")
+        assert(got.isEmpty == (name == "empty"), s"$name at $partitions partitions")
+      }
+    } finally conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("broadcast link join == salted join, with OOV default for misses") {
     // top-10 dictionary so rarer surfaces genuinely miss → OOV
     val dict = Linking.buildAliasDict(surfaceCounts).filter(_.entity_id < 10)
@@ -51,6 +82,15 @@ class LinkCanonEvalSpec extends SparkSuite {
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L))
+  }
+
+  test("connected components: an empty edge set runs one job and no round, with and without ckptDir") {
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (ckptDir <- Seq(None, Some(Files.createTempDirectory("graft-cc-empty").toString))) {
+      val (labels, jobs) = jobsDuring(ConnectedComponents.run(edges, ckptDir = ckptDir))
+      assert(jobs.size == 1, s"expected the edge checkpoint's one job, got ${jobs.size} (ckptDir $ckptDir)")
+      assert(labels.columns.toSeq == Seq("id", "component") && labels.collect().isEmpty, s"ckptDir $ckptDir")
+    }
   }
 
   test("connected components: adversarial 3000-node chain converges in O(log d) rounds") {

@@ -1,14 +1,20 @@
 package graft
 
+import graft.canon.ConnectedComponents
+import graft.link.Linking
 import graft.model.Triple
 import graft.pipeline.KgPipeline
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ObjectType
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
@@ -67,7 +73,6 @@ class PlanQualitySpec extends SparkSuite {
     // pre-AQE sparkPlan is the right tree: window placement is decided before
     // adaptive re-planning, and AdaptiveSparkPlanExec hides its children from
     // collect().
-    import org.apache.spark.sql.execution.window.WindowExec
     for (q <- Seq("q03_vocab_rank", "q04_unigram_ppm", "q05_dict_join_oov",
       "q27_weighted_sample", "q29_power_smooth", "q30_important_vocab",
       "q37_vocab_specials", "q45_seeded_shuffle")) {
@@ -83,9 +88,7 @@ class PlanQualitySpec extends SparkSuite {
 
   test("the single-partition window detector is not vacuous") {
     // negative control: a deliberate global Window.orderBy must trip it
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
     val df = spark.range(10).toDF("id")
       .withColumn("rn", row_number().over(Window.orderBy("id")))
     val ws = df.queryExecution.sparkPlan.collect { case w: WindowExec => w }
@@ -218,14 +221,21 @@ class PlanQualitySpec extends SparkSuite {
     case _ => false
   }
 
-  /** The executed plans of the in-memory job's dictionary side on the
-    * plural-variant fixture, which gives CC a non-empty edge set. A marker
-    * query runs last: once its plan arrives, every CC round's has.
+  /** The executed plans of every query `body` runs. A marker query runs
+    * last: once its plan arrives, every earlier one has.
     */
-  private lazy val pluralPlans: Seq[SparkPlan] = executedPlans {
-    KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir))
-    spark.range(1).toDF("__done").collect()
-  }(_.exists(_.output.map(_.name) == Seq("__done")))
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    def isMarker(p: SparkPlan) = p.output.map(_.name) == Seq("__done")
+    executedPlans {
+      body
+      spark.range(1).toDF("__done").collect()
+    }(_.exists(isMarker)).filterNot(isMarker)
+  }
+
+  /** The executed plans of the in-memory job's dictionary side on the
+    * plural-variant fixture, which gives CC a non-empty edge set.
+    */
+  private lazy val pluralPlans: Seq[SparkPlan] = plansOf(KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir)))
 
   test("a CC round plans two joins; the edge checkpoint reads its input once, without a Union") {
     // a round's own label rides sym's self-loop rows, so one sym ⋈ labels
@@ -261,5 +271,44 @@ class PlanQualitySpec extends SparkSuite {
       val moved = joins.filter(j => all(j.left).exists(_.isInstanceOf[Exchange]))
       assert(moved.isEmpty, s"${moved.size} of ${joins.size} CC rounds move the edge table:\n${moved.mkString("\n")}")
     }
+  }
+
+  test("the alias dictionary ranks in one sorted pass: no nested-loop join, no window, four jobs") {
+    // an input with no shuffle of its own: the range sample, the sort
+    // shuffle, the per-partition (rows, freq) job, and the read of the
+    // result, which re-reads the sort shuffle
+    val counts = spark.range(0, 1000, 1, 4)
+      .select(concat(lit("a"), col("id")).as("alias"), (col("id") % 7).as("freq"))
+    var jobs = Seq.empty[SparkListenerJobStart]
+    val plans = plansOf { jobs = jobsDuring(Linking.buildAliasDict(counts).collect())._2 }
+    val banned = plans.flatMap(all).filter {
+      case _: BroadcastNestedLoopJoinExec | _: WindowExec => true
+      case _ => false
+    }
+    assert(banned.isEmpty, s"the dictionary rank plans:\n${banned.mkString("\n")}")
+    assert(jobs.size <= 4, s"the dictionary rank ran ${jobs.size} jobs")
+  }
+
+  test("a CC round's convergence count is one job with no query plan of its own") {
+    val edges = spark.createDataFrame(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))).toDF("src", "dst")
+    var jobs = Seq.empty[SparkListenerJobStart]
+    val plans = plansOf { jobs = jobsDuring(ConnectedComponents.run(edges))._2 }
+    val rounds = plans.count(all(_).exists(isEdgeJoin))
+    assert(rounds >= 2, s"expected at least two CC rounds, got $rounds")
+    // the queries are the edge checkpoint and one labels checkpoint per
+    // round: no convergence aggregate, so no Exchange of its own
+    assert(plans.size == rounds + 1, s"${plans.size} queries for $rounds rounds:\n${plans.mkString("\n")}")
+    // the jobs outside a query: the edge count and one convergence job per round
+    val planless = jobs.filter(j => Option(j.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+    assert(planless.size == rounds + 1, s"${planless.size} RDD jobs for $rounds rounds")
+  }
+
+  test("the in-memory job on the plural fixture runs at most 32 jobs") {
+    // the dictionary side is a fixed serial term per call, paid job by job.
+    // 32 is the measured count: it reads 31 when AQE plans round 1 of CC
+    // with one job fewer
+    val docs: Dataset[(Long, String)] = rawDocs(pluralSfDir)
+    val (_, jobs) = jobsDuring(KgPipeline.canonicalTriplesInMemory(docs).collect())
+    assert(jobs.size <= 32, s"canonicalTriplesInMemory ran ${jobs.size} jobs")
   }
 }

@@ -4,11 +4,9 @@ import graft.ckpt.StageLog
 import graft.pipeline.KgPipeline
 import graft.tableio.TableIO
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -18,32 +16,6 @@ class ResumeSpec extends SparkSuite {
 
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toString
-
-  /** Evaluates `body` and returns the starts of the Spark jobs it ran, in
-    * start order. Listener events arrive asynchronously, so a tagged marker
-    * job runs after `body`: once its start is seen, every earlier job start
-    * has been seen too.
-    */
-  private def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val marker = s"marker-${System.nanoTime()}"
-    def isMarker(e: SparkListenerJobStart) =
-      Option(e.properties).exists(p => p.getProperty("graft.test.marker") == marker)
-    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setLocalProperty("graft.test.marker", marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!starts.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(starts.asScala.exists(isMarker), "marker job start never reached the listener")
-      (out, starts.asScala.toSeq.filterNot(isMarker))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** A default run over the plural-variant fixture (`pluralSfDir`):
     * its run directory and its sorted output.

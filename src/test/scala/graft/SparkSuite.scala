@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, regexp_replace, when}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSpark {
@@ -81,4 +84,30 @@ abstract class SparkSuite extends AnyFunSuite {
     */
   def sortedRows(df: DataFrame): Seq[Row] =
     df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+
+  /** Evaluates `body` and returns the starts of the Spark jobs it ran, in
+    * start order. Listener events arrive asynchronously, so a tagged marker
+    * job runs after `body`: once its start is seen, every earlier job start
+    * has been seen too.
+    */
+  def jobsDuring[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${System.nanoTime()}"
+    def isMarker(e: SparkListenerJobStart) =
+      Option(e.properties).exists(p => p.getProperty("graft.test.marker") == marker)
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setLocalProperty("graft.test.marker", marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.marker", null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!starts.asScala.exists(isMarker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(starts.asScala.exists(isMarker), "marker job start never reached the listener")
+      (out, starts.asScala.toSeq.filterNot(isMarker))
+    } finally sc.removeSparkListener(listener)
+  }
 }
