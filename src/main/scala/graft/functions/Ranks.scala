@@ -1,66 +1,62 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Scale-safe global ordering primitives.
   *
   * `Window.orderBy(...)` with no partition moves EVERY row through ONE task —
   * fine on a 60k-row test table, a guaranteed straggler on the vocabulary of
   * a 100 TB corpus (distinct-token count grows with corpus size, Heaps' law).
-  * These helpers compute the same values with a range repartition:
-  *
-  *   1. range-partition the rows on the sort key (parallel sample + shuffle);
-  *   2. rank / running-sum WITHIN each partition in parallel;
-  *   3. add per-partition offsets derived from per-partition totals — a
-  *      dataset bounded by the PARTITION COUNT (a config), not the data.
-  *
-  * The ranged child is referenced three times (the final join and both
-  * sides of the triangular offset join), and Spark's exchange reuse
-  * (spark.sql.exchange.reuse, on by default) runs its range sample and
-  * shuffle once, whether the input is a DataFrame leaf or a checkpoint leaf:
-  * measured on Spark 4.1, local[4], one `globalRowNumber` over 1,000 rows in
-  * 4 partitions runs 8 jobs on either leaf, and its final plan holds one
-  * range exchange and two `ReusedExchange`s of it. Those 8 jobs are a fixed
-  * cost per call whatever the input size. Results are deterministic iff
-  * `order` is a total order (callers must include a unique tie-break
-  * column — the same requirement oracle hash parity already imposes).
+  * `globalRank` computes the same values in one sorted pass: a global sort
+  * (range-partitioned shuffle); one job collecting each partition's row count
+  * and value sum (one entry per partition, as in `RDD.zipWithIndex`); then
+  * each partition numbers its rows from the offsets before it. Both reads of
+  * the sorted RDD, and the result's consumers, read the same materialized
+  * sort shuffle, so the row numbers are a permutation on any input leaf, a
+  * cached one included. Like `RDD.zipWithIndex`, a call runs its jobs when it
+  * is made. Results are deterministic iff `order` is a total order (callers
+  * must include a unique tie-break column — the same requirement oracle hash
+  * parity already imposes).
   */
 object Ranks {
 
-  /** Inclusive global running sum of `value` in `order`, as column `out`
-    * (long). Equivalent to `sum(value).over(Window.orderBy(order))` without
-    * the single-partition funnel.
+  /** `df` in `order` with three long columns appended: `rn`, the 1-based row
+    * number; `cum`, the inclusive running sum of `value` (a non-null
+    * integral column); `total`, the sum of `value` over all rows. Equivalent
+    * to `row_number()` and `sum(value)` over `Window.orderBy(order)` and
+    * `sum(value)` over `Window.partitionBy()`, without the funnel.
     */
-  def globalCumSum(df: DataFrame, order: Seq[Column], value: Column, out: String,
-                   parts: Int = 0): DataFrame = {
-    val n =
-      if (parts > 0) parts
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, order: _*).withColumn("__pid", spark_partition_id())
-    // per-partition totals → exclusive prefix offsets via a triangular
-    // self-join over ≤ n×n partition-count rows (bounded by config, never by
-    // data volume; and no unpartitioned window, so the plan carries zero
-    // single-partition WindowExec stages)
-    val cnts = ranged.groupBy("__pid").agg(sum(value).as("__tot"))
-    val offs = cnts.alias("a")
-      .join(cnts.alias("b"), col("b.__pid") < col("a.__pid"), "left")
-      .groupBy(col("a.__pid").as("__pid"))
-      .agg(coalesce(sum(col("b.__tot")), lit(0L)).as("__off"))
-    ranged.join(broadcast(offs), Seq("__pid"))
-      .withColumn(out,
-        sum(value).over(Window.partitionBy("__pid").orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)) + col("__off"))
-      .drop("__pid", "__off")
+  def globalRank(df: DataFrame, order: Seq[Column], value: Column,
+                 rn: String, cum: String, total: String): DataFrame = {
+    val v = df.columns.length
+    // `value` is evaluated after the sort, so the shuffle carries no extra column
+    val sorted = df.orderBy(order: _*).withColumn("__v", value.cast(LongType)).rdd
+    val parts = sorted.mapPartitions { it =>
+      var rows, sum = 0L
+      it.foreach { r => rows += 1; sum += r.getLong(v) }
+      Iterator((rows, sum))
+    }.collect()
+    val rowOffsets = parts.scanLeft(0L)(_ + _._1)
+    val sumOffsets = parts.scanLeft(0L)(_ + _._2)
+    val grand = sumOffsets.last
+    val schema = Seq(rn, cum, total).foldLeft(df.schema)(_.add(_, LongType, nullable = false))
+    df.sparkSession.createDataFrame(sorted.mapPartitionsWithIndex { (p, it) =>
+      var n = rowOffsets(p)
+      var s = sumOffsets(p)
+      it.map { r =>
+        n += 1; s += r.getLong(v)
+        Row.fromSeq(r.toSeq.take(v) ++ Seq(n, s, grand))
+      }
+    }, schema)
   }
 
   /** Global 1-based row number in `order`, as column `out` (long). Equivalent
     * to `row_number().over(Window.orderBy(order))` without the funnel.
     */
-  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String,
-                      parts: Int = 0): DataFrame =
-    globalCumSum(df, order, lit(1L), out, parts)
+  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame =
+    globalRank(df, order, lit(1L), out, "__cum", "__total").drop("__cum", "__total")
 
   /** Scalar aggregate of the whole input joined onto every row as `out` — the
     * replacement for `agg.over(Window.partitionBy())`, which is the same

@@ -1,5 +1,6 @@
 package graft.link
 
+import graft.functions.Ranks
 import graft.model.AliasEntry
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -13,10 +14,12 @@ import org.apache.spark.sql.functions._
   * caller decides what a miss means (an `OovEntityId` coalesce, a filter, or
   * nothing where no endpoint can miss).
   *
-  * Scale design (north rule): the dictionary is orders of magnitude smaller
-  * than the mention stream, so the join is a broadcast hash join — zero
-  * shuffle of the big side. Zipfian alias frequencies make the *output* of a
-  * shuffle join skewed; broadcasting sidesteps reduce-side skew entirely. For
+  * Scale design (north rule): the dictionary is ranked in the one sorted
+  * pass every global rank uses (`Ranks.globalRank`). It is orders of
+  * magnitude smaller than the mention stream, so the join is a broadcast
+  * hash join — zero shuffle of the big side. Zipfian alias frequencies make
+  * the *output* of a shuffle join skewed; broadcasting sidesteps reduce-side
+  * skew entirely. For
   * dictionaries too big to broadcast, `lookup` degrades to `saltedLeftJoin`,
   * which spreads hot keys over `buckets` replicas: big side gets a
   * deterministic salt from hash(doc_id), dictionary rows are exploded
@@ -40,30 +43,20 @@ object Linking {
     * SURVEY.md W2 note): `entity_id` is the 0-based rank and `prob` is
     * `freq` over the sum of all `freq`.
     *
-    * One sorted pass, not a single-partition window (alias count grows with
-    * the corpus, Heaps' law): the global sort range-partitions the rows, one
-    * job collects each partition's row count and `freq` sum (a list with one
-    * entry per partition, as in `RDD.zipWithIndex`), and each partition then
-    * numbers its rows from its offset. Both reads of the sorted RDD read the
-    * same materialized sort shuffle, and so do the returned Dataset's
-    * consumers: `counts` is read once, and nothing is checkpointed.
+    * One sorted pass (`Ranks.globalRank`), not a single-partition window
+    * (alias count grows with the corpus, Heaps' law): `entity_id` is the
+    * pass's row number less one, and `prob` divides by the `freq` total that
+    * the same pass returns, so nothing is checkpointed. The rank's jobs run
+    * when this is called.
     */
   def buildAliasDict(counts: DataFrame): Dataset[AliasEntry] = {
     val spark = counts.sparkSession
     import spark.implicits._
-    val sorted = counts.select("alias", "freq").orderBy(col("freq").desc, col("alias").asc)
-      .as[(String, Long)].rdd
-    val parts = sorted.mapPartitions { it =>
-      var rows, freq = 0L
-      it.foreach { case (_, f) => rows += 1; freq += f }
-      Iterator((rows, freq))
-    }.collect()
-    val offsets = parts.scanLeft(0L)(_ + _._1)
-    val total = parts.map(_._2).sum.toDouble
-    spark.createDataset(sorted.mapPartitionsWithIndex { (p, it) =>
-      var id = offsets(p) - 1
-      it.map { case (alias, freq) => id += 1; AliasEntry(alias, id, freq, freq.toDouble / total) }
-    })
+    Ranks.globalRank(counts.select("alias", "freq"), Seq(col("freq").desc, col("alias").asc),
+        col("freq"), "__rn", "__cum", "__total")
+      .select(col("alias"), (col("__rn") - 1).as("entity_id"), col("freq"),
+        (col("freq").cast("double") / col("__total").cast("double")).as("prob"))
+      .as[AliasEntry]
   }
 
   /** Every entity join: left-joins `stream` to the two-column (key, value)

@@ -84,7 +84,7 @@ object MiscQueries {
     }),
 
     // A5: important-vocab override — listed tokens bypass the top-K cutoff
-    // (vocab ranked scale-safe via range-partitioned globalRowNumber)
+    // (vocab ranked scale-safe in one sorted pass, Ranks.globalRowNumber)
     "q30_important_vocab" -> ((s, dir) => {
       val imp = importantTokens.map(x => s"'$x'").mkString(", ")
       val freq = docs(s, dir)
@@ -105,9 +105,8 @@ object MiscQueries {
     // active-learning split — entropy-rank the scored pool most-uncertain-
     // first (deterministic tie-break on doc_id), send the top-N to
     // annotation, keep the remainder pooled. The rank is
-    // Ranks.globalRowNumber (range partition + per-partition window +
-    // broadcast prefix offsets), so the plan carries NO single-partition
-    // window at corpus scale.
+    // Ranks.globalRowNumber (one sorted pass, then per-partition offsets), so
+    // the plan carries NO single-partition window at corpus scale.
     "q51_active_learning" -> ((s, dir) =>
       Ranks.globalRowNumber(docEntropy(s, dir),
           Seq(col("entropy_nn").desc, col("doc_id").asc), "rank")

@@ -133,16 +133,16 @@ object PipelineQueries {
 
     // O5: deterministic weighted sampling via inverse-CDF range join —
     // per-doc pseudo-random r_ppm lands in a token's cumulative-freq bucket.
-    // The CDF is a range-partitioned global running sum (no single-partition
-    // window); cum_lo falls out of the same sum ((cum−freq) = lag(cum_hi))
+    // The CDF is the running sum of one sorted pass, which also returns the
+    // total (no single-partition window); cum_lo falls out of the same sum
+    // ((cum−freq) = lag(cum_hi))
     "q27_weighted_sample" -> ((s, dir) => {
       val tok = docs(s, dir)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .filter(length(col("token")) > 0)
       val freq = tok.groupBy("token").agg(count(lit(1)).as("freq"))
-      val vocab = Ranks.globalCumSum(
-        Ranks.withTotal(freq, sum("freq"), "total"),
-        Seq(col("freq").desc, col("token").asc), col("freq"), "cum")
+      val vocab = Ranks.globalRank(
+        freq, Seq(col("freq").desc, col("token").asc), col("freq"), "__rn", "cum", "total")
         .select(col("token").as("sampled"),
           expr("(cum - freq) * 1000000L div total").as("cum_lo"),
           expr("cum * 1000000L div total").as("cum_hi"))

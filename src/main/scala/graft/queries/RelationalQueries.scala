@@ -52,7 +52,7 @@ object RelationalQueries {
 
     // W2/A2: vocab rank = id by (freq desc, token asc) — deterministic
     // tie-break the reference lacks (Counter.most_common is insertion-order).
-    // Ranked via range-partitioned globalRowNumber, NOT a single-partition
+    // Ranked in one sorted pass (Ranks.globalRowNumber), NOT a single-partition
     // window — the vocabulary grows with the corpus (Heaps' law)
     "q03_vocab_rank" -> ((s, dir) => {
       val freq = tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq"))

@@ -105,12 +105,13 @@ object NegativeSampling {
     * `withNegatives` (spec-verified), but the sample pool is never
     * round-tripped through the driver. Endpoint/word corruptions are drawn as
     * POOL INDICES by the same keyed RNG, then resolved by joining an indexed
-    * pool table (`Ranks.globalRowNumber` over surface asc — Spark's UTF-8
-    * byte order, i.e. the SAME 0-based ordering a broadcast pool sorted with
-    * `poolOrdering` gives `withNegatives`; plain `.sorted` compares UTF-16
-    * code units and diverges, see `poolOrdering`). The only driver
-    * traffic is the pool SIZE (one scalar); the index joins broadcast while
-    * the pool is dictionary-sized and degrade to shuffle joins beyond that.
+    * pool table (`Ranks.globalRowNumber`, one sorted pass over surface asc —
+    * Spark's UTF-8 byte order, i.e. the SAME 0-based ordering a broadcast
+    * pool sorted with `poolOrdering` gives `withNegatives`; plain `.sorted`
+    * compares UTF-16 code units and diverges, see `poolOrdering`). The only
+    * driver traffic is the sorted pass's per-partition counts and the pool
+    * SIZE (one scalar); the index joins broadcast while the pool is
+    * dictionary-sized and degrade to shuffle joins beyond that.
     *
     * `pool` is a single string column of candidate surfaces (used for both
     * endpoint and path-word draws, as q36 does). Supports negLevel ≤ 1 — the

@@ -12,18 +12,23 @@ import org.apache.spark.sql.functions._
   * Spark (rand is seeded per-partition), so the portable restatement orders
   * by a keyed hash: md5("<seed>:<key>"). Same seed ⇒ same permutation on any
   * cluster layout, any engine — and the rank itself is the scale-safe
-  * range-partitioned `Ranks.globalRowNumber`, not a single-task sort.
+  * sorted pass of `Ranks.globalRank`, not a single-task sort.
   */
 object Shuffles {
+
+  /** `df` with `pos`, its 1-based position in the seeded permutation, and
+    * `__total`, the row count. */
+  private def ranked(df: DataFrame, keyCol: String, seed: Long): DataFrame =
+    Ranks.globalRank(
+      df.withColumn("__h", md5num(concat(lit(s"$seed:"), col(keyCol).cast("string")))),
+      Seq(col("__h").asc, col(keyCol).asc), lit(1L), "pos", "__cum", "__total")
+      .drop("__h", "__cum")
 
   /** Adds `pos` (1-based position in the seeded permutation) to `df`.
     * `keyCol` must be unique per row.
     */
   def seededShuffle(df: DataFrame, keyCol: String, seed: Long): DataFrame =
-    Ranks.globalRowNumber(
-      df.withColumn("__h", md5num(concat(lit(s"$seed:"), col(keyCol).cast("string")))),
-      Seq(col("__h").asc, col(keyCol).asc), "pos")
-      .drop("__h")
+    ranked(df, keyCol, seed).drop("__total")
 
   /** Positional train/valid split after the seeded shuffle: the first
     * ⌊trainPct%⌋ of positions train, the rest valid (data_handler.py:36-41's
@@ -31,7 +36,7 @@ object Shuffles {
     */
   def seededSplit(df: DataFrame, keyCol: String, seed: Long,
                   trainPct: Int = 80): DataFrame =
-    Ranks.withTotal(seededShuffle(df, keyCol, seed), count(lit(1)), "__total")
+    ranked(df, keyCol, seed)
       .withColumn("fold",
         when(col("pos") * 100 <= col("__total") * trainPct, lit("train"))
           .otherwise(lit("valid")))

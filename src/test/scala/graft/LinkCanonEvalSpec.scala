@@ -4,6 +4,7 @@ import graft.canon.ConnectedComponents
 import graft.corpus.Corpus
 import graft.eval.Eval
 import graft.extract.Extract
+import graft.functions.Ranks
 import graft.link.Linking
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
@@ -33,18 +34,27 @@ class LinkCanonEvalSpec extends SparkSuite {
   }
 
   test("alias dictionary: the sorted pass equals a single-partition window, on 1 and 50 partitions") {
-    // the reference ranks in one task: row_number and the total over a
-    // window with no partition spec
+    // the dictionary and the Ranks primitive under it, against references
+    // that rank in one task: row_number, the running sum and the total over
+    // windows with no partition spec
+    val byFreq = Window.orderBy(col("freq").desc, col("alias").asc)
     def reference(counts: DataFrame) = counts
-      .withColumn("entity_id", row_number().over(Window.orderBy(col("freq").desc, col("alias").asc)) - 1L)
+      .withColumn("entity_id", row_number().over(byFreq) - 1L)
       .withColumn("prob", col("freq") / sum("freq").over(Window.partitionBy()))
       .select("alias", "entity_id", "freq", "prob")
-    def rows(df: DataFrame) = df.orderBy("entity_id").collect().toSeq
+    def ranksReference(counts: DataFrame) = counts.select("alias", "freq")
+      .withColumn("rn", row_number().over(byFreq).cast("long"))
+      .withColumn("cum", sum("freq").over(byFreq.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("total", sum("freq").over(Window.partitionBy()))
+    def rows(df: DataFrame, key: String) = df.orderBy(key).collect().toSeq
+    val cached = spark.range(0, 10000, 1, 4)
+      .select(concat(lit("a"), col("id")).as("alias"), (col("id") % 7 + 1).as("freq")).cache()
     val inputs = Seq(
       "empty" -> surfaceCounts.limit(0),
       "all tied" -> (1 to 40).map(i => (s"alias$i", 3L)).toDF("alias", "freq"),
       "five rows" -> Seq(("b", 2L), ("a", 2L), ("c", 5L), ("d", 1L), ("e", 2L)).toDF("alias", "freq"),
-      "sf0.001 surfaces" -> surfaceCounts)
+      "sf0.001 surfaces" -> surfaceCounts,
+      "10,000 cached rows" -> cached)
     // at 50 partitions with AQE's coalescing off most range partitions of
     // the small inputs are empty, and stay empty
     val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
@@ -53,11 +63,17 @@ class LinkCanonEvalSpec extends SparkSuite {
       for (partitions <- Seq(1, 50); (name, counts) <- inputs) {
         spark.conf.set(conf(0), partitions.toLong)
         spark.conf.set(conf(1), false)
-        val got = rows(Linking.buildAliasDict(counts).toDF())
-        assert(got == rows(reference(counts)), s"$name at $partitions partitions")
+        val got = rows(Linking.buildAliasDict(counts).toDF(), "entity_id")
+        assert(got == rows(reference(counts), "entity_id"), s"$name at $partitions partitions")
         assert(got.isEmpty == (name == "empty"), s"$name at $partitions partitions")
+        val ranked = Ranks.globalRank(counts.select("alias", "freq"),
+          Seq(col("freq").desc, col("alias").asc), col("freq"), "rn", "cum", "total")
+        assert(rows(ranked, "rn") == rows(ranksReference(counts), "rn"), s"Ranks on $name at $partitions partitions")
       }
-    } finally conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    } finally {
+      conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      cached.unpersist()
+    }
   }
 
   test("broadcast link join == salted join, with OOV default for misses") {

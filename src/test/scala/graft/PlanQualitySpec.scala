@@ -1,11 +1,12 @@
 package graft
 
 import graft.canon.ConnectedComponents
+import graft.functions.Ranks
 import graft.link.Linking
 import graft.model.Triple
 import graft.pipeline.KgPipeline
 import org.apache.spark.scheduler.SparkListenerJobStart
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -78,8 +79,9 @@ class PlanQualitySpec extends SparkSuite {
       "q37_vocab_specials", "q45_seeded_shuffle")) {
       val sp = SparkEntry.queries(q)(spark, sfDir).queryExecution.sparkPlan
       val windows = sp.collect { case w: WindowExec => w }
-      // Ranks' per-partition windows (partitioned by __pid) are the intended
-      // scale-safe shape — the invariant is that EVERY window is partitioned
+      // Ranks plans no window (its sorted pass numbers each partition's rows
+      // from the partition offsets); the invariant is that EVERY window a
+      // query plans is partitioned
       val unpartitioned = windows.filter(_.partitionSpec.isEmpty)
       assert(unpartitioned.isEmpty,
         s"single-partition WindowExec in $q:\n${unpartitioned.mkString("\n")}")
@@ -274,19 +276,25 @@ class PlanQualitySpec extends SparkSuite {
   }
 
   test("the alias dictionary ranks in one sorted pass: no nested-loop join, no window, four jobs") {
-    // an input with no shuffle of its own: the range sample, the sort
-    // shuffle, the per-partition (rows, freq) job, and the read of the
-    // result, which re-reads the sort shuffle
+    // the dictionary and a bare Ranks call, each on an input with no shuffle
+    // of its own: the range sample, the sort shuffle, the per-partition
+    // (rows, sum) job, and the read of the result, which re-reads the sort
+    // shuffle
     val counts = spark.range(0, 1000, 1, 4)
       .select(concat(lit("a"), col("id")).as("alias"), (col("id") % 7).as("freq"))
-    var jobs = Seq.empty[SparkListenerJobStart]
-    val plans = plansOf { jobs = jobsDuring(Linking.buildAliasDict(counts).collect())._2 }
-    val banned = plans.flatMap(all).filter {
-      case _: BroadcastNestedLoopJoinExec | _: WindowExec => true
-      case _ => false
+    val calls = Seq[(String, () => DataFrame)](
+      "the dictionary rank" -> (() => Linking.buildAliasDict(counts).toDF()),
+      "Ranks.globalRowNumber" -> (() => Ranks.globalRowNumber(counts, Seq(col("alias").asc), "rn")))
+    for ((name, call) <- calls) {
+      var jobs = Seq.empty[SparkListenerJobStart]
+      val plans = plansOf { jobs = jobsDuring(call().collect())._2 }
+      val banned = plans.flatMap(all).filter {
+        case _: BroadcastNestedLoopJoinExec | _: WindowExec => true
+        case _ => false
+      }
+      assert(banned.isEmpty, s"$name plans:\n${banned.mkString("\n")}")
+      assert(jobs.size <= 4, s"$name ran ${jobs.size} jobs")
     }
-    assert(banned.isEmpty, s"the dictionary rank plans:\n${banned.mkString("\n")}")
-    assert(jobs.size <= 4, s"the dictionary rank ran ${jobs.size} jobs")
   }
 
   test("a CC round's convergence count is one job with no query plan of its own") {
