@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * No master/memory settings are hardcoded — cluster managers inject them —
   * so the same jar runs on local[N] or a multi-executor cluster. The run is
   * resumable: re-submitting with the same runDir continues after the last
-  * committed stage (ckpt.StageLog).
+  * committed stage (ckpt.StageLog); one committed from another corpus or
+  * whitelistMinCount fails loudly before any job, naming stage and input.
   */
 object Main {
   def main(args: Array[String]): Unit = {

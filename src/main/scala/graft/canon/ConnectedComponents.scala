@@ -2,6 +2,7 @@ package graft.canon
 
 import graft.tableio.TableIO
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Iterative connected-components canonicalizer (north rule:
@@ -30,37 +31,25 @@ import org.apache.spark.sql.functions._
   * materialization, lineage truncation and the exact count of changed labels
   * are one job (an action result, exactly-once under task retry; a
   * `sum(__chg)` aggregate would plan an exchange of its own and cost a
-  * second job per round). Two designs this supersedes, both
-  * measured: `Dataset.observe` for the convergence signal
-  * (`Observation.get` stalls ~2 s per round on the listener bus); and
-  * persist-per-round with truncation only every few rounds (each round's
-  * plan references the PREVIOUS round's plan twice, hash-min push +
-  * pointer shortcut, so between truncations the un-truncated logical
-  * tree DOUBLED per round and driver analysis went exponential:
-  * probe-measured at 4 cores, inter-job gaps 0.1→3.8 s and job times 0.3→6 s
-  * across rounds 1-5 — a ~14 s fixed SERIAL term per pipeline rep, identical
-  * at every parallelism level, that the N→4N scaling pair mis-attributed to
-  * the engine; removing it cut a p4 pipeline rep 46.7→36.5 s). An EAGER
-  * per-round checkpoint fixes the analysis cost too but pays a second
-  * labels-sized job per round (the materializing job plus the convergence
-  * scan) — a pure serial add-on heaviest at 1 core; the lazy form folds
-  * truncation into the round's one job.
+  * second job per round). Truncating every round keeps each round's plan a
+  * constant-size three-leaf tree. The measured designs this supersedes —
+  * `Dataset.observe` for the signal (`Observation.get` stalls ~2 s per round
+  * on the listener bus), persist with truncation every few rounds, and an
+  * eager per-round checkpoint — are in BENCH.md "Serial floor".
   *
-  * Lineage/storage: the edge table is truncated once at entry by a lazy
-  * `localCheckpoint` whose materializing job also counts its rows (an empty
-  * edge set returns empty labels with no round), labels every round by the
-  * lazy checkpoint above, so every round analyzes a constant-size
-  * three-leaf plan. A dead round's
-  * checkpoint blocks are labels-sized and freed asynchronously by the
-  * ContextCleaner once the loop drops the reference (RDD-level checkpoint
-  * blocks live outside the SQL cache, so `Dataset.unpersist` could not free
-  * them anyway); the bench harness additionally clears all persistent RDDs
-  * between reps. Durability is a separate cadence: every `checkpointEvery`
-  * rounds the labels also commit through TableIO when `ckptDir` is given
-  * (survives process loss; a rerun with the same `ckptDir` resumes from the
-  * last committed labels — hash-min is monotone and idempotent, so resuming
-  * from any intermediate labeling is exact). Production callers always pass
-  * a directory.
+  * Storage: the edge table is truncated once at entry by a lazy
+  * `localCheckpoint` whose materializing job also fingerprints it (row
+  * count, wrapping sum of a 64-bit hash per row); an empty edge set returns
+  * empty labels with no round. A dead round's checkpoint blocks are freed
+  * asynchronously by the ContextCleaner once the loop drops the reference
+  * (they live outside the SQL cache, so `Dataset.unpersist` cannot free them).
+  * Durability is a separate cadence: every `checkpointEvery` rounds the
+  * labels also commit through TableIO when `ckptDir` is given, recording
+  * the edge fingerprint as their inputs. A rerun with the same `ckptDir`
+  * resumes from the last committed labels (hash-min is monotone and
+  * idempotent, so resuming from any intermediate labeling is exact), and
+  * labels committed over another graph fail through `TableIO.resumable`.
+  * Production callers always pass a directory.
   */
 object ConnectedComponents {
 
@@ -82,36 +71,25 @@ object ConnectedComponents {
       .select(col("arc.src"), col("arc.dst"))
       .distinct()
       .localCheckpoint(eager = false)
-    val selfLoops = sym.filter(col("src") === col("dst"))
     // one self-loop row per vertex. Left LAZY on purpose: re-derived inside
     // round 1's own job, where an eager materialization would be a whole
-    // extra driver round-trip (the per-job constant dominates
-    // dictionary-sized stages; see BENCH.md serial-floor table)
-    val initial = selfLoops.select(col("src").as("id"), col("src").as("component"))
-    // the job that materializes the edge checkpoint also counts its rows; no
-    // edges means no vertex, so there is nothing to label and no round to run
-    if (sym.queryExecution.toRdd.count() == 0L) return initial
+    // extra driver round-trip (BENCH.md "Serial floor")
+    val initial = sym.filter(col("src") === col("dst")).select(col("src").as("id"), col("src").as("component"))
+    // the job that materializes the edge checkpoint also fingerprints it
+    // (row count, wrapping sum of each row's xxhash64); no edges means no
+    // vertex, so there is nothing to label and no round to run
+    val (rows, hash) = sym.queryExecution.toRdd
+      .map(r => (1L, XXH64.hashLong(r.getLong(1), XXH64.hashLong(r.getLong(0), 42L))))
+      .fold((0L, 0L)) { case ((n1, h1), (n2, h2)) => (n1 + n2, h1 + h2) }
+    if (rows == 0L) return initial
 
+    // resume from the last committed labels only over the graph they were
+    // computed on: new vertices would never enter the rounds' joins, and
+    // removed ones would persist with bogus components
     val table = ckptDir.map(d => s"$d/cc_labels")
-    var labels = table.filter(t => TableIO.currentVersion(t).isDefined) match {
-      case Some(t) =>
-        // resume from the last committed round's labels — guarded: a stale
-        // table from an earlier attempt over a DIFFERENT edge set would
-        // silently dictate the vertex set (new vertices never enter the
-        // rounds' joins; removed ones persist with bogus components).
-        // The count comparison is the cheap fingerprint; callers changing
-        // the upstream graph must clear ckptDir (review finding). Both
-        // counts run only on the rare resume path.
-        val resumed = TableIO.read(edges.sparkSession, t)
-        val vertices = selfLoops.count()
-        val labelled = resumed.count()
-        require(labelled == vertices,
-          s"CC resume: committed labels at $t cover $labelled vertices but " +
-            s"the edge set has $vertices — stale checkpoint from a different " +
-            "graph; delete the ckptDir (or its upstream stage) and rerun")
-        resumed
-      case None => initial
-    }
+    val inputs = Map("edge_rows" -> rows.toString, "edge_hash" -> hash.toString)
+    var labels = table.filter(TableIO.resumable(_, inputs, "the CC labels table"))
+      .fold(initial)(TableIO.read(edges.sparkSession, _))
 
     var iter = 0
     var converged = false
@@ -150,7 +128,7 @@ object ConnectedComponents {
           // scan of the just-materialized checkpoint; the committed snapshot
           // is durable (resume point) — the checkpoint itself stays this
           // round's in-memory working set
-          TableIO.commit(next.select("id", "component"), table.get)
+          TableIO.commit(next.select("id", "component"), table.get, inputs = inputs)
           TableIO.read(edges.sparkSession, table.get)
         } else next.select("id", "component")
       converged = changed == 0L

@@ -10,14 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * wiki_and_semeval2sdp.py:391-449,470-472).
   *
   * A stage = a named DataFrame computation materialized as a TableIO
-  * snapshot under `<runDir>/<stage>`. `runStage` skips recomputation when the
-  * stage already has a committed snapshot — so a killed job rerun resumes
-  * after the last committed stage, idempotently (TableIO commits are atomic).
-  * The audit trail lives in each stage's snapshot manifest: its row count
-  * and rows per write task, taken from the committed files' Parquet footers.
-  * `lineage` and `metrics` build their tables from those manifests on the
-  * driver, so a stage commit costs one Spark job (the write) and the audit
-  * costs none.
+  * snapshot under `<runDir>/<stage>`, whose manifest records the stage's
+  * `inputs`. `runStage` skips recomputation when the stage is committed from
+  * the same inputs (the caller compares them first: `KgPipeline.run` checks
+  * every stage with `TableIO.resumable` before its first job), so a
+  * killed run resumes after its last committed stage, idempotently. The
+  * audit trail is each manifest's row count and rows per write task;
+  * `lineage` and `metrics` build their tables from the manifests on the
+  * driver, so the audit costs no Spark job.
   */
 class StageLog(spark: SparkSession, runDir: String) {
 
@@ -34,9 +34,10 @@ class StageLog(spark: SparkSession, runDir: String) {
     * artifact — lineage is truncated at every stage boundary, the iterative-
     * job killer at scale.
     */
-  def runStage(stage: String, partitionBy: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
+  def runStage(stage: String, partitionBy: Seq[String] = Nil, inputs: Map[String, String] = Map.empty)
+              (compute: => DataFrame): DataFrame = {
     val path = stagePath(stage)
-    if (!isCommitted(stage)) TableIO.commit(compute, path, partitionBy)
+    if (!isCommitted(stage)) TableIO.commit(compute, path, partitionBy, inputs)
     TableIO.read(spark, path)
   }
 

@@ -6,6 +6,7 @@ import graft.corpus.Corpus
 import graft.extract.Extract
 import graft.link.Linking
 import graft.link.Linking.lookup
+import graft.tableio.TableIO
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,13 +27,13 @@ import org.apache.spark.sql.functions._
   *        → canonical triples (a projection, partitioned by predicate)
   *
   * `run` is the shipped job: every stage materializes via TableIO (atomic
-  * snapshot whose manifest carries the per-partition lineage), so a killed
-  * run resumes after its last committed stage with byte-identical results.
+  * snapshot whose manifest carries the per-partition lineage and the
+  * stage's inputs), so a killed run resumes after its last committed stage
+  * with byte-identical results, and a run directory committed from other
+  * inputs fails before any job.
   * `canonicalTriplesInMemory` is the scaling-benchmark job: the same
-  * dataflow without durable commits and without the whitelist gate. The two
-  * keep different pass economies on purpose, so they do not share a stage
-  * graph; ResumeSpec pins `run(whitelistMinCount = 1)` row-equal (as a
-  * multiset) to `canonicalTriplesInMemory`.
+  * dataflow without durable commits and without the whitelist gate, in a
+  * different pass economy on purpose, so the two share no stage graph.
   */
 object KgPipeline {
 
@@ -136,35 +137,45 @@ object KgPipeline {
     linked.select(col("subj_canon").as("subj_id"), col("pred"), col("obj_canon").as("obj_id"),
       col("subj"), col("obj"), col("doc_id"), col("span_idx"), col("score"))
 
-  /** Columns each stage gained after an earlier format: a run directory
-    * committed before them fails before any job, from the manifests alone,
-    * instead of resuming into an analysis error deep inside a later stage.
+  /** The stage format: bump it when a stage's columns change. */
+  private val format = "1"
+
+  /** Each stage's inputs: its parameters and its upstream stages' fingerprints,
+    * rooted at the format and the corpus listing, all known before any job.
     */
-  private val formatColumns: Seq[(String, Seq[String])] = Seq(
-    "candidates" -> Seq("sig"), "entity_canon" -> Seq("alias"),
-    "linked_triples" -> Seq("subj_canon", "obj_canon"))
+  private def stageInputs(sfDir: String, whitelistMinCount: Long): Map[String, Map[String, String]] = {
+    def on(stage: String, inputs: Map[String, String]) = stage -> TableIO.fingerprint(inputs)
+    val candidates = Map("format" -> format, "corpus" -> TableIO.listingFingerprint(s"$sfDir/documents.parquet"))
+    val triples = Map(on("candidates", candidates), "whitelistMinCount" -> whitelistMinCount.toString)
+    val aliasDict = Map(on("triples", triples))
+    val entityCanon = Map(on("alias_dict", aliasDict))
+    val linked = Map(on("triples", triples), on("entity_canon", entityCanon))
+    Map("candidates" -> candidates, "triples" -> triples, "alias_dict" -> aliasDict,
+      "entity_canon" -> entityCanon, "linked_triples" -> linked, "canonical_triples" -> Map(on("linked_triples", linked)))
+  }
 
   /** @param broadcastMaxDictRows dictionary-side row bound for the entity
     *   joins, compared against the committed alias dictionary's row count
-    *   (see `defaultBroadcastMaxDictRows`).
+    *   (see `defaultBroadcastMaxDictRows`). It picks the plan, not the rows,
+    *   so it is not a stage input.
     */
   def run(spark: SparkSession, sfDir: String, runDir: String,
           whitelistMinCount: Long = 3,
           broadcastMaxDictRows: Long = defaultBroadcastMaxDictRows): DataFrame = {
     val log = new StageLog(spark, runDir)
-    for ((stage, cols) <- formatColumns if log.isCommitted(stage)) {
-      val missing = cols.filterNot(log.snapshot(stage).schema.fieldNames.contains)
-      if (missing.nonEmpty)
-        sys.error(s"stage $stage in run directory $runDir has no ${missing.mkString(", ")} column: it was " +
-          "committed by an older version; delete the run directory and rerun")
-    }
+    val inputs = stageInputs(sfDir, whitelistMinCount)
+    // from the manifests, before any job: a stage committed from another
+    // corpus, parameter or format fails instead of resuming into wrong rows
+    for (s <- stages) TableIO.resumable(log.stagePath(s), inputs(s), s"stage $s in run directory $runDir")
+    def stage(name: String, partitionBy: Seq[String] = Nil)(compute: => DataFrame) =
+      log.runStage(name, partitionBy, inputs(name))(compute)
 
     // every candidate triple of the corpus, with its path signature
-    val candidates = log.runStage("candidates") {
+    val candidates = stage("candidates") {
       Extract.triplesFused(Corpus.rawDocuments(spark, sfDir)).toDF()
     }
 
-    val triples = log.runStage("triples") {
+    val triples = stage("triples") {
       // whitelist + vocab gates stay DataFrames end-to-end: no corpus-derived
       // dictionary is ever collected to the driver (its size grows with the
       // corpus — the classic driver-heap bottleneck at 100×). AQE turns these
@@ -173,7 +184,7 @@ object KgPipeline {
         .drop("sig")
     }
 
-    val aliasDict = log.runStage("alias_dict") {
+    val aliasDict = stage("alias_dict") {
       Linking.buildAliasDict(endpointCounts(triples, lit(1))).toDF()
     }
 
@@ -182,7 +193,7 @@ object KgPipeline {
     // restated as a partition column) — point lookups prune to one bucket
     // directory instead of scanning the table, and the hash spreads write
     // volume evenly where raw entity_id would make one directory per entity
-    val entities = log.runStage("entity_canon", partitionBy = Seq("entity_bucket")) {
+    val entities = stage("entity_canon", partitionBy = Seq("entity_bucket")) {
       // CC rounds checkpoint durably inside the run dir: a mid-CC kill
       // resumes from the last committed labels instead of restarting
       canonicalize(aliasDict, Some(s"$runDir/cc"))
@@ -190,20 +201,19 @@ object KgPipeline {
     }
 
     // the dictionary's committed row count (manifest, no job) decides both
-    // entity joins: the entity table is row-for-row the dictionary, and
-    // every endpoint of `triples` is in it, so no OOV default is needed. The
-    // lookup table is the committed scan: built as alias_dict ⋈ entity_canon
-    // in the stage, Spark stopped broadcasting the salted ×entityBuckets
-    // table and shuffled the stream (a prototype measured perfbench
-    // durable-zipf's shuffle going from 0.38 to 1.6 MB).
+    // entity joins. The entity table is row-for-row the dictionary, and the
+    // resume check guarantees both come from these `triples`, so every
+    // endpoint is in it and no OOV default is needed. The lookup reads the
+    // committed scan: built as alias_dict ⋈ entity_canon, Spark stopped
+    // broadcasting the salted table (durable-zipf shuffle 0.38 → 1.6 MB).
     val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
-    val linked = log.runStage("linked_triples") {
+    val linked = stage("linked_triples") {
       link(triples, entities, dictIsSmall)
         .select(Seq("doc_id", "span_idx", "pred", "score", "subj", "subj_id", "obj", "obj_id",
           "subj_canon", "obj_canon").map(col): _*)
     }
 
-    log.runStage("canonical_triples", partitionBy = Seq("pred"))(canonicalTriples(linked))
+    stage("canonical_triples", partitionBy = Seq("pred"))(canonicalTriples(linked))
   }
 
   /** The docs→canonical-triples dataflow WITHOUT durable stage commits —
@@ -235,20 +245,10 @@ object KgPipeline {
     //           surface pairs), not corpus-sized. Every dictionary stage
     //           below derives from this small table.
     //   pass 2: fused extraction again → two broadcast joins → output.
-    // An earlier revision cached the full triple stream and scanned it three
-    // times; measured on this machine the columnar cache round-trip
-    // (compress + decompress + string materialization) costs MORE memory
-    // bandwidth than re-running the allocation-lean kernel, and its CPU
-    // inflates 2-2.7× with core count while the kernel's stays flat
-    // (BENCH.md). Recompute-over-cache is also the 100 TB-honest choice: the
-    // production `run` gets pass economy from durable TableIO parquet
-    // commits instead.
-    // localCheckpoint (not persist): the pair table is the lineage boundary
-    // between the corpus-scale pass and the dictionary side's actions —
-    // as a LogicalRDD leaf each of those actions analyzes/optimizes a
-    // few-node plan, while behind a persist every action re-plans the whole
-    // corpus subtree (~1-1.5 s of driver time per rep, measured; a pure
-    // serial cost the scaling pair would mis-attribute to the engine)
+    // Recompute over cache, and a localCheckpoint rather than a persist for
+    // the pair table (the dictionary side's actions then plan a few-node
+    // tree, not the corpus subtree): both measured, BENCH.md "The job" and
+    // "Serial floor".
     val pairCounts = Extract.triplesFused(docs).toDF()
       .groupBy("subj", "obj").agg(count(lit(1)).as("n"))
       .localCheckpoint(eager = true)

@@ -5,6 +5,7 @@ import graft.link.Linking
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Tables._
 
 /** Linking + canonicalization operators with DuckDB oracles:
   *  - q11: salted dictionary join (skew path of J1) — oracle is the plain
@@ -13,19 +14,6 @@ import org.apache.spark.sql.functions._
   *    recursive CTE computing the same min-reachable-id labels.
   */
 object GraphQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def tokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
-      .filter(length(col("token")) > 0)
-
-  private val tokensSql =
-    """SELECT doc_id, unnest(string_split(text, ' ')) AS token,
-      |generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
-      |FROM documents""".stripMargin.replace("\n", " ")
 
   /** Edge table for canonicalization: a doc links its 4-token-prefix group
     * and its 4-token-suffix group (star edges to each group's min doc_id), so

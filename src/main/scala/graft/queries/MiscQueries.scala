@@ -11,6 +11,7 @@ import graft.score.NeuralScorer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Tables._
 
 /** Remaining SURVEY.md §2 operator coverage: power-smoothed distributions
   * (A6), important-vocab override (A5), entropy ranking (A12), Brown-cluster
@@ -19,15 +20,6 @@ import org.apache.spark.sql.functions._
   * (M1-M5) and negative sampling (§2.9).
   */
 object MiscQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select("doc_id", "text")
-
-  private def md5numSql(e: String) =
-    s"(('0x' || substring(md5($e), 1, 15))::BIGINT)"
 
   private val importantTokens = Seq("spark", "join", "filter")
 

@@ -8,6 +8,7 @@ import graft.text.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Tables._
 
 /** Training-data pipeline operators (dedup / similarity / text analysis /
   * sampling / streaming-shaped window agg) with DuckDB oracles.
@@ -17,15 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").select("doc_id", "text")
-
-  // DuckDB equivalent of Portable.md5num
-  private def md5numSql(e: String) =
-    s"(('0x' || substring(md5($e), 1, 15))::BIGINT)"
   private def h30Sql(e: String) = s"(${md5numSql(e)} % 1000000007)"
 
   // DuckDB 3-gram shingles (distinct) — matches Dedup.shingles(n=3)

@@ -4,6 +4,7 @@ import graft.functions.Ranks
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Tables._
 
 /** Oracle-checked query registry: each entry maps a SURVEY.md §2 operator onto
   * the driver's parquet tables, with a DuckDB-equivalent SQL oracle.
@@ -15,23 +16,6 @@ import org.apache.spark.sql.functions._
   *  - every computed column is aliased identically on both sides.
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
-
-  /** Tokens of the documents table with in-doc position — shared scan shape
-    * for the vocab/text queries (A1 analog: explode + count,
-    * semeval2sdp.py:188-209).
-    */
-  private def tokens(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents")
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
-      .filter(length(col("token")) > 0)
-
-  private val tokensSql =
-    """SELECT doc_id, unnest(string_split(text, ' ')) AS token,
-      |generate_subscripts(string_split(text, ' '), 1) - 1 AS pos
-      |FROM documents""".stripMargin.replace("\n", " ")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1/A9-shape: hash aggregation with decimal-exact money sums (map-side

@@ -268,7 +268,8 @@ object GruTrainer {
       GruExample(math.floorMod(r.x.hashCode, v), math.floorMod(r.y.hashCode, v),
         steps, r.label)
     }
-    Trainer.fit(examples, p0, dims.tensorBounds, epochs, lr, ckptTable, ckptEvery,
-      parts, stepsPerEpoch)(_.label)(forwardBackward(dims, _, _, _))
+    Trainer.fit(examples, p0, dims.tensorBounds, epochs, lr, ckptTable, ckptEvery, parts, stepsPerEpoch,
+      Map("trainer" -> "gru", "seed" -> seed.toString, "negPer" -> negPer.toString)
+    )(_.label)(forwardBackward(dims, _, _, _))
   }
 }

@@ -53,13 +53,15 @@ import org.apache.spark.storage.StorageLevel
   * the fixed association of `DetReduce.tree`, every epoch metric is
   * bit-identical across runs, cluster sizes, and input splits.
   *
-  * Checkpoint/resume (round-4): when `ckptTable` is set, the full optimizer
-  * state (epoch, params, Adam moments) commits through TableIO every
-  * `ckptEvery` epochs — the engine's own snapshot log, so a killed run
-  * resumes from the last commit BIT-IDENTICALLY (parquet doubles are exact;
-  * the deterministic example layout regenerates the same stream). This is
-  * the reference's periodic save + restore loop (relembed.py:745-757,
-  * 30-minute checkpoints with restore-best) on the engine's durable sink.
+  * Checkpoint/resume — the reference's periodic save + restore loop
+  * (relembed.py:745-757): when `ckptTable` is set, the optimizer state
+  * (epoch, params, Adam moments) commits through TableIO every `ckptEvery`
+  * epochs, and a killed run resumes from the last commit BIT-IDENTICALLY
+  * (parquet doubles are exact; the fixed layout regenerates the stream).
+  * A commit records what it was trained from — trainer, param size, seed,
+  * negPer, parts, stepsPerEpoch and lr, not `epochs` or `ckptEvery`, so a
+  * run may resume to more epochs — and any other checkpoint fails the
+  * resume (`TableIO.resumable`).
   */
 object Trainer {
 
@@ -104,7 +106,8 @@ object Trainer {
     val tensors = Seq((0, 2 * w.hidden), (2 * w.hidden, dim), (dim, dim + 1))
     fit(examples, new Array[Double](dim + 1), tensors, epochs,
       lr = 0.05 /* scaled up: few epochs on a tiny feature head */,
-      ckptTable, ckptEvery, parts, stepsPerEpoch)(_._1) { (p, ex, g) =>
+      ckptTable, ckptEvery, parts, stepsPerEpoch,
+      Map("trainer" -> "head", "seed" -> seed.toString, "negPer" -> negPer.toString))(_._1) { (p, ex, g) =>
       val (label, f) = ex
       var logit = p(dim)
       var i = 0
@@ -143,12 +146,13 @@ object Trainer {
     * starting at `p0`. `step(params, example, grad)` adds one example's
     * ∂loss/∂params into `grad` and returns its (loss, logit); `tensors` are
     * the per-variable slices of the vector that clip_by_norm(3) clips
-    * separately before the shared Adam step.
+    * separately before the shared Adam step. `source` (what the examples
+    * and `p0` were built from) is part of the checkpoint's inputs.
     */
   private[score] def fit[E](examples: Dataset[E], p0: Array[Double],
                             tensors: Seq[(Int, Int)], epochs: Int, lr: Double,
                             ckptTable: Option[String], ckptEvery: Int, parts: Int,
-                            stepsPerEpoch: Int)(labelOf: E => Int)
+                            stepsPerEpoch: Int, source: Map[String, String])(labelOf: E => Int)
                            (step: (Array[Double], E, Array[Double]) => (Double, Double))
       : DataFrame = try {
     require(stepsPerEpoch >= 1, s"stepsPerEpoch must be >= 1, got $stepsPerEpoch")
@@ -161,17 +165,11 @@ object Trainer {
     var startEp = 0
 
     // resume: restore the last committed (epoch, params, moments) and
-    // continue from the next epoch. The stored shapes are validated first —
-    // a stale or foreign table (the other trainer's checkpoint, or one
-    // written before wOut widened the head) must fail loudly, not silently
-    // resume from garbage params (ADVICE round 4).
-    for (table <- ckptTable; _ <- TableIO.currentVersion(table)) {
+    // continue from the next epoch, only from state of the same inputs
+    val inputs = source ++ Map("size" -> size.toString, "parts" -> parts.toString,
+      "stepsPerEpoch" -> stepsPerEpoch.toString, "lr" -> lr.toString)
+    for (table <- ckptTable if TableIO.resumable(table, inputs, "the checkpoint")) {
       val r = TableIO.read(spark, table).as[CkptRow].head()
-      require(r.param.length == size && r.madam.length == size &&
-        r.vadam.length == size,
-        s"checkpoint at $table has param/moment lengths (${r.param.length}, " +
-          s"${r.madam.length}, ${r.vadam.length}) but this model needs " +
-          s"$size — stale or foreign checkpoint table")
       p = r.param; m = r.madam; v = r.vadam
       startEp = r.epoch + 1
     }
@@ -251,7 +249,7 @@ object Trainer {
       // durable state commit through the engine's snapshot log
       for (table <- ckptTable)
         if ((ep + 1) % ckptEvery == 0 || ep == epochs - 1)
-          TableIO.commit(Seq(CkptRow(ep, p, m, v)).toDF(), table)
+          TableIO.commit(Seq(CkptRow(ep, p, m, v)).toDF(), table, inputs = inputs)
     }
     out.result().toDF()
   } finally examples.unpersist(blocking = false)

@@ -17,20 +17,20 @@ import scala.util.Using
   *   table/
   *     data/snap-<v>/...          partitioned parquet for snapshot v
   *     snapshots/v<v>.json        manifest: data dir, row count, rows per
-  *                                write task, read schema
+  *                                write task, read schema, inputs
   *     snapshots/CURRENT          file containing the committed version
   *
   * Commit protocol: data is written fully, the manifest is written to a temp
   * file, then CURRENT is replaced by atomic move — readers see either the old
-  * or the new snapshot, never a partial one. Re-running a failed job never
-  * corrupts a committed snapshot (idempotent writes, north-star
-  * resumability).
+  * or the new snapshot, never a partial one, and a rerun never corrupts a
+  * committed snapshot. A commit costs one Spark job, the write: its row
+  * figures come from the committed files' Parquet footers (an Iceberg
+  * manifest's `record_count`), and a read takes its schema from the
+  * manifest, so neither reads nor the audit (ckpt.StageLog) start a job.
   *
-  * A commit costs one Spark job, the write. Its row figures come from the
-  * committed files' Parquet footers, read on the driver — the analog of an
-  * Iceberg manifest's per-data-file `record_count` — and a read takes its
-  * schema from the manifest, so neither reads nor the audit built on the
-  * manifest (ckpt.StageLog) start a job.
+  * Resume rule: every resume point (`KgPipeline.run`'s stages, CC's labels,
+  * the trainers' optimizer state) passes `resumable` before it reads
+  * committed state, so state computed from other inputs fails loudly.
   */
 object TableIO {
 
@@ -39,9 +39,10 @@ object TableIO {
     *   manifest written before the field existed.
     * @param schemaJson the schema the snapshot reads back as: data columns,
     *   then partition columns.
+    * @param inputs what the snapshot was computed from (empty before the field existed).
     */
   case class Snapshot(version: Long, dataDir: String, rows: Long, schemaJson: String,
-                      taskRows: Option[Map[Int, Long]]) {
+                      taskRows: Option[Map[Int, Long]], inputs: Map[String, String]) {
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
@@ -57,20 +58,47 @@ object TableIO {
 
   def readSnapshot(table: String, version: Long): Snapshot = {
     val txt = Files.readString(snapDir(table).resolve(s"v$version.json"))
-    // minimal JSON codec (fields are under our control; the one nested value
-    // is the flat taskRows object of integer keys and values)
-    def field(name: String): String = {
-      val m = ("\"" + name + "\"\\s*:\\s*(\"(?:[^\"\\\\]|\\\\.)*\"|\\d+)").r
-        .findFirstMatchIn(txt).getOrElse(sys.error(s"manifest field $name missing"))
-      val v = m.group(1)
-      if (v.startsWith("\"")) v.substring(1, v.length - 1).replace("\\\"", "\"").replace("\\\\", "\\")
-      else v
-    }
-    val taskRows = "\"taskRows\"\\s*:\\s*\\{([^}]*)\\}".r.findFirstMatchIn(txt).map { m =>
-      "\"(\\d+)\"\\s*:\\s*(\\d+)".r.findAllMatchIn(m.group(1))
-        .map(e => e.group(1).toInt -> e.group(2).toLong).toMap
-    }
-    Snapshot(field("version").toLong, field("dataDir"), field("rows").toLong, field("schema"), taskRows)
+    // minimal JSON codec (fields are under our control; the nested values
+    // are flat objects: taskRows of integers, inputs of strings)
+    def field(name: String): String = unquote(("\"" + name + "\"\\s*:\\s*(" + Str + "|\\d+)").r
+      .findFirstMatchIn(txt).getOrElse(sys.error(s"manifest field $name missing")).group(1))
+    def obj(name: String): Option[Map[String, String]] =
+      ("\"" + name + "\"\\s*:\\s*\\{((?:" + Str + "|[^}\"])*)\\}").r.findFirstMatchIn(txt).map { m =>
+        s"($Str)\\s*:\\s*($Str|\\d+)".r.findAllMatchIn(m.group(1)).map(e => unquote(e.group(1)) -> unquote(e.group(2))).toMap
+      }
+    Snapshot(field("version").toLong, field("dataDir"), field("rows").toLong, field("schema"),
+      obj("taskRows").map(_.map { case (t, n) => t.toInt -> n.toLong }), obj("inputs").getOrElse(Map.empty))
+  }
+
+  private val Str = "\"(?:[^\"\\\\]|\\\\.)*\"" // a JSON string literal
+
+  private def unquote(v: String) =
+    if (v.startsWith("\"")) v.substring(1, v.length - 1).replace("\\\"", "\"").replace("\\\\", "\\") else v
+
+  /** SHA-256, in hex, of named values in name order. */
+  def fingerprint(values: Iterable[(String, String)]): String = {
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+    values.toSeq.sorted.foreach { case (k, v) => sha.update(s"${k.length}:$k${v.length}:$v".getBytes("UTF-8")) }
+    java.util.HexFormat.of().formatHex(sha.digest())
+  }
+
+  /** The fingerprint of a file tree's listing (each file's relative path and size): no Spark job. */
+  def listingFingerprint(root: String): String = fingerprint(Using.resource(Files.walk(Paths.get(root))) {
+    _.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => Paths.get(root).relativize(p).toString -> Files.size(p).toString).toSeq
+  })
+
+  /** The one resume rule: false when `table` has no committed snapshot, true
+    * when its current one was committed from exactly `inputs`, and otherwise
+    * (a manifest that records none included) fails, naming `what` and the
+    * first input that differs. It reads manifests only: no Spark job.
+    */
+  def resumable(table: String, inputs: Map[String, String], what: String): Boolean = currentVersion(table).isDefined && {
+    val recorded = current(table).inputs
+    for (k <- (recorded.keySet ++ inputs.keySet).toSeq.sorted.find(k => recorded.get(k) != inputs.get(k)))
+      throw new IllegalArgumentException(s"$what was committed from other inputs: $k is ${recorded.getOrElse(k,
+        "unrecorded")} there but ${inputs.getOrElse(k, "unused")} now; a stale or foreign checkpoint at $table")
+    true
   }
 
   private val PartFile = """part-(\d+)-.*\.parquet""".r
@@ -100,7 +128,8 @@ object TableIO {
     * REPLACE_EXISTING (contents are regenerated deterministically) so even a
     * same-version retry can never wedge the table (ADVICE.md round 1).
     */
-  def commit(df: DataFrame, table: String, partitionBy: Seq[String] = Nil): Snapshot = {
+  def commit(df: DataFrame, table: String, partitionBy: Seq[String] = Nil,
+             inputs: Map[String, String] = Map.empty): Snapshot = {
     val version =
       (currentVersion(table).toSeq ++ versions(table)).reduceOption(_ max _).map(_ + 1).getOrElse(0L)
     val dataDir = s"$table/data/snap-$version"
@@ -111,11 +140,12 @@ object TableIO {
     // last in directory-nesting order
     val fields = df.schema.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(df.schema(_))
     val snap = Snapshot(version, dataDir, taskRows.values.sum,
-      StructType(fields.map(_.copy(nullable = true))).json, Some(taskRows))
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val tasks = taskRows.toSeq.sorted.map { case (t, n) => s""""$t": $n""" }.mkString(", ")
-    val manifest = s"""{"version": $version, "dataDir": "${esc(dataDir)}", "rows": ${snap.rows}, """ +
-      s""""taskRows": {$tasks}, "schema": "${esc(snap.schemaJson)}"}"""
+      StructType(fields.map(_.copy(nullable = true))).json, Some(taskRows), inputs)
+    def str(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    def obj(kv: Seq[(String, String)]) = kv.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
+    val manifest = s"""{"version": $version, "dataDir": ${str(dataDir)}, "rows": ${snap.rows}, """ +
+      s""""taskRows": ${obj(taskRows.toSeq.sorted.map { case (t, n) => t.toString -> n.toString })}, """ +
+      s""""schema": ${str(snap.schemaJson)}, "inputs": ${obj(inputs.toSeq.sorted.map { case (k, v) => k -> str(v) })}}"""
     Files.createDirectories(snapDir(table))
     val tmp = Files.createTempFile(snapDir(table), "manifest", ".tmp")
     Files.writeString(tmp, manifest)

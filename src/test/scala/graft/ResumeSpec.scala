@@ -139,9 +139,18 @@ class ResumeSpec extends SparkSuite {
     val partial = TableIO.read(spark, s"$ckpt/cc_labels").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     assert(partial.exists(_._2 != 0L), "partial run must not be converged yet")
-    val resumed = ConnectedComponents.run(edges, ckptDir = Some(ckpt)).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    // labels committed over one graph never resume another with the same
+    // vertex count: the path with its vertex ids permuted (37 is prime to 64)
+    val permuted = (0L until n - 1).map(i => (i * 37 % n, (i + 1) * 37 % n)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException](ConnectedComponents.run(permuted, ckptDir = Some(ckpt)))
+    assert(err.getMessage.contains(s"$ckpt/cc_labels"), err.getMessage)
+    val (resumed, jobs) = jobsDuring(ConnectedComponents.run(edges, ckptDir = Some(ckpt)).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
     assert(resumed == clean, "resumed CC must equal the clean run")
+    // the resume check compares the fingerprint taken by the job that
+    // materializes the edge checkpoint: it counts nothing of its own
+    val counts = jobs.filter(_.stageInfos.exists(_.details.contains("count at ConnectedComponents.scala")))
+    assert(counts.isEmpty, s"${counts.size} count jobs on the resume path")
   }
 
   test("pipeline: kill-and-resume reproduces the fresh-run result exactly") {
@@ -235,6 +244,32 @@ class ResumeSpec extends SparkSuite {
       assert(jobs.isEmpty, s"the format check reads the $stage manifest and starts no job")
       assert(KgPipeline.stages.filter(new StageLog(spark, runDir).isCommitted) == Seq(stage))
     }
+  }
+
+  test("pipeline: a run directory from another whitelistMinCount or corpus fails the resume before any job") {
+    val runDir = tmpDir("graft-stale-inputs")
+    val log = new StageLog(spark, runDir)
+    KgPipeline.run(spark, sfDir, runDir) // whitelistMinCount = 3
+    val versions = KgPipeline.stages.map(s => TableIO.versions(log.stagePath(s)))
+    // the same directory rerun with another parameter: `triples` was gated
+    // at another count, so every stage from it on would be stale
+    val (err1, jobs1) = jobsDuring(intercept[IllegalArgumentException](
+      KgPipeline.run(spark, sfDir, runDir, whitelistMinCount = 1)))
+    assert(err1.getMessage.contains("stage triples ") && err1.getMessage.contains("whitelistMinCount"),
+      err1.getMessage)
+    assert(jobs1.isEmpty, "the inputs check reads the manifests and starts no job")
+    assert(KgPipeline.stages.map(s => TableIO.versions(log.stagePath(s))) == versions, "nothing recommitted")
+    // a half-deleted directory rerun over another corpus: the kept
+    // dictionary side does not know the plural surfaces, so resuming it
+    // would link them to null ids
+    import scala.reflect.io.Directory
+    for (stage <- Seq("candidates", "triples", "linked_triples", "canonical_triples"))
+      new Directory(new java.io.File(log.stagePath(stage))).deleteRecursively()
+    val (err2, jobs2) = jobsDuring(intercept[IllegalArgumentException](KgPipeline.run(spark, pluralSfDir, runDir)))
+    assert(err2.getMessage.contains("stage alias_dict ") && err2.getMessage.contains(": triples is") &&
+      err2.getMessage.contains(runDir), err2.getMessage)
+    assert(jobs2.isEmpty, "the inputs check reads the manifests and starts no job")
+    assert(KgPipeline.stages.filter(log.isCommitted) == Seq("alias_dict", "entity_canon"))
   }
 
   test("pipeline: an empty corpus and an all-gated run finish with no rows and a readable audit") {

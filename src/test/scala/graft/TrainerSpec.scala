@@ -95,6 +95,15 @@ class TrainerSpec extends SparkSuite {
     assert(p.slice(2 * hidden, 3 * hidden).exists(_ != 0.0), "wOut never updated")
   }
 
+  test("a checkpoint trained from another seed fails the resume, naming the seed") {
+    val dir = java.nio.file.Files.createTempDirectory("trainer-seed").toString
+    Trainer.trainNegSampling(cands, epochs = 2, ckptTable = Some(dir), ckptEvery = 1)
+    val e = intercept[IllegalArgumentException] {
+      Trainer.trainNegSampling(cands, epochs = 4, seed = 7L, ckptTable = Some(dir), ckptEvery = 1)
+    }
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("seed is 42 there but 7 now"), e.getMessage)
+  }
+
   test("a checkpoint table of the other trainer fails loudly as foreign") {
     // the two trainers share one checkpoint schema and one resume path, so
     // only the shape check tells a full-model checkpoint from a head one
