@@ -520,7 +520,7 @@ object Bench {
           f"[bench $job ${small}v$big] window(s) excluded (" +
             f"rejected > 1.0: ${e.rejected.map(r => f"$r%.3f").mkString(" ")}; " +
             f"steal-suspect: ${e.suspect.map(r => f"$r%.3f").mkString(" ")}) " +
-            "— re-running a replacement window")
+            "- re-running a replacement window")
         runRounds(reps)
         extra += 1
         e = estimate(all.toSeq, reps, suspectInfl)
@@ -537,7 +537,7 @@ object Bench {
       while (full && refined < maxRefineRounds && refineGate(e) && !stopEarly()) {
         System.err.println(
           f"[bench $job ${small}v$big] floor-refinement round ${refined + 1}/" +
-            f"$maxRefineRounds (raw ${e.raw}%.3f) — leftover budget")
+            f"$maxRefineRounds (raw ${e.raw}%.3f); leftover budget")
         runRounds(1)
         refined += 1
         e = estimate(all.toSeq, reps, suspectInfl)
@@ -720,7 +720,7 @@ object Bench {
         if (r > 0) {
           if (kgProbe.forall(_.tps < l.best.tps)) kgProbe = Some(l.best)
         } else System.err.println(
-          f"[bench] $tag probe warmup-only (${warm.tps}%.0f tps) — discarded")
+          f"[bench] $tag probe warmup-only (${warm.tps}%.0f tps), discarded")
         System.err.println(f"[bench] $tag p32 probe done at $elapsed%.0f s")
       } finally l.close()
     }

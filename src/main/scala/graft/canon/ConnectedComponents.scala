@@ -4,8 +4,20 @@ import graft.tableio.TableIO
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-/** Iterative connected-components canonicalizer (north rule:
+/** Connected-components canonicalizer, in two paths split by one bound.
+  * The caller picks the path from the `broadcastMaxDictRows` bound that also
+  * picks the entity joins (`Linking.lookup`), and both paths return the same
+  * labels: every vertex's component is the minimum id reachable from it.
+  *
+  * Below the bound, `onDriver`: the edges are collected by one Dataset
+  * action and a union-find on the driver labels them. The entity table built
+  * from these labels is broadcast at that size anyway, so it passes through
+  * the driver whatever CC does, and a fixed per-job cost no longer pays for
+  * every round of a handful of edges (BENCH.md "Serial floor").
+  *
+  * Above the bound, `run`: the iterative DataFrame CC (north rule:
   * "connected-components-style iterative DataFrame self-join with checkpointed
   * convergence"). No GraphX dependency — pure DataFrame hash-min propagation:
   *
@@ -49,7 +61,7 @@ import org.apache.spark.sql.functions._
   * resumes from the last committed labels (hash-min is monotone and
   * idempotent, so resuming from any intermediate labeling is exact), and
   * labels committed over another graph fail through `TableIO.resumable`.
-  * Production callers always pass a directory.
+  * `KgPipeline.run` passes a directory whenever it takes this path.
   */
 object ConnectedComponents {
 
@@ -139,7 +151,40 @@ object ConnectedComponents {
     // of one component may still carry different canonical ids
     if (!converged)
       System.err.println(s"[cc] WARNING: maxIter=$maxIter exhausted before " +
-        "convergence — returned labels may split components")
+        "convergence; returned labels may split components")
     labels
+  }
+
+  /** `run`'s labels, computed on the driver: one Dataset action collects the
+    * edges, and a union-find whose root is always the smaller id gives every
+    * vertex its component's minimum id. For edge sets the caller has bounded
+    * to broadcast size (the entity joins' bound); there are no rounds, so
+    * nothing to checkpoint or resume.
+    *
+    * @param edges DataFrame with two long columns `src`, `dst` (undirected).
+    * @return a local DataFrame (id: long, component: long).
+    */
+  def onDriver(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pairs = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
+    val parent = new mutable.LongMap[Long](2 * pairs.length)
+    // path halving: every vertex on the way points to its grandparent
+    def find(v: Long): Long = {
+      var x = v
+      var p = parent.getOrElseUpdate(x, x)
+      while (p != x) {
+        val gp = parent(p)
+        parent(x) = gp
+        x = gp
+        p = parent(x)
+      }
+      x
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.map(v => (v, find(v))).toSeq.toDF("id", "component")
   }
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   * the sorted RDD, and the result's consumers, read the same materialized
   * sort shuffle, so the row numbers are a permutation on any input leaf, a
   * cached one included. Like `RDD.zipWithIndex`, a call runs its jobs when it
-  * is made. Results are deterministic iff `order` is a total order (callers
+  * is made, and the row count those jobs collect comes back with the frame. Results are deterministic iff `order` is a total order (callers
   * must include a unique tie-break column — the same requirement oracle hash
   * parity already imposes).
   */
@@ -26,10 +26,11 @@ object Ranks {
     * number; `cum`, the inclusive running sum of `value` (a non-null
     * integral column); `total`, the sum of `value` over all rows. Equivalent
     * to `row_number()` and `sum(value)` over `Window.orderBy(order)` and
-    * `sum(value)` over `Window.partitionBy()`, without the funnel.
+    * `sum(value)` over `Window.partitionBy()`, without the funnel. Returned
+    * with its row count, which the offsets job has already collected.
     */
   def globalRank(df: DataFrame, order: Seq[Column], value: Column,
-                 rn: String, cum: String, total: String): DataFrame = {
+                 rn: String, cum: String, total: String): (DataFrame, Long) = {
     val v = df.columns.length
     // `value` is evaluated after the sort, so the shuffle carries no extra column
     val sorted = df.orderBy(order: _*).withColumn("__v", value.cast(LongType)).rdd
@@ -42,7 +43,7 @@ object Ranks {
     val sumOffsets = parts.scanLeft(0L)(_ + _._2)
     val grand = sumOffsets.last
     val schema = Seq(rn, cum, total).foldLeft(df.schema)(_.add(_, LongType, nullable = false))
-    df.sparkSession.createDataFrame(sorted.mapPartitionsWithIndex { (p, it) =>
+    val ranked = df.sparkSession.createDataFrame(sorted.mapPartitionsWithIndex { (p, it) =>
       var n = rowOffsets(p)
       var s = sumOffsets(p)
       it.map { r =>
@@ -50,13 +51,14 @@ object Ranks {
         Row.fromSeq(r.toSeq.take(v) ++ Seq(n, s, grand))
       }
     }, schema)
+    (ranked, rowOffsets.last)
   }
 
   /** Global 1-based row number in `order`, as column `out` (long). Equivalent
     * to `row_number().over(Window.orderBy(order))` without the funnel.
     */
   def globalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame =
-    globalRank(df, order, lit(1L), out, "__cum", "__total").drop("__cum", "__total")
+    globalRank(df, order, lit(1L), out, "__cum", "__total")._1.drop("__cum", "__total")
 
   /** Scalar aggregate of the whole input joined onto every row as `out` — the
     * replacement for `agg.over(Window.partitionBy())`, which is the same

@@ -19,7 +19,10 @@ import org.apache.spark.sql.functions._
   * magnitude smaller than the mention stream, so the join is a broadcast
   * hash join — zero shuffle of the big side. Zipfian alias frequencies make
   * the *output* of a shuffle join skewed; broadcasting sidesteps reduce-side
-  * skew entirely. For
+  * skew entirely. The caller sizes that decision from one bound,
+  * `KgPipeline`'s `broadcastMaxDictRows`, which also puts canonicalization's
+  * CC on the driver at or below it (the broadcast entity table passes
+  * through the driver anyway). For
   * dictionaries too big to broadcast, `lookup` degrades to `saltedLeftJoin`,
   * which spreads hot keys over `buckets` replicas: big side gets a
   * deterministic salt from hash(doc_id), dictionary rows are exploded
@@ -53,7 +56,7 @@ object Linking {
     val spark = counts.sparkSession
     import spark.implicits._
     Ranks.globalRank(counts.select("alias", "freq"), Seq(col("freq").desc, col("alias").asc),
-        col("freq"), "__rn", "__cum", "__total")
+        col("freq"), "__rn", "__cum", "__total")._1
       .select(col("alias"), (col("__rn") - 1).as("entity_id"), col("freq"),
         (col("freq").cast("double") / col("__total").cast("double")).as("prob"))
       .as[AliasEntry]

@@ -15,14 +15,16 @@ import org.apache.spark.sql.functions._
   * (`Extract.whitelisted`), one dictionary side (`endpointCounts` feeds the
   * vocabulary gate and the alias dictionary, `canonicalize` gives every
   * alias its entity id and canonical id) and one link pass (`link`: one
-  * `Linking.lookup` per endpoint, broadcast or salted by one
-  * `broadcastMaxDictRows` bound):
+  * `Linking.lookup` per endpoint). One `broadcastMaxDictRows` bound decides
+  * both sides: at or below it the entity joins broadcast and CC runs on the
+  * driver (`ConnectedComponents.onDriver`), above it the joins are salted
+  * and CC is the iterative DataFrame job (`ConnectedComponents.run`):
   *
   *   docs → fused extraction (candidates with their path signature `sig`)
   *        → triples (whitelist + vocabulary gates)
   *        → alias dictionary
   *        → entity table (alias, entity_id, canonical_id; CC over
-  *          alias-variant edges)
+  *          alias-variant edges, on the driver at or below the bound)
   *        → link pass (each endpoint looked up once: entity + canonical id)
   *        → canonical triples (a projection, partitioned by predicate)
   *
@@ -82,12 +84,16 @@ object KgPipeline {
   /** The canonical id of every entity of an alias dictionary, as
     * (alias, entity_id, canonical_id): CC runs on the stem-variant edges
     * only, and every entity outside them keeps its own id through one
-    * left-join coalesce. `ckptDir` makes CC's rounds durable
-    * (`ConnectedComponents.run`).
+    * left-join coalesce. `small` is the caller's `broadcastMaxDictRows`
+    * decision: the edges are at most the dictionary's rows, so at or below
+    * the bound CC runs on the driver (`ConnectedComponents.onDriver`);
+    * above it CC is the iterative DataFrame job, whose rounds `ckptDir`
+    * makes durable (`ConnectedComponents.run`).
     */
-  private def canonicalize(dict: DataFrame, ckptDir: Option[String]): DataFrame = {
+  private[graft] def canonicalize(dict: DataFrame, ckptDir: Option[String], small: Boolean): DataFrame = {
     val d = dict.select(col("alias"), col("entity_id"))
-    val cc = ConnectedComponents.run(variantEdges(d), ckptDir = ckptDir)
+    val edges = variantEdges(d)
+    val cc = if (small) ConnectedComponents.onDriver(edges) else ConnectedComponents.run(edges, ckptDir = ckptDir)
     d.join(cc, d("entity_id") === cc("id"), "left")
       .select(d("alias"), d("entity_id"), coalesce(cc("component"), d("entity_id")).as("canonical_id"))
   }
@@ -154,10 +160,10 @@ object KgPipeline {
       "entity_canon" -> entityCanon, "linked_triples" -> linked, "canonical_triples" -> Map(on("linked_triples", linked)))
   }
 
-  /** @param broadcastMaxDictRows dictionary-side row bound for the entity
-    *   joins, compared against the committed alias dictionary's row count
-    *   (see `defaultBroadcastMaxDictRows`). It picks the plan, not the rows,
-    *   so it is not a stage input.
+  /** @param broadcastMaxDictRows dictionary-side row bound for CC's path
+    *   and the entity joins, compared against the committed alias
+    *   dictionary's row count (see `defaultBroadcastMaxDictRows`). It picks
+    *   the plan, not the rows, so it is not a stage input.
     */
   def run(spark: SparkSession, sfDir: String, runDir: String,
           whitelistMinCount: Long = 3,
@@ -188,25 +194,28 @@ object KgPipeline {
       Linking.buildAliasDict(endpointCounts(triples, lit(1))).toDF()
     }
 
+    // the dictionary's committed row count (manifest, no job) decides CC's
+    // path and both entity joins. The entity table is row-for-row the
+    // dictionary, and the resume check guarantees both come from these
+    // `triples`, so every endpoint is in it and no OOV default is needed.
+    val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
+
     // the ENTITY table (alias, entity_id, canonical_id), partitioned by an
     // entity-id hash bucket (the Iceberg `bucket(N, entity_id)` transform
     // restated as a partition column) — point lookups prune to one bucket
     // directory instead of scanning the table, and the hash spreads write
     // volume evenly where raw entity_id would make one directory per entity
     val entities = stage("entity_canon", partitionBy = Seq("entity_bucket")) {
-      // CC rounds checkpoint durably inside the run dir: a mid-CC kill
-      // resumes from the last committed labels instead of restarting
-      canonicalize(aliasDict, Some(s"$runDir/cc"))
+      // above the bound CC rounds checkpoint durably inside the run dir: a
+      // mid-CC kill resumes from the last committed labels instead of
+      // restarting. Below it CC is one driver-side action with nothing to resume
+      canonicalize(aliasDict, Some(s"$runDir/cc"), dictIsSmall)
         .withColumn("entity_bucket", pmod(hash(col("entity_id")), lit(Linking.entityBuckets)))
     }
 
-    // the dictionary's committed row count (manifest, no job) decides both
-    // entity joins. The entity table is row-for-row the dictionary, and the
-    // resume check guarantees both come from these `triples`, so every
-    // endpoint is in it and no OOV default is needed. The lookup reads the
-    // committed scan: built as alias_dict ⋈ entity_canon, Spark stopped
-    // broadcasting the salted table (durable-zipf shuffle 0.38 → 1.6 MB).
-    val dictIsSmall = log.snapshot("alias_dict").rows <= broadcastMaxDictRows
+    // the lookup reads the committed scan: built as alias_dict ⋈
+    // entity_canon, Spark stopped broadcasting the salted table
+    // (durable-zipf shuffle 0.38 → 1.6 MB)
     val linked = stage("linked_triples") {
       link(triples, entities, dictIsSmall)
         .select(Seq("doc_id", "span_idx", "pred", "score", "subj", "subj_id", "obj", "obj_id",
@@ -221,8 +230,9 @@ object KgPipeline {
     * same dictionary side and the same entity joins as `run`: fused
     * extraction → corpus-derived vocabulary gate (shuffle agg + semi-joins)
     * → alias dictionary (shuffle agg + one sorted pass) →
-    * connected-components canonicalization (iterative shuffle) → link pass
-    * (one entity lookup per endpoint). TableIO is deliberately absent so the
+    * connected-components canonicalization (one edge collect and a
+    * union-find on the driver at or below the bound, the iterative shuffle
+    * job above it) → link pass (one entity lookup per endpoint). TableIO is deliberately absent so the
     * measurement scales the ENGINE's shuffle-bearing stages, not the local
     * filesystem. It applies no signature whitelist, so it equals
     * `run(whitelistMinCount = 1)` row for row (ResumeSpec).
@@ -230,9 +240,10 @@ object KgPipeline {
     * @param broadcastMaxDictRows `run`'s bound, compared against the
     *   vocabulary's row count (the gated dictionary is a subset of the
     *   vocabulary, so this bounds it from above): at or below it the
-    *   vocabulary semi-joins and both entity joins broadcast; above it the
-    *   entity joins are salted and the semi-joins left to AQE. The benchmark
-    *   keeps the broadcast form — its dictionary is bounded by the synthetic
+    *   vocabulary semi-joins and both entity joins broadcast and CC runs on
+    *   the driver; above it the entity joins are salted, the semi-joins left
+    *   to AQE and CC is the iterative DataFrame job. The benchmark keeps the
+    *   broadcast form — its dictionary is bounded by the synthetic
     *   vocabulary.
     */
   def canonicalTriplesInMemory(docs: Dataset[(Long, String)],
@@ -261,7 +272,8 @@ object KgPipeline {
     // re-aggregating the pair table. The checkpoint is LAZY and the job
     // that materializes it also counts its rows: the bound's one row count,
     // at no job of its own (`Dataset.count()` would plan an aggregate with a
-    // shuffle of its own over the leaf: one more job per call).
+    // shuffle of its own over the leaf: one more job per call). `small`
+    // picks CC's path and the entity joins, as `run`'s `dictIsSmall` does.
     val vocab = vocabulary(pairCounts, col("n")).localCheckpoint(eager = false)
     val small = vocab.queryExecution.toRdd.count() <= broadcastMaxDictRows
 
@@ -286,8 +298,10 @@ object KgPipeline {
     // times — the link pass `run` shares. The vocab gate itself is
     // equivalent to inner-join membership in the gated dictionary — an alias
     // is in that dictionary iff it survives the gate in some triple, and a
-    // triple survives iff BOTH its endpoints are in-vocab.
-    val entities = canonicalize(aliasDict, None)
+    // triple survives iff BOTH its endpoints are in-vocab. Below the bound
+    // CC is one edge collect and a union-find on the driver: at the
+    // benchmark's size that replaces ~15 round jobs over a handful of edges
+    val entities = canonicalize(aliasDict, None, small)
 
     // (D) output pass: re-extract, then gate + link + canonicalize in one
     // narrow stage. Default: two broadcast hash joins. The per-side form pays

@@ -135,7 +135,7 @@ object PipelineQueries {
       val freq = tok.groupBy("token").agg(count(lit(1)).as("freq"))
       val vocab = Ranks.globalRank(
         freq, Seq(col("freq").desc, col("token").asc), col("freq"), "__rn", "cum", "total")
-        .select(col("token").as("sampled"),
+        ._1.select(col("token").as("sampled"),
           expr("(cum - freq) * 1000000L div total").as("cum_lo"),
           expr("cum * 1000000L div total").as("cum_hi"))
       docs(s, dir)

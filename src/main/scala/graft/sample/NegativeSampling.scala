@@ -105,12 +105,12 @@ object NegativeSampling {
     * `withNegatives` (spec-verified), but the sample pool is never
     * round-tripped through the driver. Endpoint/word corruptions are drawn as
     * POOL INDICES by the same keyed RNG, then resolved by joining an indexed
-    * pool table (`Ranks.globalRowNumber`, one sorted pass over surface asc —
+    * pool table (`Ranks.globalRank`, one sorted pass over surface asc —
     * Spark's UTF-8 byte order, i.e. the SAME 0-based ordering a broadcast
     * pool sorted with `poolOrdering` gives `withNegatives`; plain `.sorted`
     * compares UTF-16 code units and diverges, see `poolOrdering`). The only
-    * driver traffic is the sorted pass's per-partition counts and the pool
-    * SIZE (one scalar); the index joins broadcast while the pool is
+    * driver traffic is the sorted pass's per-partition counts, whose sum is
+    * the pool SIZE; the index joins broadcast while the pool is
     * dictionary-sized and degrade to shuffle joins beyond that.
     *
     * `pool` is a single string column of candidate surfaces (used for both
@@ -126,10 +126,10 @@ object NegativeSampling {
     require(negLevel <= 1, "distributed path supports negLevel <= 1")
     val spark = cands.sparkSession
     import spark.implicits._
-    val idx = Ranks.globalRowNumber(
-      pool.toDF("surface").distinct(), Seq(col("surface").asc), "__rn")
-      .select((col("__rn") - 1).as("idx"), col("surface"))
-    val poolSize = idx.count().toInt // O(1) scalar, not the pool
+    val (ranked, rows) = Ranks.globalRank(
+      pool.toDF("surface").distinct(), Seq(col("surface").asc), lit(1L), "__rn", "__cum", "__total")
+    val idx = ranked.select((col("__rn") - 1).as("idx"), col("surface"))
+    val poolSize = rows.toInt
     val skel = cands.flatMap { c =>
       Iterator.single((c, 1, 0, -1L, -1L, -1, -1L)) ++
         (1 to negPer).iterator.map { k =>

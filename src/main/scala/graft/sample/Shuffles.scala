@@ -22,7 +22,7 @@ object Shuffles {
     Ranks.globalRank(
       df.withColumn("__h", md5num(concat(lit(s"$seed:"), col(keyCol).cast("string")))),
       Seq(col("__h").asc, col(keyCol).asc), lit(1L), "pos", "__cum", "__total")
-      .drop("__h", "__cum")
+      ._1.drop("__h", "__cum")
 
   /** Adds `pos` (1-based position in the seeded permutation) to `df`.
     * `keyCol` must be unique per row.

@@ -216,7 +216,7 @@ object Trainer {
         // would divide the gradient by 0 and silently NaN-poison the params;
         // fail loudly — the fix is a smaller stepsPerEpoch
         require(n > 0, s"micro-batch $mb of $stepsPerEpoch selected no " +
-          "examples in any partition — stepsPerEpoch exceeds the available " +
+          "examples in any partition: stepsPerEpoch exceeds the available " +
           "rows; lower it")
         epLoss += tot.loss; epCorrect += tot.correct; epN += n
         epPos += tot.posSum; epNeg += tot.negSum; epNPos += tot.nPos
@@ -239,7 +239,7 @@ object Trainer {
       // a degenerate all-positive / all-negative epoch means sampling broke;
       // fail loudly instead of reporting a silent NaN→0 margin (ADVICE r4)
       require(epNPos > 0 && epNPos < epN,
-        s"degenerate epoch label split: nPos=$epNPos of n=$epN — " +
+        s"degenerate epoch label split: nPos=$epNPos of n=$epN; " +
           "negative sampling produced no " +
           (if (epNPos == 0) "positives" else "negatives"))
       val margin = epPos / epNPos - epNeg / (epN - epNPos)

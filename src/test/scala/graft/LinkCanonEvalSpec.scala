@@ -66,9 +66,10 @@ class LinkCanonEvalSpec extends SparkSuite {
         val got = rows(Linking.buildAliasDict(counts).toDF(), "entity_id")
         assert(got == rows(reference(counts), "entity_id"), s"$name at $partitions partitions")
         assert(got.isEmpty == (name == "empty"), s"$name at $partitions partitions")
-        val ranked = Ranks.globalRank(counts.select("alias", "freq"),
+        val (ranked, rankedRows) = Ranks.globalRank(counts.select("alias", "freq"),
           Seq(col("freq").desc, col("alias").asc), col("freq"), "rn", "cum", "total")
         assert(rows(ranked, "rn") == rows(ranksReference(counts), "rn"), s"Ranks on $name at $partitions partitions")
+        assert(rankedRows == got.size, s"Ranks' row count on $name at $partitions partitions")
       }
     } finally {
       conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }

@@ -235,9 +235,11 @@ class PlanQualitySpec extends SparkSuite {
   }
 
   /** The executed plans of the in-memory job's dictionary side on the
-    * plural-variant fixture, which gives CC a non-empty edge set.
+    * plural-variant fixture, which gives CC a non-empty edge set. Bound 0
+    * keeps CC on its DataFrame path, whose rounds these cases inspect.
     */
-  private lazy val pluralPlans: Seq[SparkPlan] = plansOf(KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir)))
+  private lazy val pluralPlans: Seq[SparkPlan] =
+    plansOf(KgPipeline.canonicalTriplesInMemory(rawDocs(pluralSfDir), broadcastMaxDictRows = 0L))
 
   test("a CC round plans two joins; the edge checkpoint reads its input once, without a Union") {
     // a round's own label rides sym's self-loop rows, so one sym ⋈ labels
@@ -311,12 +313,16 @@ class PlanQualitySpec extends SparkSuite {
     assert(planless.size == rounds + 1, s"${planless.size} RDD jobs for $rounds rounds")
   }
 
-  test("the in-memory job on the plural fixture runs at most 32 jobs") {
+  test("the in-memory job on the plural fixture runs at most 17 jobs") {
     // the dictionary side is a fixed serial term per call, paid job by job.
-    // 32 is the measured count: it reads 31 when AQE plans round 1 of CC
-    // with one job fewer
+    // At the default bound CC is one edge collect on the driver, and 17 is
+    // the measured count. At bound 0 CC runs its DataFrame rounds and the
+    // entity joins are salted: 35 is that measured count, and it reads one
+    // fewer when AQE plans round 1 of CC with one job fewer
     val docs: Dataset[(Long, String)] = rawDocs(pluralSfDir)
-    val (_, jobs) = jobsDuring(KgPipeline.canonicalTriplesInMemory(docs).collect())
-    assert(jobs.size <= 32, s"canonicalTriplesInMemory ran ${jobs.size} jobs")
+    for ((bound, most) <- Seq(KgPipeline.defaultBroadcastMaxDictRows -> 17, 0L -> 35)) {
+      val (_, jobs) = jobsDuring(KgPipeline.canonicalTriplesInMemory(docs, bound).collect())
+      assert(jobs.size <= most, s"canonicalTriplesInMemory ran ${jobs.size} jobs at bound $bound")
+    }
   }
 }

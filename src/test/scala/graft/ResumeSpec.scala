@@ -210,17 +210,21 @@ class ResumeSpec extends SparkSuite {
     }
   }
 
+  /** The two sides of the dictionary bound: CC on the driver, CC as DataFrame rounds. */
+  private val bounds = Seq(KgPipeline.defaultBroadcastMaxDictRows, 0L)
+
   test("pipeline: run(whitelistMinCount = 1) equals canonicalTriplesInMemory (as a multiset)") {
     // the benchmarked in-memory job applies no signature whitelist; with the
     // gate opened, the shipped durable job must emit exactly its rows — on
-    // sf0.001 and on the plural-variant fixture, where CC has edges
+    // sf0.001 and on the plural-variant fixture, where CC has edges, on
+    // both sides of the bound
     val cols = Seq("subj_id", "pred", "obj_id", "subj", "obj", "doc_id", "span_idx", "score").map(col)
-    for (dir <- Seq(sfDir, pluralSfDir)) {
-      val durable = sortedRows(
-        KgPipeline.run(spark, dir, tmpDir("graft-wl1"), whitelistMinCount = 1).select(cols: _*))
-      val inMemory = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir)).select(cols: _*))
-      assert(durable.nonEmpty, dir)
-      assert(durable == inMemory, dir)
+    for (dir <- Seq(sfDir, pluralSfDir); bound <- bounds) {
+      val durable = sortedRows(KgPipeline.run(spark, dir, tmpDir("graft-wl1"), whitelistMinCount = 1,
+        broadcastMaxDictRows = bound).select(cols: _*))
+      val inMemory = sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir), bound).select(cols: _*))
+      assert(durable.nonEmpty, s"$dir at bound $bound")
+      assert(durable == inMemory, s"$dir at bound $bound")
     }
   }
 
@@ -292,33 +296,39 @@ class ResumeSpec extends SparkSuite {
   test("pipeline: a run killed at sampled job starts resumes to the fresh run's rows") {
     // the kill sweep, sampled to fit the suite: a listener cancels the k-th
     // job of `run` and every later one, so the run dies at or just after its
-    // k-th job; rerunning over the same directory must give the fresh rows
-    val (dir, freshDir) = (pluralSfDir, tmpDir("graft-sweep"))
-    val (_, starts) = jobsDuring(KgPipeline.run(spark, dir, freshDir))
-    val fresh = sortedRows(TableIO.read(spark, s"$freshDir/canonical_triples"))
-    val ccStarts = starts.indices.map(_ + 1)
-      .filter(k => starts(k - 1).stageInfos.exists(_.details.contains("ConnectedComponents.scala")))
-    assert(ccStarts.nonEmpty, "no job of the run started in ConnectedComponents")
-    // every ninth job start, CC's first and last, never the run's last job
-    // (it may finish before its cancel lands)
-    val sample = ((1 until starts.size by 9) ++ Seq(ccStarts.head, ccStarts.last))
-      .filter(_ < starts.size).distinct.sorted
+    // k-th job; rerunning over the same directory must give the fresh rows.
+    // Swept on both sides of the bound; the CC rounds to sample run at bound 0
+    val dir = pluralSfDir
     val sc = spark.sparkContext
-    for (k <- sample) {
-      val runDir = tmpDir("graft-sweep")
-      val started = new AtomicInteger()
-      val killer = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (started.incrementAndGet() >= k) sc.cancelJob(e.jobId, s"kill sweep from job start $k")
+    val fresh = bounds.map { bound =>
+      val freshDir = tmpDir("graft-sweep")
+      val (_, starts) = jobsDuring(KgPipeline.run(spark, dir, freshDir, broadcastMaxDictRows = bound))
+      val rows = sortedRows(TableIO.read(spark, s"$freshDir/canonical_triples"))
+      val ccStarts = starts.indices.map(_ + 1)
+        .filter(k => starts(k - 1).stageInfos.exists(_.details.contains("ConnectedComponents.scala")))
+      if (bound == 0L) assert(ccStarts.nonEmpty, "no job of the run started in ConnectedComponents")
+      // every ninth job start, at bound 0 CC's first and last, never the
+      // run's last job (it may finish before its cancel lands)
+      val ccSample = if (bound == 0L) Seq(ccStarts.head, ccStarts.last) else Nil
+      val sample = ((1 until starts.size by 9) ++ ccSample).filter(_ < starts.size).distinct.sorted
+      for (k <- sample) {
+        val runDir = tmpDir("graft-sweep")
+        val started = new AtomicInteger()
+        val killer = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            if (started.incrementAndGet() >= k) sc.cancelJob(e.jobId, s"kill sweep from job start $k")
+        }
+        sc.addSparkListener(killer)
+        val killed = try { KgPipeline.run(spark, dir, runDir, broadcastMaxDictRows = bound); false }
+          catch { case _: Exception => true }
+          finally sc.removeSparkListener(killer)
+        assert(killed, s"the run outlived a kill from job start $k of ${starts.size} at bound $bound")
+        assert(sortedRows(KgPipeline.run(spark, dir, runDir, broadcastMaxDictRows = bound)) == rows,
+          s"the run killed from job start $k of ${starts.size} at bound $bound resumed to other rows")
       }
-      sc.addSparkListener(killer)
-      val killed = try { KgPipeline.run(spark, dir, runDir); false }
-        catch { case _: Exception => true }
-        finally sc.removeSparkListener(killer)
-      assert(killed, s"the run outlived a kill from job start $k of ${starts.size}")
-      assert(sortedRows(KgPipeline.run(spark, dir, runDir)) == fresh,
-        s"the run killed from job start $k of ${starts.size} resumed to other rows")
+      rows
     }
+    assert(fresh.distinct.size == 1, "the fresh runs at the two bounds differ")
   }
 
   test("pipeline: five docs over 50 shuffle partitions equal one partition, in both jobs") {
@@ -328,22 +338,25 @@ class ResumeSpec extends SparkSuite {
     val cols = Seq("subj_id", "pred", "obj_id", "subj", "obj", "doc_id", "span_idx", "score").map(col)
     val conf = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
     val saved = conf.map(spark.conf.getOption)
-    def outputs(partitions: Int) = {
+    def outputs(partitions: Int, bound: Long) = {
       spark.conf.set(conf(0), partitions.toLong)
       spark.conf.set(conf(1), false)
       val runDir = tmpDir("graft-parts")
-      val durable = sortedRows(KgPipeline.run(spark, dir, runDir, whitelistMinCount = 1).select(cols: _*))
+      val durable = sortedRows(KgPipeline.run(spark, dir, runDir, whitelistMinCount = 1,
+        broadcastMaxDictRows = bound).select(cols: _*))
       val entities = TableIO.read(spark, s"$runDir/entity_canon")
-      (durable, sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir)).select(cols: _*)),
+      (durable, sortedRows(KgPipeline.canonicalTriplesInMemory(rawDocs(dir), bound).select(cols: _*)),
         entities.filter(col("canonical_id") =!= col("entity_id")).count())
     }
-    val (many, one) =
-      try (outputs(50), outputs(1))
-      finally conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    assert(many._1.nonEmpty && many._3 > 0, "the five docs give output rows and CC edges")
-    assert(many._1 == many._2, "run == in-memory at 50 partitions")
-    assert(one._1 == one._2, "run == in-memory at 1 partition")
-    assert(many == one, "50 partitions == 1 partition")
+    for (bound <- bounds) {
+      val (many, one) =
+        try (outputs(50, bound), outputs(1, bound))
+        finally conf.zip(saved).foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      assert(many._1.nonEmpty && many._3 > 0, s"the five docs give output rows and CC edges at bound $bound")
+      assert(many._1 == many._2, s"run == in-memory at 50 partitions, bound $bound")
+      assert(one._1 == one._2, s"run == in-memory at 1 partition, bound $bound")
+      assert(many == one, s"50 partitions == 1 partition at bound $bound")
+    }
   }
 
   test("pipeline emits canonicalized entities (plural variants merged)") {

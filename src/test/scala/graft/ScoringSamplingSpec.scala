@@ -2,7 +2,7 @@ package graft
 
 import graft.corpus.Corpus
 import graft.extract.Extract
-import graft.functions.Hamming64
+import graft.functions.{Hamming64, Ranks}
 import graft.sample.NegativeSampling
 import graft.score.{Labels, NeuralScorer}
 import org.apache.spark.sql.functions._
@@ -84,6 +84,18 @@ class ScoringSamplingSpec extends SparkSuite {
       .toSet
     assert(viaJoin == viaBroadcast)
     assert(viaJoin.nonEmpty)
+  }
+
+  test("distributed negative sampling runs only its pool's sorted pass when called") {
+    // the pool size is the row count the sorted pass collects: the call runs
+    // exactly the jobs of ranking the pool, and no count of its own
+    cands.count()
+    val pool = cands.select(col("x"))
+    val (_, rankJobs) = jobsDuring(Ranks.globalRank(pool.toDF("surface").distinct(),
+      Seq(col("surface").asc), lit(1L), "rn", "cum", "total"))
+    val (_, jobs) = jobsDuring(NegativeSampling.withNegativesDistributed(cands, pool, negPer = 3, negLevel = 1))
+    assert(rankJobs.nonEmpty && jobs.size == rankJobs.size,
+      s"${jobs.size} jobs for the call, ${rankJobs.size} for its pool's rank")
   }
 
   test("hamming64 native expression: eval, codegen, SQL registration") {
