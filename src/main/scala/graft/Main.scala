@@ -12,6 +12,8 @@ import org.apache.spark.sql.SparkSession
   * resumable: re-submitting with the same runDir continues after the last
   * committed stage (ckpt.StageLog); one committed from another corpus or
   * whitelistMinCount fails loudly before any job, naming stage and input.
+  * The canonical triples it counts are a projection of the last stage,
+  * `linked_triples` (partitioned by predicate), not a table of their own.
   */
 object Main {
   def main(args: Array[String]): Unit = {

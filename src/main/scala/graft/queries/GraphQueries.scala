@@ -38,8 +38,7 @@ object GraphQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // J1 skew path: salted repartition join == plain left join
     "q11_salted_join" -> ((s, dir) => {
-      val vocab = graft.functions.Ranks.globalRowNumber(
-        tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq")),
+      val vocab = graft.functions.Ranks.globalRowNumber(tokenFreq(s, dir),
         Seq(col("freq").desc, col("token").asc), "__rn")
         .withColumn("id", (col("__rn") - 1).cast("int"))
         .filter(col("id") < 10)

@@ -66,10 +66,7 @@ object MiscQueries {
     // A6: negative-sampling smoothing p^0.75 / Σ p^0.75, integer-scaled;
     // the normalizer is a broadcast scalar, not a single-partition window
     "q29_power_smooth" -> ((s, dir) => {
-      val freq = docs(s, dir)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .filter(length(col("token")) > 0)
-        .groupBy("token").agg(count(lit(1)).as("freq"))
+      val freq = tokenFreq(s, dir)
         .withColumn("s", expr("cast(floor(pow(freq, 0.75D) * 1000000D) as bigint)"))
       Ranks.withTotal(freq, sum("s"), "total")
         .select(col("token"), expr("s * 1000000L div total").as("smooth_ppm"))
@@ -79,11 +76,7 @@ object MiscQueries {
     // (vocab ranked scale-safe in one sorted pass, Ranks.globalRowNumber)
     "q30_important_vocab" -> ((s, dir) => {
       val imp = importantTokens.map(x => s"'$x'").mkString(", ")
-      val freq = docs(s, dir)
-        .select(explode(split(col("text"), " ")).as("token"))
-        .filter(length(col("token")) > 0)
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-      Ranks.globalRowNumber(freq, Seq(col("freq").desc, col("token").asc), "__rn")
+      Ranks.globalRowNumber(tokenFreq(s, dir), Seq(col("freq").desc, col("token").asc), "__rn")
         .withColumn("rank", col("__rn").cast("int"))
         .filter(col("rank") <= 10 || expr(s"array_contains(array($imp), token)"))
         .select("token", "freq", "rank")
@@ -187,11 +180,7 @@ object MiscQueries {
     // A3: vocab with specials appended; OOV pseudo-count = mass of the
     // truncated tail (semeval2sdp.py:227-230)
     "q37_vocab_specials" -> ((s, dir) => {
-      val freq = Ranks.globalRowNumber(
-        docs(s, dir)
-          .select(explode(split(col("text"), " ")).as("token"))
-          .filter(length(col("token")) > 0)
-          .groupBy("token").agg(count(lit(1)).as("freq")),
+      val freq = Ranks.globalRowNumber(tokenFreq(s, dir),
         Seq(col("freq").desc, col("token").asc), "rank")
       val kept = freq.filter(col("rank") <= 20).select("token", "freq")
       val tailMass = freq.filter(col("rank") > 20)

@@ -31,16 +31,14 @@ object RelationalQueries {
           count(lit(1)).as("n_rows"))),
 
     // A1: token frequency count (vocab pass #1 of the reference)
-    "q02_token_freq" -> ((s, dir) =>
-      tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq"))),
+    "q02_token_freq" -> ((s, dir) => tokenFreq(s, dir)),
 
     // W2/A2: vocab rank = id by (freq desc, token asc) — deterministic
     // tie-break the reference lacks (Counter.most_common is insertion-order).
     // Ranked in one sorted pass (Ranks.globalRowNumber), NOT a single-partition
     // window — the vocabulary grows with the corpus (Heaps' law)
     "q03_vocab_rank" -> ((s, dir) => {
-      val freq = tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq"))
-      Ranks.globalRowNumber(freq, Seq(col("freq").desc, col("token").asc), "__rn")
+      Ranks.globalRowNumber(tokenFreq(s, dir), Seq(col("freq").desc, col("token").asc), "__rn")
         .withColumn("id", (col("__rn") - 1).cast("int"))
         .filter(col("id") < 1000)
         .select("token", "freq", "id")
@@ -49,17 +47,13 @@ object RelationalQueries {
     // A4: unigram distribution as parts-per-million via integer div; the
     // corpus total is a broadcast 1-row scalar, not a global window
     "q04_unigram_ppm" -> ((s, dir) =>
-      Ranks.withTotal(
-        tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq")),
-        sum("freq"), "total")
+      Ranks.withTotal(tokenFreq(s, dir), sum("freq"), "total")
         .select(col("token"), expr("freq * 1000000L div total").as("ppm"))),
 
     // J1/P10: dictionary join with OOV default — the entity-linking primitive
     // (vocab2idx, semeval2sdp.py:264-271): top-100 vocab, misses → id 100
     "q05_dict_join_oov" -> ((s, dir) => {
-      val vocab = Ranks.globalRowNumber(
-        tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq")),
-        Seq(col("freq").desc, col("token").asc), "__rn")
+      val vocab = Ranks.globalRowNumber(tokenFreq(s, dir), Seq(col("freq").desc, col("token").asc), "__rn")
         .withColumn("id", (col("__rn") - 1).cast("int"))
         .filter(col("id") < 100)
         .select(col("token").as("v_token"), col("id"))

@@ -21,6 +21,10 @@ private[queries] object Tables {
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "token")))
       .filter(length(col("token")) > 0)
 
+  /** Corpus frequency `(token, freq)` of every token of `tokens`. */
+  def tokenFreq(s: SparkSession, dir: String): DataFrame =
+    tokens(s, dir).groupBy("token").agg(count(lit(1)).as("freq"))
+
   /** The DuckDB side of `tokens`. */
   val tokensSql =
     """SELECT doc_id, unnest(string_split(text, ' ')) AS token,

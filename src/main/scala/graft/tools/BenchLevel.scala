@@ -22,23 +22,20 @@ import org.apache.spark.sql.functions._
   *    aggregations + connected-components canonicalization + the link
   *    pass. This is the job the north rule's scaling criterion
   *    names; round 2 scaled only the fused kernel (judge finding #2).
-  *    Between pipeline reps the SQL cache is cleared — the job persists its
-  *    triple/dictionary intermediates, and Spark's CacheManager matches by
-  *    canonicalized plan, so a second identical rep would silently reuse the
-  *    first rep's cache and measure nothing.
+  *    The job caches nothing: its intermediates (the pair table and the
+  *    vocabulary) are `localCheckpoint`s, whose blocks the between-rep fence
+  *    drops, so every rep re-executes the full dataflow.
   *
   *    Two pipeline-specific choices, both applied identically at every
   *    parallelism level:
-  *    1. AQE is OFF. Measured on this job, adaptive replanning costs ~6-17 s
-  *       of driver time PER ACTION (stage-time sum stays under 1 s) because
-  *       every round of the iterative stages re-plans a deeply nested tree of
-  *       cached subplans. On a real 100 TB run stages are minutes long and
-  *       that fixed driver cost amortizes to noise; on a seconds-scale local
-  *       rep it swamps the data path and — being a SERIAL term identical at
-  *       N and 4N — would corrupt the scaling ratio in either direction.
-  *       Shuffle partitioning is already right-sized statically
-  *       (partitions = cores) and every small join carries an explicit
-  *       broadcast hint, which is exactly the work AQE would do here.
+  *    1. AQE is OFF, because the recorded pipeline 1→4 figure
+  *       (BENCH_r05.json) was measured with it off. It was chosen when
+  *       adaptive re-planning cost seconds of driver time per action over
+  *       the iterative CC rounds' nested subplans. The job has since dropped
+  *       two eager checkpoints and, below the dictionary bound, runs CC on
+  *       the driver with no rounds; the setting's effect at this bench's
+  *       scale has not been re-measured since. At test scale, AQE off made
+  *       a call 24–29% slower (plural sf0.001 and sf0.01, ROADMAP.md).
   *    2. The replicated corpus gets a VOCABULARY-GROWING rewrite (see
   *       `docs`): each copy contributes its own mention-surface variants, so
   *       the alias dictionary and the CC variant graph grow with corpus size
@@ -96,9 +93,9 @@ object BenchLevel {
       .master(s"local[$cores]")
       .appName(s"graft-bench-level-$cores-$job")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      // AQE off for the pipeline job: see "Jobs" above (driver replanning of
-      // the nested cached/iterative plans costs seconds per action at this
-      // scale; partitioning is statically right-sized, broadcasts explicit)
+      // AQE off for the pipeline job: see "Jobs" above (kept as the 1→4
+      // record measured it; not re-measured at this scale since CC left
+      // its rounds below the bound)
       .config("spark.sql.adaptive.enabled", (job != "pipeline").toString)
       // pipeline reads its corpus from a local parquet snapshot; 2 MB
       // splits give every pair level many input-task waves per core for

@@ -8,7 +8,7 @@ import graft.pipeline.KgPipeline
 import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{CommandResultExec, MapPartitionsExec, QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, MapPartitionsExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -185,24 +185,23 @@ class PlanQualitySpec extends SparkSuite {
   }
 
   test("run's link pass: two entity joins write linked_triples, canonical_triples is joinless") {
-    // each endpoint is looked up once, in the entity table; canonical_triples
-    // only projects linked_triples — on the broadcast and the salted path
+    // each endpoint is looked up once, in the entity table; the canonical
+    // triples only project the committed linked_triples — on the broadcast
+    // and the salted path. A fresh run writes each stage once and nothing else
     for (bound <- Seq(KgPipeline.defaultBroadcastMaxDictRows, 0L)) {
       val runDir = java.nio.file.Files.createTempDirectory("graft-linkplan").toString
-      def writes(stage: String)(p: SparkPlan): Boolean =
-        all(p).collectFirst { case w: DataWritingCommandExec => w.cmd }.exists {
-          case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toString.contains(s"$runDir/$stage/")
-          case _ => false
+      def written(p: SparkPlan): Option[String] =
+        all(p).collectFirst { case w: DataWritingCommandExec => w.cmd }.collect {
+          case i: InsertIntoHadoopFsRelationCommand if i.outputPath.toString.contains(s"$runDir/") =>
+            i.outputPath.toString.split(s"$runDir/", 2)(1).takeWhile(_ != '/')
         }
-      val stages = Seq("linked_triples", "canonical_triples")
-      val plans = executedPlans(KgPipeline.run(spark, sfDir, runDir, broadcastMaxDictRows = bound)) { ps =>
-        stages.forall(s => ps.exists(writes(s)))
-      }
-      val Seq(linked, canonical) = stages.map { s =>
-        val ws = plans.filter(writes(s))
-        assert(ws.size == 1, s"expected one write of $s at bound $bound, got ${ws.size}")
-        ws.head
-      }
+      var result: DataFrame = null
+      val plans = executedPlans {
+        result = KgPipeline.run(spark, sfDir, runDir, broadcastMaxDictRows = bound)
+      }(ps => KgPipeline.stages.forall(s => ps.exists(written(_).contains(s))))
+      val tables = plans.flatMap(written)
+      assert(tables.sorted == KgPipeline.stages.sorted, s"tables written at bound $bound: $tables")
+      val linked = plans.find(written(_).contains("linked_triples")).get
       val joins = all(linked).collect { case j: BaseJoinExec => j }
       assert(joins.size == 2, s"expected two entity joins at bound $bound:\n$linked")
       joins.foreach { j =>
@@ -211,8 +210,12 @@ class PlanQualitySpec extends SparkSuite {
         else assert(j.leftKeys.exists(_.references.exists(_.name == "__salt")) &&
           j.rightKeys.exists(_.references.exists(_.name == "__salt")), s"salted join without __salt:\n$j")
       }
-      val canonicalJoins = all(canonical).collect { case j: BaseJoinExec => j }
-      assert(canonicalJoins.isEmpty, s"canonical_triples joins at bound $bound:\n$canonical")
+      val canonical = result.queryExecution.executedPlan
+      assert(all(canonical).collect { case j: BaseJoinExec => j }.isEmpty,
+        s"run's result joins at bound $bound:\n$canonical")
+      val scans = all(canonical).collect { case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString) }
+      assert(scans.size == 1 && scans.head.forall(_.contains(s"$runDir/linked_triples/data/")),
+        s"run's result does not scan the linked_triples snapshot at bound $bound:\n$canonical")
     }
   }
 

@@ -6,6 +6,7 @@ import graft.tableio.TableIO
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
@@ -164,7 +165,7 @@ class ResumeSpec extends SparkSuite {
     // stage commits (as if the job died before committing them)
     KgPipeline.run(spark, sfDir, resumeDir)
     import scala.reflect.io.Directory
-    for (stage <- Seq("alias_dict", "linked_triples", "entity_canon", "canonical_triples")) {
+    for (stage <- Seq("alias_dict", "linked_triples", "entity_canon")) {
       new Directory(new java.io.File(s"$resumeDir/$stage")).deleteRecursively()
     }
     val resumed = sortedRows(KgPipeline.run(spark, sfDir, resumeDir))
@@ -267,13 +268,23 @@ class ResumeSpec extends SparkSuite {
     // dictionary side does not know the plural surfaces, so resuming it
     // would link them to null ids
     import scala.reflect.io.Directory
-    for (stage <- Seq("candidates", "triples", "linked_triples", "canonical_triples"))
+    for (stage <- Seq("candidates", "triples", "linked_triples"))
       new Directory(new java.io.File(log.stagePath(stage))).deleteRecursively()
     val (err2, jobs2) = jobsDuring(intercept[IllegalArgumentException](KgPipeline.run(spark, pluralSfDir, runDir)))
     assert(err2.getMessage.contains("stage alias_dict ") && err2.getMessage.contains(": triples is") &&
       err2.getMessage.contains(runDir), err2.getMessage)
     assert(jobs2.isEmpty, "the inputs check reads the manifests and starts no job")
     assert(KgPipeline.stages.filter(log.isCommitted) == Seq("alias_dict", "entity_canon"))
+    // a directory committed before the stage format changed (six stages, an
+    // unpartitioned triple table): its `candidates` records format 1
+    val oldDir = tmpDir("graft-stale-format")
+    new StageLog(spark, oldDir).runStage("candidates", inputs = Map("format" -> "1",
+      "corpus" -> TableIO.listingFingerprint(s"$sfDir/documents.parquet")))(Seq((1L, "x")).toDF("id", "v"))
+    val (err3, jobs3) = jobsDuring(intercept[IllegalArgumentException](KgPipeline.run(spark, sfDir, oldDir)))
+    assert(err3.getMessage.contains("stage candidates ") && err3.getMessage.contains(": format is 1"),
+      err3.getMessage)
+    assert(jobs3.isEmpty, "the inputs check reads the manifests and starts no job")
+    assert(KgPipeline.stages.filter(new StageLog(spark, oldDir).isCommitted) == Seq("candidates"))
   }
 
   test("pipeline: an empty corpus and an all-gated run finish with no rows and a readable audit") {
@@ -302,8 +313,8 @@ class ResumeSpec extends SparkSuite {
     val sc = spark.sparkContext
     val fresh = bounds.map { bound =>
       val freshDir = tmpDir("graft-sweep")
-      val (_, starts) = jobsDuring(KgPipeline.run(spark, dir, freshDir, broadcastMaxDictRows = bound))
-      val rows = sortedRows(TableIO.read(spark, s"$freshDir/canonical_triples"))
+      val (result, starts) = jobsDuring(KgPipeline.run(spark, dir, freshDir, broadcastMaxDictRows = bound))
+      val rows = sortedRows(result)
       val ccStarts = starts.indices.map(_ + 1)
         .filter(k => starts(k - 1).stageInfos.exists(_.details.contains("ConnectedComponents.scala")))
       if (bound == 0L) assert(ccStarts.nonEmpty, "no job of the run started in ConnectedComponents")
@@ -416,5 +427,16 @@ class ResumeSpec extends SparkSuite {
       .filter(_.startsWith("entity_bucket="))
     assert(bucketDirs.nonEmpty, "entity table must lay out bucket partition dirs")
     assert(entities.filter($"entity_bucket" === 0).count() < entities.count())
+    // and the triple table partitioned by predicate: pred= dirs, and a
+    // one-predicate read prunes to its directory
+    val predDirs = new java.io.File(log.snapshot("linked_triples").dataDir).listFiles().map(_.getName)
+      .filter(_.startsWith("pred="))
+    assert(predDirs.length > 1, "triple table must lay out pred partition dirs")
+    val triples = TableIO.read(spark, log.stagePath("linked_triples"))
+    val onePred = triples.filter($"pred" === triples.select("pred").as[String].first())
+    assert(onePred.collect().length < linked.length)
+    val scan = onePred.queryExecution.executedPlan.collectFirst { case f: FileSourceScanExec => f }
+    assert(scan.exists(s => s.partitionFilters.nonEmpty && s.metrics("numPartitions").value == 1),
+      s"a one-predicate read must prune to one pred directory:\n${onePred.queryExecution.executedPlan}")
   }
 }
