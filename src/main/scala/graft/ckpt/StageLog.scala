@@ -42,14 +42,11 @@ class StageLog(spark: SparkSession, runDir: String) {
   }
 
   /** Per-partition lineage of the run: (stage, part_id, rows), one row per
-    * write task that committed data. Fails, naming the stage, on a manifest
-    * that predates per-task row counts.
+    * write task that committed data.
     */
   def lineage(stages: Seq[String]): DataFrame =
     spark.createDataFrame(stages.flatMap { s =>
-      val tasks = snapshot(s).taskRows.getOrElse(
-        sys.error(s"stage $s: manifest has no per-task row counts; rerun the stage to rebuild its lineage"))
-      tasks.toSeq.sorted.map { case (part, rows) => (s, part, rows) }
+      snapshot(s).taskRows.toSeq.sorted.map { case (part, rows) => (s, part, rows) }
     }).toDF("stage", "part_id", "rows")
 
   /** Stage-level metrics: (stage, rows, version) per committed stage. */

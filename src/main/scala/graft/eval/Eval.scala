@@ -3,12 +3,12 @@ package graft.eval
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Evaluation as typed Aggregators (SURVEY.md A9/A10; reference:
-  * experiment_helper.py:37-88 and the SemEval perl scorer). Two finishes over
-  * one associative confusion buffer:
-  *  - `PrF1Aggregator`: per-full-label (direction-distinct) macro, the
+/** Evaluation as one typed Aggregator (SURVEY.md A9/A10; reference:
+  * experiment_helper.py:37-88 and the SemEval perl scorer): an associative
+  * confusion buffer with two finishes —
+  *  - `evaluate`: per-full-label (direction-distinct) macro, the
   *    experiment_helper.py in-training view;
-  *  - `OfficialPrF1Aggregator`: the scorer's official "(9+1)-way with
+  *  - `evaluateOfficial`: the scorer's official "(9+1)-way with
   *    directionality" metric — direction-collapsed classes, direction errors
   *    penalized in both P and R — anchored against the scorer's shipped
   *    result_scores{1,2,3,5}.txt golden samples by ScorerGoldenSpec.
@@ -59,102 +59,62 @@ object Eval {
     *  - macro = unweighted mean of per-class P, R, F1.
     */
   def officialStats(conf: Confusion): EvalStats = {
-    val n = conf.values.sum
-    val correct = conf.collect { case ((p, l), c) if p == l && p != SkipLabel => c }.sum
-
-    def labelCount(r: String) =
-      conf.collect { case ((_, l), v) if relationOf(l) == r => v }.sum
     val scored = conf.keys.map(k => relationOf(k._2)).toSeq.distinct.sorted
       .filterNot(r => r == "Other" || r == SkipLabel)
-
-    def tp(r: String) =
-      conf.collect { case ((p, l), c) if p == l && relationOf(p) == r => c }.sum
-    def predCount(r: String) =
-      conf.collect { case ((p, _), v) if relationOf(p) == r => v }.sum
-    def safeDiv(a: Double, b: Double) = if (b == 0) 0.0 else a / b
-
-    val perP = scored.map(r => safeDiv(tp(r).toDouble, predCount(r).toDouble))
-    val perR = scored.map(r => safeDiv(tp(r).toDouble, labelCount(r).toDouble))
-    val perF = perP.zip(perR).map { case (p, r) => safeDiv(2 * p * r, p + r) }
-
-    val mP = safeDiv(scored.map(tp).sum.toDouble, scored.map(predCount).sum.toDouble)
-    val mR = safeDiv(scored.map(tp).sum.toDouble, scored.map(labelCount).sum.toDouble)
-
-    EvalStats(
-      accuracy = safeDiv(correct.toDouble, n.toDouble),
-      microP = mP,
-      microR = mR,
-      microF1 = safeDiv(2 * mP * mR, mP + mR),
-      macroP = if (scored.isEmpty) 0 else perP.sum / perP.size,
-      macroR = if (scored.isEmpty) 0 else perR.sum / perR.size,
-      macroF1 = if (scored.isEmpty) 0 else perF.sum / perF.size,
-      n = n)
+    prf1(conf, scored, relationOf,
+      conf.collect { case ((p, l), c) if p == l && p != SkipLabel => c }.sum)
   }
 
+  /** Per-full-label stats: every predicted or gold label not in
+    * `excludeFromMacro` is a class of the macro and micro averages.
+    */
   def statsFromConfusion(conf: Confusion, excludeFromMacro: Set[String]): EvalStats = {
     val classes = (conf.keys.map(_._1) ++ conf.keys.map(_._2)).toSeq.distinct.sorted
+    prf1(conf, classes.filterNot(excludeFromMacro), identity,
+      conf.collect { case ((p, l), c) if p == l => c }.sum)
+  }
+
+  /** P/R/F1 over the `scored` classes, each label mapped to its class by
+    * `classOf`: a true positive needs the full label to match, and the
+    * micro-averages sum TP / pred / gold over the scored classes only
+    * (official scorer excludes 'Other' from these sums — experiment_helper.py:52-66
+    * skip_other path). `correct` is the accuracy's numerator.
+    */
+  private def prf1(conf: Confusion, scored: Seq[String], classOf: String => String,
+                   correct: Long): EvalStats = {
     val n = conf.values.sum
-    val correct = conf.collect { case ((p, l), c) if p == l => c }.sum
-
-    def tp(c: String) = conf.getOrElse((c, c), 0L)
-    def predCount(c: String) = conf.collect { case ((p, _), v) if p == c => v }.sum
-    def labelCount(c: String) = conf.collect { case ((_, l), v) if l == c => v }.sum
-
-    val scored = classes.filterNot(excludeFromMacro)
+    def tp(c: String) = conf.collect { case ((p, l), v) if p == l && classOf(p) == c => v }.sum
+    def predCount(c: String) = conf.collect { case ((p, _), v) if classOf(p) == c => v }.sum
+    def labelCount(c: String) = conf.collect { case ((_, l), v) if classOf(l) == c => v }.sum
     def safeDiv(a: Double, b: Double) = if (b == 0) 0.0 else a / b
 
     val perP = scored.map(c => safeDiv(tp(c).toDouble, predCount(c).toDouble))
     val perR = scored.map(c => safeDiv(tp(c).toDouble, labelCount(c).toDouble))
     val perF = perP.zip(perR).map { case (p, r) => safeDiv(2 * p * r, p + r) }
 
-    // micro sums over the scored classes (official scorer excludes 'Other'
-    // from these sums as well — experiment_helper.py:52-66 skip_other path)
     val microTp = scored.map(tp).sum.toDouble
-    val microPred = scored.map(predCount).sum.toDouble
-    val microLabel = scored.map(labelCount).sum.toDouble
-    val mP = safeDiv(microTp, microPred)
-    val mR = safeDiv(microTp, microLabel)
+    val mP = safeDiv(microTp, scored.map(predCount).sum.toDouble)
+    val mR = safeDiv(microTp, scored.map(labelCount).sum.toDouble)
 
-    EvalStats(
-      accuracy = safeDiv(correct.toDouble, n.toDouble),
-      microP = mP,
-      microR = mR,
-      microF1 = safeDiv(2 * mP * mR, mP + mR),
-      macroP = if (scored.isEmpty) 0 else perP.sum / perP.size,
-      macroR = if (scored.isEmpty) 0 else perR.sum / perR.size,
-      macroF1 = if (scored.isEmpty) 0 else perF.sum / perF.size,
-      n = n)
+    def mean(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else xs.sum / xs.size
+
+    EvalStats(accuracy = safeDiv(correct.toDouble, n.toDouble),
+      microP = mP, microR = mR, microF1 = safeDiv(2 * mP * mR, mP + mR),
+      macroP = mean(perP), macroR = mean(perR), macroF1 = mean(perF), n = n)
   }
 
   /** Typed Aggregator over (pred, label) pairs: partial confusion maps merge
-    * associatively (partition-order invariant), stats computed once at the
-    * end. One pass, map-side combine for free.
+    * associatively (partition-order invariant), and `finishWith` computes
+    * the stats once at the end. One pass, map-side combine for free.
     */
-  class PrF1Aggregator(excludeFromMacro: Set[String] = Set("Other"))
+  private class ConfusionAggregator(finishWith: Confusion => EvalStats)
       extends Aggregator[(String, String), Confusion, EvalStats] {
     override def zero: Confusion = Map.empty
     override def reduce(b: Confusion, a: (String, String)): Confusion =
       b.updated(a, b.getOrElse(a, 0L) + 1L)
     override def merge(b1: Confusion, b2: Confusion): Confusion =
       b2.foldLeft(b1) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) }
-    override def finish(r: Confusion): EvalStats = statsFromConfusion(r, excludeFromMacro)
-    override def bufferEncoder: Encoder[Confusion] = Encoders.kryo[Confusion]
-    override def outputEncoder: Encoder[EvalStats] = Encoders.product[EvalStats]
-  }
-
-  /** Same associative confusion accumulation as PrF1Aggregator, finished with
-    * the OFFICIAL collapsed-direction semantics (see officialStats). This is
-    * the aggregator ScorerGoldenSpec anchors against the perl scorer's
-    * shipped result_scores samples.
-    */
-  class OfficialPrF1Aggregator
-      extends Aggregator[(String, String), Confusion, EvalStats] {
-    override def zero: Confusion = Map.empty
-    override def reduce(b: Confusion, a: (String, String)): Confusion =
-      b.updated(a, b.getOrElse(a, 0L) + 1L)
-    override def merge(b1: Confusion, b2: Confusion): Confusion =
-      b2.foldLeft(b1) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) }
-    override def finish(r: Confusion): EvalStats = officialStats(r)
+    override def finish(r: Confusion): EvalStats = finishWith(r)
     override def bufferEncoder: Encoder[Confusion] = Encoders.kryo[Confusion]
     override def outputEncoder: Encoder[EvalStats] = Encoders.product[EvalStats]
   }
@@ -162,11 +122,11 @@ object Eval {
   /** Evaluate a Dataset of (pred, label) string pairs. */
   def evaluate(pairs: Dataset[(String, String)],
                excludeFromMacro: Set[String] = Set("Other")): EvalStats =
-    pairs.select(new PrF1Aggregator(excludeFromMacro).toColumn).first()
+    pairs.select(new ConfusionAggregator(statsFromConfusion(_, excludeFromMacro)).toColumn).first()
 
   /** Evaluate with the official SemEval scorer semantics (skipped gold items
     * must be fed as (SkipLabel, gold) pairs).
     */
   def evaluateOfficial(pairs: Dataset[(String, String)]): EvalStats =
-    pairs.select(new OfficialPrF1Aggregator().toColumn).first()
+    pairs.select(new ConfusionAggregator(officialStats).toColumn).first()
 }

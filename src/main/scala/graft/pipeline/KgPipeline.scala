@@ -89,14 +89,15 @@ object KgPipeline {
     * only, and every entity outside them keeps its own id through one
     * left-join coalesce. `small` is the caller's `broadcastMaxDictRows`
     * decision: the edges are at most the dictionary's rows, so at or below
-    * the bound CC runs on the driver (`ConnectedComponents.onDriver`);
-    * above it CC is the iterative DataFrame job, whose rounds `ckptDir`
-    * makes durable (`ConnectedComponents.run`).
+    * the bound CC runs on the driver (`ConnectedComponents.onDriver`) and
+    * its labels, at most the dictionary's rows, join as a broadcast rather
+    * than inside every task binary; above it CC is the iterative DataFrame
+    * job, whose rounds `ckptDir` makes durable (`ConnectedComponents.run`).
     */
   private[graft] def canonicalize(dict: DataFrame, ckptDir: Option[String], small: Boolean): DataFrame = {
     val d = dict.select(col("alias"), col("entity_id"))
     val edges = variantEdges(d)
-    val cc = if (small) ConnectedComponents.onDriver(edges) else ConnectedComponents.run(edges, ckptDir = ckptDir)
+    val cc = if (small) broadcast(ConnectedComponents.onDriver(edges)) else ConnectedComponents.run(edges, ckptDir = ckptDir)
     d.join(cc, d("entity_id") === cc("id"), "left")
       .select(d("alias"), d("entity_id"), coalesce(cc("component"), d("entity_id")).as("canonical_id"))
   }

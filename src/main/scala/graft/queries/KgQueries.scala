@@ -4,6 +4,7 @@ import graft.corpus.Corpus
 import graft.extract.Extract
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Tables.{candidates, sentences}
 
 /** KG-construction pipeline stages exposed as driver queries. The dependency
   * parse is not SQL-expressible, so these have no DuckDB oracle (driver
@@ -11,9 +12,6 @@ import org.apache.spark.sql.functions._
   * fixture suite (ExtractPipelineSpec) per SURVEY.md §5.
   */
 object KgQueries {
-
-  private def sentences(s: SparkSession, dir: String) =
-    Extract.docsToSentences(Corpus.fromDocuments(s, dir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // input table shape: interleaved docs exploded to spans, invariant order kept
@@ -31,7 +29,7 @@ object KgQueries {
 
     // SDP candidates (the reference's central IR)
     "kg_candidates" -> ((s, dir) =>
-      Extract.candidates(sentences(s, dir)).toDF()
+      candidates(s, dir).toDF()
         .select(col("doc_id"), col("span_idx"), col("x"), col("y"),
           col("source"), size(col("path")).as("path_len"))),
 
@@ -41,7 +39,7 @@ object KgQueries {
       // the gate filters, so without reuse the extraction would run twice.
       // The gate itself stays a DataFrame (collect-free semi-join); `sig`
       // is dropped so the query keeps its (subj … score) schema.
-      val triples = Extract.triples(Extract.candidates(sentences(s, dir))).toDF()
+      val triples = Extract.triples(candidates(s, dir)).toDF()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Extract.whitelisted(triples, minCount = 3).drop("sig")
     }),

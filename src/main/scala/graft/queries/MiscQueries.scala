@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.corpus.Corpus
 import graft.dedup.Dedup
-import graft.extract.Extract
 import graft.functions.Hamming64.hamming64
 import graft.functions.Portable._
 import graft.functions.Ranks
@@ -171,9 +169,7 @@ object MiscQueries {
 
     // M1-M5: broadcast-weight GRU scoring (rows-only: float model, spec-gated)
     "q35_neural_triples" -> ((s, dir) => {
-      val cands = Extract.candidates(
-        Extract.docsToSentences(Corpus.fromDocuments(s, dir)))
-      NeuralScorer.score(cands).toDF()
+      NeuralScorer.score(candidates(s, dir)).toDF()
         .select(col("subj"), col("pred"), col("obj"), col("doc_id"), col("span_idx"))
     }),
 
@@ -196,8 +192,7 @@ object MiscQueries {
     // driver-side IndexedSeq — equality with the broadcast path is
     // spec-verified (ScoringSamplingSpec).
     "q36_negative_sampling" -> ((s, dir) => {
-      val cands = Extract.candidates(
-        Extract.docsToSentences(Corpus.fromDocuments(s, dir)))
+      val cands = candidates(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val pool = cands.select(col("x")).distinct()
       NegativeSampling.withNegativesDistributed(cands, pool, negPer = 2)

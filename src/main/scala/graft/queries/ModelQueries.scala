@@ -1,12 +1,12 @@
 package graft.queries
 
-import graft.corpus.Corpus
-import graft.extract.{Extract, Sdp}
+import graft.extract.Sdp
 import graft.functions.Ranks
 import graft.score.{NeuralScorer, TfidfBaseline}
 import graft.similarity.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import Tables.{candidates, firstFive, sentences}
 
 /** Model-side operator coverage (SURVEY.md §2 M-rows) as registry queries.
   * The dependency parse + float model make these non-SQL-expressible, so they
@@ -15,17 +15,14 @@ import org.apache.spark.sql.functions._
   */
 object ModelQueries {
 
-  private def cands(s: SparkSession, dir: String) =
-    Extract.candidates(Extract.docsToSentences(Corpus.fromDocuments(s, dir)))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // M3 + M10: unsupervised bilinear logit x^T diag(h) y and the twin
     // single-endpoint logits, one GRU encode per candidate
-    "q40_unsup_scores" -> ((s, dir) => NeuralScorer.unsupScores(cands(s, dir))),
+    "q40_unsup_scores" -> ((s, dir) => NeuralScorer.unsupScores(candidates(s, dir))),
 
     // M11: classification over the masked-mean composition
     "q41_mean_composition" -> ((s, dir) =>
-      NeuralScorer.scoreMean(cands(s, dir)).toDF()
+      NeuralScorer.scoreMean(candidates(s, dir)).toDF()
         .select("subj", "pred", "obj", "doc_id", "span_idx")),
 
     // M8: similarity reps [x⊙h ; y] materialized as an embedding table, then
@@ -34,7 +31,7 @@ object ModelQueries {
     "q42_sim_rep_topk" -> ((s, dir) => {
       // persist the rep table BELOW the rank: the range sample and the sort
       // would otherwise each run extraction + GRU encoding
-      val repTable = NeuralScorer.simRepTable(cands(s, dir))
+      val repTable = NeuralScorer.simRepTable(candidates(s, dir))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // the key is not unique (sf0.01: 6,193 rep rows, 6,066 distinct keys),
       // but tied rows are whole-candidate duplicates: the embedding is a
@@ -47,19 +44,16 @@ object ModelQueries {
         "__rn")
         .select((col("__rn") - 1).as("vec_id"), col("embedding"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Similarity.cosineTopK(
-        reps,
-        reps.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding")),
-        k = 5)
+      Similarity.cosineTopK(reps, firstFive(reps), k = 5)
     }),
 
     // M16: TF-IDF + logistic-regression baseline over the labeled candidates
-    "q43_tfidf_lr" -> ((s, dir) => TfidfBaseline.predictions(cands(s, dir))),
+    "q43_tfidf_lr" -> ((s, dir) => TfidfBaseline.predictions(candidates(s, dir))),
 
     // M9: cluster-pair softmax over K² pair classes (observed pair label,
     // argmax pair, softmax prob of observed)
     "q46_cluster_softmax" -> ((s, dir) =>
-      NeuralScorer.clusterPairScores(cands(s, dir))),
+      NeuralScorer.clusterPairScores(candidates(s, dir))),
 
     // M4+M7+§2.9 COMPOSED into the reference's unsupervised training loop:
     // negative-sampling sigmoid-xent minimized with clipped Adam, as a
@@ -71,7 +65,7 @@ object ModelQueries {
     // keeping the bench cost of an iterative query bounded (TrainerSpec
     // drives the full 20)
     "q50_train_negsamp" -> ((s, dir) =>
-      graft.score.Trainer.trainNegSampling(cands(s, dir), epochs = 12)),
+      graft.score.Trainer.trainNegSampling(candidates(s, dir), epochs = 12)),
 
     // FULL-model backprop (relembed.py:473-496 trains tf.trainable_variables
     // — all of them): exact BPTT through the GRU + embedding-table scatter +
@@ -80,7 +74,7 @@ object ModelQueries {
     // finite-difference check over every parameter (GruTrainerSpec). One
     // row per epoch; 6 epochs bound the bench cost of an iterative query
     "q52_train_gru" -> ((s, dir) =>
-      graft.score.GruTrainer.train(cands(s, dir), epochs = 6)),
+      graft.score.GruTrainer.train(candidates(s, dir), epochs = 6)),
 
     // M13 + M14 + M15: the reference's abandoned prototype heads (3-way
     // tensor inner product, keras diag-bilinear layer, child-sum TreeRNN
@@ -88,14 +82,13 @@ object ModelQueries {
     // tree state shared across that sentence's candidates; rows-only,
     // fixture-gated by ModelOpsSpec
     "q49_prototype_scores" -> ((s, dir) =>
-      graft.score.Prototypes.prototypeScores(
-        Extract.docsToSentences(Corpus.fromDocuments(s, dir)))),
+      graft.score.Prototypes.prototypeScores(sentences(s, dir))),
 
     // P12 faithful: forward ∪ reversed SdpCandidates with last-step word
     // rewrite and target reduction (not just the token-sequence shape of q34)
     "q44_reverse_sdp" -> ((s, dir) => {
       import s.implicits._
-      val c = cands(s, dir)
+      val c = candidates(s, dir)
       val both = c.map(x => (x, "fwd")).union(c.map(x => (Sdp.reverseCandidate(x), "rev")))
       both.map { case (cc, d) =>
         (cc.doc_id, cc.span_idx, d, cc.x, cc.y, cc.path.length,

@@ -62,10 +62,7 @@ object PipelineQueries {
     // brute-force cosine top-5, queries = vec_id < 5
     "q21_cosine_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.cosineTopK(
-        emb.select("vec_id", "embedding"),
-        emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding")),
-        k = 5)
+      Similarity.cosineTopK(emb.select("vec_id", "embedding"), firstFive(emb), k = 5)
     }),
 
     // IVF coarse assignment (16 centroids)
@@ -75,18 +72,13 @@ object PipelineQueries {
     // IVF probed search (rows-only: recall vs brute force is spec-tested)
     "q23_ivf_search" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      Similarity.ivfSearch(emb,
-        emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding")),
-        k = 5, nCentroids = 16, nprobe = 4)
+      Similarity.ivfSearch(emb, firstFive(emb), k = 5, nCentroids = 16, nprobe = 4)
     }),
 
     // MLlib LSH ANN (rows-only: recall vs brute force is spec-tested)
     "q38_lsh_topk" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(
-        emb.select("vec_id", "embedding"),
-        emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding")),
-        k = 5)
+      Similarity.lshTopK(emb.select("vec_id", "embedding"), firstFive(emb), k = 5)
     }),
 
     // embedding near-dup pairs within label blocks (threshold tuned to the

@@ -1,6 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.corpus.Corpus
+import graft.extract.Extract
+import graft.model.{SdpCandidate, Sentence}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table scans and SQL fragments the query registries share. */
@@ -11,6 +14,20 @@ private[queries] object Tables {
 
   def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents").select("doc_id", "text")
+
+  /** The corpus's documents parsed into sentences. */
+  def sentences(s: SparkSession, dir: String): Dataset[Sentence] =
+    Extract.docsToSentences(Corpus.fromDocuments(s, dir))
+
+  /** The SDP candidates of the corpus: the composed candidate scan. */
+  def candidates(s: SparkSession, dir: String): Dataset[SdpCandidate] =
+    Extract.candidates(sentences(s, dir))
+
+  /** The five-vector query set (q_id, embedding) of an (vec_id, embedding)
+    * table: its vectors with vec_id < 5.
+    */
+  def firstFive(vecs: DataFrame): DataFrame =
+    vecs.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding"))
 
   /** Tokens of the documents table with in-doc position — shared scan shape
     * for the vocab/text queries (A1 analog: explode + count,

@@ -1,7 +1,7 @@
 package graft.score
 
-import graft.model.{SdpCandidate, Triple}
-import org.apache.spark.sql.Dataset
+import graft.model.{PathStep, SdpCandidate, Triple}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 
 /** Broadcast-model batched relation scorer — the Spark restatement of the
   * reference's TF inference graph (M1-M5, relembed.py:144-329): embedding
@@ -17,15 +17,15 @@ import org.apache.spark.sql.Dataset
   */
 object NeuralScorer {
 
-  /** Model weights: embeddings for hashed vocab buckets + GRU cell + softmax.
-    * All values from a seeded xorshift PRNG — identical on every executor and
-    * every run.
-    */
   /** Number of Brown-style clusters for the M9 pair-softmax head (K² pair
     * classes) — matches q32's deterministic cluster table (md5num % 64).
     */
   val nClusters: Int = 64
 
+  /** Model weights: embeddings for hashed vocab buckets + GRU cell + softmax.
+    * All values from a seeded xorshift PRNG — identical on every executor and
+    * every run.
+    */
   case class Weights(
       vocabBuckets: Int,
       embedDim: Int,
@@ -65,6 +65,16 @@ object NeuralScorer {
 
   private def sigmoid(x: Float): Float = (1.0 / (1.0 + math.exp(-x))).toFloat
 
+  /** Adds one path step's input into `acc`: the sum of its three modality
+    * (word, dep, pos) embeddings, which stands in for concat+project.
+    */
+  private def addStep(w: Weights, step: PathStep, acc: Array[Float]): Unit =
+    for (tok <- Seq(step.word, "d:" + step.dep, "p:" + step.pos)) {
+      val e = w.embed(bucket(w, tok))
+      var i = 0
+      while (i < w.embedDim) { acc(i) += e(i); i += 1 }
+    }
+
   /** GRU over the path's (word⊕dep⊕pos)-hashed embeddings; returns the final
     * hidden state (M2 analog: relembed.py:216-258).
     */
@@ -72,14 +82,8 @@ object NeuralScorer {
     val h = new Array[Float](w.hidden)
     var t = 0
     while (t < cand.path.length) {
-      val step = cand.path(t)
-      // sum of the three modality embeddings stands in for concat+project
       val x = new Array[Float](w.embedDim)
-      for (tok <- Seq(step.word, "d:" + step.dep, "p:" + step.pos)) {
-        val e = w.embed(bucket(w, tok))
-        var i = 0
-        while (i < w.embedDim) { x(i) += e(i); i += 1 }
-      }
+      addStep(w, cand.path(t), x)
       val hNext = new Array[Float](w.hidden)
       var j = 0
       while (j < w.hidden) {
@@ -109,16 +113,7 @@ object NeuralScorer {
   private[graft] def encodeMean(w: Weights, cand: SdpCandidate): Array[Float] = {
     val m = new Array[Float](w.embedDim)
     if (cand.path.isEmpty) return m
-    var t = 0
-    while (t < cand.path.length) {
-      val step = cand.path(t)
-      for (tok <- Seq(step.word, "d:" + step.dep, "p:" + step.pos)) {
-        val e = w.embed(bucket(w, tok))
-        var i = 0
-        while (i < w.embedDim) { m(i) += e(i); i += 1 }
-      }
-      t += 1
-    }
+    cand.path.foreach(addStep(w, _, m))
     var i = 0
     while (i < w.embedDim) { m(i) /= cand.path.length; i += 1 }
     m
@@ -216,12 +211,9 @@ object NeuralScorer {
   /** M9 as a Dataset pass: per candidate the observed cluster-pair label,
     * its softmax probability under the pair head, and the argmax pair.
     */
-  def clusterPairScores(cands: Dataset[SdpCandidate], seed: Long = 42L): org.apache.spark.sql.DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(seededWeights(seed))
-    cands.mapPartitions { it =>
-      val w = bc.value
+  def clusterPairScores(cands: Dataset[SdpCandidate], seed: Long = 42L): DataFrame = {
+    import cands.sparkSession.implicits._
+    withWeights(cands, seed) { (w, it) =>
       it.map { c =>
         val pair = clusterOf(c.x) * nClusters + clusterOf(c.y)
         val (argmax, prob) = clusterPairSoftmax(w, encode(w, c), pair)
@@ -253,12 +245,9 @@ object NeuralScorer {
     * two single-endpoint logits, integer-scaled (×10⁶, floored) so outputs
     * are stable row values. One encode per candidate feeds all three heads.
     */
-  def unsupScores(cands: Dataset[SdpCandidate], seed: Long = 42L): org.apache.spark.sql.DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(seededWeights(seed))
-    cands.mapPartitions { it =>
-      val w = bc.value
+  def unsupScores(cands: Dataset[SdpCandidate], seed: Long = 42L): DataFrame = {
+    import cands.sparkSession.implicits._
+    withWeights(cands, seed) { (w, it) =>
       it.map { c =>
         val h = encode(w, c)
         (c.doc_id, c.span_idx, c.x, c.y,
@@ -273,20 +262,8 @@ object NeuralScorer {
     * the GRU — the engine's second model variant.
     */
   def scoreMean(cands: Dataset[SdpCandidate], seed: Long = 42L): Dataset[Triple] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(seededWeights(seed))
-    cands.mapPartitions { it =>
-      val w = bc.value
-      it.map { c =>
-        val (labelId, prob) = classify(w, encodeMean(w, c))
-        val label = Labels.all(labelId)
-        val (s, o) =
-          if (label.endsWith("(e2,e1)")) (c.y, c.x) else (c.x, c.y)
-        Triple(s, Labels.collapse(label), o, c.doc_id, c.span_idx, prob,
-          SignatureScorer.signatureKey(c.path))
-      }
-    }
+    import cands.sparkSession.implicits._
+    withWeights(cands, seed)((w, it) => it.map(c => triple(c, classify(w, encodeMean(w, c)))))
   }
 
   /** M8 rep table: one L2-normalized [x⊙h ; y] vector per candidate, as an
@@ -296,12 +273,9 @@ object NeuralScorer {
     * pair twice via different paths, and consumers that rank rows (q42's
     * vec_id) need a run-invariant tie-break.
     */
-  def simRepTable(cands: Dataset[SdpCandidate], seed: Long = 42L): org.apache.spark.sql.DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(seededWeights(seed))
-    cands.mapPartitions { it =>
-      val w = bc.value
+  def simRepTable(cands: Dataset[SdpCandidate], seed: Long = 42L): DataFrame = {
+    import cands.sparkSession.implicits._
+    withWeights(cands, seed) { (w, it) =>
       it.map { c =>
         // full (word, dep, pos) rendering, not just the dep signature: the
         // embedding depends on path words, so the tie-break must too
@@ -320,21 +294,24 @@ object NeuralScorer {
     */
   def score(cands: Dataset[SdpCandidate], seed: Long = 42L,
             batchSize: Int = 128): Dataset[Triple] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(seededWeights(seed))
-    cands.mapPartitions { it =>
-      val w = bc.value
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { cand =>
-          val (labelId, prob) = classify(w, encode(w, cand))
-          val label = Labels.all(labelId)
-          val (s, o) =
-            if (label.endsWith("(e2,e1)")) (cand.y, cand.x) else (cand.x, cand.y)
-          Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, prob,
-            SignatureScorer.signatureKey(cand.path))
-        }
-      }
+    import cands.sparkSession.implicits._
+    withWeights(cands, seed) { (w, it) =>
+      it.grouped(batchSize).flatMap(_.iterator.map(c => triple(c, classify(w, encode(w, c)))))
     }
   }
+
+  /** The one broadcast-weights pass: the seeded weights are broadcast once
+    * per job and `f` maps each partition's candidates with them.
+    */
+  private def withWeights[T: Encoder](cands: Dataset[SdpCandidate], seed: Long)
+                                     (f: (Weights, Iterator[SdpCandidate]) => Iterator[T]): Dataset[T] = {
+    val bc = cands.sparkSession.sparkContext.broadcast(seededWeights(seed))
+    cands.mapPartitions(it => f(bc.value, it))
+  }
+
+  /** The triple of a candidate `classify` labelled, scored by the label's
+    * softmax probability.
+    */
+  private def triple(c: SdpCandidate, classified: (Int, Double)): Triple =
+    SignatureScorer.labelled(c, Labels.all(classified._1), classified._2, SignatureScorer.signatureKey(c.path))
 }

@@ -26,8 +26,15 @@ object SignatureScorer {
     val sig = signatureKey(cand.path)
     val label = Labels.all(math.floorMod(sig.hashCode, Labels.all.length - 1))
     val score = 0.5 + math.floorMod((cand.x + "" + cand.y + "" + sig).hashCode, 1000) / 2000.0
-    // direction: (e2,e1) labels swap subject/object, mirroring how the
-    // reference encodes direction in the label (semeval_data_helper.py:208-229)
+    labelled(cand, label, score, sig)
+  }
+
+  /** The triple of `cand` under the directional `label`: (e2,e1) labels swap
+    * subject and object, mirroring how the reference encodes direction in
+    * the label (semeval_data_helper.py:208-229); the predicate is the
+    * collapsed label and `sig` the candidate's `signatureKey`.
+    */
+  private[score] def labelled(cand: SdpCandidate, label: String, score: Double, sig: String): Triple = {
     val (s, o) = if (label.endsWith("(e2,e1)")) (cand.y, cand.x) else (cand.x, cand.y)
     Triple(s, Labels.collapse(label), o, cand.doc_id, cand.span_idx, score, sig)
   }

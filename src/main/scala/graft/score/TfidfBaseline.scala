@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (RelEmbed_semeval.ipynb cells 61-63, Semeval Brown baseline.ipynb),
   * restated on Spark ML: CountVectorizer → IDF → LogisticRegression over the
   * SDP's word sequence, trained on a deterministic 80/20 hash split of the
-  * labeled candidates and evaluated with Eval.PrF1Aggregator semantics.
+  * labeled candidates and evaluated with `Eval.evaluate` semantics.
   *
   * Scale shape: feature extraction is narrow; CountVectorizer's vocab build
   * is one aggregation; LR training is Spark ML's distributed L-BFGS. The

@@ -1,5 +1,7 @@
 package graft.tableio
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.LocalInputFile
@@ -35,14 +37,13 @@ import scala.util.Using
 object TableIO {
 
   /** @param taskRows rows written per write task (task id = the
-    *   `part-NNNNN` number, summed over partition directories); None for a
-    *   manifest written before the field existed.
+    *   `part-NNNNN` number, summed over partition directories).
     * @param schemaJson the schema the snapshot reads back as: data columns,
     *   then partition columns.
-    * @param inputs what the snapshot was computed from (empty before the field existed).
+    * @param inputs what the snapshot was computed from.
     */
   case class Snapshot(version: Long, dataDir: String, rows: Long, schemaJson: String,
-                      taskRows: Option[Map[Int, Long]], inputs: Map[String, String]) {
+                      taskRows: Map[Int, Long], inputs: Map[String, String]) {
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   }
 
@@ -56,24 +57,21 @@ object TableIO {
   def current(table: String): Snapshot =
     readSnapshot(table, currentVersion(table).getOrElse(sys.error(s"no committed snapshot in $table")))
 
+  private val json = JsonMapper.builder().build()
+
+  /** The manifest of `version`; fails, naming the manifest and the field,
+    * when a field is missing.
+    */
   def readSnapshot(table: String, version: Long): Snapshot = {
-    val txt = Files.readString(snapDir(table).resolve(s"v$version.json"))
-    // minimal JSON codec (fields are under our control; the nested values
-    // are flat objects: taskRows of integers, inputs of strings)
-    def field(name: String): String = unquote(("\"" + name + "\"\\s*:\\s*(" + Str + "|\\d+)").r
-      .findFirstMatchIn(txt).getOrElse(sys.error(s"manifest field $name missing")).group(1))
-    def obj(name: String): Option[Map[String, String]] =
-      ("\"" + name + "\"\\s*:\\s*\\{((?:" + Str + "|[^}\"])*)\\}").r.findFirstMatchIn(txt).map { m =>
-        s"($Str)\\s*:\\s*($Str|\\d+)".r.findAllMatchIn(m.group(1)).map(e => unquote(e.group(1)) -> unquote(e.group(2))).toMap
-      }
-    Snapshot(field("version").toLong, field("dataDir"), field("rows").toLong, field("schema"),
-      obj("taskRows").map(_.map { case (t, n) => t.toInt -> n.toLong }), obj("inputs").getOrElse(Map.empty))
+    val path = snapDir(table).resolve(s"v$version.json")
+    val m = json.readTree(path.toFile)
+    def field(name: String): JsonNode =
+      Option(m.get(name)).getOrElse(sys.error(s"manifest $path: field $name missing"))
+    def obj(name: String): Map[String, JsonNode] =
+      field(name).properties().asScala.map(e => e.getKey -> e.getValue).toMap
+    Snapshot(field("version").asLong, field("dataDir").asText, field("rows").asLong, field("schema").asText,
+      obj("taskRows").map { case (t, n) => t.toInt -> n.asLong }, obj("inputs").map { case (k, v) => k -> v.asText })
   }
-
-  private val Str = "\"(?:[^\"\\\\]|\\\\.)*\"" // a JSON string literal
-
-  private def unquote(v: String) =
-    if (v.startsWith("\"")) v.substring(1, v.length - 1).replace("\\\"", "\"").replace("\\\\", "\\") else v
 
   /** SHA-256, in hex, of named values in name order. */
   def fingerprint(values: Iterable[(String, String)]): String = {
@@ -140,15 +138,16 @@ object TableIO {
     // last in directory-nesting order
     val fields = df.schema.filterNot(f => partitionBy.contains(f.name)) ++ partitionBy.map(df.schema(_))
     val snap = Snapshot(version, dataDir, taskRows.values.sum,
-      StructType(fields.map(_.copy(nullable = true))).json, Some(taskRows), inputs)
-    def str(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    def obj(kv: Seq[(String, String)]) = kv.map { case (k, v) => s"${str(k)}: $v" }.mkString("{", ", ", "}")
-    val manifest = s"""{"version": $version, "dataDir": ${str(dataDir)}, "rows": ${snap.rows}, """ +
-      s""""taskRows": ${obj(taskRows.toSeq.sorted.map { case (t, n) => t.toString -> n.toString })}, """ +
-      s""""schema": ${str(snap.schemaJson)}, "inputs": ${obj(inputs.toSeq.sorted.map { case (k, v) => k -> str(v) })}}"""
+      StructType(fields.map(_.copy(nullable = true))).json, taskRows, inputs)
+    // fields in a fixed order and both objects key-sorted, so the bytes are
+    // a function of the snapshot
+    val manifest = json.createObjectNode().put("version", version).put("dataDir", dataDir).put("rows", snap.rows)
+    taskRows.toSeq.sorted.foldLeft(manifest.putObject("taskRows")) { case (o, (t, n)) => o.put(t.toString, n) }
+    manifest.put("schema", snap.schemaJson)
+    inputs.toSeq.sorted.foldLeft(manifest.putObject("inputs")) { case (o, (k, v)) => o.put(k, v) }
     Files.createDirectories(snapDir(table))
     val tmp = Files.createTempFile(snapDir(table), "manifest", ".tmp")
-    Files.writeString(tmp, manifest)
+    Files.writeString(tmp, json.writeValueAsString(manifest))
     Files.move(tmp, snapDir(table).resolve(s"v$version.json"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     val curTmp = Files.createTempFile(snapDir(table), "current", ".tmp")

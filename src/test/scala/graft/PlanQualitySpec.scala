@@ -328,4 +328,27 @@ class PlanQualitySpec extends SparkSuite {
       assert(jobs.size <= most, s"canonicalTriplesInMemory ran ${jobs.size} jobs at bound $bound")
     }
   }
+
+  test("canonicalize below the bound broadcasts the driver-side labels with broadcasts disabled") {
+    // the labels are a local frame on the driver: without the hint a
+    // disabled threshold plans the entity ⋈ labels join as a sort-merge join
+    // and ships the labels inside its task binaries
+    val dict = spark.createDataFrame(Seq("table" -> 0L, "tables" -> 1L, "chair" -> 2L, "chairs" -> 3L,
+      "lamp" -> 4L)).toDF("alias", "entity_id")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val canon = KgPipeline.canonicalize(dict, None, small = true)
+      val rows = canon.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+      assert(rows == Seq(("chair", 2L, 2L), ("chairs", 3L, 2L), ("lamp", 4L, 4L), ("table", 0L, 0L),
+        ("tables", 1L, 0L)))
+      val plan = canon.queryExecution.executedPlan
+      val labelJoins = all(plan).collect {
+        case j: BaseJoinExec if j.rightKeys.exists(_.references.exists(_.name == "id")) => j
+      }
+      assert(labelJoins.size == 1 && labelJoins.head.isInstanceOf[BroadcastHashJoinExec],
+        s"the labels join is not a broadcast:\n$plan")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -8,6 +8,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** TableIO snapshot semantics + checkpointed resumability (north rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
@@ -95,7 +96,22 @@ class ResumeSpec extends SparkSuite {
       .toDF("id", "pred", "score", "entity_bucket")
     val snap = TableIO.commit(df.repartition(2), table, partitionBy = Seq("entity_bucket", "pred"))
     assert(TableIO.readSnapshot(table, snap.version) == snap)
-    assert(snap.rows == 3 && snap.taskRows.exists(_.values.sum == 3L))
+    assert(snap.rows == 3 && snap.taskRows.values.sum == 3L)
+    // a zero-row commit with no inputs still writes both objects
+    val emptyTable = tmpDir("graft-empty-manifest")
+    val empty = TableIO.commit(df.limit(0), emptyTable)
+    assert(TableIO.readSnapshot(emptyTable, 0) == empty && empty.rows == 0 && empty.inputs.isEmpty)
+    // a manifest in the layout of the hand-written writer (spaced
+    // separators, escaped quotes) reads back unchanged, so run directories
+    // committed by it stay resumable
+    val legacy = tmpDir("graft-legacy-manifest")
+    val schema = StructType(Seq(StructField("id", LongType))).json
+    Files.createDirectories(Paths.get(legacy, "snapshots"))
+    Files.writeString(Paths.get(legacy, "snapshots", "v4.json"),
+      s"""{"version": 4, "dataDir": "$legacy/data/snap-4", "rows": 5, "taskRows": {"0": 2, "3": 3}, """ +
+        s""""schema": "${schema.replace("\"", "\\\"")}", "inputs": {"corpus": "a\\"b\\\\c", "format": "2"}}""")
+    assert(TableIO.readSnapshot(legacy, 4) == TableIO.Snapshot(4, s"$legacy/data/snap-4", 5, schema,
+      Map(0 -> 2L, 3 -> 3L), Map("corpus" -> "a\"b\\c", "format" -> "2")))
     val viaManifest = TableIO.read(spark, table)
     val inferred = spark.read.parquet(snap.dataDir)
     assert(snap.schema == inferred.schema && viaManifest.schema == inferred.schema)
@@ -104,21 +120,21 @@ class ResumeSpec extends SparkSuite {
     assert(sortedRows(viaManifest) == sortedRows(inferred))
   }
 
-  test("StageLog: a manifest without per-task row counts fails lineage, naming the stage") {
+  test("a manifest without taskRows fails its read, naming the manifest and the field") {
     val runDir = tmpDir("graft-oldmanifest")
     val log = new StageLog(spark, runDir)
     log.runStage("legacy_stage")(Seq((1L, "x"), (2L, "y")).toDF("id", "v"))
     // rewrite the manifest in the format that predates taskRows
     val manifest = Paths.get(log.stagePath("legacy_stage"), "snapshots", "v0.json")
-    val old = Files.readString(manifest).replaceFirst(""""taskRows": \{[^}]*\}, """, "")
+    val old = Files.readString(manifest).replaceFirst(""""taskRows"\s*:\s*\{[^}]*\},\s*""", "")
     assert(!old.contains("taskRows"))
     Files.writeString(manifest, old)
-    assert(TableIO.readSnapshot(log.stagePath("legacy_stage"), 0).taskRows.isEmpty)
-    val err = intercept[RuntimeException](log.lineage(Seq("legacy_stage")))
-    assert(err.getMessage.contains("legacy_stage"))
-    // the manifest's other fields still serve metrics and reads
-    assert(log.metrics(Seq("legacy_stage")).first().getLong(1) == 2L)
-    assert(TableIO.read(spark, log.stagePath("legacy_stage")).count() == 2L)
+    for (read <- Seq[() => Any](() => TableIO.readSnapshot(log.stagePath("legacy_stage"), 0),
+      () => log.lineage(Seq("legacy_stage")), () => log.metrics(Seq("legacy_stage")),
+      () => TableIO.read(spark, log.stagePath("legacy_stage")))) {
+      val err = intercept[RuntimeException](read())
+      assert(err.getMessage.contains(manifest.toString) && err.getMessage.contains("taskRows"), err.getMessage)
+    }
   }
 
   test("connected components: mid-run kill resumes from durable labels exactly") {
