@@ -53,20 +53,17 @@ object Extract {
     */
   def candidates(
       sentences: Dataset[Sentence],
-      minLen: Int = 1,
-      maxLen: Int = 7,
-      source: String = "WIKI",
       maxPairsPerSentence: Int = 64): Dataset[SdpCandidate] = {
     import sentences.sparkSession.implicits._
     sentences.flatMap { s =>
-      Sdp.sentenceToSdps(s.tokens, s.chunks, minLen, maxLen)
+      Sdp.sentenceToSdps(s.tokens, s.chunks)
         .take(maxPairsPerSentence)
         .iterator
         .map { case (x, y, path) =>
           SdpCandidate(
             s.doc_id, s.span_idx,
             s.tokens(x).text.toLowerCase, s.tokens(y).text.toLowerCase,
-            Sdp.postProcess(path), source)
+            Sdp.postProcess(path), "WIKI")
         }
         .filter(_.path.nonEmpty)
     }
@@ -112,14 +109,12 @@ object Extract {
     */
   def triplesFused(
       docs: Dataset[(Long, String)],
-      minLen: Int = 1,
-      maxLen: Int = 7,
       maxPairsPerSentence: Int = 64): Dataset[Triple] = {
     import docs.sparkSession.implicits._
     docs.mapPartitions { it =>
       val scratch = new FusedKernel.Scratch
       it.flatMap { case (id, text) =>
-        FusedKernel.docTriples(id, text, minLen, maxLen, maxPairsPerSentence, scratch)
+        FusedKernel.docTriples(id, text, maxPairsPerSentence, scratch)
       }
     }
   }

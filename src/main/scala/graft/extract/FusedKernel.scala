@@ -262,8 +262,7 @@ object FusedKernel {
   private def sentenceTriples(
       docId: String, spanIdx: Int,
       words: Array[String], from: Int, until: Int,
-      minLen: Int, maxLen: Int, maxPairs: Int,
-      s: Scratch): Unit = {
+      maxPairs: Int, s: Scratch): Unit = {
     s.out.clear()
     val n = until - from
     if (n == 0) return
@@ -331,7 +330,7 @@ object FusedKernel {
             var b = bi - 1
             while (b >= 0) { s.seq(len) = yp(b); len += 1; b -= 1 }
           }
-          if (len >= minLen && len <= maxLen) {
+          if (len >= Sdp.MinLen && len <= Sdp.MaxLen) {
             emitted += 1
             // signature of the post-processed path: endpoints always stay
             // (their words become <X>/<Y>), interior punct steps drop;
@@ -369,9 +368,7 @@ object FusedKernel {
     * column is nullable) is a doc without text spans, as in buildDoc.
     */
   def docTriples(
-      id: Long, text: String,
-      minLen: Int, maxLen: Int, maxPairs: Int,
-      s: Scratch): Iterator[Triple] = {
+      id: Long, text: String, maxPairs: Int, s: Scratch): Iterator[Triple] = {
     if (text == null) return Iterator.empty
     val words = {
       val raw = text.split(" ")
@@ -391,7 +388,7 @@ object FusedKernel {
       val myIdx = spanIdx
       spanIdx += 1
       if (math.floorMod(id * 31 + g, 3) == 0) spanIdx += 1 // media span follows
-      sentenceTriples(docId, myIdx, words, from, until, minLen, maxLen, maxPairs, s)
+      sentenceTriples(docId, myIdx, words, from, until, maxPairs, s)
       s.out.toArray[Triple].iterator
     }
   }

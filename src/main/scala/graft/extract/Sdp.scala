@@ -108,15 +108,20 @@ object Sdp {
     }
   }
 
-  /** All SDPs of one sentence with length bounds (defaults of
-    * semeval2sdp.py:184-185: 1..7 inclusive, counted on the full path).
-    * Yields (xHeadIdx, yHeadIdx, path).
+  /** The SDP length bounds every extraction path applies (defaults of
+    * semeval2sdp.py:184-185: inclusive, counted on the full path).
+    */
+  final val MinLen = 1
+  final val MaxLen = 7
+
+  /** All SDPs of one sentence within the length bounds. Yields (xHeadIdx,
+    * yHeadIdx, path).
     */
   def sentenceToSdps(
       tokens: Array[Token],
       chunks: Array[Chunk],
-      minLen: Int = 1,
-      maxLen: Int = 7): Seq[(Int, Int, Array[PathStep])] = {
+      minLen: Int = MinLen,
+      maxLen: Int = MaxLen): Seq[(Int, Int, Array[PathStep])] = {
     val heads = chunks.flatMap(c => chunkHead(tokens, c))
     val paths = heads.map(h => rootPath(tokens, h)) // one walk per head, not per pair
     val out = Seq.newBuilder[(Int, Int, Array[PathStep])]

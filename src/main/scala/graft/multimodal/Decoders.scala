@@ -2,17 +2,15 @@ package graft.multimodal
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-/** REAL pure-JVM media decoders — no codec libraries required: hand-rolled
-  * parsers for the fully-specified byte layouts (RIFF/WAVE PCM16 audio,
-  * binary PPM P6 images, MP4/ISO-BMFF container metadata) plus
-  * `javax.imageio.ImageIO` (pure JDK, present in every JRE) for
-  * JPEG/PNG/GIF/BMP. These replace `Media.decodeStub` for their formats;
-  * the stub remains only for opaque/corrupt payloads — and for MP4 the
-  * per-FRAME content feature, which genuinely needs native codec libraries
-  * this container lacks (the container metadata itself is a pure binary
-  * parse, round-4 verdict item 4).
+/** Pure-JVM media decoders, no codec libraries: hand-rolled parsers for the
+  * fully specified byte layouts (RIFF/WAVE PCM16 audio, binary PPM P6
+  * images, MP4/ISO-BMFF container metadata) plus `javax.imageio.ImageIO`
+  * (pure JDK) for JPEG/PNG/GIF/BMP. Every image format feeds one feature
+  * kernel (`imageFeature`). MP4 takes its feature vector from
+  * `Media.decodeStub`, because frame decode needs a native codec; its
+  * duration and size come from the box walk.
   *
-  * Synth counterparts generate deterministic WELL-FORMED payloads from a
+  * Synth counterparts generate deterministic well-formed payloads from a
   * media_ref (the offline stand-in for an object-store fetch), so the real
   * parse → feature path executes end-to-end in tests and queries.
   */
@@ -126,11 +124,7 @@ object Decoders {
         math.sqrt(sq / math.max(n, 1)).toFloat,
         (zc.toDouble / math.max(n, 1)).toFloat,
         (sum / math.max(n, 1)).toFloat,
-        peak.toFloat,
-        (qE(0) / math.max(n / 4, 1)).toFloat,
-        (qE(1) / math.max(n / 4, 1)).toFloat,
-        (qE(2) / math.max(n / 4, 1)).toFloat,
-        (qE(3) / math.max(n / 4, 1)).toFloat))
+        peak.toFloat) ++ qE.map(e => (e / math.max(n / 4, 1)).toFloat))
   }
 
   // ---- binary PPM (P6) ----
@@ -138,26 +132,13 @@ object Decoders {
   def isPpm(b: Array[Byte]): Boolean =
     b.length > 10 && b(0) == 'P' && b(1) == '6'
 
-  /** Deterministic P6 image: seeded 8–40 px gradient+checker pattern. */
+  /** Deterministic P6 image: `synthImage`'s pattern behind a P6 header. */
   def synthPpm(mediaRef: String): Array[Byte] = {
-    val seed = mediaRef.hashCode
-    val w = 8 + math.floorMod(seed, 33)
-    val h = 8 + math.floorMod(seed >> 5, 33)
-    val header = s"P6\n$w $h\n255\n".getBytes
-    val px = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val o = (y * w + x) * 3
-        px(o) = ((x * 255 / w) & 0xff).toByte
-        px(o + 1) = ((y * 255 / h) & 0xff).toByte
-        px(o + 2) = (if (((x / 4) + (y / 4)) % 2 == 0) 200 else 30).toByte
-        x += 1
-      }
-      y += 1
-    }
-    header ++ px
+    val img = synthImage(mediaRef)
+    val w = img.getWidth; val h = img.getHeight
+    val px = img.getRGB(0, 0, w, h, null, 0, w)
+      .flatMap(p => Array((p >> 16).toByte, (p >> 8).toByte, p.toByte))
+    s"P6\n$w $h\n255\n".getBytes ++ px
   }
 
   /** Parse P6: (width, height, interleaved RGB bytes). Handles comments and
@@ -182,34 +163,44 @@ object Decoders {
     (w, h, bytes.slice(pos, pos + w * h * 3))
   }
 
-  /** Image features: [meanR, meanG, meanB, meanLuma, lumaVar, edge-ness,
-    * aspect, fill] + REAL 2×2 average-pool resize folded into the metadata
-    * path (the resize op a training pipeline applies before batching).
+  /** 0xRRGGBB of pixel (x, y) in `decodePpm`'s interleaved bytes. Reads
+    * only the bytes the payload carries: a header that claims more pixels
+    * than follow fails on the first missing one.
     */
-  def ppmFeature(cell: Media.MediaCell): Media.MediaFeature = {
-    val (w, h, px) = decodePpm(cell.payload)
+  private def ppmRgb(px: Array[Byte], w: Int)(x: Int, y: Int): Int = {
+    val o = (y * w + x) * 3
+    ((px(o) & 0xff) << 16) | ((px(o + 1) & 0xff) << 8) | (px(o + 2) & 0xff)
+  }
+
+  private def luma(rgb: Int): Double =
+    0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
+
+  /** Image features of a w × h image whose pixel (x, y) is `rgb(x, y)`
+    * (0xRRGGBB): [meanR, meanG, meanB, meanLuma, lumaVar, edge-ness, aspect,
+    * fill]. Every image format shares this vector, so downstream schemas are
+    * format-agnostic.
+    */
+  private def imageFeature(cell: Media.MediaCell, w: Int, h: Int,
+                           rgb: (Int, Int) => Int): Media.MediaFeature = {
     val n = math.max(w * h, 1)
-    var r = 0.0; var g = 0.0; var b = 0.0; var luma = 0.0; var luma2 = 0.0
+    var r = 0.0; var g = 0.0; var b = 0.0; var lumaSum = 0.0; var luma2 = 0.0
     var edge = 0.0
     var y = 0
     while (y < h) {
       var x = 0
+      var prevL = 0.0
       while (x < w) {
-        val o = (y * w + x) * 3
-        val rv = px(o) & 0xff; val gv = px(o + 1) & 0xff; val bv = px(o + 2) & 0xff
-        val l = 0.299 * rv + 0.587 * gv + 0.114 * bv
-        r += rv; g += gv; b += bv; luma += l; luma2 += l * l
-        if (x > 0) {
-          val po = (y * w + x - 1) * 3
-          val pl = 0.299 * (px(po) & 0xff) + 0.587 * (px(po + 1) & 0xff) +
-            0.114 * (px(po + 2) & 0xff)
-          edge += math.abs(l - pl)
-        }
+        val p = rgb(x, y)
+        val l = luma(p)
+        r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
+        lumaSum += l; luma2 += l * l
+        if (x > 0) edge += math.abs(l - prevL)
+        prevL = l
         x += 1
       }
       y += 1
     }
-    val mL = luma / n
+    val mL = lumaSum / n
     Media.MediaFeature(cell.doc_id, cell.span_idx, cell.kind, cell.media_ref,
       n_bytes = cell.payload.length.toLong,
       width = w, height = h, duration_ms = 0L,
@@ -222,11 +213,15 @@ object Decoders {
         1f))
   }
 
+  /** `imageFeature` of a P6 payload. */
+  def ppmFeature(cell: Media.MediaCell): Media.MediaFeature = {
+    val (w, h, px) = decodePpm(cell.payload)
+    imageFeature(cell, w, h, ppmRgb(px, w))
+  }
+
   // ---- JPEG / PNG / GIF / BMP via javax.imageio (pure JDK) ----
-  // ImageIO's JPEG/PNG/GIF/BMP readers ship in every JRE — no native codec
-  // library is involved (round-3 verdict: the earlier stub rationale for
-  // JPEG was wrong). Only video containers (MP4 etc.) genuinely need codecs
-  // this container lacks, and only they still hit `Media.decodeStub`.
+  // ImageIO's JPEG/PNG/GIF/BMP readers ship in every JRE; no native codec
+  // library is involved.
 
   def isJpeg(b: Array[Byte]): Boolean =
     b.length > 3 && (b(0) & 0xff) == 0xFF && (b(1) & 0xff) == 0xD8 && (b(2) & 0xff) == 0xFF
@@ -243,8 +238,8 @@ object Decoders {
   def isImageIo(b: Array[Byte]): Boolean =
     isJpeg(b) || isPng(b) || isGif(b) || isBmp(b)
 
-  /** The synthPpm gradient+checker pattern as a BufferedImage (shared by the
-    * PNG/JPEG synths so all three image paths decode comparable content).
+  /** The seeded 8–40 px gradient+checker pattern every image synth encodes
+    * (PPM, PNG, JPEG), so all three image paths decode comparable content.
     */
   private def synthImage(mediaRef: String): java.awt.image.BufferedImage = {
     val seed = mediaRef.hashCode
@@ -278,56 +273,22 @@ object Decoders {
   /** Deterministic JPEG (lossy — decoded pixels approximate the pattern). */
   def synthJpeg(mediaRef: String): Array[Byte] = encodeImage(synthImage(mediaRef), "jpg")
 
-  /** Image features for any ImageIO-readable payload (JPEG/PNG/GIF/BMP):
-    * same 8-dim shape as `ppmFeature` — [meanR, meanG, meanB, meanLuma,
-    * lumaVar, edge-ness, aspect, fill] — so downstream schemas are
-    * format-agnostic. Raises on undecodable bytes; `Media.decode` falls back
-    * to the stub.
+  /** `imageFeature` of any ImageIO-readable payload (JPEG/PNG/GIF/BMP).
+    * Raises on undecodable bytes; `Media.decode` falls back to the stub.
     */
   def imageIoFeature(cell: Media.MediaCell): Media.MediaFeature = {
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(cell.payload))
     if (img == null)
       throw new IllegalArgumentException("ImageIO could not decode payload")
-    val w = img.getWidth; val h = img.getHeight
-    val n = math.max(w * h, 1)
-    var r = 0.0; var g = 0.0; var b = 0.0; var luma = 0.0; var luma2 = 0.0
-    var edge = 0.0
-    var y = 0
-    while (y < h) {
-      var x = 0
-      var prevL = 0.0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        val rv = (rgb >> 16) & 0xff; val gv = (rgb >> 8) & 0xff; val bv = rgb & 0xff
-        val l = 0.299 * rv + 0.587 * gv + 0.114 * bv
-        r += rv; g += gv; b += bv; luma += l; luma2 += l * l
-        if (x > 0) edge += math.abs(l - prevL)
-        prevL = l
-        x += 1
-      }
-      y += 1
-    }
-    val mL = luma / n
-    Media.MediaFeature(cell.doc_id, cell.span_idx, cell.kind, cell.media_ref,
-      n_bytes = cell.payload.length.toLong,
-      width = w, height = h, duration_ms = 0L,
-      feature = Array(
-        (r / n / 255).toFloat, (g / n / 255).toFloat, (b / n / 255).toFloat,
-        (mL / 255).toFloat,
-        ((luma2 / n - mL * mL) / (255.0 * 255.0)).toFloat,
-        (edge / math.max((w - 1) * h, 1) / 255).toFloat,
-        (w.toFloat / math.max(h, 1)),
-        1f))
+    imageFeature(cell, img.getWidth, img.getHeight, img.getRGB(_, _))
   }
 
   // ---- MP4 / ISO-BMFF container METADATA (pure-JVM box walk) ----
-  // FRAME decode genuinely needs native codecs this container lacks, but the
-  // container itself (nested size+fourcc boxes) is a fully-specified binary
-  // layout exactly like the WAV/PPM work above: ftyp → moov → mvhd gives the
-  // real duration (duration/timescale) and moov → trak → tkhd the real
-  // presentation width/height (16.16 fixed point) without decoding a single
-  // frame (round-4 verdict item 4). The per-frame feature vector stays a
-  // deterministic stand-in — only a codec replaces that.
+  // FRAME decode needs a native codec, but the container itself (nested
+  // size+fourcc boxes) is a fully specified binary layout: ftyp → moov →
+  // mvhd gives the real duration (duration/timescale) and moov → trak → tkhd
+  // the real presentation width/height (16.16 fixed point) without decoding
+  // a single frame. The per-frame feature vector stays the stub's stand-in.
 
   def isMp4(b: Array[Byte]): Boolean =
     b.length > 12 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p'
@@ -343,6 +304,8 @@ object Decoders {
     val w = 160 + 16 * math.floorMod(seed >> 5, 40)
     val h = 120 + 16 * math.floorMod(seed >> 9, 30)
     val buf = ByteBuffer.allocate(20 + 216 + 24).order(ByteOrder.BIG_ENDIAN)
+    def unityMatrix(): Unit =
+      Seq(0x00010000, 0, 0, 0, 0x00010000, 0, 0, 0, 0x40000000).foreach(buf.putInt(_))
     // ftyp (20)
     buf.putInt(20); buf.put("ftyp".getBytes); buf.put("isom".getBytes)
     buf.putInt(0x200); buf.put("isom".getBytes)
@@ -356,10 +319,7 @@ object Decoders {
     buf.putInt(0x00010000)              // rate 1.0
     buf.putShort(0x0100.toShort)        // volume 1.0
     buf.putShort(0); buf.putLong(0)     // reserved
-    // unity matrix
-    buf.putInt(0x00010000); buf.putInt(0); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0x00010000); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0); buf.putInt(0x40000000)
+    unityMatrix()
     (0 until 6).foreach(_ => buf.putInt(0)) // pre_defined
     buf.putInt(2)                       // next_track_id
     //   trak (8 + tkhd 92 = 100)
@@ -374,14 +334,10 @@ object Decoders {
     buf.putLong(0)                      // reserved
     buf.putShort(0); buf.putShort(0)    // layer, alternate_group
     buf.putShort(0); buf.putShort(0)    // volume (video track = 0), reserved
-    buf.putInt(0x00010000); buf.putInt(0); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0x00010000); buf.putInt(0)
-    buf.putInt(0); buf.putInt(0); buf.putInt(0x40000000)
+    unityMatrix()
     buf.putInt(w << 16); buf.putInt(h << 16) // 16.16 fixed point
     // mdat stub (24): the frame payload a codec would read
-    buf.putInt(24); buf.put("mdat".getBytes)
-    var i = 0
-    while (i < 16) { buf.put((math.floorMod(seed * 31 + i * 7, 256) - 128).toByte); i += 1 }
+    buf.putInt(24); buf.put("mdat".getBytes); buf.put(Media.opaqueBytes(mediaRef), 0, 16)
     buf.array()
   }
 
@@ -441,7 +397,7 @@ object Decoders {
   }
 
   /** Video features: REAL container metadata (duration, presentation size)
-    * from the box walk; the 8-dim per-content feature stays a deterministic
+    * from the box walk; the 8-dim per-content feature stays `decodeStub`'s
     * byte-hash stand-in because frame decode needs a native codec. Raises on
     * payloads with no mvhd/tkhd so `Media.decode` falls back to the stub.
     */
@@ -449,15 +405,12 @@ object Decoders {
     val (durMs, w, h) = decodeMp4Meta(cell.payload)
     if (durMs <= 0 && w <= 0)
       throw new IllegalArgumentException("MP4 payload carries no mvhd/tkhd metadata")
-    val s = cell.payload.foldLeft(0L)((acc, b) => (acc * 131 + (b & 0xff)) % 1000000007L)
-    Media.MediaFeature(cell.doc_id, cell.span_idx, cell.kind, cell.media_ref,
-      n_bytes = cell.payload.length.toLong,
-      width = w, height = h, duration_ms = durMs,
-      feature = Array.tabulate(8)(i => ((s >> (i * 4)) & 0xf).toFloat / 16f))
+    Media.decodeStub(cell).copy(width = w, height = h, duration_ms = durMs)
   }
 
-  /** Average-pool resize to (ow × oh) luma — the standard pre-batch resize,
-    * decoupled from the feature path so pipelines can call it directly.
+  /** Average-pool resize of a P6 payload to (ow × oh) luma — the standard
+    * pre-batch resize, decoupled from the feature path so pipelines can call
+    * it directly.
     */
   def resizeLuma(bytes: Array[Byte], ow: Int, oh: Int): Array[Float] = {
     val (w, h, px) = decodePpm(bytes)
@@ -467,9 +420,7 @@ object Decoders {
     while (y < h) {
       var x = 0
       while (x < w) {
-        val o = (y * w + x) * 3
-        val l = 0.299 * (px(o) & 0xff) + 0.587 * (px(o + 1) & 0xff) +
-          0.114 * (px(o + 2) & 0xff)
+        val l = luma(ppmRgb(px, w)(x, y))
         val t = math.min(y * oh / math.max(h, 1), oh - 1) * ow +
           math.min(x * ow / math.max(w, 1), ow - 1)
         out(t) += l.toFloat; cnt(t) += 1

@@ -4,20 +4,18 @@ import graft.model.Doc
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing: media spans as opaque binary payloads with
-  * typed metadata, decoded/feature-extracted in batched mapPartitions.
+/** Multimodal column plumbing: media spans as binary payloads with typed
+  * metadata, decoded to one 8-float feature row per span in batched
+  * mapPartitions.
   *
-  * Decoding: RIFF/WAVE PCM16 audio and binary PPM (P6) images get REAL
-  * pure-JVM decoders (`Decoders` — full chunk/header parse → samples /
-  * pixels → features + resize), JPEG/PNG/GIF/BMP decode through
-  * `javax.imageio.ImageIO` (pure JDK — round-4 fix: the earlier claim that
-  * JPEG needs a native codec was wrong), and MP4 video gets a REAL
-  * container-metadata parse (round-5: ftyp/moov/mvhd/tkhd box walk → true
-  * duration_ms + presentation width/height) with only the per-FRAME feature
-  * stubbed — frame decode genuinely needs native codecs this container
-  * lacks. All dispatched by magic bytes; `decodeStub` remains only for
-  * opaque or corrupt payloads. Everything Spark-side — schema, batching
-  * shape, partition behavior, span-sequence invariant — is real and tested.
+  * `decode` dispatches on magic bytes to the pure-JVM parsers in `Decoders`:
+  * RIFF/WAVE PCM16 audio, binary PPM (P6) images, JPEG/PNG/GIF/BMP through
+  * `javax.imageio.ImageIO`, and the MP4 container metadata (ftyp/moov/mvhd/
+  * tkhd box walk → duration_ms and presentation width/height). `decodeStub`
+  * handles opaque payloads and any payload a parser rejects, and supplies
+  * the MP4 feature vector, because frame decode needs a native codec. The
+  * Spark side (schema, batching, span-sequence invariant) is tested in
+  * PipelineOpsSpec, the parsers in DecodersSpec.
   */
 object Media {
 
@@ -53,48 +51,35 @@ object Media {
     }
   }
 
-  /** Deterministic offline payload (the object-store fetch stand-in):
-    * WELL-FORMED WAV for audio/video refs and P6 PPM for image refs, so the
-    * real decoders execute end-to-end; opaque bytes otherwise.
+  /** Deterministic offline payload (the object-store fetch stand-in): a
+    * well-formed WAV for audio refs, MP4 for video refs and, for image refs,
+    * PPM, PNG or JPEG by the ref's hash, so every real decoder runs
+    * in-pipeline; opaque bytes for any other kind.
     */
   private[multimodal] def fetchFor(kind: String, mediaRef: String): Array[Byte] =
     kind match {
       case "audio"                => Decoders.synthWav(mediaRef)
-      // video refs fetch a well-formed MP4 container so the real box-walk
-      // metadata parser runs in-pipeline (round-5; frame payload stays a
-      // codec-less stub inside mdat)
       case "video"                => Decoders.synthMp4(mediaRef)
-      // image payloads rotate deterministically across the three real decode
-      // paths (PPM, PNG, JPEG) so every format's parser runs in-pipeline
       case "image" => math.floorMod(mediaRef.hashCode, 3) match {
         case 0 => Decoders.synthPpm(mediaRef)
         case 1 => Decoders.synthPng(mediaRef)
         case _ => Decoders.synthJpeg(mediaRef)
       }
-      case _ if kind.nonEmpty     => opaqueBytes(mediaRef)
-      // kind unknown at fetch time: infer from the ref's extension
-      case _ if mediaRef.endsWith(".wav") => Decoders.synthWav(mediaRef)
-      case _ if mediaRef.endsWith(".ppm") => Decoders.synthPpm(mediaRef)
-      case _ if mediaRef.endsWith(".png") => Decoders.synthPng(mediaRef)
-      case _ if mediaRef.endsWith(".jpg") || mediaRef.endsWith(".jpeg") =>
-        Decoders.synthJpeg(mediaRef)
-      case _ if mediaRef.endsWith(".mp4") => Decoders.synthMp4(mediaRef)
       case _                      => opaqueBytes(mediaRef)
     }
 
-  private def opaqueBytes(mediaRef: String): Array[Byte] = {
+  /** Seeded opaque bytes; `Decoders.synthMp4`'s mdat frame stand-in is their first 16. */
+  private[multimodal] def opaqueBytes(mediaRef: String): Array[Byte] = {
     val seed = mediaRef.hashCode
     val n = 64 + math.floorMod(seed, 256)
     Array.tabulate(n)(i => (math.floorMod(seed * 31 + i * 7, 256) - 128).toByte)
   }
 
-  /** Decode dispatch by magic bytes: real parsers for the self-describing
-    * formats and ImageIO for JPEG/PNG/GIF/BMP; stub only where a native
-    * codec would be required (video) or the payload is malformed /
-    * unsupported-bit-depth (the parsers raise rather than emit zeroed
-    * features — ADVICE round 3).
+  /** Decode dispatch by magic bytes. A parser raises on a payload it cannot
+    * read (a corrupt header, a non-16-bit WAV) rather than emit zeroed
+    * features, and the cell degrades to `decodeStub`.
     */
-  private[multimodal] def decode(cell: MediaCell): MediaFeature =
+  def decode(cell: MediaCell): MediaFeature =
     try {
       if (Decoders.isWav(cell.payload)) Decoders.wavFeature(cell)
       else if (Decoders.isPpm(cell.payload)) Decoders.ppmFeature(cell)
@@ -110,17 +95,12 @@ object Media {
       case scala.util.control.NonFatal(_) => decodeStub(cell)
     }
 
-  /** The single-cell decode `decodeFeatures` maps, exposed for callers that
-    * operate outside a Dataset (tests, driver-side probes).
-    */
-  def decodeFor(cell: MediaCell): MediaFeature = decode(cell)
-
-  /** STUB decoder — the fallback for OPAQUE or corrupt payloads no real
-    * parser above accepts (every shipped format — WAV, PPM, JPEG/PNG/GIF/
-    * BMP, MP4 container metadata — decodes for real). Deterministic metadata
-    * + an 8-dim feature vector from the payload bytes. A real implementation
-    * replaces only this function; the mapPartitions batching around it is
-    * production-shaped.
+  /** STUB decoder — the fallback for opaque or corrupt payloads, and the
+    * source of the MP4 feature vector (`Decoders.mp4Feature` keeps it and
+    * replaces the metadata with the box walk's). Deterministic metadata + an
+    * 8-dim feature vector from a hash of the payload bytes. A real
+    * implementation replaces only this function; the mapPartitions batching
+    * around it is production-shaped.
     */
   private[multimodal] def decodeStub(cell: MediaCell): MediaFeature = {
     val bytes = cell.payload

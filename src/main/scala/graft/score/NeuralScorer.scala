@@ -37,14 +37,19 @@ object NeuralScorer {
       wOut: Array[Array[Float]],                        // [hidden][nLabels]
       wPair: Array[Array[Float]])                       // [hidden][K²] (M9)
 
+  /** The xorshift64* sequence from `seed`, each draw mapped to [-0.1, 0.1).
+    * A zero seed pins the state at 0 (every draw −0.1), so a caller that
+    * seeds from a hash guards against it.
+    */
+  private[score] def seededDraws(seed: Long): Iterator[Float] =
+    Iterator.iterate(seed) { s0 => var s = s0; s ^= s << 13; s ^= s >>> 7; s ^= s << 17; s }
+      .drop(1)
+      .map(s => ((s * 2685821657736338717L >>> 11).toDouble / (1L << 53) * 0.2 - 0.1).toFloat)
+
   def seededWeights(seed: Long = 42L, vocabBuckets: Int = 4096,
                     embedDim: Int = 32, hidden: Int = 32): Weights = {
-    var s = seed
-    def next(): Float = { // xorshift64*, mapped to [-0.1, 0.1)
-      s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-      ((s * 2685821657736338717L >>> 11).toDouble / (1L << 53) * 0.2 - 0.1).toFloat
-    }
-    def mat(r: Int, c: Int) = Array.fill(r, c)(next())
+    val draws = seededDraws(seed)
+    def mat(r: Int, c: Int) = Array.fill(r, c)(draws.next())
     Weights(vocabBuckets, embedDim, hidden,
       embed = mat(vocabBuckets, embedDim),
       wz = mat(embedDim, hidden), uz = mat(hidden, hidden),

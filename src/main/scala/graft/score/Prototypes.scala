@@ -31,18 +31,14 @@ object Prototypes {
     * abandoned it for the same reason (relembed.py:331-411 dead variants).
     */
   def seededProto(seed: Long = 1042L, dim: Int = 8): ProtoWeights = {
-    var s = seed
-    def next(): Float = {
-      s ^= s << 13; s ^= s >>> 7; s ^= s << 17
-      ((s * 2685821657736338717L >>> 11).toDouble / (1L << 53) * 0.2 - 0.1).toFloat
-    }
+    val draws = NeuralScorer.seededDraws(seed)
     ProtoWeights(dim,
-      w3 = Array.fill(dim * dim * dim)(next()),
-      zVec = Array.fill(dim)(next()),
-      bias = next(),
-      wIn = Array.fill(dim, dim)(next()),
-      wState = Array.fill(dim, dim)(next()),
-      bState = Array.fill(dim)(next()))
+      w3 = Array.fill(dim * dim * dim)(draws.next()),
+      zVec = Array.fill(dim)(draws.next()),
+      bias = draws.next(),
+      wIn = Array.fill(dim, dim)(draws.next()),
+      wState = Array.fill(dim, dim)(draws.next()),
+      bState = Array.fill(dim)(draws.next()))
   }
 
   /** M13: 3-way tensor inner product Σ_ijk W[i,j,k]·x_i·y_j·z_k
@@ -152,10 +148,7 @@ object Prototypes {
         // same zero-seed guard as NegativeSampling.KeyedRng (ADVICE round 3)
         var h = t.text.toLowerCase.hashCode.toLong
         if (h == 0L) h = 0x9E3779B97F4A7C15L
-        Array.fill(w.dim) {
-          h ^= h << 13; h ^= h >>> 7; h ^= h << 17
-          ((h * 2685821657736338717L >>> 11).toDouble / (1L << 53) * 0.2 - 0.1).toFloat
-        }
+        NeuralScorer.seededDraws(h).take(w.dim).toArray
       }
       val rootH = treeCompose(w, s.tokens, embed)
       Sdp.sentenceToSdps(s.tokens, s.chunks).take(64).iterator.map { case (x, y, _) =>

@@ -95,7 +95,7 @@ class DecodersSpec extends AnyFunSuite {
     val bytes = buf.array()
     assertThrows[IllegalArgumentException](Decoders.decodeWav(bytes))
     // the dispatch must not die on it — it degrades to the stub's shape
-    val feat = Media.decodeFor(Media.MediaCell("d", 0, "audio", "r", bytes))
+    val feat = Media.decode(Media.MediaCell("d", 0, "audio", "r", bytes))
     assert(feat.n_bytes == bytes.length && feat.feature.length == 8)
   }
 
@@ -125,8 +125,8 @@ class DecodersSpec extends AnyFunSuite {
     val png = Decoders.synthPng("m://img1.png")
     val jpg = Decoders.synthJpeg("m://img2.jpg")
     assert(Decoders.isImageIo(png) && Decoders.isImageIo(jpg))
-    val fp = Media.decodeFor(Media.MediaCell("d", 0, "image", "m://img1.png", png))
-    val fj = Media.decodeFor(Media.MediaCell("d", 0, "image", "m://img2.jpg", jpg))
+    val fp = Media.decode(Media.MediaCell("d", 0, "image", "m://img1.png", png))
+    val fj = Media.decode(Media.MediaCell("d", 0, "image", "m://img2.jpg", jpg))
     // the synth pattern's width/height derive from the ref hash — the stub
     // would fabricate different dims from a payload digest
     val expW = 8 + math.floorMod("m://img1.png".hashCode, 33)
@@ -137,10 +137,62 @@ class DecodersSpec extends AnyFunSuite {
     // synth of the same ref (identical pattern, different container)
     val ppmF = Decoders.ppmFeature(Media.MediaCell("d", 0, "image", "m://img1.png",
       Decoders.synthPpm("m://img1.png")))
-    (0 until 8).foreach { i =>
-      assert(math.abs(fp.feature(i) - ppmF.feature(i)) < 1e-5,
-        s"feature $i: png=${fp.feature(i)} ppm=${ppmF.feature(i)}")
+    assert(fp.feature.toSeq == ppmF.feature.toSeq)
+  }
+
+  test("BMP of the synthetic pattern routes to ImageIO with exactly the PPM features") {
+    val ref = "m://img1.png"
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(Decoders.synthPng(ref)))
+    val bmp = { val b = new java.io.ByteArrayOutputStream(); javax.imageio.ImageIO.write(img, "bmp", b); b.toByteArray }
+    assert(Decoders.isBmp(bmp) && Decoders.isImageIo(bmp) && !Decoders.isPpm(bmp))
+    val fb = Media.decode(Media.MediaCell("d", 0, "image", ref, bmp))
+    val ppmF = Decoders.ppmFeature(Media.MediaCell("d", 0, "image", ref, Decoders.synthPpm(ref)))
+    assert(fb.width == ppmF.width && fb.height == ppmF.height)
+    assert(fb.feature.toSeq == ppmF.feature.toSeq)
+  }
+
+  test("PPM: a header claiming 100000×100000 over 12 pixel bytes degrades to the stub") {
+    val bytes = "P6\n100000 100000\n255\n".getBytes ++ Array.fill[Byte](12)(7)
+    val f = Media.decode(Media.MediaCell("d", 0, "image", "m://huge.ppm", bytes))
+    // the stub's digest-derived dims, not the header's
+    assert(f.n_bytes == bytes.length && f.width == 513 && f.height == 285 && f.duration_ms == 0)
+    assert(f.feature.toSeq == Seq(0.0625f, 0.4375f, 0.125f, 0.625f, 0.75f, 0.625f, 0.4375f, 0.1875f))
+  }
+
+  test("decode pins each payload kind's features and the synthetic image bytes") {
+    // literals recorded from the decoders before their image kernels, image
+    // synths and byte-hash stand-in were merged; every value must stay exact
+    def check(kind: String, ref: String, payload: Array[Byte],
+              dims: (Int, Int, Long, Long), feature: Float*): Unit = {
+      val f = Media.decode(Media.MediaCell("d", 0, kind, ref, payload))
+      assert((f.width, f.height, f.duration_ms, f.n_bytes) == dims, ref)
+      assert(f.feature.toSeq == feature, ref)
     }
+    check("audio", "m://pin.wav", Decoders.synthWav("m://pin.wav"), (0, 0, 310L, 5018L),
+      0.28961992f, 0.020506635f, 0.0016197509f, 0.36621094f,
+      0.084115975f, 0.08395401f, 0.084115975f, 0.083738044f)
+    check("image", "m://pin.ppm", Decoders.synthPpm("m://pin.ppm"), (36, 20, 0L, 2173L),
+      0.48431373f, 0.4735294f, 0.4583878f, 0.47502777f, 0.03750266f, 0.023703193f, 1.8f, 1.0f)
+    check("image", "m://pin.png", Decoders.synthPng("m://pin.png"), (34, 18, 0L, 1268L),
+      0.48431373f, 0.47058824f, 0.45315903f, 0.47270522f,
+      0.03723774f, 0.02492656f, 1.8888888f, 1.0f)
+    check("image", "m://pin.jpg", Decoders.synthJpeg("m://pin.jpg"), (39, 37, 0L, 1110L),
+      0.48476622f, 0.48484775f, 0.45257294f, 0.48114404f,
+      0.03741172f, 0.03150073f, 1.054054f, 1.0f)
+    check("video", "m://pin.mp4", Decoders.synthMp4("m://pin.mp4"), (464, 136, 20000L, 260L),
+      0.8125f, 0.5625f, 0.75f, 0.625f, 0.6875f, 0.3125f, 0.625f, 0.0f)
+    check("audio", "m://pin.bin", Array.tabulate(97)(i => ((i * 37 + 11) & 0xff).toByte),
+      (260, 32, 39384L, 97L), 0.25f, 0.9375f, 0.5f, 0.0625f, 0.25f, 0.8125f, 0.8125f, 0.0625f)
+    def sha256(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    assert(sha256(Decoders.synthPpm("m://pin-a")) ==
+      "90f871f689a097af7c25420a2287fa9ae52def8040d3e9aac6e7322ff61496f1")
+    assert(sha256(Decoders.synthPng("m://pin-a")) ==
+      "fb3878f2c9a3fd5bb36ce3ad9bf9cbd64b05ec8ff24799eeeb8a327116f86839")
+    assert(sha256(Decoders.synthPpm("m://pin-b")) ==
+      "6c3419b4d9f975bf6175d21c1b670f9bd812cae80a9c7d689f26540cdacc0671")
+    assert(sha256(Decoders.synthPng("m://pin-b")) ==
+      "9d0e83de07f0b586ef397e9c4ab65ab644c04b0e973785ee6cb46a89bc8585ad")
   }
 
   test("MP4: hand-built box tree parses to real duration and dimensions") {
@@ -182,13 +234,13 @@ class DecodersSpec extends AnyFunSuite {
   test("MP4: dispatch routes video payloads to the box walk, not the stub") {
     val mp4 = Decoders.synthMp4("m://clip.mp4")
     assert(Decoders.isMp4(mp4) && !Decoders.isImageIo(mp4))
-    val f = Media.decodeFor(Media.MediaCell("d", 0, "video", "m://clip.mp4", mp4))
+    val f = Media.decode(Media.MediaCell("d", 0, "video", "m://clip.mp4", mp4))
     val (durMs, w, h) = Decoders.decodeMp4Meta(mp4)
     assert(f.duration_ms == durMs && f.width == w && f.height == h)
     assert(durMs >= 1000 && w >= 160 && h >= 120)
     // a truncated moov must degrade to the stub, not kill the task
     val corrupt = mp4.take(30).toArray
-    val fc = Media.decodeFor(Media.MediaCell("d", 0, "video", "m://bad.mp4", corrupt))
+    val fc = Media.decode(Media.MediaCell("d", 0, "video", "m://bad.mp4", corrupt))
     assert(fc.n_bytes == corrupt.length && fc.feature.length == 8)
   }
 
